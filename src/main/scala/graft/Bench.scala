@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
@@ -47,14 +49,13 @@ object Bench {
     // ONLY: a filtered dev-loop iteration is not a published number, and
     // on a floor-degraded band (~25 MB/s) two probes cost ~85 s — more
     // than the whole suite.
-    // Probe the volume the queries actually shuffle on: spark.local.dir
-    // when set (first entry of the comma list — Spark round-robins but
-    // they are normally mounts of the same device class), else the JVM
-    // tmpdir Spark defaults its scratch to. A probe of a different mount
-    // could report a clean band while the shuffle volume is degraded.
-    val probeDir = spark.sparkContext.getConf.getOption("spark.local.dir")
-      .map(_.split(",").head.trim).filter(_.nonEmpty)
-      .getOrElse(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
+    // Probe the volume the queries actually shuffle on — a probe of a
+    // different mount could report a clean band while the shuffle volume
+    // is degraded.
+    val probeDir = graft.tools.IoProbe.localDir(
+      sys.env.get("SPARK_LOCAL_DIRS"),
+      spark.sparkContext.getConf.getOption("spark.local.dir"),
+      sys.props.getOrElse("java.io.tmpdir", "/tmp"))
     def probe(when: String): Option[String] =
       if (filter.isEmpty) Some(graft.tools.IoProbe.row(when, probeDir, totalMb = 1024)) else None
     val probePre = probe("pre")
@@ -68,7 +69,10 @@ object Bench {
             (System.nanoTime() - t0) / 1e9
           }
           times.min
-        } catch { case _: Throwable => -1.0 }
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          -1.0
+        }
       name -> sec
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }

@@ -64,6 +64,17 @@ object IoProbe {
     }
   }
 
+  /** The directory Spark writes shuffle and spill files to, resolved in
+    * Spark's own order: the `SPARK_LOCAL_DIRS` environment variable, then
+    * the `spark.local.dir` setting, then the JVM's `java.io.tmpdir`. Of a
+    * comma list the first non-empty entry is taken — Spark round-robins
+    * over them, but they are normally mounts of the same device class. A
+    * value with no non-empty entry counts as unset. */
+  def localDir(envLocalDirs: Option[String], confLocalDir: Option[String], tmpDir: String): String =
+    Seq(envLocalDirs, confLocalDir).flatten
+      .flatMap(_.split(",").map(_.trim).find(_.nonEmpty)).headOption
+      .getOrElse(tmpDir)
+
   /** One standard JSON probe row: `when` is "pre" or "post" relative to
     * the measurement it brackets. The dir is JSON-escaped — a path with
     * a quote or backslash must not corrupt the one-line contract. */

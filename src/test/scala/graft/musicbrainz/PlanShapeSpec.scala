@@ -1,6 +1,9 @@
 package graft.musicbrainz
 
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+
 import graft.SparkSpec
+import graft.functions.DeletionVariants
 
 /** Plan-shape regression guards: the generation DAG and the batch matcher
   * are join-heavy enough that one bad refactor (a dropped join key, an
@@ -32,5 +35,21 @@ class PlanShapeSpec extends SparkSpec {
       .toDF("query_id", "artist_name", "artist2_name", "title")
     val m = MatchOps.matchSongs(queries, MbFixtureExport.cached(spark))
     assertNoQuadraticJoin(m, "matchSongs")
+  }
+
+  test("batch matcher explodes the artist alias table into deletion variants once") {
+    // a duo query, so the batch carries whole-name AND split probes
+    val queries = Seq((1, "Alpha", Option("Beta"), "Duet Song"))
+      .toDF("query_id", "artist_name", "artist2_name", "title")
+    val plan = MatchOps.matchSongs(queries, MbFixtureExport.cached(spark))
+      .queryExecution.optimizedPlan
+    val aliasExplodes = plan.collect {
+      case g: Generate if g.generator.exists {
+        case d: DeletionVariants => d.references.exists(_.name == "alias")
+        case _ => false
+      } => g
+    }
+    assert(aliasExplodes.size == 1,
+      s"mb_artist_alias exploded ${aliasExplodes.size} times, expected once:\n$plan")
   }
 }

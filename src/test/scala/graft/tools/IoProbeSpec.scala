@@ -20,4 +20,13 @@ class IoProbeSpec extends AnyFunSuite {
     assert(row.startsWith("""{"metric":"io_probe","when":"pre","""))
     assert(row.matches(""".*"mb_per_s":\d+}"""), row)
   }
+
+  test("localDir resolves in Spark's order: SPARK_LOCAL_DIRS, spark.local.dir, tmpdir") {
+    assert(IoProbe.localDir(Some("/env/a,/env/b"), Some("/conf"), "/tmp") == "/env/a")
+    assert(IoProbe.localDir(None, Some(" /conf/a , /conf/b"), "/tmp") == "/conf/a")
+    assert(IoProbe.localDir(Some(""), Some("/conf"), "/tmp") == "/conf")
+    assert(IoProbe.localDir(Some(", /env"), None, "/tmp") == "/env")
+    assert(IoProbe.localDir(Some(","), None, "/tmp") == "/tmp")
+    assert(IoProbe.localDir(None, None, "/tmp") == "/tmp")
+  }
 }
