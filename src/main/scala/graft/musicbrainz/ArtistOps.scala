@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.normalize
-import graft.operators.Relational
 
 /** `sql/3_artist_data.sql` + `sql/4_artist_alias_data.sql` re-expressed:
   * the exported artist table (URL-count score + country/score filter) and
@@ -37,7 +36,10 @@ object ArtistOps {
     * (name),'\W','','g'))` but probes with the Python search_key; the engine
     * uses [[normalize.searchKey]] on BOTH sides (SURVEY §7.4.3), which also
     * nulls empty keys — those rows are dropped (non-matchable).
-    * `ON CONFLICT DO NOTHING` → distinct on (artist_id, alias).
+    * `ON CONFLICT DO NOTHING` → distinct on (artist_id, alias). That one
+    * distinct, after normalizing, also subsumes the UNION's own: equal
+    * (id, name) rows have equal (id, key), so the branches are unioned
+    * ALL and deduplicated once (one exchange, not two).
     */
   def artistAliases(src: MbSources, mbArtist: DataFrame): DataFrame = {
     val ids = mbArtist.select(col("id"))
@@ -59,7 +61,7 @@ object ArtistOps {
       .join(src.artist.select(col("id").as("a2_id"), col("name").as("a2_name")),
         col("entity0") === col("a2_id"))
       .select(col("id"), col("a2_name").as("name"))
-    Relational.unionDistinct(Seq(own, alias, credit, renamed))
+    Seq(own, alias, credit, renamed).reduce(_ union _)
       .select(col("id").as("artist_id"), normalize.searchKey(col("name")).as("alias"))
       .filter(col("alias").isNotNull)
       .distinct()

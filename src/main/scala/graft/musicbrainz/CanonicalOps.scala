@@ -271,6 +271,12 @@ object CanonicalOps {
     * iterates artists by score DESC and lets `ON CONFLICT DO UPDATE`
     * last-write-win, so the LOWEST-score artist wins; ties pinned by
     * artist_id asc (SURVEY §7.4.1).
+    *
+    * `persistHinge` runs `best` (candidates → argmin → artist score) once,
+    * right here, as a [[Hinge]] that both exports plan over, and returns it
+    * as the third element so the caller can release it. Off (the default),
+    * nothing runs and both exports carry the full lazy DAG (single-sink or
+    * plan-inspection use).
     */
   def exportTables(
       src: MbSources, mbArtist: DataFrame,
@@ -279,11 +285,12 @@ object CanonicalOps {
       .join(broadcast(mbArtist.select(col("id").as("ma_id"), col("score").as("artist_score"))),
         col("artist_id") === col("ma_id"))
     // `best` is the whole 9-table candidates DAG and feeds BOTH exports —
-    // without persistence every downstream sink re-executes it. The
-    // persisted handle is RETURNED so the caller can release it
-    // (Export.unpersist): the exported frames are derived plans whose own
-    // unpersist() never reaches this entry
-    val best = if (persistHinge) best0.persist() else best0
+    // without a hinge every downstream sink re-executes it, and with a
+    // cache every sink plan would still embed it. As a Hinge it runs once
+    // and both exports plan over a leaf. The hinge is RETURNED so the
+    // caller can release it (Export.unpersist): no exported frame exposes
+    // it
+    val best = if (persistHinge) Hinge(best0) else best0
     val conflictOrder = Seq(col("artist_score").asc, col("artist_id").asc)
 
     val mbAlbum = Relational.lastWriteWins(

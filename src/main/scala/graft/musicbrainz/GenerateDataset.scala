@@ -1,14 +1,16 @@
 package graft.musicbrainz
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** §3.1 end-to-end: MusicBrainz-shaped sources → the 5-table export dataset
   * (`/root/reference/README.md:21`; schema contract `sql/2_export_tables.sql`).
   *
   * The reference's pipeline is `sql/1` → `sql/3` → `python src/main.py`
   * (~8 h) → `sql/4` → `sql/5` (~12 min); this is the same dependency chain
-  * as one lazy DAG per output. Call `.write.parquet` (or JDBC) per table —
-  * a single atomic overwrite replaces the reference's per-artist upsert
+  * as three materialized hinges (see [[apply]]) with one lazy DAG per
+  * output on top. Call `.write.parquet` (or JDBC) per table — a single
+  * atomic overwrite replaces the reference's per-artist upsert
   * transactions (SURVEY S5/S7/S9).
   */
 object GenerateDataset {
@@ -20,36 +22,39 @@ object GenerateDataset {
       mbSong: DataFrame,
       mbSongAlias: DataFrame,
       hinges: Seq[DataFrame] = Nil) {
-    /** Release the hinge caches installed by [[GenerateDataset.apply]]
-      * (no-op on never-persisted frames). `hinges` carries the INTERNAL
-      * persisted handles — e.g. the candidates-DAG hinge inside
-      * [[CanonicalOps.exportTables]] — which the exported frames' own
-      * unpersist() can never reach (they are derived plans). */
-    def unpersist(): Unit =
-      (Seq(mbArtist, mbArtistAlias, mbAlbum, mbSong, mbSongAlias) ++ hinges)
-        .foreach(_.unpersist())
+    /** Release what [[GenerateDataset.apply]] holds: the stored rows behind
+      * every [[Hinge]] in `hinges` (including the candidates-DAG hinge
+      * inside [[CanonicalOps.exportTables]], which no exported frame
+      * exposes), and any cache a caller put on the five frames. A frame
+      * built on a released hinge can no longer run: write the export
+      * first, then read the written tables back.
+      */
+    def unpersist(): Unit = {
+      Seq(mbArtist, mbArtistAlias, mbAlbum, mbSong, mbSongAlias).foreach(_.unpersist())
+      hinges.foreach(Hinge.release)
+    }
   }
 
-  /** `persistHinge` (default on) caches the DataFrames every sink shares —
-    * the filtered artist set, the candidates join spine, the song table.
-    * The export fans out into FIVE sinks; without the caches each write
-    * action re-executes the full upstream DAG, turning one pipeline pass
-    * into five (measured 140 s → 30 s for 10k synthetic artists). Pass
-    * false to keep the plan fully lazy (single-sink or plan-inspection
-    * use).
+  /** The export fans out into FIVE sinks that share three intermediates:
+    * the filtered artist set, `best` (the candidates DAG inside
+    * [[CanonicalOps.exportTables]]) and the song table. Each is a [[Hinge]]:
+    * materialized once, here, and handed downstream as a plan leaf. No sink
+    * re-executes an upstream DAG (which measured 140 s against 30 s for 10k
+    * synthetic artists), and no sink plan, or AQE re-plan of it, carries
+    * one. `apply` is therefore eager: it runs the three hinges' jobs before
+    * it returns. [[Export.unpersist]] releases them.
     */
-  def apply(src: MbSources, persistHinge: Boolean = true): Export = {
-    val artists0 = ArtistOps.mbArtist(src)
-    val artists = if (persistHinge) artists0.persist() else artists0
-    val (album, song0, hinge) = CanonicalOps.exportTables(src, artists, persistHinge)
-    val song = if (persistHinge) song0.persist() else song0
+  def apply(src: MbSources): Export = {
+    val artists = Hinge(ArtistOps.mbArtist(src))
+    val (album, song0, best) = CanonicalOps.exportTables(src, artists, persistHinge = true)
+    val song = Hinge(song0)
     Export(
       mbArtist = artists,
       mbArtistAlias = ArtistOps.artistAliases(src, artists),
       mbAlbum = album,
       mbSong = song,
       mbSongAlias = SongAliasOps.songAliases(src, song),
-      hinges = hinge.toSeq)
+      hinges = artists +: best.toSeq :+ song)
   }
 
   /** Persist the export as parquet, one directory per table — the engine's
@@ -142,4 +147,26 @@ object GenerateDataset {
       mbAlbum = spark.read.parquet(s"$dir/mb_album"),
       mbSong = spark.read.parquet(s"$dir/mb_song"),
       mbSongAlias = spark.read.parquet(s"$dir/mb_song_alias"))
+}
+
+/** A materialized intermediate several sinks share. `Hinge(df)` runs `df`
+  * once (`localCheckpoint`: rows kept in the block manager, memory then
+  * disk) and returns a frame whose plan is ONE leaf over those rows that
+  * still carries `df`'s size statistics for join planning. A cached frame
+  * (`persist`) would instead embed `df`'s whole plan in every consumer —
+  * nested caches nest those plans, and every AQE re-plan of a consumer
+  * renders them again (4.8 MB of plan text per re-plan for `mb_song_alias`
+  * at 5k generated artists, against 41 KB over leaves).
+  */
+private[musicbrainz] object Hinge {
+  def apply(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** Drop the stored rows under a frame made by [[apply]]. `unpersist()` on
+    * the frame cannot: it consults only the CacheManager, and the rows
+    * belong to the RDD under the frame's `LogicalRDD` leaf. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.normalize
-import graft.operators.Relational
 
 /** `sql/5_song_alias_data.sql` re-expressed (SURVEY U2): song aliases from
   * 4 sources — recording name ∪ recording aliases ∪ linked work names ∪
@@ -15,7 +14,9 @@ object SongAliasOps {
   /** → mb_song_alias(song_id, alias). `mbSong.mb_id` is the recording gid
     * (`sql/5:7` joins back through it). Normalization uses
     * [[normalize.searchKey]] on both store and probe sides (SURVEY §7.4.3);
-    * empty keys are null and dropped. `ON CONFLICT DO NOTHING` → distinct.
+    * empty keys are null and dropped. `ON CONFLICT DO NOTHING` → distinct
+    * on (song_id, alias), which also subsumes the UNION's own distinct, so
+    * the branches are unioned ALL and deduplicated once.
     */
   def songAliases(src: MbSources, mbSong: DataFrame): DataFrame = {
     val songRec = mbSong.select(col("id").as("song_id"), col("mb_id"))
@@ -39,7 +40,7 @@ object SongAliasOps {
         col("w_id") === col("wa_work"))
       .select(col("song_id"), col("wa_name").as("name"))
 
-    Relational.unionDistinct(Seq(own, recAlias, workName, workAlias))
+    Seq(own, recAlias, workName, workAlias).reduce(_ union _)
       .select(col("song_id"), normalize.searchKey(col("name")).as("alias"))
       .filter(col("alias").isNotNull)
       .distinct()

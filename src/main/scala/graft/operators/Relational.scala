@@ -31,19 +31,25 @@ object Relational {
     * Execution: when every sort key is encodable as an order-preserving
     * struct field (any type ascending; descending for numeric / date /
     * timestamp via negation), the winner is computed as
-    * `min(struct(encodedKeys…, originalRow))` — ONE hash aggregate with
+    * `min(struct(encodedKeys…, originalRow))` — ONE aggregate with
     * map-side partial aggregation, so each map partition ships at most one
-    * candidate row per group through the exchange and nothing is ever
-    * sorted (optimization-guide §2.3 "aggregate before you shuffle": the
-    * former rank-window shape sorted every partition in full and, via its
-    * partial WindowGroupLimit, serialized that full sort onto the scan
-    * stage's tasks). A sort spec outside the encodable set (descending
-    * strings, descending nulls-first intervals, …) falls back to the
-    * rank-window shape, plan-for-plan the r13 form. Both paths return the
-    * winning row with ALL original columns; with a total order the winner
-    * is identical by construction (encodings are strictly
-    * order-preserving), which the q10/q11/q12 DuckDB hash oracles check
-    * end to end.
+    * candidate row per group through the exchange (optimization-guide §2.3
+    * "aggregate before you shuffle": the former rank-window shape shipped
+    * every row and, via its partial WindowGroupLimit, serialized a full
+    * partition sort onto the scan stage's tasks). Which aggregate Spark
+    * plans depends on the payload: only a fixed-width struct gets a hash
+    * aggregate. A string or array field anywhere in the struct (the usual
+    * case, since the payload is the whole row) makes the buffer
+    * variable-width, so the partial and the final step are each a
+    * `SortAggregate` that sorts its input by the group keys. That is the
+    * plan of `CanonicalOps.bestMatches` and of both `lastWriteWins` calls
+    * in `CanonicalOps.exportTables`. A sort spec outside the encodable
+    * set (descending strings, descending nulls-first intervals, …) falls
+    * back to the rank-window shape, plan-for-plan the r13 form. Both
+    * paths return the winning row with ALL original columns; with a total
+    * order the winner is identical by construction (encodings are
+    * strictly order-preserving), which the q10/q11/q12 DuckDB hash
+    * oracles check end to end.
     *
     * Caller note: the aggregate path packs the row into a struct, which
     * column pruning cannot see through — `.select(...)` the columns you

@@ -39,4 +39,10 @@ object Bridge {
       spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Entries the session's CacheManager holds (`private[sql]` count): a
+    * release check compares it before and after a pipeline pass. */
+  def cacheEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }

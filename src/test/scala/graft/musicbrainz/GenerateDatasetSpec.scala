@@ -1,6 +1,7 @@
 package graft.musicbrainz
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.SparkSpec
 
@@ -96,6 +97,29 @@ class GenerateDatasetSpec extends SparkSpec {
     assert(rows(0) == (("g-200", 1992, 1, 4, false)))
     // main album: no penalty, type_priority 1 → the canonical choice
     assert(rows(1) == (("g-201", 1991, 1, 1, true)))
+  }
+
+  test("Export.unpersist releases every hinge the pass materialized") {
+    val sc = spark.sparkContext
+    // the shared session also holds the fixture export's caches: compare
+    // against what it held before this pass, not against nothing
+    MbFixtureExport.cached(spark)
+    def held() = (sc.getPersistentRDDs.keySet, Bridge.cacheEntries(spark))
+    val before = held()
+    val e = GenerateDataset(MbFixture.sources(spark))
+    val dir = java.nio.file.Files.createTempDirectory("graft_generate").toString
+    GenerateDataset.write(e, dir, aliasPartitions = 2)
+    assert(held()._1 != before._1, "the pass held no hinge: the check below proves nothing")
+    e.unpersist()
+    assert(held() == before)
+    // the released pass wrote the same five tables the fixture export holds
+    val back = GenerateDataset.read(spark, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(back.mbArtist) == rows(export.mbArtist))
+    assert(rows(back.mbArtistAlias) == rows(export.mbArtistAlias))
+    assert(rows(back.mbAlbum) == rows(export.mbAlbum))
+    assert(rows(back.mbSong) == rows(export.mbSong))
+    assert(rows(back.mbSongAlias) == rows(export.mbSongAlias))
   }
 
   test("mb_song_alias (sql/5): name ∪ recording alias ∪ work name ∪ work alias") {

@@ -1,6 +1,9 @@
 package graft.musicbrainz
 
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 import graft.SparkSpec
 import graft.functions.DeletionVariants
@@ -28,6 +31,45 @@ class PlanShapeSpec extends SparkSpec {
     assertNoQuadraticJoin(album, "mb_album")
     assertNoQuadraticJoin(song, "mb_song")
     assertNoQuadraticJoin(SongAliasOps.songAliases(src, song), "mb_song_alias")
+  }
+
+  /** `p` and every plan it reaches through its children and the plans it
+    * embeds: via `innerChildren` a cached relation's cached plan and
+    * subqueries; an adaptive root's current plan; a query stage's plan. */
+  private def reachable(p: QueryPlan[_]): Seq[QueryPlan[_]] = {
+    val embedded = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _ => Nil
+    }
+    p +: (p.children ++ p.innerChildren ++ embedded).flatMap {
+      case c: QueryPlan[_] => reachable(c)
+      case _ => Nil
+    }
+  }
+
+  test("export sinks plan over hinge leaves, never over an upstream hinge's DAG") {
+    val e = GenerateDataset(MbFixture.sources(spark))
+    // source columns only a hinge's upstream DAG reads: iso_3166_1.code
+    // (mb_artist's country walk) and release_country.date_year (the
+    // candidates behind best)
+    val upstream = Set("code", "date_year")
+    try {
+      Seq("mb_artist" -> e.mbArtist, "mb_artist_alias" -> e.mbArtistAlias,
+        "mb_album" -> e.mbAlbum, "mb_song" -> e.mbSong, "mb_song_alias" -> e.mbSongAlias)
+        .foreach { case (name, df) =>
+          val plan = df.queryExecution.executedPlan
+          val nodes = reachable(plan)
+          val nested = nodes.collect {
+            case r: InMemoryRelation
+                if reachable(r.cachedPlan).exists(_.isInstanceOf[InMemoryRelation]) => r
+          }
+          assert(nested.isEmpty, s"$name plans over a cache nested in a cache:\n$plan")
+          val leaked = nodes.filter(_.children.isEmpty).flatMap(_.output.map(_.name))
+            .filter(upstream)
+          assert(leaked.isEmpty, s"$name reaches an upstream hinge's sources $leaked:\n$plan")
+        }
+    } finally e.unpersist()
   }
 
   test("batch matcher plan contains no cartesian / nested-loop joins") {
