@@ -112,9 +112,6 @@ object CanonicalOps {
         col("lrw_work") === col("work_id"), "left")
 
     // GROUP BY recording.id, release_group.id, work.id (+ artist — the loop
-    // variable) with MIN(date_year); the other columns are functionally
-    // dependent on the group keys
-    // GROUP BY recording.id, release_group.id, work.id (+ artist — the loop
     // variable) with MIN(date_year); the other columns (incl. the
     // recording's credit, needed downstream for the second-artist lookup)
     // are functionally dependent on the group keys
@@ -265,32 +262,24 @@ object CanonicalOps {
       .orderBy(col("artist_id") +: canonicalOrder: _*)
   }
 
-  /** The two export tables (`src/main.py:249-325`). Cross-artist id
-    * collisions (an album credited to several exported artists; in dirty
-    * data also a recording) are resolved deterministically: the reference
-    * iterates artists by score DESC and lets `ON CONFLICT DO UPDATE`
-    * last-write-win, so the LOWEST-score artist wins; ties pinned by
-    * artist_id asc (SURVEY §7.4.1).
-    *
-    * `persistHinge` runs `best` (candidates → argmin → artist score) once,
-    * right here, as a [[Hinge]] that both exports plan over, and returns it
-    * as the third element so the caller can release it. Off (the default),
-    * nothing runs and both exports carry the full lazy DAG (single-sink or
-    * plan-inspection use).
+  /** [[bestMatches]] with each winner's `artist_score` attached — the
+    * input both export tables read. Lazy: it is the whole 9-table
+    * candidates DAG, so a caller that builds both exports materializes it
+    * once first ([[GenerateDataset.apply]] does).
     */
-  def exportTables(
-      src: MbSources, mbArtist: DataFrame,
-      persistHinge: Boolean = false): (DataFrame, DataFrame, Option[DataFrame]) = {
-    val best0 = bestMatches(src, mbArtist)
+  def scoredBest(src: MbSources, mbArtist: DataFrame): DataFrame =
+    bestMatches(src, mbArtist)
       .join(broadcast(mbArtist.select(col("id").as("ma_id"), col("score").as("artist_score"))),
         col("artist_id") === col("ma_id"))
-    // `best` is the whole 9-table candidates DAG and feeds BOTH exports —
-    // without a hinge every downstream sink re-executes it, and with a
-    // cache every sink plan would still embed it. As a Hinge it runs once
-    // and both exports plan over a leaf. The hinge is RETURNED so the
-    // caller can release it (Export.unpersist): no exported frame exposes
-    // it
-    val best = if (persistHinge) Hinge(best0) else best0
+
+  /** The two export tables (`src/main.py:249-325`) over [[scoredBest]].
+    * Cross-artist id collisions (an album credited to several exported
+    * artists; in dirty data also a recording) are resolved
+    * deterministically: the reference iterates artists by score DESC and
+    * lets `ON CONFLICT DO UPDATE` last-write-win, so the LOWEST-score
+    * artist wins; ties pinned by artist_id asc (SURVEY §7.4.1).
+    */
+  def exportTables(best: DataFrame): (DataFrame, DataFrame) = {
     val conflictOrder = Seq(col("artist_score").asc, col("artist_id").asc)
 
     val mbAlbum = Relational.lastWriteWins(
@@ -318,6 +307,6 @@ object CanonicalOps {
       Seq(col("id")), conflictOrder)
       .drop("artist_score")
 
-    (mbAlbum, mbSong, if (persistHinge) Some(best) else None)
+    (mbAlbum, mbSong)
   }
 }

@@ -23,11 +23,10 @@ object GenerateDataset {
       mbSongAlias: DataFrame,
       hinges: Seq[DataFrame] = Nil) {
     /** Release what [[GenerateDataset.apply]] holds: the stored rows behind
-      * every [[Hinge]] in `hinges` (including the candidates-DAG hinge
-      * inside [[CanonicalOps.exportTables]], which no exported frame
-      * exposes), and any cache a caller put on the five frames. A frame
-      * built on a released hinge can no longer run: write the export
-      * first, then read the written tables back.
+      * every [[Hinge]] in `hinges` (including the `best` hinge, which no
+      * exported frame exposes), and any cache a caller put on the five
+      * frames. A frame built on a released hinge can no longer run: write
+      * the export first, then read the written tables back.
       */
     def unpersist(): Unit = {
       Seq(mbArtist, mbArtistAlias, mbAlbum, mbSong, mbSongAlias).foreach(_.unpersist())
@@ -36,8 +35,9 @@ object GenerateDataset {
   }
 
   /** The export fans out into FIVE sinks that share three intermediates:
-    * the filtered artist set, `best` (the candidates DAG inside
-    * [[CanonicalOps.exportTables]]) and the song table. Each is a [[Hinge]]:
+    * the filtered artist set, `best` (the candidates DAG of
+    * [[CanonicalOps.scoredBest]], which both [[CanonicalOps.exportTables]]
+    * read) and the song table. Each is a [[Hinge]]:
     * materialized once, here, and handed downstream as a plan leaf. No sink
     * re-executes an upstream DAG (which measured 140 s against 30 s for 10k
     * synthetic artists), and no sink plan, or AQE re-plan of it, carries
@@ -46,7 +46,8 @@ object GenerateDataset {
     */
   def apply(src: MbSources): Export = {
     val artists = Hinge(ArtistOps.mbArtist(src))
-    val (album, song0, best) = CanonicalOps.exportTables(src, artists, persistHinge = true)
+    val best = Hinge(CanonicalOps.scoredBest(src, artists))
+    val (album, song0) = CanonicalOps.exportTables(best)
     val song = Hinge(song0)
     Export(
       mbArtist = artists,
@@ -54,7 +55,7 @@ object GenerateDataset {
       mbAlbum = album,
       mbSong = song,
       mbSongAlias = SongAliasOps.songAliases(src, song),
-      hinges = artists +: best.toSeq :+ song)
+      hinges = Seq(artists, best, song))
   }
 
   /** Persist the export as parquet, one directory per table — the engine's

@@ -43,12 +43,11 @@ import org.apache.spark.sql.functions._
   *     round without re-exchanging it), which Catalyst cannot express —
   *     exchange reuse never crosses a job boundary — and which a fixed
   *     `HashPartitioner` gives for free (the GraphX execution model).
-  *     The previous DataFrame loop (one edge join + min-aggregate +
-  *     pointer jump per round, edge-sized shuffles every round) is kept,
-  *     plan-for-plan, behind `spark.graft.components.distStrategy=loop`
-  *     as the measured fallback; `ComponentsBench` A/Bs the two (30M
-  *     chain edges: 218.4 s loop vs the contraction's one-pass shape).
-  *     Labels only ever decrease in both, so sum(label) strictly
+  *     It replaced a DataFrame min-label loop over the full edge set
+  *     (one edge join + min-aggregate + pointer jump per round,
+  *     edge-sized shuffles every round), which `ComponentsBench` measured
+  *     at 177-312 s against 23-28 s for the contraction at 30M edges.
+  *     Labels only ever decrease, so sum(label) strictly
   *     decreases until the fixpoint and convergence is one scalar
   *     aggregate per fused round-pair; per-round lineage is truncated
   *     (localCheckpoint, or reliable `checkpoint` when `checkpointDir`
@@ -61,13 +60,6 @@ import org.apache.spark.sql.functions._
 object Components {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Distributed-path strategy: "contract" (default — per-partition
-    * union-find contraction, loop only on the stitched root graph) or
-    * "loop" (the DataFrame min-label loop over the full edge set). Any
-    * other value is rejected — a typo must not silently select a
-    * strategy. */
-  val DistStrategyKey = "spark.graft.components.distStrategy"
 
   /** Default `localEdgeThreshold` (symmetrized rows) — shared with
     * `ComponentsBench` so the bench's "default path" leg can never
@@ -115,7 +107,7 @@ object Components {
     *        disjoint-set map for up to 20M touched vertices — on the order
     *        of 1-2 GB of primitive-array state, inside a normally-sized
     *        executor; lower the threshold for small executors. Set 0 to
-    *        force the distributed loop (the specs do, to pin both paths
+    *        force the contraction (the specs do, to pin both paths
     *        against each other).
     * @param checkpointDir when set, per-round state in the distributed
     *        path is checkpointed reliably under this fault-tolerant path
@@ -129,10 +121,8 @@ object Components {
     *        (path logged at INFO) and deletes every finished round's
     *        snapshot as soon as the following round has materialized, so
     *        at most three snapshots (edges, previous labels, current
-    *        labels — four under the loop strategy, which also keeps its
-    *        symmetrized edge snapshot) are ever alive. The LAST snapshot
-    *        outlives the call on
-    *        purpose — the returned DataFrame is lazy and may recompute
+    *        labels) are ever alive. The LAST snapshot outlives the call
+    *        on purpose — the returned DataFrame is lazy and may recompute
     *        from it; remove the logged subdirectory after consuming the
     *        result, or run with
     *        `spark.cleaner.referenceTracking.cleanCheckpoints=true`.
@@ -149,15 +139,6 @@ object Components {
       maxIter: Int = 25,
       checkpointDir: Option[String] = None,
       localEdgeThreshold: Long = DefaultLocalEdgeThreshold): DataFrame = {
-    // validate the strategy conf BEFORE any work: a typo must fail on the
-    // first call on ANY graph size, not after a >threshold production run
-    // has already paid the edge materialization (and, on the throw path,
-    // would leak the snapped edge blocks)
-    val strategy = vertices.sparkSession.sessionState.conf
-      .getConfString(DistStrategyKey, "contract")
-    require(strategy == "contract" || strategy == "loop",
-      s"$DistStrategyKey=$strategy: must be 'contract' or 'loop' — " +
-        "refusing to silently pick a strategy for a typo")
     // payload passthrough reserves the output/internal names; fail fast
     // (before any eager edge work) rather than emit an ambiguous column
     require(!vertices.columns.contains("component_id") &&
@@ -167,8 +148,8 @@ object Components {
         "and the others are internal to the assignment join; rename the " +
         "payload column")
     // Reset the stitch-loop spec seam at ENTRY, not inside the contraction
-    // branch: the single-task union-find path and the distStrategy=loop
-    // path never reach the contraction, and without this a later
+    // branch: the single-task union-find path never reaches the
+    // contraction, and without this a later
     // small-graph call on the same thread would report a PREVIOUS call's
     // loop stats — the documented (-1, -1) contract must hold on every
     // path through this method.
@@ -211,13 +192,10 @@ object Components {
       // materialize the RAW (one-orientation) edge set once: the path
       // choice needs its count and the caller's edge lineage (e.g.
       // near-dup pair mining) must not re-execute per use. Null endpoints
-      // are dropped up front — the old propagation joins ignored them
-      // implicitly; the union-find deserializer would throw on them.
-      // Union-find is orientation-blind, so BOTH union-find paths (the
-      // single task and the contraction) consume raw edges directly —
-      // half the rows the symmetrized list would stream/exchange; only
-      // the DataFrame loop strategy pays for symmetrization (its message
-      // join needs both directions).
+      // are dropped up front — the union-find deserializer would throw on
+      // them. Union-find is orientation-blind, so both paths (the single
+      // task and the contraction) consume raw edges directly — half the
+      // rows the symmetrized list would stream/exchange.
       val rawSnap = snap(
         edges.select(col("src").cast("long"), col("dst").cast("long"))
           .filter(col("src").isNotNull && col("dst").isNotNull))
@@ -227,31 +205,15 @@ object Components {
       val labels =
         if (symCount <= localEdgeThreshold) localUnionFind(raw)
         else {
-          // both strategies leave their final state truncated (the loop's
-          // labels / the contraction's minRoot+rootLabels), so the edge
-          // blocks can be released as soon as the eager work is done; the
-          // union-find path stays lazy over raw and must keep them. In
-          // reliable mode release() is a no-op and the raw checkpoint
-          // files stay — the contraction's persisted-only intermediates
-          // recompute from them on executor loss.
-          val l =
-            if (strategy == "loop") {
-              // symmetrize narrowly over the materialized raw blocks and
-              // snap the result — every propagation round joins it; raw's
-              // own blocks are dead the moment sym materializes, so they
-              // are released BEFORE the loop runs, not after
-              val symSnap = snap(raw.union(
-                raw.select(col("dst").as("src"), col("src").as("dst"))))
-              symSnap.df.count()
-              rawSnap.release()
-              val ll = distributedLabelsLoop(symSnap.df, snap, maxIter, ourDir)
-              symSnap.release()
-              ll
-            } else {
-              val ll = contractedLabels(raw, symCount, maxIter, ourDir, localEdgeThreshold)
-              rawSnap.release()
-              ll
-            }
+          // the contraction leaves its final state (minRoot+rootLabels)
+          // truncated, so the edge blocks can be released as soon as the
+          // eager work is done; the union-find path stays lazy over raw
+          // and must keep them. In reliable mode release() is a no-op and
+          // the raw checkpoint files stay — the contraction's
+          // persisted-only intermediates recompute from them on executor
+          // loss.
+          val l = contractedLabels(raw, symCount, maxIter, ourDir, localEdgeThreshold)
+          rawSnap.release()
           l
         }
       // attach labels to the full vertex set. Labels cover only
@@ -328,21 +290,19 @@ object Components {
   }
 
   /** Delete every rdd-* snapshot under this loop's PRIVATE checkpoint
-    * subdirectory except the `keepLowest` lowest ids (the edge sets the
-    * rounds keep reading — raw only for the contraction strategy; raw AND
-    * sym for the loop strategy) and the highest (the labels that just
-    * materialized). Checkpoint rdd ids are assigned in creation order and
-    * this loop creates its frames strictly sequentially, so everything
-    * between is a finished round's state that nothing can read again. */
-  private def pruneCheckpoints(
-      sc: org.apache.spark.SparkContext, dir: String, keepLowest: Int): Unit = {
+    * subdirectory except the lowest id (the raw edge set the rounds keep
+    * reading) and the highest (the labels that just materialized).
+    * Checkpoint rdd ids are assigned in creation order and this loop
+    * creates its frames strictly sequentially, so everything between is a
+    * finished round's state that nothing can read again. */
+  private def pruneCheckpoints(sc: org.apache.spark.SparkContext, dir: String): Unit = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(sc.hadoopConfiguration)
     if (fs.exists(path)) {
       val rdds = fs.listStatus(path).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("rdd-"))
         .sortBy(_.getPath.getName.stripPrefix("rdd-").toLong)
-      rdds.drop(keepLowest).dropRight(1).foreach(s => fs.delete(s.getPath, true))
+      rdds.drop(1).dropRight(1).foreach(s => fs.delete(s.getPath, true))
     }
   }
 
@@ -480,8 +440,7 @@ object Components {
     * map-side combined). Rounds run in fused pairs with the monotone
     * label-sum convergence scalar, per-pair lineage truncation
     * (localCheckpoint, or reliable `checkpoint` + round pruning), and
-    * nothing reaches the driver but the scalar — the same contract as
-    * the DataFrame loop it replaces on this path. Returns truncated,
+    * nothing reaches the driver but the scalar. Returns truncated,
     * materialized (id, comp) labels partitioned by `part`. */
   private def minLabelLoopRdd(
       symE: org.apache.spark.rdd.RDD[(Long, Long)],
@@ -566,7 +525,7 @@ object Components {
       if (steps == 2) mid.unpersist(blocking = false)
       (midTmp :+ nextTmp).foreach(_.unpersist(blocking = false))
       prev.unpersist(blocking = false)
-      reliableDir.foreach(pruneCheckpoints(sc, _, keepLowest = 1))
+      reliableDir.foreach(pruneCheckpoints(sc, _))
       converged = s == ref
       totalPairs += 1
       if (!converged) workingPairs += 1
@@ -576,83 +535,5 @@ object Components {
     }
     lastStitchLoopStats.set((workingPairs, totalPairs))
     labels
-  }
-
-  /** The pre-contraction distributed path, kept behind
-    * `spark.graft.components.distStrategy=loop`: fused-pair min-label
-    * propagation over the FULL edge set in DataFrames — re-shuffles the
-    * edge-sized table every round, which the contraction strategy
-    * exists to avoid. Returns (id, comp) for every edge-touched vertex. */
-  private def distributedLabelsLoop(
-      sym: DataFrame, snap: DataFrame => Snap, maxIter: Int,
-      reliableDir: Option[String]): DataFrame = {
-    // initial label = min(id, min neighbor): exactly what round 1 would
-    // compute from identity labels, for the cost of ONE aggregate instead
-    // of a join + aggregate — the distinct() is folded into the groupBy
-    var labels = snap(
-      sym.groupBy(col("src"))
-        .agg(least(col("src"), min(col("dst"))).cast("long").as("comp"))
-        .select(col("src").as("id"), col("comp")))
-    // coalesce: sum over an empty active set (no edges at all) is NULL
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("comp")), lit(0L))).head().getLong(0)
-    // one label-propagation round (edge join + min-aggregate + path
-    // halving), as a PLAN — composition decides how many rounds share a
-    // job. Path halving: comp ← label(comp). Every label is a vertex id,
-    // so the self-join always matches; with it the min label travels 2^i
-    // hops by round i — convergence in O(log diameter) rounds instead of
-    // O(diameter) on long chains. (Measured at sf0.1: a SECOND jump per
-    // round does not cut rounds further, and dropping the jump entirely
-    // trades 2 fewer exchanges/round for ~20% more rounds — a wash there,
-    // so the worst-case-safe single jump stays.)
-    def round(cur: DataFrame): DataFrame = {
-      val msgs = cur.join(sym, col("id") === col("src"))
-        .select(col("dst").as("id"), col("comp"))
-      val prop = msgs.union(cur)
-        .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-      prop
-        .join(prop.select(col("id").as("__cid"), col("comp").as("__ccomp")),
-          col("comp") === col("__cid"), "left")
-        .select(col("id"), coalesce(col("__ccomp"), col("comp")).as("comp"))
-    }
-    var prevSum = labelSum(labels.df)
-    var converged = false
-    var i = 0
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    while (!converged && i < maxIter) {
-      // Fuse TWO rounds into ONE job: labels only ever decrease, so
-      // checking convergence after a round-PAIR is safe (at worst one
-      // no-op round of extra shuffle work) and halves the scheduled-job
-      // count. The intermediate round is PERSISTED (Dataset.persist, not
-      // checkpointed): its subtree is referenced up to four times by the
-      // outer round's plan (edge join, union, both sides of the
-      // path-halving self-join), and the cache makes those references hit
-      // the intermediate's blocks within the same job instead of
-      // re-executing the inner joins per reference — in BOTH modes
-      // (a lazily-marked reliable checkpoint is never written for an
-      // intermediate and does not persist anything by itself).
-      val steps = math.min(2, maxIter - i)
-      val mid = if (steps == 2) Some(round(labels.df).persist()) else None
-      val next = snap(round(mid.getOrElse(labels.df)))
-      // the ONE action of the round-pair: computes both rounds, persists
-      // the truncation blocks, and returns the convergence scalar
-      val s = labelSum(next.df)
-      labels.release() // frees the previous round's storage blocks
-      mid.foreach(_.unpersist()) // next's own blocks are live; mid's aren't
-      // reliable mode: also delete the finished rounds' snapshot FILES —
-      // unpersist() never does, and a long convergence would otherwise
-      // retain one vertex-sized snapshot per round in the fault-tolerant
-      // store. `next` just materialized, so everything between the edge
-      // set and it is dead.
-      reliableDir.foreach(pruneCheckpoints(sym.sparkSession.sparkContext, _, keepLowest = 2))
-      labels = next
-      converged = s == prevSum
-      prevSum = s
-      i += steps
-      if (dbg) println(s"[cc] round $i sum=$s")
-    }
-    // the FINAL labels' storage intentionally stays alive — the caller's
-    // returned frame is lazy and reads it
-    labels.df
   }
 }

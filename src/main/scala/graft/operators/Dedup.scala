@@ -124,54 +124,12 @@ object Dedup {
   val IncrementBroadcastMaxBytesKey = "spark.graft.incremental.broadcastProbeMaxBytes"
   val IncrementBroadcastMaxBytesDefault: Long = 256L * 1024 * 1024
 
-  /** Pair-mining strategy for the LSH band-bucket core
-    * ([[bucketedPairs]]): `collect` (default — one grouped
-    * collect-sorted-bucket aggregate with the cap folded into a size
-    * filter, pairs generated by a slice-explode: no window sort, no
-    * join build/probe) or `join` (count-window cap + shuffle_hash
-    * self-join — the r8-r10 shape, kept as the measured fallback).
-    * Both emit IDENTICAL pairs under the same cap contract
-    * (spec-pinned). Measured head-to-head at 10M docs (LshBench r11,
-    * full minhashNearDupPairs, best-of-3, BOTH leg orders to kill
-    * cache bias): collect 27.7 / 31.1 s vs join 40.5 / 46.3 s —
-    * ~1.45×, identical 943,192 pairs — because the join shape pays the
-    * bucket-count window's sort over the band exchange TWICE (once per
-    * self-join side) plus the hash-table build/probe, while collect
-    * consumes the exchange once. RE-MEASURED in r12 after the collect
-    * aggregate became the memory-bounded [[boundedSortedCollect]]
-    * (over-cap buckets flip to an O(1) marker instead of materializing):
-    * collect 27.9 / 31.7 s vs join 32.6 / 42.8 s, both orders, same
-    * 943,192 pairs — the bound costs nothing measurable and the win
-    * stands. */
-  val LshPairStrategyKey = "spark.graft.lsh.pairStrategy"
-  val LshPairStrategyDefault = "collect"
-
-  /** Co-occurrence strategy for [[jaccardPairs]]' posting lists —
-    * the same collect-vs-join trade as [[LshPairStrategyKey]], ported
-    * to the exact inverted-index operator (the posting row additionally
-    * carries the doc's shingle count for the Jaccard denominator).
-    * Identical outputs (spec-pinned). Measured at 3M docs / df cap 100
-    * (LshBench jaccard legs, best-of-3, BOTH leg orders): collect
-    * 136.9/99.8 s vs join 97.7/122.6 s — the SECOND leg won in both
-    * sessions, i.e. the fluctuating band dominates and the strategies
-    * are at PARITY here (pooled bests 99.8 vs 97.7), unlike the LSH
-    * case where collect won in both orders. The struct payload
-    * (doc, sz) makes collect's bucket rows and slice copies heavier
-    * than LSH's bare longs, eating the window+join savings. Default is
-    * `join`: at-scale parity means the tiebreak goes to the shape that
-    * does NOT regress the measured suite — r11 briefly defaulted to
-    * `collect` for shape consistency and the driver artifact recorded
-    * q24 at 1.49 s vs 0.86 s (the round's only non-band regression);
-    * reverted in r12 per that evidence, `collect` one conf away. */
-  val JaccardPairStrategyKey = "spark.graft.jaccard.pairStrategy"
-  val JaccardPairStrategyDefault = "join"
-
   def rollingHash(c: Column): Column = Bridge.column(RollingHash(Bridge.expression(c)))
   def simhash(c: Column): Column = Bridge.column(SimHash(Bridge.expression(c)))
 
   /** `array_sort(collect_list(c))` fused with the `[minSize, cap]` size
-    * filter and the cap enforced DURING aggregation — the collect pair
-    * strategies' memory guarantee lives here, see
+    * filter and the cap enforced DURING aggregation — [[collectPairs]]'
+    * memory guarantee lives here, see
     * [[graft.functions.BoundedSortedCollect]]. NULL result = dropped
     * group; callers filter `isNotNull`. */
   def boundedSortedCollect(c: Column, minSize: Int, cap: Int): Column =
@@ -354,21 +312,12 @@ object Dedup {
   def jaccardPairs(
       df: DataFrame, id: Column, text: Column, n: Int,
       minJaccardPermille: Int, maxShingleFreq: Long = 1000000L): DataFrame = {
-    // NULL-id rows are dropped up front: the join strategy's a < b
-    // predicate silently drops them anyway (NULL comparison), but the
-    // collect strategy's struct(doc, sz) would KEEP a NULL doc inside
-    // the collected posting (struct() is never null even when its
-    // fields are) and emit garbage (NULL, b) pairs — the explicit
-    // filter makes both strategies identical by construction
+    // NULL-id rows are dropped up front: the self-join's a < b predicate
+    // drops them anyway (NULL comparison), but a NULL-id row would still
+    // count toward its shingles' df — the explicit filter keeps it out of
+    // the cap as well
     val docs = df.select(id.as("doc"), shingleHashes(text, n).as("hs"))
       .filter(col("doc").isNotNull && size(col("hs")) > 0)
-    // ONE effective cap, clamped at the entry so both strategies see the
-    // same value: the collect branch's bounded aggregate takes an Int cap,
-    // and clamping only there would let the two strategies theoretically
-    // diverge for maxShingleFreq > 2^31−1 (unreachable — a >2B-element
-    // posting cannot materialize — but the contract should not depend on
-    // that argument)
-    val effMaxFreq = math.min(maxShingleFreq, Int.MaxValue.toLong)
     // The per-doc size rides along in the index rows (one long per row), so
     // the Jaccard denominator never needs a join back to a sizes table —
     // that join-back is two extra doc-keyed shuffles at corpus scale. The
@@ -389,62 +338,22 @@ object Dedup {
     // Size-bound prune (output-invariant): common ≤ min(|a|,|b|) and
     // union ≥ max(|a|,|b|), so J ≤ min/max — a pair whose sizes differ by
     // more than 1000/τ can never reach the threshold. Evaluated before
-    // the per-pair count shuffle on both strategies.
+    // the per-pair count shuffle.
     val sizeCompatible =
       col("a_size") * lit(1000L) >= col("b_size") * lit(minJaccardPermille.toLong) &&
       col("b_size") * lit(1000L) >= col("a_size") * lit(minJaccardPermille.toLong)
-    val strategy = df.sparkSession.sessionState.conf
-      .getConfString(JaccardPairStrategyKey, JaccardPairStrategyDefault)
-    val matches = strategy match {
-      case "collect" =>
-        // the LSH collect shape ported to posting lists: ONE grouped
-        // aggregate collects each shingle's (doc, sz) postings sorted by
-        // doc; the df prune ([2, maxShingleFreq]) rides INSIDE the
-        // bounded aggregate (a hot stopword shingle's posting buffer tops
-        // out at the cap instead of materializing its full df — see
-        // boundedSortedCollect), and co-occurrences fall out of a
-        // posexplode + slice explode (doc asc ⇒ a < b) — no window sort,
-        // no self-join build/probe, the h-exchange consumed once.
-        // Measured vs `join` in LshBench's jaccard legs (see
-        // JaccardPairStrategyKey).
-        index.groupBy(col("h"))
-          .agg(boundedSortedCollect(struct(col("doc"), col("sz")), 2,
-            effMaxFreq.toInt).as("__ps"))
-          .filter(col("__ps").isNotNull)
-          .select(posexplode(col("__ps")).as(Seq("__i", "__a")), col("__ps"))
-          .select(col("__a"),
-            explode(slice(col("__ps"), col("__i") + lit(2), size(col("__ps")))).as("__b"))
-          .select(col("__a.doc").as("a_id"), col("__a.sz").as("a_size"),
-            col("__b.doc").as("b_id"), col("__b.sz").as("b_size"))
-          .filter(sizeCompatible)
-      case "join" =>
-        // df prune as a WINDOW over the one h-exchange, not a separate
-        // aggregate branch: the aggregate formulation re-scans and
-        // re-shingles the whole corpus for its branch (per-branch pruning
-        // keeps AQE from reusing the exchange), while the window count
-        // rides the exchange the self-join needs anyway — one corpus pass
-        // total, measured 1.9× at sf0.1. df_count per h = #docs containing
-        // the shingle (shingles are distinct per doc). >= 2: a single-doc
-        // shingle cannot form a pair (pure optimization,
-        // output-invariant); <= maxShingleFreq: the hot cap. The per-h
-        // window sort is external and spillable — a capped hot key is
-        // bounded work, and those rows reach the join regardless.
-        // shuffle_hash: the posting-list side is never broadcast-built (it
-        // is corpus-sized); the identical exchanges on both sides are
-        // materialized once by AQE's ReuseExchange.
-        val wh = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-        val pruned = index.withColumn("df_count", count(lit(1)).over(wh))
-          .filter(col("df_count") <= effMaxFreq && col("df_count") >= 2)
-          .drop("df_count")
-        pruned.select(col("h"), col("doc").as("a_id"), col("sz").as("a_size"))
-          .hint("shuffle_hash")
-          .join(pruned.select(col("h").as("h2"), col("doc").as("b_id"), col("sz").as("b_size")),
-            col("h") === col("h2") && col("a_id") < col("b_id") && sizeCompatible)
-          .select(col("a_id"), col("a_size"), col("b_id"), col("b_size"))
-      case other => throw new IllegalArgumentException(
-        s"$JaccardPairStrategyKey must be 'collect' or 'join', got '$other'")
-    }
-    matches
+    val wh = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
+    val pruned = index.withColumn("df_count", count(lit(1)).over(wh))
+      .filter(col("df_count") <= maxShingleFreq && col("df_count") >= 2)
+      .drop("df_count")
+    // shuffle_hash: the posting-list side is never broadcast-built (it is
+    // corpus-sized); the identical exchanges on both sides are
+    // materialized once by AQE's ReuseExchange.
+    pruned.select(col("h"), col("doc").as("a_id"), col("sz").as("a_size"))
+      .hint("shuffle_hash")
+      .join(pruned.select(col("h").as("h2"), col("doc").as("b_id"), col("sz").as("b_size")),
+        col("h") === col("h2") && col("a_id") < col("b_id") && sizeCompatible)
+      .select(col("a_id"), col("a_size"), col("b_id"), col("b_size"))
       .groupBy(col("a_id"), col("b_id"))
       // sizes are functionally dependent on the ids; max() (not first())
       // keeps the aggregate readably deterministic
@@ -458,7 +367,7 @@ object Dedup {
   /** Observability dial for [[jaccardPairs]]' hot-shingle cap — the
     * jaccard-side sibling of [[cappedLshBuckets]]: which shingle hashes
     * exceed `maxShingleFreq` document frequency (and so are dropped from
-    * the inverted index by BOTH pair strategies), with their exact df.
+    * the inverted index), with their exact df.
     * Dropping a shingle from the index removes it from `common` but not
     * from the Jaccard DENOMINATOR (per-doc sizes count it), so the dial's
     * rows are exactly the per-pair intersection mass the cap can shave.
@@ -472,17 +381,11 @@ object Dedup {
   def hotShingles(
       df: DataFrame, id: Column, text: Column, n: Int,
       maxShingleFreq: Long): DataFrame = {
-    // the SAME entry clamp as jaccardPairs, so dial and pipeline share one
-    // effective cap by construction — an unclamped filter here would make
-    // the dial's rows diverge from the set of shingles the pipeline drops
-    // for maxShingleFreq > 2^31−1 (the exact theoretical divergence the
-    // shared-cap contract exists to rule out)
-    val effMaxFreq = math.min(maxShingleFreq, Int.MaxValue.toLong)
     df.select(id.as("doc"), shingleHashes(text, n).as("hs"))
       .filter(col("doc").isNotNull && size(col("hs")) > 0)
       .select(explode(col("hs")).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("df_count"))
-      .filter(col("df_count") > effMaxFreq)
+      .filter(col("df_count") > maxShingleFreq)
   }
 
   /** Bag-of-words cosine near-dup pairs over token-FREQUENCY vectors —
@@ -515,7 +418,7 @@ object Dedup {
     * pair aggregate. Cost is posting-list overlap mass bounded by the df
     * cap — never corpus².
     *
-    * The r11 collect rework (see [[JaccardPairStrategyKey]]) does NOT
+    * A bucket-collect shape (the one [[bucketedPairs]] uses) does NOT
     * port here by design: the norm is a DOC-keyed sum over the
     * df-capped postings, so it must be attached to each posting BEFORE
     * the h-keyed pair stage — a bucket-collect would still need the
@@ -625,12 +528,10 @@ object Dedup {
     * shared by 8M of 10M synthetic docs put ~10⁵ docs in single buckets
     * ⇒ ~10¹⁰ pairs through one task — the job crawls on one core for
     * hours). Over-cap buckets are dropped BEFORE any pair materializes
-    * — the default collect strategy enforces the cap INSIDE its bounded
-    * aggregate (element cap+1 flips the bucket's buffer to an O(1)
-    * marker, see [[boundedSortedCollect]]); the join strategy counts
-    * over the band exchange with a window (see [[LshPairStrategyKey]]
-    * for the A/B) — and a hot bucket costs at most cap ids (≤ a few MB
-    * for the 10⁴ default) in one partition under either. Contract: a
+    * — [[collectPairs]] enforces the cap INSIDE its bounded aggregate
+    * (element cap+1 flips the bucket's buffer to an O(1) marker, see
+    * [[boundedSortedCollect]]) — and a hot bucket costs at most cap ids
+    * (≤ a few MB for the 10⁴ default) in one partition. Contract: a
     * pair surfaces iff AT LEAST ONE shared band's bucket is uncapped —
     * a boilerplate cluster is pruned as a whole, never resurrected
     * pair-by-pair, while pairs that merely graze a hot bucket keep their
@@ -653,39 +554,31 @@ object Dedup {
       case (sig, b) => struct(lit(b).as("band"), sig.as("sig"))
     }
     // NULL-id rows are dropped up front (one row each, before the ×bands
-    // explode), for the same strategy-parity reason as jaccardPairs: the
-    // join strategy's a < b predicate silently drops them while a collect
-    // skips them inside the bucket — which changes the bucket SIZE the
-    // cap filter sees. The explicit filter makes both strategies see
-    // identical buckets by construction (NULL-id parity is spec-pinned).
+    // explode): the bucket collect would otherwise count them toward the
+    // bucket SIZE the cap sees (spec-pinned).
     val exploded = withSig
       .filter(col("doc").isNotNull)
       .select(col("doc"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc"), col("bk.band").as("band"), col("bk.sig").as("sig"))
-    val strategy = withSig.sparkSession.sessionState.conf
-      .getConfString(LshPairStrategyKey, LshPairStrategyDefault)
-    strategy match {
-      case "collect" => collectPairs(exploded, maxBucketSize)
-      case "join"    => joinPairs(exploded, maxBucketSize)
-      case other => throw new IllegalArgumentException(
-        s"$LshPairStrategyKey must be 'collect' or 'join', got '$other'")
-    }
+    collectPairs(exploded, maxBucketSize)
   }
 
-  /** `collect` pair strategy: ONE grouped aggregate over the slim band
+  /** Bucket pairs: ONE grouped aggregate over the slim band
     * exchange collects each bucket's (distinct-by-construction) doc ids
     * into a sorted array; the hot-bucket cap is then a plain size filter
     * on the bucket row, and pairs fall out of a posexplode + slice
-    * explode (a < b guaranteed by the sort). Versus [[joinPairs]] this
-    * removes the count window's per-side sort passes and the self-join's
-    * hash-table build/probe — the band exchange is consumed exactly once
-    * — at the cost of the object-aggregate machinery (the collect's
+    * explode (a < b guaranteed by the sort). Versus the count-window +
+    * shuffle_hash self-join it replaced (measured at 10M docs: 27.9 /
+    * 31.7 s against 32.6 / 42.8 s, identical pairs) this removes the
+    * window's per-side sort passes and the join's hash-table
+    * build/probe — the band exchange is consumed exactly once — at the
+    * cost of the object-aggregate machinery (the collect's
     * sort-based fallback on the high-cardinality bucket key). Memory is
     * bounded BY THE AGGREGATE ITSELF: [[boundedSortedCollect]] flips a
     * hot bucket's buffer to an O(1) overflow marker at element cap+1 and
     * releases the backing array, so an over-cap bucket never holds more
     * than cap ids in memory — the plain collect_list → size-filter
-    * formulation (this strategy's r11 shape) materialized the FULL hot
+    * formulation (the r11 shape) materialized the FULL hot
     * bucket first, which for a boilerplate key with df in the tens of
     * millions is a multi-hundred-MB buffer in one task, the exact OOM
     * the cap exists to prevent. The slice-explode's transient copies
@@ -703,37 +596,6 @@ object Dedup {
       // slice is 1-based: partner everything strictly after position __i
       .select(col("a_doc"),
         explode(slice(col("__docs"), col("__i") + lit(2), size(col("__docs")))).as("b_doc"))
-      .groupBy(col("a_doc").as("a_id"), col("b_doc").as("b_id"))
-      .agg(count(lit(1)).as("__nb"))
-      .drop("__nb")
-  }
-
-  /** `join` pair strategy (the r8-r10 shape). The cap rides the slim
-    * band exchange as a count window. A broadcast-anti alternative
-    * (aggregate the over-cap keys — bounded by pigeonhole at
-    * N·bands/maxBucketSize — and anti-join them) was measured SLOWER
-    * head-to-head at 10M docs: its aggregate is a second full subtree
-    * (scan + exchange) that ReusedExchange cannot dedup against the
-    * join's, while the window shares the join's one exchange and sort. */
-  private def joinPairs(exploded: DataFrame, maxBucketSize: Int): DataFrame = {
-    val buckets =
-      if (maxBucketSize == Int.MaxValue) exploded
-      else {
-        val wBucket = Window.partitionBy(col("band"), col("sig"))
-        exploded
-          .withColumn("__bsz", count(lit(1)).over(wBucket))
-          .filter(col("__bsz") <= maxBucketSize)
-          .drop("__bsz")
-      }
-    def side(p: String) = buckets.select(
-      col("band").as(s"${p}band"), col("sig").as(s"${p}sig"), col("doc").as(s"${p}_doc"))
-    // shuffle_hash, not broadcast: both sides are the SAME exploded
-    // subplan, so the shuffle is one slim exchange materialized once and
-    // read twice (ReusedExchange); per-partition hash tables are tens of
-    // MB. Not merge: the bucket equi-join needs no order.
-    side("a").hint("shuffle_hash").join(side("b"),
-      col("aband") === col("bband") && col("asig") === col("bsig") &&
-        col("a_doc") < col("b_doc"))
       .groupBy(col("a_doc").as("a_id"), col("b_doc").as("b_id"))
       .agg(count(lit(1)).as("__nb"))
       .drop("__nb")
@@ -772,8 +634,8 @@ object Dedup {
     *
     *  1. candidate pairs from the SLIM band-bucket core
     *     ([[bucketedPairs]]: ~40-byte rows through the one band
-    *     exchange — consumed ONCE by the default collect strategy's
-    *     grouped bucket aggregate, see [[LshPairStrategyKey]] —
+    *     exchange — consumed ONCE by [[collectPairs]]' grouped bucket
+    *     aggregate —
     *     exactly-once via the pair-keyed aggregate);
     *  2. the distinct candidate DOC ids (≤ 2× pair count) semi-filter
     *     the corpus's (doc, shingles) projection — the id table is

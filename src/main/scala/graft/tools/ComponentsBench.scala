@@ -20,10 +20,10 @@ import graft.operators.Components
   * worst realistic round count, not a flattering graph.
   *
   * Usage: runMain graft.tools.ComponentsBench [nEdges] [runs] [chainLen]
-  * Legs: `dist` / `distforce` (the contraction strategy at the default /
-  * zero threshold), `distloop` (the DataFrame loop fallback), and, for
-  * the crossover comparison, `local1task` (threshold=∞ — the single-task
-  * union-find streaming the raw edge list).
+  * Legs: `dist` / `distforce` (the contraction at the default / zero
+  * threshold) and, for the crossover comparison, `local1task`
+  * (threshold=∞ — the single-task union-find streaming the raw edge
+  * list).
   */
 object ComponentsBench {
 
@@ -63,8 +63,8 @@ object ComponentsBench {
         s"${Components.DefaultLocalEdgeThreshold} to exercise the distributed default")
 
     // warm the JVM once per timed code path on a small graph before any
-    // timed leg: (contract, stitch loop), (loop), (contract, stitch UF —
-    // the default-threshold 'dist' branch), (single-task). This covers
+    // timed leg: (contract, stitch loop), (contract, stitch UF — the
+    // default-threshold 'dist' branch), (single-task). This covers
     // codegen/JIT but NOT the first big leg's one-time host costs
     // (multi-GB shuffle-file page-cache population, heap arena growth) —
     // measured ~70-100 s on whichever 30M-edge leg runs FIRST, with the
@@ -73,33 +73,24 @@ object ComponentsBench {
     val wEdges = spark.range(0, 100000).select(col("id").as("src"))
       .withColumn("dst", col("src") + 1)
     val wVerts = spark.range(0, 100001).select(col("id"))
-    for ((strategy, threshold) <- Seq(
-        (None, 0L), (Some("loop"), 0L), (None, 150000L), (None, Long.MaxValue))) {
-      strategy.fold(spark.conf.unset(Components.DistStrategyKey))(
-        spark.conf.set(Components.DistStrategyKey, _))
+    for (threshold <- Seq(0L, 150000L, Long.MaxValue))
       Components.connectedComponents(
         wVerts, wEdges, maxIter = 40, localEdgeThreshold = threshold).count()
-    }
-    spark.conf.unset(Components.DistStrategyKey)
 
     val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // dist = the default distributed strategy at the default 10M-edge
+    // dist = the distributed path at the default 10M-edge
     // threshold (two-level contraction; the stitched root graph fits the
     // threshold and collapses into the single-task union-find — the path
     // a real >10M-edge dup graph takes); distforce = same contraction
     // but threshold 0, so the stitched root graph ALSO runs the
     // partitioner-aware min-label loop (measures the loop itself);
-    // distloop = the pre-contraction DataFrame min-label loop over the
-    // full edge set; local1task = the single-task union-find crossover
-    // reference.
-    for (leg <- Seq("dist", "distforce", "distloop", "local1task"); run <- 0 until runs) {
+    // local1task = the single-task union-find crossover reference.
+    for (leg <- Seq("dist", "distforce", "local1task"); run <- 0 until runs) {
       val threshold = leg match {
         case "local1task" => Long.MaxValue
         case "dist" => Components.DefaultLocalEdgeThreshold
         case _ => 0L
       }
-      if (leg == "distloop") spark.conf.set(Components.DistStrategyKey, "loop")
-      else spark.conf.unset(Components.DistStrategyKey)
       val t0 = System.nanoTime()
       val labels = Components.connectedComponents(
         vertices, edges, maxIter = 40, localEdgeThreshold = threshold)

@@ -26,7 +26,12 @@ import scala.jdk.CollectionConverters._
   *   `pairs` (default) — the full operator + parquet write;
   *   `sig`             — ONLY the signature scan ([[Dedup.minhashSignatures]]
   *                       + write): isolates the corpus-scan + minhash-kernel
-  *                       floor from the band join / verify costs.
+  *                       floor from the band join / verify costs;
+  *   `jaccard`         — the exact inverted-index operator
+  *                       ([[Dedup.jaccardPairs]], df cap 100) + write;
+  *   `capped[_N]`      — the hot-bucket dial ([[Dedup.cappedLshBuckets]])
+  *                       at cap N (default 10000): capped bucket count,
+  *                       dropped mass and candidate-pair bound.
   *
   * This harness already earned its keep once: a size-gated cross-pass
   * shingle cache (the gram-cache trade that WON in duplicateSpans) was
@@ -94,22 +99,14 @@ object LshBench {
       val out = leg match {
         case "pairs" =>
           Dedup.minhashNearDupPairs(corpus, $"doc_id", $"text", 3, 8, 4, 800)
-        case "pairs_join" | "pairs_collect" =>
-          // force one bucketedPairs strategy (r11 A/B: window+join vs
-          // the single-aggregate collect shape) for this leg only
-          spark.conf.set(Dedup.LshPairStrategyKey, leg.stripPrefix("pairs_"))
-          try Dedup.minhashNearDupPairs(corpus, $"doc_id", $"text", 3, 8, 4, 800)
-          finally spark.conf.unset(Dedup.LshPairStrategyKey)
         case "sig" =>
           Dedup.minhashSignatures(corpus, $"doc_id", $"text", 3, 8)
-        case "jaccard_join" | "jaccard_collect" =>
-          // the EXACT inverted-index operator under the same A/B: df cap
-          // 100 (the corpus-scale hot-shingle setting — boilerplate
-          // shingles prune; posting pair mass stays bounded at df²/2)
-          spark.conf.set(Dedup.JaccardPairStrategyKey, leg.stripPrefix("jaccard_"))
-          try Dedup.jaccardPairs(corpus, $"doc_id", $"text", n = 3,
+        case "jaccard" =>
+          // the EXACT inverted-index operator: df cap 100 (the
+          // corpus-scale hot-shingle setting — boilerplate shingles
+          // prune; posting pair mass stays bounded at df²/2)
+          Dedup.jaccardPairs(corpus, $"doc_id", $"text", n = 3,
             minJaccardPermille = 800, maxShingleFreq = 100L)
-          finally spark.conf.unset(Dedup.JaccardPairStrategyKey)
         case capped if capped == "capped" || capped.startsWith("capped_") =>
           // the cap observability dial at the DAG's LSH parameters:
           // which (band, sig) buckets exceed `cap` (default = the
@@ -132,8 +129,7 @@ object LshBench {
           Seq((cap, acct.getLong(0), acct.getLong(1), acct.getLong(2)))
             .toDF("cap", "n_capped_buckets", "dropped_mass", "candidate_pair_bound")
         case other => throw new IllegalArgumentException(
-          s"unknown leg '$other' (pairs | pairs_join | pairs_collect | sig | " +
-            "jaccard_join | jaccard_collect | capped[_N])")
+          s"unknown leg '$other' (pairs | sig | jaccard | capped[_N])")
       }
       // overwrite, not create: a concurrent or crashed prior invocation
       // can leave /out between this run's delete and write — the mode

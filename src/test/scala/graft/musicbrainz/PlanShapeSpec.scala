@@ -27,7 +27,7 @@ class PlanShapeSpec extends SparkSpec {
     val artists = ArtistOps.mbArtist(src)
     assertNoQuadraticJoin(artists, "mb_artist")
     assertNoQuadraticJoin(ArtistOps.artistAliases(src, artists), "mb_artist_alias")
-    val (album, song, _) = CanonicalOps.exportTables(src, artists)
+    val (album, song) = CanonicalOps.exportTables(CanonicalOps.scoredBest(src, artists))
     assertNoQuadraticJoin(album, "mb_album")
     assertNoQuadraticJoin(song, "mb_song")
     assertNoQuadraticJoin(SongAliasOps.songAliases(src, song), "mb_song_alias")

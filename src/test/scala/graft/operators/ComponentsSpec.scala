@@ -41,21 +41,14 @@ class ComponentsSpec extends SparkSpec {
       es <- Gen.listOfN(m, Gen.zip(Gen.choose(1L, n.toLong), Gen.choose(1L, n.toLong)))
     } yield (n, es.filter(e => e._1 != e._2))
     val prop = Prop.forAll(gen) { case (n, es) =>
-      // ALL THREE execution paths against the same oracle: the default
-      // single-task union-find, the forced two-level contraction, and
-      // the kept-as-fallback DataFrame loop strategy
+      // both execution paths against the same oracle: the default
+      // single-task union-find and the forced two-level contraction
       val gotLocal = Components.connectedComponents(
         (1L to n.toLong).toDF("id"), es.toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
       val gotDist = Components.connectedComponents(
         (1L to n.toLong).toDF("id"), es.toDF("src", "dst"), localEdgeThreshold = 0L)
         .as[(Long, Long)].collect().toMap
-      spark.conf.set(Components.DistStrategyKey, "loop")
-      val gotLoop =
-        try Components.connectedComponents(
-          (1L to n.toLong).toDF("id"), es.toDF("src", "dst"), localEdgeThreshold = 0L)
-          .as[(Long, Long)].collect().toMap
-        finally spark.conf.unset(Components.DistStrategyKey)
       // union-find oracle
       val parent = scala.collection.mutable.Map((1L to n.toLong).map(i => i -> i): _*)
       def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
@@ -63,7 +56,7 @@ class ComponentsSpec extends SparkSpec {
       val expected = (1L to n.toLong).map { v =>
         v -> (1L to n.toLong).filter(u => find(u) == find(v)).min
       }.toMap
-      gotLocal == expected && gotDist == expected && gotLoop == expected
+      gotLocal == expected && gotDist == expected
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6), prop)
     assert(res.passed, res.status.toString)
@@ -207,8 +200,7 @@ class ComponentsSpec extends SparkSpec {
     // the stitch loop (here: the single-task union-find path) must report
     // (-1, -1), not this call's stats — the reset happens at
     // connectedComponents entry, so it covers every path, including the
-    // localUnionFind and distStrategy=loop branches that never enter the
-    // contraction
+    // localUnionFind branch that never enters the contraction
     val tiny = Seq((1L, 2L)).toDF("src", "dst")
     Components.connectedComponents(
       Seq(1L, 2L).toDF("id"), tiny).as[(Long, Long)].collect()

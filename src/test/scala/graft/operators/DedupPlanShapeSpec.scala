@@ -57,11 +57,6 @@ class DedupPlanShapeSpec extends SparkSpec {
     try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  private def withPairStrategy[A](s: String)(body: => A): A = {
-    spark.conf.set(Dedup.LshPairStrategyKey, s)
-    try body finally spark.conf.unset(Dedup.LshPairStrategyKey)
-  }
-
   test("LSH near-dup pairs (collect strategy, the default): one grouped bucket " +
     "aggregate — no window, no band self-join, band exchange still slim") {
     withNoAutoBroadcast {
@@ -74,9 +69,9 @@ class DedupPlanShapeSpec extends SparkSpec {
       // the cap is a size filter on the collected bucket row — neither
       // cap mode pays a window sort or a self-join build/probe
       assert(!plan.contains("Window"),
-        s"collect strategy must not pay the bucket-count window (cap=$cap):\n$plan")
+        s"the bucket cap must not pay a count window (cap=$cap):\n$plan")
       assert(!"ShuffledHashJoin \\[a?band".r.findFirstIn(plan).isDefined,
-        s"collect strategy must not self-join the band exchange (cap=$cap):\n$plan")
+        s"bucket pairs must not self-join the band exchange (cap=$cap):\n$plan")
       // collect_list on the high-cardinality bucket key goes through the
       // object aggregate (sort-fallback bounded per partition)
       assert(plan.contains("ObjectHashAggregate"),
@@ -87,34 +82,6 @@ class DedupPlanShapeSpec extends SparkSpec {
         s"LSH pair plan grew extra shuffles (cap=$cap):\n$plan")
     }
     }
-  }
-
-  test("capped LSH near-dup pairs (join strategy): slim band exchange, " +
-    "bucket-count window on slim rows, exchanges reused") {
-    withNoAutoBroadcast { withPairStrategy("join") {
-    val pairs = Dedup.minhashNearDupPairs(
-      docs, col("doc_id"), col("text"), n = 3, k = 8, bands = 4, minJaccardPermille = 200)
-    val plan = pairs.queryExecution.executedPlan.toString
-    assertSlimBandExchange(plan)
-    // the cap rides the slim band exchange as a count window — fine on
-    // 8-byte numeric band keys, and the window shares the ONE exchange
-    // ReusedExchange deduplicates across the self-join sides (a
-    // broadcast-anti cap was measured slower: its aggregate is a second
-    // full subtree the reuse rule cannot dedup)
-    assert(plan.contains("Window"), s"bucket cap window missing:\n$plan")
-    assert(nDistinctExchanges(pairs) <= 6,
-      s"capped LSH pair plan grew extra shuffles:\n$plan")
-    val aggExchange = "Exchange hashpartitioning\\(a_id[^\\n]*".r.findAllIn(plan).toList
-    assert(aggExchange.nonEmpty, s"pair dedup exchange missing:\n$plan")
-    assert(!aggExchange.exists(_.contains("hs")),
-      s"the pair-dedup exchange must never carry the shingle arrays:\n$plan")
-    // the shared band exchange and the candidate-shingle exchange must
-    // actually be reused at runtime, not materialized once per side
-    pairs.collect()
-    val finalPlan = pairs.queryExecution.executedPlan.toString
-    assert(finalPlan.contains("Reused"),
-      s"shared exchanges must be reused across join sides:\n$finalPlan")
-    } }
   }
 
   test("simhash near-dup pairs keep the single-exchange shape") {

@@ -203,80 +203,93 @@ class DedupSpec extends SparkSpec {
     assert(all.count() == 28)
   }
 
-  test("LSH pair strategies collect ≡ join: identical pairs, capped and uncapped") {
+  /** Brute-force LSH candidate reference over the operator's own band
+    * signatures, collected: bucketing by (band, sig), the hot-bucket cap
+    * and exactly-once a < b pairs, all in Scala. NULL-id rows join no
+    * bucket. */
+  private def bruteLshCandidates(
+      sig: org.apache.spark.sql.DataFrame, k: Int, bands: Int, cap: Int): Set[(Long, Long)] = {
+    val rows = sig.select(col("doc"),
+        array(Dedup.bandSignaturesFromCols(k, bands): _*).cast("array<string>"))
+      .as[(Option[Long], Seq[String])].collect()
+      .collect { case (Some(d), bs) => d -> bs }
+    val buckets = rows.toSeq
+      .flatMap { case (d, bs) => bs.zipWithIndex.map { case (s, b) => (b, s) -> d } }
+      .groupBy(_._1).values.map(_.map(_._2).sorted)
+    (for {
+      ds <- buckets.toSeq if ds.length <= cap
+      i <- ds.indices; j <- (i + 1) until ds.length
+    } yield (ds(i), ds(j))).toSet
+  }
+
+  /** Brute-force n-gram Jaccard reference over the operator's own shingle
+    * hashes, collected: document frequency, the hot-shingle cap, the
+    * overlap and ⌊1000·common/union⌋, all in Scala. The sizes count capped
+    * shingles; `common` does not. NULL-id and shingle-free docs pair with
+    * nothing. → (a, b, common, a_size, b_size, jaccard_permille). */
+  private def bruteJaccard(
+      df: org.apache.spark.sql.DataFrame, n: Int, tau: Int,
+      cap: Long): Set[(Long, Long, Long, Long, Long, Long)] = {
+    val docs = df.select(col("doc_id"), Dedup.shingleHashes(col("text"), n))
+      .as[(Option[Long], Option[Seq[Long]])].collect()
+      .collect { case (Some(d), Some(hs)) if hs.nonEmpty => d -> hs.toSet }
+    val dfCount = docs.toSeq.flatMap(_._2).groupBy(identity).map { case (h, o) => h -> o.size }
+    (for {
+      (a, ha) <- docs.toSeq; (b, hb) <- docs.toSeq if a < b
+      common = ha.intersect(hb).count(h => dfCount(h) <= cap).toLong
+      if common > 0
+      jac = 1000L * common / (ha.size + hb.size - common)
+      if jac >= tau
+    } yield (a, b, common, ha.size.toLong, hb.size.toLong, jac)).toSet
+  }
+
+  test("LSH candidate pairs: hand-built buckets, capped and uncapped") {
     // mixed fixture: a >cap boilerplate cluster (docs 1-6), a private pair
     // that ALSO grazes the hot band-0 bucket (7/8 — the band-survival
-    // contract), and a genuine small pair (9/10); both strategies must
-    // emit the same set under the same cap, and under no cap
+    // contract), and a genuine small pair (9/10)
     val sig = ((1 to 6).map(i => (i.toLong, 100L, 10L + i, 20L + i, 30L + i)) ++ Seq(
       (7L, 100L, 7L, 77L, 777L),
       (8L, 100L, 8L, 88L, 777L),
       (9L, 900L, 9L, 99L, 999L),
       (10L, 900L, 9L, 91L, 991L)))
       .toDF("doc", "mh_0", "mh_1", "mh_2", "mh_3")
-    def run(strategy: String, cap: Int): Set[(Long, Long)] = {
-      spark.conf.set(Dedup.LshPairStrategyKey, strategy)
-      try Dedup.lshCandidates(sig, k = 4, bands = 4, maxBucketSize = cap)
+    def run(cap: Int): Set[(Long, Long)] =
+      Dedup.lshCandidates(sig, k = 4, bands = 4, maxBucketSize = cap)
         .as[(Long, Long)].collect().toSet
-      finally spark.conf.unset(Dedup.LshPairStrategyKey)
-    }
-    for (cap <- Seq(5, Int.MaxValue)) {
-      val c = run("collect", cap)
-      val j = run("join", cap)
-      assert(c == j, s"cap=$cap: collect $c != join $j")
-    }
-    assert(run("collect", 5) == Set((7L, 8L), (9L, 10L)))
-    intercept[IllegalArgumentException] {
-      run("bogus", 5)
-    }
+    assert(run(5) == Set((7L, 8L), (9L, 10L)))
+    // uncapped, band 0's bucket 100 holds docs 1-8: all 28 of its pairs,
+    // each once although 7/8 also share band 3
+    val all1to8 = for (a <- 1L to 8L; b <- (a + 1) to 8L) yield (a, b)
+    assert(run(Int.MaxValue) == all1to8.toSet + ((9L, 10L)))
   }
 
-  test("LSH: a NULL-id row is dropped identically under both strategies, cap included") {
-    // without the up-front id filter the strategies DIVERGE on bucket
-    // SIZE: the join branch's count window counts a NULL-id row (its
-    // a < b predicate only drops the pairs), while collect skips it
-    // inside the bucket — a bucket straddling the cap is then capped
-    // under one strategy but not the other. Docs 1/2 + a NULL row share
-    // every band; cap=2 keeps the pair only if the NULL row is excluded
-    // from the size on BOTH strategies.
+  test("LSH: a NULL-id row is dropped before the bucket cap counts it") {
+    // a bucket's size must count only real ids: docs 1/2 + a NULL row
+    // share every band, and cap=2 keeps the pair only if the NULL row is
+    // excluded from the size
     val sig = Seq(
       (Some(1L), 5L, 15L, 25L, 35L),
       (Some(2L), 5L, 15L, 25L, 35L),
       (None: Option[Long], 5L, 15L, 25L, 35L))
       .toDF("doc", "mh_0", "mh_1", "mh_2", "mh_3")
-    for (strategy <- Seq("collect", "join")) {
-      spark.conf.set(Dedup.LshPairStrategyKey, strategy)
-      try {
-        val got = Dedup.lshCandidates(sig, k = 4, bands = 4, maxBucketSize = 2)
-          .as[(Long, Long)].collect().toSet
-        assert(got == Set((1L, 2L)), s"$strategy: $got")
-      } finally spark.conf.unset(Dedup.LshPairStrategyKey)
-    }
+    val got = Dedup.lshCandidates(sig, k = 4, bands = 4, maxBucketSize = 2)
+      .as[(Long, Long)].collect().toSet
+    assert(got == Set((1L, 2L)), s"got $got")
   }
 
-  test("jaccardPairs: a NULL-id row is dropped identically under both strategies") {
-    // struct(doc, sz) is never null even when doc is, so an unfiltered
-    // collect branch would keep a NULL doc inside the posting and emit
-    // (NULL, b) garbage pairs where the join branch's a < b predicate
-    // silently drops them — the up-front id filter pins both to the same
-    // (r10) behavior
+  test("jaccardPairs: a NULL-id row is dropped, never paired") {
     val df = Seq((Some(1L), "x y z x y z"), (Some(2L), "x y z x y z"),
       (None: Option[Long], "x y z x y z")).toDF("doc_id", "text")
-    for (strategy <- Seq("collect", "join")) {
-      spark.conf.set(Dedup.JaccardPairStrategyKey, strategy)
-      try {
-        val got = Dedup.jaccardPairs(df, col("doc_id"), col("text"), n = 3,
-          minJaccardPermille = 500)
-          .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-        assert(got == Set((1L, 2L)), s"$strategy: $got")
-      } finally spark.conf.unset(Dedup.JaccardPairStrategyKey)
-    }
+    val got = Dedup.jaccardPairs(df, col("doc_id"), col("text"), n = 3,
+      minJaccardPermille = 500)
+      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    assert(got == Set((1L, 2L)), s"got $got")
   }
 
-  test("jaccard pair strategies collect ≡ join: property over random corpora and df caps") {
+  test("jaccardPairs ≡ brute-force Jaccard (property, random corpora and caps)") {
     // tiny vocabulary forces heavy shingle sharing, including over-cap
-    // shingles; both strategies must agree on pairs AND the exact
-    // jaccard_permille values under every drawn cap
+    // shingles; pairs, overlaps, sizes and the exact jaccard_permille
+    // must match the oracle under every drawn cap
     val word = Gen.oneOf("a", "b", "c", "d")
     val gen = for {
       nDocs <- Gen.choose(2, 12)
@@ -286,24 +299,20 @@ class DedupSpec extends SparkSpec {
     } yield (docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }, cap, tau)
     val prop = Prop.forAll(gen) { case (rows, cap, tau) =>
       val df = rows.toDF("doc_id", "text")
-      def run(strategy: String): Set[(Long, Long, Long)] = {
-        spark.conf.set(Dedup.JaccardPairStrategyKey, strategy)
-        try Dedup.jaccardPairs(df, col("doc_id"), col("text"), n = 3,
-            minJaccardPermille = tau, maxShingleFreq = cap)
-          .select("a_id", "b_id", "jaccard_permille")
-          .as[(Long, Long, Long)].collect().toSet
-        finally spark.conf.unset(Dedup.JaccardPairStrategyKey)
-      }
-      run("collect") == run("join")
+      val got = Dedup.jaccardPairs(df, col("doc_id"), col("text"), n = 3,
+          minJaccardPermille = tau, maxShingleFreq = cap)
+        .select(col("a_id"), col("b_id"), col("common"), col("a_size").cast("long"),
+          col("b_size").cast("long"), col("jaccard_permille"))
+        .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
+      got == bruteJaccard(df, 3, tau, cap)
     }
     val res = SCTest.check(prop)(_.withMinSuccessfulTests(25))
     assert(res.passed, res.status.toString)
   }
 
-  test("LSH pair strategies collect ≡ join: property over random signature tables and caps") {
+  test("lshCandidates ≡ brute-force bucketing (property, random tables and caps)") {
     // small value domain forces heavy bucket collisions (including
-    // over-cap buckets and multi-band shared pairs); both strategies
-    // must agree on every drawn table under every drawn cap
+    // over-cap buckets and multi-band shared pairs)
     val gen = for {
       nDocs <- Gen.choose(2, 30)
       cap <- Gen.oneOf(2, 3, 5, Int.MaxValue)
@@ -312,13 +321,8 @@ class DedupSpec extends SparkSpec {
       (i.toLong, mh(0), mh(1), mh(2), mh(3)) }, cap)
     val prop = Prop.forAll(gen) { case (rows, cap) =>
       val sig = rows.toDF("doc", "mh_0", "mh_1", "mh_2", "mh_3")
-      def run(strategy: String): Set[(Long, Long)] = {
-        spark.conf.set(Dedup.LshPairStrategyKey, strategy)
-        try Dedup.lshCandidates(sig, k = 4, bands = 4, maxBucketSize = cap)
-          .as[(Long, Long)].collect().toSet
-        finally spark.conf.unset(Dedup.LshPairStrategyKey)
-      }
-      run("collect") == run("join")
+      Dedup.lshCandidates(sig, k = 4, bands = 4, maxBucketSize = cap)
+        .as[(Long, Long)].collect().toSet == bruteLshCandidates(sig, 4, 4, cap)
     }
     val res = SCTest.check(prop)(_.withMinSuccessfulTests(30))
     assert(res.passed, res.status.toString)
