@@ -11,18 +11,18 @@ import graft.functions.normalize
   */
 object SongAliasOps {
 
-  /** → mb_song_alias(song_id, alias). `mbSong.mb_id` is the recording gid
-    * (`sql/5:7` joins back through it). Normalization uses
+  /** → mb_song_alias(song_id, alias). `sql/5:7` joins `mb_song` back to
+    * `recording` through the gid; here that join is unnecessary, because
+    * `mbSong.id` IS the recording id and `title` the recording name
+    * ([[CanonicalOps.exportTables]]). Normalization uses
     * [[normalize.searchKey]] on both store and probe sides (SURVEY §7.4.3);
     * empty keys are null and dropped. `ON CONFLICT DO NOTHING` → distinct
     * on (song_id, alias), which also subsumes the UNION's own distinct, so
     * the branches are unioned ALL and deduplicated once.
     */
   def songAliases(src: MbSources, mbSong: DataFrame): DataFrame = {
-    val songRec = mbSong.select(col("id").as("song_id"), col("mb_id"))
-      .join(src.recording.select(col("gid"), col("id").as("rec_id"), col("name").as("rec_name")),
-        col("mb_id") === col("gid"))
-      .select(col("song_id"), col("rec_id"), col("rec_name"))
+    val songRec = mbSong.select(
+      col("id").as("song_id"), col("id").as("rec_id"), col("title").as("rec_name"))
 
     val own = songRec.select(col("song_id"), col("rec_name").as("name"))
     val recAlias = songRec

@@ -20,7 +20,7 @@ import graft.functions.BloomContains
   * the Bloom sketch is a routing optimization, never a source of error:
   *
   *   - the filter side aggregates into one Bloom sketch (distributed
-  *     build with partial merges via `stat.bloomFilter`; only the final
+  *     build with partial merges, see [[buildFilter]]; only the final
   *     KB..MB bitset reaches the driver — the same single-sketch collect
   *     Spark's own AQE runtime filters perform);
   *   - every big-side row probes the sketch inside whole-stage codegen
@@ -52,13 +52,6 @@ import graft.functions.BloomContains
   */
 object BloomJoin {
 
-  /** Distributed build of the filter-side sketch: one Bloom filter over
-    * `xxhash64(key)`, returned serialized (readable on any executor via
-    * `BloomFilter.readFrom`). Runs as a Tungsten typed-imperative
-    * aggregate (Catalyst's own `BloomFilterAggregate` — partial
-    * per-partition sketches merge map-side, one bitset reaches the
-    * driver); an empty filter side yields the empty sketch rather than
-    * the NPE `DataFrameStatFunctions.bloomFilter` hits on null. */
   /** Pass as `expectedItems` to size the sketch by COUNTING the filter
     * side first (one cheap aggregate over the small side). An explicit
     * estimate saves that job — but a low-ball estimate quietly saturates
@@ -67,6 +60,13 @@ object BloomJoin {
     * cardinality isn't provably known. */
   val AutoSize: Long = -1L
 
+  /** Distributed build of the filter-side sketch: one Bloom filter over
+    * `xxhash64(key)`, returned serialized (readable on any executor via
+    * `BloomFilter.readFrom`). Runs as a Tungsten typed-imperative
+    * aggregate (Catalyst's own `BloomFilterAggregate` — partial
+    * per-partition sketches merge map-side, one bitset reaches the
+    * driver); an empty filter side yields the empty sketch rather than
+    * the NPE `DataFrameStatFunctions.bloomFilter` hits on null. */
   def buildFilter(
       filterSide: DataFrame, key: Column,
       expectedItems: Long, fpp: Double): Array[Byte] = {
@@ -89,37 +89,6 @@ object BloomJoin {
 
   private def maybeContains(bytes: Array[Byte], key: Column): Column =
     Bridge.column(BloomContains(bytes, Bridge.expression(xxhash64(key))))
-
-  /** Persist a built sketch for reuse across runs — the daily-pipeline
-    * shape: build the takedown/allowlist filter ONCE when the list
-    * changes, then every ingest run loads the bytes instead of re-scanning
-    * the list (same rationale as the incremental-dedup signature index).
-    * One-row parquet via the engine's own IO — works on any Hadoop-visible
-    * path, no driver-local filesystem assumptions. */
-  def saveFilter(spark: org.apache.spark.sql.SparkSession, bytes: Array[Byte], path: String): Unit = {
-    import spark.implicits._
-    Seq(Tuple1(bytes)).toDF("filter_bytes").write.mode("overwrite").parquet(path)
-  }
-
-  def loadFilter(spark: org.apache.spark.sql.SparkSession, path: String): Array[Byte] =
-    spark.read.parquet(path).select(col("filter_bytes")).head().getAs[Array[Byte]](0)
-
-  /** The map-side gate alone, from pre-built sketch bytes: keep rows the
-    * sketch may contain (`keep = true`) or provably lacks. A pure
-    * deterministic Column — composes into `readStream` unchanged (the
-    * streaming ingest gate; pair with a stream-static confirm join for
-    * exactness, or accept the fpp as an over-keep).
-    *
-    * The fpp's error DIRECTION depends on how the gate is wired.
-    * `filter(bloomGate(...))` (allowlist / semi shape) over-KEEPS ~fpp of
-    * non-members — recoverable by a later confirm join. But
-    * `filter(!bloomGate(...))` (blocklist / anti shape) over-DROPS ~fpp of
-    * INNOCENT rows — silent data loss no downstream step can recover.
-    * Without the confirm join, only the keep direction is safe; for a
-    * blocklist use [[bloomAntiJoin]], whose confirm join restores exact
-    * anti semantics. */
-  def bloomGate(bytes: Array[Byte], key: Column): Column =
-    maybeContains(bytes, key)
 
   /** `big` minus every row whose `bigKey` equals some `blockKey` —
     * exact `left_anti` semantics, bloom-routed (see object doc).

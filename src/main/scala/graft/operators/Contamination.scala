@@ -82,12 +82,8 @@ object Contamination {
 
   /** Inverted-index postings of a corpus: one row per (doc, distinct
     * shingle hash), the per-doc shingle count riding along. Shared by the
-    * batch operator and [[graft.streaming.StreamingContamination]]'s
-    * benchmark index — the posting shape must not drift between them or
-    * the streaming≡batch parity breaks. (The parity holds when no
-    * hot-shingle cap binds: the batch operator caps TRAIN-side df, the
-    * streaming index caps BENCH-side df — see the divergence note on
-    * [[graft.streaming.StreamingContamination.benchmarkIndex]].) */
+    * overlap operators here and [[TextAnalysis.targetAffinity]] — one
+    * posting shape, so the empty-doc guard and size column cannot drift. */
   def postings(
       df: DataFrame, id: Column, text: Column, n: Int,
       idAlias: String, sizeAlias: String): DataFrame =

@@ -859,34 +859,18 @@ object Dedup {
   def simhashSignatures(df: DataFrame, id: Column, text: Column): DataFrame =
     df.select(id.as("doc"), simhash(tokenHashes(text)).as("sig"))
 
+  /** SimHash pigeonhole-banding geometry of [[simhashNearDupPairs]]:
+    * 3 × 10-bit chunks give full recall at hamming ≤ 2 by pigeonhole. */
+  private val SimHashChunks = 3
+  private val SimHashChunkBits = 10
+  private val SimHashChunkMask: Long = (1L << SimHashChunkBits) - 1L
+  private def simhashChunk(sig: Column, c: Int): Column =
+    shiftright(sig, c * SimHashChunkBits) % (SimHashChunkMask + 1L)
+
   /** SimHash near-dup pairs with hamming distance ≤ `maxHamming` (≤ 2 for
     * full recall with 3 bands; higher distances degrade to best-effort).
     * Banding: 3 × 10-bit chunks equi-join, then `bit_count(xor)` verify.
     * → (a_id, b_id, hamming). */
-  /** SimHash pigeonhole-banding geometry — ONE definition shared by
-    * [[simhashNearDupPairs]] and the streaming twin
-    * ([[graft.streaming.StreamingDedup]]): 3 × 10-bit chunks give full
-    * recall at hamming ≤ 2 by pigeonhole. A drifted private copy on
-    * either side would silently break the spec-pinned streaming ≡ batch
-    * parity. */
-  private[graft] val SimHashChunks = 3
-  private[graft] val SimHashChunkBits = 10
-  private[graft] val SimHashChunkMask: Long = (1L << SimHashChunkBits) - 1L
-  private[graft] def simhashChunk(sig: Column, c: Int): Column =
-    shiftright(sig, c * SimHashChunkBits) % (SimHashChunkMask + 1L)
-  /** The first chunk index on which `a` and `b` agree, -1 if none — the
-    * exactly-once-without-distinct gate, JVM form (the batch operator
-    * spells the same test as Columns). */
-  private[graft] def firstSharedSimHashChunk(a: Long, b: Long): Int = {
-    var c = 0
-    while (c < SimHashChunks) {
-      if (((a >> (c * SimHashChunkBits)) & SimHashChunkMask) ==
-        ((b >> (c * SimHashChunkBits)) & SimHashChunkMask)) return c
-      c += 1
-    }
-    -1
-  }
-
   def simhashNearDupPairs(df: DataFrame, id: Column, text: Column, maxHamming: Int): DataFrame = {
     val sigs = simhashSignatures(df, id, text)
     val chunks = (0 until SimHashChunks).map { c =>
