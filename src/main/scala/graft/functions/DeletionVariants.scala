@@ -10,6 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The deletion neighborhood of a string: itself plus every
   * single-character deletion, deduplicated, first-occurrence order —
   * the blocking key space of the lev≤1 similarity join (SURVEY §7.4.2).
+  * A character is a code point, as in Spark's `levenshtein` and `length`:
+  * deleting one UTF-16 unit of a surrogate pair would leave a lone
+  * surrogate that no other string's neighborhood contains.
   * Native kernel (the `transform(sequence(...))` Column form evaluates
   * interpreted and the explode side is the join's hottest path).
   */
@@ -21,8 +24,9 @@ object DeletionVariants {
     seen.add(s)
     var i = 0
     while (i < s.length) {
-      seen.add(s.substring(0, i) + s.substring(i + 1))
-      i += 1
+      val next = s.offsetByCodePoints(i, 1)
+      seen.add(s.substring(0, i) + s.substring(next))
+      i = next
     }
     val out = new Array[Any](seen.size)
     val it = seen.iterator()

@@ -28,35 +28,48 @@ import org.apache.spark.unsafe.types.UTF8String
   * while the witness is one string compare and at most one substring.
   */
 object Lev1Witness {
+  /** First UTF-16 index where `x` and `y` differ, moved back to the start
+    * of its code point (a pair can share a high surrogate and differ in
+    * the low one). */
+  private def firstMismatch(x: String, y: String): Int = {
+    val n = math.min(x.length, y.length)
+    var i = 0
+    while (i < n && x.charAt(i) == y.charAt(i)) i += 1
+    if (i > 0 && Character.isHighSurrogate(x.charAt(i - 1))) i - 1 else i
+  }
+
+  /** Lengths and deletions count code points, as Spark's `levenshtein`
+    * does, so a pair one supplementary character apart has a witness. */
   def compute(a: UTF8String, b: UTF8String): UTF8String = {
     val sa = a.toString
     val sb = b.toString
     if (sa == sb) return a
-    val la = sa.length
-    val lb = sb.length
+    val la = a.numChars()
+    val lb = b.numChars()
     // |a| = |b| + 1: the shorter is a witness only if it really is a
     // single deletion of the longer — skip the longer's first mismatching
-    // char and require the tails to agree (self-containment for
+    // code point and require the tails to agree (self-containment for
     // standalone SQL use; lev('abc','xy') must yield null, not 'xy')
     if (math.abs(la - lb) == 1) {
       val (long, short, witness) = if (la > lb) (sa, sb, b) else (sb, sa, a)
-      var i = 0
-      while (i < short.length && long.charAt(i) == short.charAt(i)) i += 1
-      var j = i
-      while (j < short.length && long.charAt(j + 1) == short.charAt(j)) j += 1
-      return if (j == short.length) witness else null // 2nd mismatch → lev ≥ 2
+      val i = firstMismatch(long, short)
+      val skip = long.offsetByCodePoints(i, 1)
+      val tail = short.length - i
+      // 2nd mismatch → lev ≥ 2
+      return if (long.length - skip == tail && long.regionMatches(skip, short, i, tail)) witness
+        else null
     }
     if (la != lb) return null // length gap ≥ 2 → lev ≥ 2
-    var i = 0
-    while (i < la && sa.charAt(i) == sb.charAt(i)) i += 1
+    val i = firstMismatch(sa, sb)
     // self-contained for standalone SQL use: a deleted-first-mismatch string
     // is only a shared variant when the tails agree (single substitution);
     // equal-length pairs with lev ≥ 2 must yield null, not a bogus witness.
     // Still O(|a|): one more linear scan over the suffix.
-    var j = i + 1
-    while (j < la && sa.charAt(j) == sb.charAt(j)) j += 1
-    if (j < la) return null // second mismatch → lev ≥ 2
-    UTF8String.fromString(sa.substring(0, i) + sa.substring(i + 1))
+    val na = sa.offsetByCodePoints(i, 1)
+    val nb = sb.offsetByCodePoints(i, 1)
+    val tail = sa.length - na
+    if (sb.length - nb != tail || !sa.regionMatches(na, sb, nb, tail)) return null // second mismatch → lev ≥ 2
+    UTF8String.fromString(sa.substring(0, i) + sa.substring(na))
   }
 }
 

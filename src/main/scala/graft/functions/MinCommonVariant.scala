@@ -17,13 +17,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * distinct it replaced; this loop is ~|a|+|b| small string comparisons.
   */
 object MinCommonVariant {
+  // one deletion per code point, like [[DeletionVariants]]
   private def variants(s: String): Array[String] = {
-    val out = new Array[String](s.length + 1)
+    val out = new Array[String](s.codePointCount(0, s.length) + 1)
     out(0) = s
     var i = 0
+    var k = 1
     while (i < s.length) {
-      out(i + 1) = s.substring(0, i) + s.substring(i + 1)
-      i += 1
+      val next = s.offsetByCodePoints(i, 1)
+      out(k) = s.substring(0, i) + s.substring(next)
+      i = next
+      k += 1
     }
     out
   }

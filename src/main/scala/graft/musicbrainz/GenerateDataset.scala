@@ -22,15 +22,42 @@ object GenerateDataset {
       mbSong: DataFrame,
       mbSongAlias: DataFrame,
       hinges: Seq[DataFrame] = Nil) {
+    private def tables = Seq(mbArtist, mbArtistAlias, mbAlbum, mbSong, mbSongAlias)
+
+    /** The five tables' summed size estimate: the matcher's index gate. */
+    private lazy val tableBytes: BigInt =
+      tables.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+
+    private var index: Option[MatcherIndex] = None
+
+    /** The matcher's index over this export, built by the first call that
+      * passes the gate and reused by every later one; None while the
+      * tables exceed `spark.sql.autoBroadcastJoinThreshold` (see
+      * [[MatchOps.matchSongs]]). A memo [[unpersist]] can reset, not a
+      * lazy val: a read-back export still serves after `unpersist`, on a
+      * fresh index. */
+    private[musicbrainz] def matcherIndex: Option[MatcherIndex] = synchronized {
+      if (tableBytes > mbArtist.sparkSession.sessionState.conf.autoBroadcastJoinThreshold) None
+      else {
+        if (index.isEmpty) index = Some(MatcherIndex(this))
+        index
+      }
+    }
+
     /** Release what [[GenerateDataset.apply]] holds: the stored rows behind
       * every [[Hinge]] in `hinges` (including the `best` hinge, which no
-      * exported frame exposes), and any cache a caller put on the five
-      * frames. A frame built on a released hinge can no longer run: write
-      * the export first, then read the written tables back.
+      * exported frame exposes), any cache a caller put on the five
+      * frames, and the broadcasts of the matcher's index. A frame built on
+      * a released hinge can no longer run: write the export first, then
+      * read the written tables back.
       */
     def unpersist(): Unit = {
-      Seq(mbArtist, mbArtistAlias, mbAlbum, mbSong, mbSongAlias).foreach(_.unpersist())
+      tables.foreach(_.unpersist())
       hinges.foreach(Hinge.release)
+      synchronized {
+        index.foreach(_.destroy())
+        index = None
+      }
     }
   }
 

@@ -13,13 +13,22 @@ import graft.operators.{Relational, SimilarityJoin}
   * round-trip per query (SURVEY §3.2).
   *
   * Pipeline per query batch:
-  *   artist lookup — ONE lev ≤ 1 similarity join (J14) for the whole
-  *     batch, with role-tagged probes: the whole display name, plus the
-  *     head and rejoined tail of the duo split (F14) for names with "&";
-  *     one aggregate per query picks whole-name hits, else the split's
+  *   artist lookup — the whole display name, plus the head and rejoined
+  *     tail of the duo split (F14) for names with "&"; whole-name hits
+  *     win, else the split's
+  *   → the serving rows of each artist (song ⋈ song alias ⋈ album ⋈
+  *     artist, J13)
   *   → two-phase song lookup (prefix LIKE, else lev ≤ 1) — both phases
   *     computed set-based, phase 1 preferred per query (`benchmark.py:124-126`)
   *   → multiplicative relevance + relative-threshold argmax (A4).
+  *
+  * The first two steps run on one of two paths, gated by export size (see
+  * [[matchSongs]]); the rest is one shared ranking:
+  *   - index path: the export's [[MatcherIndex]], built once and probed by
+  *     native expressions — a batch is one narrow map over the query frame;
+  *   - join path: ONE lev ≤ 1 similarity join (J14) for the whole batch
+  *     with role-tagged probes and one aggregate per query, then the
+  *     4-join serving query.
   */
 object MatchOps {
 
@@ -28,6 +37,9 @@ object MatchOps {
   private val WholeName = 0
   private val SplitHead = 1
   private val SplitTail = 2
+
+  private def duoHead(name: Column): Column = element_at(split(name, "&"), 1)
+  private def duoTail(name: Column): Column = array_join(slice(split(name, "&"), 2, 1000), "&")
 
   /** Artist lookup (`benchmark.py:69-79`): DISTINCT artist ids whose alias
     * is within edit distance 1 of the normalized query name. The reference's
@@ -77,14 +89,13 @@ object MatchOps {
     * never find anything the whole name missed.
     */
   private def artistPairs(q: DataFrame, mbArtistAlias: DataFrame): DataFrame = {
-    val parts = split(col("full_name"), "&")
     def probe(role: Int, name: Column) = struct(lit(role).as("role"), name.as("qname"))
     val whole = probe(WholeName, col("full_name"))
     val probes = q
       .select(col("query_id"), explode(
         when(col("full_name").contains("&"), array(whole,
-          probe(SplitHead, element_at(parts, 1)),
-          probe(SplitTail, array_join(slice(parts, 2, 1000), "&"))))
+          probe(SplitHead, duoHead(col("full_name"))),
+          probe(SplitTail, duoTail(col("full_name")))))
           .otherwise(array(whole))).as("p"))
       .select(col("query_id"), col("p.role").as("role"), col("p.qname").as("qname"))
     def hitsOf(role: Int) = collect_set(when(col("role") === role, col("artist_id")))
@@ -102,25 +113,50 @@ object MatchOps {
   /** Every surviving candidate row per query with its phase and relevance —
     * the frame [[matchSongs]] takes its argmax over. Public so single-case
     * triage ([[explainQuery]]) can show the losers too.
-    * `queries` columns: query_id, artist_name, artist2_name (nullable),
-    * title.
+    * `queries` columns: query_id (a key), artist_name, artist2_name
+    * (nullable), title.
     */
   def scoredCandidates(queries: DataFrame, export: GenerateDataset.Export): DataFrame =
-    scoredWith(queries, export, artistPairs)
+    export.matcherIndex match {
+      case Some(index) => ranked(indexedCandidates(displayNames(queries), index))
+      case None => scoredWith(queries, export, artistPairs)
+    }
 
-  /** [[scoredCandidates]] over any artist lookup `(q, mbArtistAlias) →
-    * (query_id, artist_id, second_required, second_ids)`, `q` being
-    * (query_id, title, full_name) — the seam the equivalence spec runs a
-    * reference lookup through. */
-  private[musicbrainz] def scoredWith(
-      queries: DataFrame, export: GenerateDataset.Export,
-      lookup: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    // display name "A & B" when a second artist exists (`benchmark.py:159-162`)
-    val q = queries.select(
+  /** (query_id, title, full_name): the display name "A & B" when a second
+    * artist exists (`benchmark.py:159-162`). */
+  private def displayNames(queries: DataFrame): DataFrame =
+    queries.select(
       col("query_id"), col("title"),
       when(col("artist2_name").isNotNull,
         concat(col("artist_name"), lit(" & "), col("artist2_name")))
         .otherwise(col("artist_name")).as("full_name"))
+
+  /** The index path's candidates: per query, [[MatcherIndex.artistLookup]]
+    * on the display name and its split, then one row per serving row of
+    * each artist found — no join, no exchange, no broadcast of its own. */
+  private def indexedCandidates(q: DataFrame, index: MatcherIndex): DataFrame = {
+    val name = col("full_name")
+    val hasSplit = name.contains("&")
+    q.select(col("query_id"), normalize.searchKey(col("title")).as("tkey"),
+        index.artistLookup(normalize.searchKey(name),
+          when(hasSplit, normalize.searchKey(duoHead(name))),
+          when(hasSplit, normalize.searchKey(duoTail(name)))).as("hits"))
+      .filter(col("tkey").isNotNull)
+      .select(col("query_id"), col("tkey"), col("hits.second_ids").as("second_ids"),
+        explode(col("hits.artist_ids")).as("artist_id"))
+      .select(col("query_id"), col("tkey"), (size(col("second_ids")) > 0).as("second_required"),
+        col("second_ids"), explode(index.servingRows(col("artist_id"))).as("s"))
+      .select(col("query_id"), col("tkey"), col("second_required"), col("second_ids"), col("s.*"))
+  }
+
+  /** The join path's candidates over any artist lookup `(q, mbArtistAlias)
+    * → (query_id, artist_id, second_required, second_ids)`, `q` being
+    * (query_id, title, full_name) — the seam the equivalence spec runs a
+    * reference lookup through — ranked as [[scoredCandidates]] ranks. */
+  private[musicbrainz] def scoredWith(
+      queries: DataFrame, export: GenerateDataset.Export,
+      lookup: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val q = displayNames(queries)
 
     // the 4-join serving query (`benchmark.py:96-117`)
     val songs = export.mbSong.select(
@@ -137,15 +173,22 @@ object MatchOps {
     val qk = q.select(col("query_id").as("qq_id"), normalize.searchKey(col("title")).as("tkey"))
       .filter(col("tkey").isNotNull)
 
-    val cand = lookup(q, export.mbArtistAlias)
+    ranked(lookup(q, export.mbArtistAlias)
       .join(qk, col("query_id") === col("qq_id"))
       .join(songs, col("artist_id") === col("s_artist_id"))
-      .filter(!col("second_required") ||
-        (col("second_artist_id").isNotNull && array_contains(col("second_ids"), col("second_artist_id"))))
       .join(export.mbSongAlias.select(col("song_id").as("al_song"), col("alias")),
         col("song_id") === col("al_song"))
       .join(albums, col("album_id") === col("a_id"))
-      .join(artists, col("s_artist_id") === col("ar_id"))
+      .join(artists, col("s_artist_id") === col("ar_id")))
+  }
+
+  /** The ranking both paths share. `cand` columns: query_id, tkey,
+    * second_required, second_ids and the serving row's fields
+    * ([[MatcherIndex.servingRows]]). */
+  private def ranked(cand: DataFrame): DataFrame = {
+    val distinct = cand
+      .filter(!col("second_required") ||
+        (col("second_artist_id").isNotNull && array_contains(col("second_ids"), col("second_artist_id"))))
       // two phases in one pass: 1 = prefix match (`benchmark.py:85`),
       // 2 = bounded edit distance with the length guard (`:87-91`)
       .withColumn("phase",
@@ -155,10 +198,11 @@ object MatchOps {
       // DISTINCT of the serving query's projection (`benchmark.py:97`),
       // keyed on query_id alone: a subset of the distinct key satisfies the
       // aggregate's clustering, so dedup and ranking windows share one
-      // partitioning. When the joins above stream the query side, that is
-      // the lookup aggregate's query_id exchange and the planner drops this
-      // repartition as redundant; otherwise it is one query_id exchange,
-      // not one over all 17 columns plus the windows' own
+      // partitioning. When the join path's joins stream the query side,
+      // that is the lookup aggregate's query_id exchange and the planner
+      // drops this repartition as redundant; otherwise (always, on the
+      // index path) it is one query_id exchange, not one over all 17
+      // columns plus the windows' own
       .select(
         col("query_id"), col("tkey"), col("phase"),
         col("song_mb_id"), col("alias").as("matched_alias"), col("song_title"),
@@ -171,7 +215,7 @@ object MatchOps {
 
     // phase-1 rows win when any exist for the query (`benchmark.py:124-126`)
     val wPhase = Window.partitionBy(col("query_id"))
-    val phased = cand
+    val phased = distinct
       .withColumn("min_phase", min(col("phase")).over(wPhase))
       .filter(col("phase") === col("min_phase"))
 
@@ -211,6 +255,15 @@ object MatchOps {
   /** Full matcher. Returns one row per query_id that matched:
     * (query_id, song_mb_id, matched_alias, title, album_title, album_mb_id,
     *  release_year, artist_name_mb, artist_mb_id, country_id, relevance).
+    *
+    * Path gate: when the export's five tables together estimate at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes (summed
+    * `optimizedPlan.stats.sizeInBytes` — the threshold at which the join
+    * path's planner broadcasts them in every batch anyway), the batch runs
+    * on the export's [[MatcherIndex]], which the first such call builds
+    * and [[GenerateDataset.Export.unpersist]] releases. Above it, or with
+    * the threshold at -1, the batch runs the join path. Both give the
+    * same rows.
     */
   def matchSongs(queries: DataFrame, export: GenerateDataset.Export): DataFrame =
     winners(scoredCandidates(queries, export))

@@ -1,0 +1,232 @@
+package graft.musicbrainz
+
+import scala.collection.mutable
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{col, length}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.DeletionVariants
+
+/** The matcher's static side, indexed once per export (SURVEY J13/J14 on a
+  * small export): the export never changes between chart batches, so
+  * instead of re-exploding `mb_artist_alias` into deletion variants and
+  * re-broadcasting the four serving tables in every batch, the driver
+  * collects them once and ships two broadcasts that native expressions
+  * probe row by row:
+  *   - [[artists]]: every alias's deletion variants → (alias, artist id),
+  *     probed by [[MatcherIndex.artistLookup]];
+  *   - [[serving]]: per artist, its pre-joined serving rows (song ⋈ song
+  *     alias ⋈ album ⋈ artist), generated by [[MatcherIndex.servingRows]].
+  * [[GenerateDataset.Export]] owns the index: it builds it on the first
+  * batch and [[destroy]]s it in `unpersist()`.
+  */
+private[musicbrainz] final class MatcherIndex private (
+    val artists: Broadcast[AliasVariants],
+    val serving: Broadcast[ServingRows],
+    rowType: StructType) {
+
+  /** (whole, head, tail) search keys → struct<artist_ids, second_ids>:
+    * the whole name's hits when there are any (no second artist then),
+    * else the head's hits with the tail's as the required second artists.
+    * Keys may be null (no hits). */
+  def artistLookup(whole: Column, head: Column, tail: Column): Column =
+    Bridge.column(AliasVariantsLookup(artists,
+      Bridge.expression(org.apache.spark.sql.functions.array(whole, head, tail))))
+
+  /** artist id → array of serving rows, empty for an artist without
+    * songs. A row's fields carry the names the join path's candidate frame
+    * gives them (second_artist_id, song_mb_id, song_title,
+    * single_relationship, recording_score, alias, album_title,
+    * release_year, is_single, is_soundtrack, is_main_album, album_mb_id,
+    * artist_name_mb, artist_mb_id, country_id). */
+  def servingRows(artistId: Column): Column =
+    Bridge.column(ServingRowsOf(serving, rowType, Bridge.expression(artistId)))
+
+  def destroy(): Unit = {
+    artists.destroy()
+    serving.destroy()
+  }
+}
+
+private[musicbrainz] object MatcherIndex {
+
+  /** The join path's length guards (`SimilarityJoin.levenshtein1Join`
+    * with the matcher's `maxLen`/`maxLenLeft`): stored aliases shorter than
+    * 255 characters, probes shorter than 256. */
+  private val AliasMaxLen = 255
+  private[musicbrainz] val ProbeMaxLen = 256
+
+  /** Collect the five tables (one job each) and join them on the driver:
+    * the same inner equi-joins as the join path, ids compared as longs,
+    * null keys joining nothing. */
+  def apply(e: GenerateDataset.Export): MatcherIndex = {
+    val sc = e.mbArtist.sparkSession.sparkContext
+    val id = (c: String) => col(c).cast(LongType)
+
+    val aliasRows = e.mbArtistAlias
+      .filter(col("artist_id").isNotNull && length(col("alias")) < AliasMaxLen)
+      .select(id("artist_id"), col("alias")).collect()
+    val aliases = aliasRows.map(r => UTF8String.fromString(r.getString(1)))
+    val variants = new java.util.HashMap[UTF8String, Array[Int]]()
+    aliases.indices.foreach { i =>
+      DeletionVariants.compute(aliases(i)).array.foreach { v =>
+        variants.merge(v.asInstanceOf[UTF8String], Array(i), (a: Array[Int], b: Array[Int]) => a ++ b)
+      }
+    }
+
+    // a serving row is the song's fields, the song alias, the album's and
+    // the artist's, as catalyst values, without the tables' id columns
+    def values(r: Row, from: Int): Array[Any] =
+      Array.tabulate(r.length - from)(i => convertToCatalyst(r.get(from + i)))
+    def byId(df: DataFrame): (Map[Long, Array[Array[Any]]], Seq[StructField]) =
+      (df.collect().filter(!_.isNullAt(0)).groupMap(_.getLong(0))(values(_, 1)), df.schema.fields.toSeq.drop(1))
+    val (aliasesBySong, aliasFields) = byId(e.mbSongAlias.select(id("song_id"), col("alias")))
+    val (albumsById, albumFields) = byId(e.mbAlbum.select(id("id"),
+      col("title").as("album_title"), col("release_year"), col("is_single"),
+      col("is_soundtrack"), col("is_main_album"), col("mb_id").as("album_mb_id")))
+    val (artistsById, artistFields) = byId(e.mbArtist.select(id("id"),
+      col("name").as("artist_name_mb"), col("mb_id").as("artist_mb_id"), col("country_id")))
+    val songs = e.mbSong.select(id("id"), id("artist_id"), id("album_id"),
+      id("second_artist_id"), col("mb_id").as("song_mb_id"), col("title").as("song_title"),
+      col("is_single").as("single_relationship"), col("score").as("recording_score"))
+    val rowType = StructType(songs.schema.fields.toSeq.drop(3) ++ aliasFields ++ albumFields ++ artistFields)
+
+    val rowsByArtist = mutable.HashMap.empty[Long, mutable.ArrayBuffer[InternalRow]]
+    for (s <- songs.collect() if !s.isNullAt(0) && !s.isNullAt(1) && !s.isNullAt(2)) {
+      val song = values(s, 3)
+      for {
+        al <- aliasesBySong.getOrElse(s.getLong(0), Array.empty)
+        ab <- albumsById.getOrElse(s.getLong(2), Array.empty)
+        ar <- artistsById.getOrElse(s.getLong(1), Array.empty)
+      } rowsByArtist.getOrElseUpdate(s.getLong(1), mutable.ArrayBuffer.empty) +=
+        new GenericInternalRow(Array.concat(song, al, ab, ar))
+    }
+    val toUnsafe = UnsafeProjection.create(Array[DataType](ArrayType(rowType, containsNull = false)))
+    val serving = new java.util.HashMap[Long, ArrayData]()
+    rowsByArtist.foreach { case (artist, rows) =>
+      serving.put(artist, toUnsafe(InternalRow(new GenericArrayData(rows.toArray[Any]))).getArray(0).copy())
+    }
+
+    new MatcherIndex(
+      sc.broadcast(new AliasVariants(variants, aliases, aliasRows.map(_.getLong(0)))),
+      sc.broadcast(new ServingRows(serving)),
+      rowType)
+  }
+}
+
+/** Deletion variant → slots of the aliases that have it (see
+  * `SimilarityJoin.levenshtein1Join`: two strings within edit distance 1
+  * share a deletion variant). */
+final class AliasVariants(
+    variants: java.util.HashMap[UTF8String, Array[Int]],
+    aliases: Array[UTF8String],
+    artistIds: Array[Long]) extends Serializable {
+
+  /** Distinct ids of the artists with an alias within edit distance 1 of
+    * `key` (Spark's bounded `levenshtein`, as the join path verifies),
+    * ascending. */
+  def hits(key: UTF8String): Array[Long] = {
+    if (key == null || key.numChars() >= MatcherIndex.ProbeMaxLen) return Array.emptyLongArray
+    val ids = mutable.SortedSet.empty[Long]
+    DeletionVariants.compute(key).array.foreach { v =>
+      val slots = variants.get(v.asInstanceOf[UTF8String])
+      if (slots != null) slots.foreach { s =>
+        if (key.levenshteinDistance(aliases(s), 1) >= 0) ids += artistIds(s)
+      }
+    }
+    ids.toArray
+  }
+
+  /** `keys` = [whole, head, tail] → (artist_ids, second_ids). */
+  def lookup(keys: ArrayData): InternalRow = {
+    def key(i: Int) = if (keys.isNullAt(i)) null else keys.getUTF8String(i)
+    val direct = hits(key(0))
+    val (found, second) =
+      if (direct.nonEmpty) (direct, Array.emptyLongArray) else (hits(key(1)), hits(key(2)))
+    InternalRow(ArrayData.toArrayData(found), ArrayData.toArrayData(second))
+  }
+}
+
+/** Artist id → its serving rows, one unsafe array per artist. */
+final class ServingRows(rows: java.util.HashMap[Long, ArrayData]) extends Serializable {
+  private val none: ArrayData = new GenericArrayData(Array.empty[Any])
+  def of(artistId: Long): ArrayData = {
+    val r = rows.get(artistId)
+    if (r == null) none else r
+  }
+}
+
+/** [[AliasVariants.lookup]] over a broadcast index, on the
+  * `SketchMaybeDup` pattern: generated code resolves the broadcast value
+  * once per operator instance into a mutable-state field. */
+case class AliasVariantsLookup(index: Broadcast[AliasVariants], child: Expression)
+    extends UnaryExpression {
+
+  override def dataType: DataType = AliasVariantsLookup.Type
+  override def prettyName: String = "matcher_artist_lookup"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"matcher_artist_lookup probes an array of search keys, got ${other.catalogString}")
+  }
+
+  @transient private lazy val idx: AliasVariants = index.value
+
+  override def nullSafeEval(input: Any): Any = idx.lookup(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[AliasVariants].getName
+    val bcRef = ctx.addReferenceObj("aliasVariantsBc", index, classOf[Broadcast[_]].getName)
+    val term = ctx.addMutableState(cls, "aliasVariants", v => s"$v = ($cls) $bcRef.value();")
+    defineCodeGen(ctx, ev, c => s"$term.lookup($c)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): AliasVariantsLookup =
+    copy(child = newChild)
+}
+
+object AliasVariantsLookup {
+  val Type: StructType = StructType(Seq(
+    StructField("artist_ids", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("second_ids", ArrayType(LongType, containsNull = false), nullable = false)))
+}
+
+/** [[ServingRows.of]] over a broadcast index: an artist id → its serving
+  * rows, for `explode`. */
+case class ServingRowsOf(index: Broadcast[ServingRows], rowType: StructType, child: Expression)
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(rowType, containsNull = false)
+  override def prettyName: String = "matcher_serving_rows"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case LongType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"matcher_serving_rows takes a BIGINT artist id, got ${other.catalogString}")
+  }
+
+  @transient private lazy val rows: ServingRows = index.value
+
+  override def nullSafeEval(input: Any): Any = rows.of(input.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[ServingRows].getName
+    val bcRef = ctx.addReferenceObj("servingRowsBc", index, classOf[Broadcast[_]].getName)
+    val term = ctx.addMutableState(cls, "servingRows", v => s"$v = ($cls) $bcRef.value();")
+    defineCodeGen(ctx, ev, c => s"$term.of($c)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ServingRowsOf =
+    copy(child = newChild)
+}

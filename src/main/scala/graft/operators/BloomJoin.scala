@@ -11,12 +11,11 @@ import org.apache.spark.util.sketch.BloomFilter
 
 import graft.functions.BloomContains
 
-/** Bloom-filter-accelerated semi/anti joins — the "blocklist/allowlist
-  * against a 100 TB fact" shape of a training-data pipeline (drop every
-  * document whose key appears in a takedown list; keep only documents on
-  * a license allowlist; strip lineitems of cancelled orders).
+/** A Bloom-filter-accelerated anti join — the "blocklist against a 100 TB
+  * fact" shape of a training-data pipeline (drop every document whose key
+  * appears in a takedown list; strip lineitems of cancelled orders).
   *
-  * Semantics are EXACTLY the plain `left_anti`/`left_semi` equi-join —
+  * Semantics are EXACTLY the plain `left_anti` equi-join —
   * the Bloom sketch is a routing optimization, never a source of error:
   *
   *   - the filter side aggregates into one Bloom sketch (distributed
@@ -25,17 +24,15 @@ import graft.functions.BloomContains
   *     Spark's own AQE runtime filters perform);
   *   - every big-side row probes the sketch inside whole-stage codegen
   *     ([[graft.functions.BloomContains]]);
-  *   - "definitely absent" rows are settled MAP-SIDE — for an anti join
-  *     they pass through, for a semi join they are dropped, with no
-  *     exchange at all;
+  *   - "definitely absent" rows are settled MAP-SIDE — they pass
+  *     through with no exchange at all;
   *   - only the "maybe present" sliver (true members + the fpp share of
   *     false positives) takes the exact confirming equi-join, so the
   *     shuffle moves ~|matches| + fpp·|big| rows instead of |big|.
   *
   * The anti join reads the big side twice (once per branch) — at scale
   * two pruned columnar scans are far cheaper than shuffling the full
-  * fact, which is what a single-pass `left_anti` would do. The semi join
-  * is single-scan (the map-side branch only discards).
+  * fact, which is what a single-pass `left_anti` would do.
   *
   * `fpp` trades sketch size against confirm-join traffic; correctness
   * never depends on it, nor on `expectedItems` being a good estimate (an
@@ -46,9 +43,9 @@ import graft.functions.BloomContains
   * type on both sides (an int and a long hash differently even for equal
   * values; the confirm join would then silently degrade to all-maybe).
   * Null big-side keys follow SQL equi-join semantics: never equal to
-  * anything, so an anti join keeps them and a semi join drops them
-  * (map-side in both cases is consistent: `xxhash64(null)` is the seed
-  * hash, and the confirm join's `===` never matches null).
+  * anything, so the anti join keeps them (consistently map-side too:
+  * `xxhash64(null)` is the seed hash, and the confirm join's `===` never
+  * matches null).
   */
 object BloomJoin {
 
@@ -97,8 +94,7 @@ object BloomJoin {
     * re-evaluate it independently (like any double-referenced
     * DataFrame), so a nondeterministic side (`sample`, `rand()`, a
     * source mutating between jobs) can land a row in both branches or
-    * neither. Checkpoint such inputs first; [[bloomSemiJoin]] is
-    * single-scan and immune. */
+    * neither. Checkpoint such inputs first. */
   def bloomAntiJoin(
       big: DataFrame, bigKey: Column,
       block: DataFrame, blockKey: Column,
@@ -114,18 +110,5 @@ object BloomJoin {
       .join(block.select(blockKey.as("__bloom_key")),
         bigKey === col("__bloom_key"), "left_anti")
     pass.unionByName(confirmed)
-  }
-
-  /** Rows of `big` whose `bigKey` equals some `allowKey` — exact
-    * `left_semi` semantics; non-members are dropped map-side, only
-    * bloom-positives shuffle into the confirming semi join. */
-  def bloomSemiJoin(
-      big: DataFrame, bigKey: Column,
-      allow: DataFrame, allowKey: Column,
-      expectedItems: Long = AutoSize, fpp: Double = 0.03): DataFrame = {
-    val bytes = buildFilter(allow, allowKey, expectedItems, fpp)
-    big.filter(maybeContains(bytes, bigKey))
-      .join(allow.select(allowKey.as("__bloom_key")),
-        bigKey === col("__bloom_key"), "left_semi")
   }
 }

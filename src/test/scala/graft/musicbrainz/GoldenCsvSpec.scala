@@ -111,11 +111,13 @@ class GoldenCsvSpec extends SparkSpec {
 
   test("explainQuery: full candidate set for one query with the winner flagged") {
     val golden = GoldenCsv.read(spark, csvPath)
-    val explained = MatchOps.explainQuery(
+    def explained() = MatchOps.explainQuery(
       GoldenCsv.toQueries(golden), MbFixtureExport.cached(spark), queryId = 1)
-    val rows = explained
       .select("matched_alias", "album_mb_id", "phase", "relevance", "chosen")
       .as[(String, String, Int, Double, Boolean)].collect()
+    // both sides of the matcher's index gate
+    val rows = explained()
+    assert(OnJoinPath(spark)(explained()).toSeq.sortBy(_.toString) == rows.toSeq.sortBy(_.toString))
     // two phase-1 prefix hits on song 100's aliases, both resolving to the
     // canonical album g-201; the exact-alias row gets the ×10 boost and wins
     assert(rows.map(r => (r._1, r._2, r._3)).toSet ==

@@ -3,13 +3,16 @@ package graft.musicbrainz
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+
 import graft.SparkSpec
 
 /** Batch matcher over the fixture export — §3.2 semantics: fuzzy artist
   * lookup, duo-split fallback, two-phase song lookup, relevance ranking,
   * and the A6 accuracy counters (replica of `benchmark.py:245-274`) — and
-  * the single-join artist lookup's equivalence with the three-lookup
-  * composition it replaced.
+  * the equivalence of both sides of the matcher's index gate with the
+  * three-lookup composition the single-join lookup replaced.
   */
 class MatchOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -147,19 +150,79 @@ class MatchOpsSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
+  private val bothCases = Seq(
+    ("fixture queries", () => queries, () => export),
+    ("lookup edge cases", () => lookupCases, () => richExport))
+
   test("single-join artist lookup returns what the three-lookup composition did") {
-    for ((what, qs, ex) <- Seq(
-        ("fixture queries", queries, export),
-        ("lookup edge cases", lookupCases, richExport))) {
-      val got = MatchOps.matchSongs(qs, ex)
-      val want = MatchOps.winners(MatchOps.scoredWith(qs, ex, threeLookupPairs))
+    for ((what, qs, ex) <- bothCases) OnJoinPath(spark) {
+      assert(ex().matcherIndex.isEmpty, s"$what: the join path is not forced")
+      val got = MatchOps.matchSongs(qs(), ex())
+      val want = MatchOps.winners(MatchOps.scoredWith(qs(), ex(), threeLookupPairs))
       assert(got.columns.toSeq == want.columns.toSeq, what)
       assert(rows(got) == rows(want), what)
     }
     // the cases are not vacuous: each exercises the branch it names
+    val got = OnJoinPath(spark) {
+      MatchOps.matchSongs(lookupCases, richExport)
+        .select("query_id", "album_mb_id").as[(Int, String)].collect().toMap
+    }
+    assert(got == expectedLookupCases)
+  }
+
+  private val expectedLookupCases = Map(101 -> "g-210", 103 -> "g-950", 104 -> "g-950",
+    105 -> "g-210", 106 -> "g-210", 107 -> "g-210")
+
+  test("index path returns what the join path and the three-lookup composition did") {
+    for ((what, qs, ex) <- bothCases) {
+      assert(ex().matcherIndex.isDefined, s"$what: the export does not pass the index gate")
+      val got = MatchOps.matchSongs(qs(), ex())
+      val joined = OnJoinPath(spark) {
+        val j = MatchOps.matchSongs(qs(), ex())
+        (j.columns.toSeq, rows(j))
+      }
+      val want = MatchOps.winners(MatchOps.scoredWith(qs(), ex(), threeLookupPairs))
+      assert(got.columns.toSeq == joined._1, what)
+      assert(got.columns.toSeq == want.columns.toSeq, what)
+      assert(rows(got) == joined._2, what)
+      assert(rows(got) == rows(want), what)
+    }
     val got = MatchOps.matchSongs(lookupCases, richExport)
       .select("query_id", "album_mb_id").as[(Int, String)].collect().toMap
-    assert(got == Map(101 -> "g-210", 103 -> "g-950", 104 -> "g-950",
-      105 -> "g-210", 106 -> "g-210", 107 -> "g-210"))
+    assert(got == expectedLookupCases)
+  }
+
+  test("the export owns its matcher index: built once, released by unpersist, one per export") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_match_index").toString
+    GenerateDataset.write(export, dir, aliasPartitions = 2)
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val first = GenerateDataset.read(spark, dir)
+    val second = GenerateDataset.read(spark, dir)
+    def ids(i: MatcherIndex) = Set(i.artists.id, i.serving.id)
+    def answers(e: GenerateDataset.Export) =
+      rows(MatchOps.matchSongs(queries, e).select("query_id", "album_mb_id"))
+
+    val want = answers(first)
+    val index = first.matcherIndex.get
+    for (_ <- 1 to 3) assert(answers(first) == want)
+    assert(first.matcherIndex.get eq index, "a later batch built a second index")
+    assert(answers(second) == want)
+    val other = second.matcherIndex.get
+    assert(other ne index)
+    assert((ids(index) & ids(other)).isEmpty, "two exports share an index broadcast")
+    assert(ids(index).subsetOf(org.apache.spark.graft.CoreBridge.broadcastsHeld()))
+
+    first.unpersist()
+    second.unpersist()
+    eventually(timeout(Span(30, Seconds))) {
+      val held = org.apache.spark.graft.CoreBridge.broadcastsHeld()
+      assert((held & (ids(index) ++ ids(other))).isEmpty, s"index broadcasts left: $held")
+    }
+    assert(sc.getPersistentRDDs.keySet == persistedBefore)
+    // a read-back export still serves after unpersist, on a fresh index
+    assert(answers(first) == want)
+    assert(first.matcherIndex.get ne index)
+    first.unpersist()
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 
 import graft.SparkSpec
 import graft.functions.DeletionVariants
@@ -85,11 +86,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("batch matcher explodes the artist alias table into deletion variants once") {
-    // a duo query, so the batch carries whole-name AND split probes
+    // a duo query, so the batch carries whole-name AND split probes; on the
+    // join path, the one that explodes the alias table at all
     val queries = Seq((1, "Alpha", Option("Beta"), "Duet Song"))
       .toDF("query_id", "artist_name", "artist2_name", "title")
-    val plan = MatchOps.matchSongs(queries, MbFixtureExport.cached(spark))
-      .queryExecution.optimizedPlan
+    val plan = OnJoinPath(spark) {
+      MatchOps.matchSongs(queries, MbFixtureExport.cached(spark)).queryExecution.optimizedPlan
+    }
     val aliasExplodes = plan.collect {
       case g: Generate if g.generator.exists {
         case d: DeletionVariants => d.references.exists(_.name == "alias")
@@ -98,5 +101,26 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(aliasExplodes.size == 1,
       s"mb_artist_alias exploded ${aliasExplodes.size} times, expected once:\n$plan")
+  }
+
+  test("index-path batch: no broadcast exchange, no alias explode, no export table scan") {
+    val queries = Seq((1, "Alpha", Option("Beta"), "Duet Song"), (2, "Nirvana", None, "Come as"))
+      .toDF("query_id", "artist_name", "artist2_name", "title")
+    val export = MbFixtureExport.cached(spark)
+    assert(export.matcherIndex.isDefined, "the fixture export does not pass the index gate")
+    val m = MatchOps.matchSongs(queries, export)
+    assert(m.count() == 2)
+    val plan = m.queryExecution.optimizedPlan
+    val explodes = plan.collect {
+      case g: Generate if g.generator.exists(_.isInstanceOf[DeletionVariants]) => g
+    }
+    assert(explodes.isEmpty, s"the batch explodes deletion variants:\n$plan")
+    // the query frame is the only leaf: no mb_* table is read
+    val leaves = plan.collectLeaves()
+    assert(leaves.size == 1 && leaves.head.output.exists(_.name == "query_id"),
+      s"the batch reads more than its queries:\n$plan")
+    val physical = reachable(m.queryExecution.executedPlan)
+    assert(!physical.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"the batch broadcasts:\n${m.queryExecution.executedPlan}")
   }
 }

@@ -25,22 +25,6 @@ class BloomJoinSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  test("bloom semi join ≡ plain left_semi (property)") {
-    val genKeys = Gen.choose(0, 40).flatMap(k => Gen.listOfN(k, Gen.choose(0L, 30L)))
-    val prop = Prop.forAll(genKeys, genKeys) { (bigKeys, allowKeys) =>
-      val big = bigKeys.zipWithIndex.map { case (k, i) => (i.toLong, k) }.toDF("row_id", "k")
-      val allow = allowKeys.toDF("k")
-      val got = BloomJoin.bloomSemiJoin(big, col("k"), allow, col("k"),
-        expectedItems = 64, fpp = 0.2)
-        .as[(Long, Long)].collect().toSet
-      val want = big.join(allow.select(col("k").as("ak")), col("k") === col("ak"), "left_semi")
-        .as[(Long, Long)].collect().toSet
-      got == want
-    }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
-    assert(res.passed, res.status.toString)
-  }
-
   test("empty blocklist: every row passes, none shuffles") {
     val big = (1L to 100L).map(i => (i, s"doc$i")).toDF("k", "payload")
     val block = Seq.empty[Long].toDF("k")

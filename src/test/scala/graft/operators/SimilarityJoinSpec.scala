@@ -32,7 +32,10 @@ class SimilarityJoinSpec extends SparkSpec {
       if levenshteinDist(a, b) <= 1
     } yield (a, b)).toSet
 
-  private def levenshteinDist(a: String, b: String): Int = {
+  /** Edit distance over code points, the unit of Spark's `levenshtein`. */
+  private def levenshteinDist(a0: String, b0: String): Int = {
+    val a = a0.codePoints().toArray
+    val b = b0.codePoints().toArray
     val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
       if (i == 0) j else if (j == 0) i else 0
     }
@@ -43,11 +46,16 @@ class SimilarityJoinSpec extends SparkSpec {
     d(a.length)(b.length)
   }
 
+  // a small alphabet with two supplementary characters (each two UTF-16
+  // units), one of them sharing its high surrogate with the other
+  private val alphabet = Seq("a", "b", "c", "\uD83D\uDE00", "\uD83D\uDE01")
+  private def genStr(maxLen: Int): Gen[String] =
+    Gen.choose(0, maxLen).flatMap(n => Gen.listOfN(n, Gen.oneOf(alphabet)).map(_.mkString))
+
   test("blocked lev<=1 join ≡ naive cross-join filter (property, small alphabet)") {
     // Small alphabet maximizes collisions and near-miss pairs (the "ab"/"ba"
     // false-candidate case the verify step must reject).
-    val genStr = Gen.choose(0, 5).flatMap(n => Gen.stringOfN(n, Gen.oneOf('a', 'b', 'c')))
-    val genCorpus = Gen.listOfN(30, genStr)
+    val genCorpus = Gen.listOfN(30, genStr(5))
     val prop = Prop.forAll(genCorpus, genCorpus) { (ls: List[String], rs: List[String]) =>
       val left = ls.distinct.toDF("l")
       val right = rs.distinct.toDF("r")
@@ -65,10 +73,11 @@ class SimilarityJoinSpec extends SparkSpec {
     // the exactly-once selector is sound iff, whenever lev(a,b) <= 1, the
     // witness is a member of BOTH deletion neighborhoods — then exactly one
     // joined row satisfies __lv === witness
-    def variants(s: String): Set[String] =
-      (s +: s.indices.map(i => s.take(i) + s.drop(i + 1))).toSet
-    val genStr = Gen.choose(0, 6).flatMap(n => Gen.stringOfN(n, Gen.oneOf('a', 'b', 'c')))
-    val prop = Prop.forAll(genStr, genStr) { (a: String, b: String) =>
+    def variants(s: String): Set[String] = {
+      val cps = s.codePoints().toArray.toSeq.map(Character.toString)
+      (s +: cps.indices.map(i => (cps.take(i) ++ cps.drop(i + 1)).mkString)).toSet
+    }
+    val prop = Prop.forAll(genStr(6), genStr(6)) { (a: String, b: String) =>
       val witness = org.apache.spark.sql.graft.Bridge.column(
         graft.functions.Lev1Witness(
           org.apache.spark.sql.graft.Bridge.expression(col("a")),
@@ -84,6 +93,18 @@ class SimilarityJoinSpec extends SparkSpec {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("blocked join finds pairs one supplementary character apart") {
+    val smiley = "a\uD83D\uDE00b" // "a😀b": two UTF-16 units, one code point
+    assert(Seq((smiley, "ab")).toDF("x", "y")
+      .select(levenshtein(col("x"), col("y"))).as[Int].head() == 1)
+    val left = Seq(smiley, "ab").toDF("l")
+    val right = Seq(smiley, "ab").toDF("r")
+    val rows = SimilarityJoin.levenshtein1Join(left, "l", right, "r")
+      .as[(String, String)].collect().toSeq
+    assert(rows.sorted == Seq(("a\uD83D\uDE00b", "a\uD83D\uDE00b"), ("a\uD83D\uDE00b", "ab"),
+      ("ab", "a\uD83D\uDE00b"), ("ab", "ab")).sorted)
   }
 
   test("blocked join on real-shaped keys finds substitution/insert/delete/equal") {
