@@ -1,8 +1,6 @@
 package graft
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
   * Each query gets one untimed warmup execution before the timed run, so the
@@ -13,17 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is parquet TIMESTAMP(NANOS): read as BIGINT ns
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.BenchUtil.session()
     // A failing query reports the sentinel -1, never its time-to-exception,
     // so breakage is visible in the bench JSON instead of looking fast.
     // Per query: one warmup run (JIT/codegen, per-process constants), then

@@ -3,6 +3,8 @@ package graft.musicbrainz
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
+import graft.operators.SizeGate
+
 /** §3.1 end-to-end: MusicBrainz-shaped sources → the 5-table export dataset
   * (`/root/reference/README.md:21`; schema contract `sql/2_export_tables.sql`).
   *
@@ -26,7 +28,7 @@ object GenerateDataset {
 
     /** The five tables' summed size estimate: the matcher's index gate. */
     private lazy val tableBytes: BigInt =
-      tables.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+      tables.map(SizeGate.estimate).sum
 
     private var index: Option[MatcherIndex] = None
 

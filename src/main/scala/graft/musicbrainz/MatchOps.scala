@@ -258,7 +258,7 @@ object MatchOps {
     *
     * Path gate: when the export's five tables together estimate at most
     * `spark.sql.autoBroadcastJoinThreshold` bytes (summed
-    * `optimizedPlan.stats.sizeInBytes` — the threshold at which the join
+    * [[graft.operators.SizeGate.estimate]] — the threshold at which the join
     * path's planner broadcasts them in every batch anyway), the batch runs
     * on the export's [[MatcherIndex]], which the first such call builds
     * and [[GenerateDataset.Export.unpersist]] releases. Above it, or with

@@ -223,11 +223,11 @@ object Components {
       // un-hinted plan was a SortMergeJoin exchanging the corpus-sized
       // vertex table, because the RDD-backed labels frame has unknown
       // stats and auto-broadcast never fires on it).
-      val gate = vertices.sparkSession.sessionState.conf
-        .getConfString(BroadcastLabelsMaxBytesKey, BroadcastLabelsMaxBytesDefault.toString).toLong
       val labelsRenamed = labels.withColumnRenamed("id", "__lid")
       val labelsHinted =
-        if (symCount * 16L <= gate) broadcast(labelsRenamed) else labelsRenamed
+        if (SizeGate.fits(vertices.sparkSession, symCount * 16L,
+            BroadcastLabelsMaxBytesKey, BroadcastLabelsMaxBytesDefault)) broadcast(labelsRenamed)
+        else labelsRenamed
       // vertex payload columns ride this join untouched (see scaladoc);
       // id-only callers produce the exact former plan
       vertices

@@ -61,21 +61,18 @@ object Contamination {
 
   /** The bench-side build strategy: `broadcast` below the ceiling,
     * `shuffle_hash` hint above it. */
-  private def benchBuild(bench: DataFrame): DataFrame => DataFrame = {
-    val max = bench.sparkSession.sessionState.conf
-      .getConfString(BenchBroadcastMaxBytesKey, BenchBroadcastMaxBytesDefault.toString).toLong
-    if (bench.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(max)) df => broadcast(df)
+  private def benchBuild(bench: DataFrame): DataFrame => DataFrame =
+    if (SizeGate.fits(bench.sparkSession, SizeGate.estimate(bench),
+        BenchBroadcastMaxBytesKey, BenchBroadcastMaxBytesDefault)) df => broadcast(df)
     else df => df.hint("shuffle_hash")
-  }
 
   /** Bench-relevant slice of the train postings (`t` semi-filtered by the
     * bench shingle set via `build`), persisted above the size gate. */
   private def benchRelevant(t: DataFrame, benchH: DataFrame, train: DataFrame,
       build: DataFrame => DataFrame): DataFrame = {
     val rel = t.join(build(benchH), Seq("h"), "left_semi")
-    val gate = train.sparkSession.sessionState.conf
-      .getConfString(PersistGateMinBytesKey, PersistGateMinBytesDefault.toString).toLong
-    if (train.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(gate))
+    if (!SizeGate.fits(train.sparkSession, SizeGate.estimate(train),
+        PersistGateMinBytesKey, PersistGateMinBytesDefault))
       rel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else rel
   }
@@ -258,12 +255,13 @@ object Contamination {
     // n-gram operator — so a bench side too big to materialize on the
     // driver must fail fast with the documented LSH-bucketing pointer,
     // not OOM mid-collect
-    val max = bench.sparkSession.sessionState.conf
-      .getConfString(BenchBroadcastMaxBytesKey, BenchBroadcastMaxBytesDefault.toString).toLong
-    require(bench.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(max),
+    val spark = bench.sparkSession
+    val benchBytes = SizeGate.estimate(bench)
+    require(SizeGate.fits(spark, benchBytes, BenchBroadcastMaxBytesKey, BenchBroadcastMaxBytesDefault),
       s"semanticOverlapPairs force-broadcasts the benchmark side, and this bench's " +
-        s"optimizer SIZE ESTIMATE (${bench.queryExecution.optimizedPlan.stats.sizeInBytes} " +
-        s"bytes) exceeds $BenchBroadcastMaxBytesKey ($max bytes). The estimate is a coarse " +
+        s"optimizer SIZE ESTIMATE ($benchBytes bytes) exceeds $BenchBroadcastMaxBytesKey " +
+        s"(${SizeGate.threshold(spark, BenchBroadcastMaxBytesKey, BenchBroadcastMaxBytesDefault)} " +
+        "bytes). The estimate is a coarse " +
         "upper bound that inflates through upstream joins/filters — if the bench is " +
         "genuinely small, materialize it first (cache + count, or write/re-read) so the " +
         s"stats tighten, or raise $BenchBroadcastMaxBytesKey. For a benchmark genuinely " +

@@ -245,11 +245,10 @@ object Dedup {
     * matches a null key — drops it; an anti join never matches either —
     * KEEPS it). */
   def exactDeduplicate(df: DataFrame, text: Column, idCol: String): DataFrame = {
-    val gate = df.sparkSession.sessionState.conf
-      .getConfString(ExactSemiMaxBytesKey, ExactSemiMaxBytesDefault.toString).toLong
-    val statsBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val small = SizeGate.fits(df.sparkSession, SizeGate.estimate(df),
+      ExactSemiMaxBytesKey, ExactSemiMaxBytesDefault)
     val rows = df.filter(col(idCol).isNotNull)
-    if (statsBytes <= BigInt(gate))
+    if (small)
       rows.join(exactGroups(rows, text, col(idCol)).select(col("canonical_id").as(idCol)),
         Seq(idCol), "left_semi")
     else
@@ -791,10 +790,9 @@ object Dedup {
     // exchange to the probe's build path for at most a constant-factor
     // broadcast saving
     val touchedKeys = newB.select(col("band"), col("sig"))
-    val bcGate = newDocs.sparkSession.sessionState.conf.getConfString(
-      IncrementBroadcastMaxBytesKey, IncrementBroadcastMaxBytesDefault.toString).toLong
     val keysHinted =
-      if (newDocs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(bcGate))
+      if (SizeGate.fits(newDocs.sparkSession, SizeGate.estimate(newDocs),
+          IncrementBroadcastMaxBytesKey, IncrementBroadcastMaxBytesDefault))
         broadcast(touchedKeys)
       else touchedKeys
     val oldTouched = oldB.join(keysHinted, Seq("band", "sig"), "left_semi")
@@ -1009,8 +1007,8 @@ object Dedup {
     val spark = df.sparkSession
     def conf(key: String, default: String): String =
       spark.sessionState.conf.getConfString(key, default)
-    val gate = conf(BroadcastGateMinBytesKey, BroadcastGateMinBytesDefault.toString).toLong
-    val statsBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val statsBytes = SizeGate.estimate(df)
+    val small = SizeGate.fits(spark, statsBytes, BroadcastGateMinBytesKey, BroadcastGateMinBytesDefault)
     val cellsPerByte = conf(SketchCellsPerByteKey, SketchCellsPerByteDefault.toString).toDouble
     val maxPlaneBytes = {
       val explicit = conf(SketchMaxBytesKey, "")
@@ -1052,7 +1050,7 @@ object Dedup {
     val sketchDiscriminates = !statsKnown || mCells.toDouble >=
       desiredCells * conf(SketchMinSizingRatioKey, SketchMinSizingRatioDefault.toString).toDouble
     val dupPos =
-      if (statsBytes <= BigInt(gate))
+      if (small)
         // small input: stay lazy — the second postings exchange is cheap
         postings.join(lazyDupKeys.hint("shuffle_hash"), Seq("h"), "left_semi")
       else if (!sketchDiscriminates) {
@@ -1072,8 +1070,7 @@ object Dedup {
         // the source — the original two-scan shape, never a
         // corpus-sized cache. The cache is released as soon as the
         // candidate sliver (output-bounded) has materialized.
-        val useGramCache = statsBytes <= BigInt(
-          conf(GramCacheMaxBytesKey, GramCacheMaxBytesDefault.toString).toLong)
+        val useGramCache = SizeGate.fits(spark, statsBytes, GramCacheMaxBytesKey, GramCacheMaxBytesDefault)
         // per-doc gram ARRAYS, not an exploded posting per gram: the
         // build scan stays one row per document
         val gramRows = df.select(id.as("doc_id"),

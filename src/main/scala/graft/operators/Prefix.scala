@@ -122,20 +122,13 @@ private[operators] object Prefix {
     require(!df.columns.exists(Helpers.contains),
       s"Prefix.runningSum uses ${Helpers.mkString("/")} helper columns; the input already has one")
     val spark = df.sparkSession
-    val confStr = spark.sessionState.conf
-      .getConfString(TwoPassMinBytesKey, TwoPassMinBytesDefault.toString)
-    val threshold =
-      try confStr.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$TwoPassMinBytesKey must be a plain byte count (no size suffixes), got '$confStr'")
-      }
+    val small = SizeGate.fits(spark, SizeGate.estimate(df), TwoPassMinBytesKey, TwoPassMinBytesDefault)
     val w0 = coalesce(weight, lit(0))
     // the declared output type — sum(weight)'s — computed once so the
     // two-pass branch (whose offset ADDITION can widen a decimal) can
     // cast back to it
     val sumType = df.select(sum(w0)).schema.head.dataType
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold)) {
+    if (small) {
       // small input: the whole prefix fits ordinary per-group window sorts
       val w = Window.partitionBy(group).orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -193,9 +186,6 @@ private[operators] object Prefix {
       val offsetsHinted =
         if (spark.sessionState.conf.adaptiveExecutionEnabled) offsets
         else {
-          val maxBytes = spark.sessionState.conf
-            .getConfString(OffsetsBroadcastMaxBytesKey, OffsetsBroadcastMaxBytesDefault.toString)
-            .toLong
           // Row width: fixed-width fields (pid, offset) estimate by type
           // (+16 per-row object overhead in the broadcast relation), but a
           // VARIABLE-length group key is MEASURED — defaultSize counts a
@@ -213,7 +203,8 @@ private[operators] object Prefix {
           }
           val measured = totals.select(count(lit(1)).as("__n"),
             coalesce(sum(keyBytes), lit(0L)).as("__kb")).head()
-          if (measured.getLong(0) * fixedBytes + measured.getLong(1) <= maxBytes)
+          if (SizeGate.fits(spark, measured.getLong(0) * fixedBytes + measured.getLong(1),
+              OffsetsBroadcastMaxBytesKey, OffsetsBroadcastMaxBytesDefault))
             broadcast(offsets) else offsets
         }
       local.join(offsetsHinted,

@@ -333,10 +333,9 @@ object TextAnalysis {
     val bg = df.select(id.as("doc_id"),
       explode_outer(ngramStringsMultiset(lower(text), 2)).as("gram"))
     val slim = lm.select(col("gram"), col("p_permille"))
-    val gate = df.sparkSession.sessionState.conf
-      .getConfString(LmBroadcastGateMinBytesKey, LmBroadcastGateMinBytesDefault.toString).toLong
     val probe =
-      if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(gate))
+      if (SizeGate.fits(df.sparkSession, SizeGate.estimate(df),
+          LmBroadcastGateMinBytesKey, LmBroadcastGateMinBytesDefault))
         bg.join(slim.hint("shuffle_hash"), Seq("gram"), "left")
       else {
         // the cache entry deliberately OUTLIVES this call (the returned

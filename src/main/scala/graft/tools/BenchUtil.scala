@@ -1,8 +1,42 @@
 package graft.tools
 
-/** Plumbing shared by the standalone bench mains — one definition for
-  * the pieces that would otherwise drift across five copies. */
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.SparkSession
+
+/** Plumbing shared by the mains — one definition for the pieces that
+  * would otherwise drift across their copies. */
 object BenchUtil {
+
+  /** Core count of [[session]] when the caller names none:
+    * `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  private def defaultCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session factory of the mains and the test suites' shared
+    * session. Contract settings: `local[cpus]` (only when `spark.master`
+    * is not configured, so `spark-submit --master` and `-Dspark.master`
+    * win), `cpus` shuffle partitions, AQE with partition coalescing, UTC,
+    * parquet TIMESTAMP(NANOS) read as BIGINT ns (events.ts), no UI, WARN
+    * logging. A tool's own settings come in as `overrides`, applied after
+    * the contract ones. */
+  def session(cpus: Int, overrides: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder().config(Map(
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false") ++ overrides)
+    if (!new SparkConf().contains("spark.master")) builder.master(s"local[$cpus]")
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** [[session]] on [[defaultCpus]] cores. */
+  def session(overrides: (String, String)*): SparkSession =
+    session(defaultCpus, overrides: _*)
 
   /** Keep graft's own INFO sizing/decision lines (sketch load factor,
     * stitch-edge counts) visible under the WARN root the benches set,

@@ -73,13 +73,9 @@ object BpeBench {
 
     val root = "/tmp/graft_bpe_bench"
     println(IoProbe.row("pre", root))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.local.dir", "/tmp/graft_bpe_scratch")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session(
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.local.dir" -> "/tmp/graft_bpe_scratch")
     BenchUtil.enableOperatorInfoLogs()
     import spark.implicits._
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)

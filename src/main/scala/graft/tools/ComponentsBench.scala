@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Components
@@ -34,13 +33,9 @@ object ComponentsBench {
     require(chainLen >= 2, s"chainLen=$chainLen: a chain needs at least one edge")
 
     println(IoProbe.row("pre", "/tmp/graft_cc_scratch"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.local.dir", "/tmp/graft_cc_scratch")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session(
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.local.dir" -> "/tmp/graft_cc_scratch")
     BenchUtil.enableOperatorInfoLogs()
 
     val perChain = (chainLen - 1).toLong

@@ -205,18 +205,16 @@ object CurationBench {
     val runs = num.drop(1).headOption.map(_.toInt).getOrElse(2)
     val root = "/tmp/graft_curation_bench"
     println(IoProbe.row("pre", root))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
+    val spark = BenchUtil.session(
+      "spark.sql.shuffle.partitions" -> "64",
       // heap comes from the forked JVM: run with SPARK_DRIVER_MEM=96g
-      .config("spark.local.dir", "/tmp/graft_curation_scratch") // NOT under root: runs wipe root
-      .config("spark.ui.enabled", "false")
+      "spark.local.dir" -> "/tmp/graft_curation_scratch", // NOT under root: runs wipe root
       // AQE-converted broadcasts are sized from RUNTIME stats, so a
       // larger threshold is safe here and load-bearing: the dedup
       // verdict drop-lists and the span-mask table are tens of MB at
       // 10M docs — broadcasting them keeps the corpus-carrying side of
       // stages 05c/06b map-side instead of shuffling 6 GB of text
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "128m")
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "128m",
       // SPARK_GRAFT_BENCH_CODEC=zstd shrinks the materialized stage
       // parquet ~30-40% vs the snappy default — the knob that lets the
       // 60M point fit a scratch volume it no longer fits under snappy
@@ -226,10 +224,8 @@ object CurationBench {
       // under zstd are their own series — never compare them to the
       // published snappy walls; the codec is stamped into every JSON
       // row for exactly that reason.
-      .config("spark.sql.parquet.compression.codec",
+      "spark.sql.parquet.compression.codec" ->
         sys.env.getOrElse("SPARK_GRAFT_BENCH_CODEC", "snappy"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     BenchUtil.enableOperatorInfoLogs()
     import spark.implicits._
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)

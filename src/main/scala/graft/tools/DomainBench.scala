@@ -143,12 +143,7 @@ object DomainBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
     val outDir = "/tmp/graft_domain_bench"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session("spark.sql.shuffle.partitions" -> "32")
     val src = synth(spark, n)
     val t0 = System.nanoTime()
     val export = GenerateDataset(src)

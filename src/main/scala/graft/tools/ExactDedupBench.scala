@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, TextAnalysis}
@@ -37,14 +36,10 @@ object ExactDedupBench {
 
     val root = "/tmp/graft_exactdedup_bench"
     println(IoProbe.row("pre", root))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.local.dir", "/tmp/graft_exactdedup_scratch")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "128m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session(
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.local.dir" -> "/tmp/graft_exactdedup_scratch",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "128m")
     BenchUtil.enableOperatorInfoLogs()
     import spark.implicits._
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)

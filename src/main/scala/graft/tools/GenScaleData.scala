@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generate a LARGE testdata-layout dataset dir for the bench's
@@ -33,12 +32,7 @@ object GenScaleData {
     val nDocs = args.drop(1).headOption.map(_.toLong).getOrElse(2000000L)
     val nVecs = args.drop(2).headOption.map(_.toLong).getOrElse(16384L)
     val dim = 64 // the fixture embeddings' dimensionality
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session("spark.sql.shuffle.partitions" -> "32")
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
     def writeOnce(name: String)(gen: => org.apache.spark.sql.DataFrame): Unit = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.musicbrainz.{GenerateDataset, GoldenCsv, MatchOps}
@@ -35,12 +34,7 @@ object MatchCli {
     val exportDir = arg("--export").getOrElse(
       sys.error("--export <parquet export dir, written by GenerateDataset.write> is required"))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session("spark.sql.shuffle.partitions" -> "32")
 
     val golden0 = GoldenCsv.read(spark, csvPath)
     val golden = Seq(

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for registered queries to one file per
@@ -10,11 +9,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * rounds (plans/rNN/<query>_<suffix>.txt).
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [queryName ...]
-  * (no names = every registered query). Uses the SAME session shape as
-  * [[graft.Bench]] (master/core count/shuffle partitions from
-  * SPARK_GRAFT_CPUS, AQE on, sf dir from SPARK_GRAFT_SF_DIR) so the
-  * dumped plan is the plan the bench times, not a differently-configured
-  * twin. Plans are the PRE-execution form (AdaptiveSparkPlan
+  * (no names = every registered query). Builds its session with
+  * [[BenchUtil.session]], the factory [[graft.Bench]] uses, and reads the
+  * sf dir from SPARK_GRAFT_SF_DIR, so the dumped plan is the plan the
+  * bench times, not a differently-configured twin. Plans are the PRE-execution form (AdaptiveSparkPlan
   * isFinalPlan=false where AQE applies): deterministic, diffable, and
   * the form `explain` shows a reader; runtime re-optimizations (AQE
   * coalescing, join rewrites) are called out in OPTIMIZATION notes where
@@ -27,17 +25,7 @@ object PlanDump {
     val suffix = args(1)
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchUtil.session()
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted

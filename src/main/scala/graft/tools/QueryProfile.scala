@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Where does a bench query's time actually go? For each named query this
   * splits one steady-state (post-warmup) execution into
@@ -21,22 +20,12 @@ import org.apache.spark.sql.SparkSession
   * All three phases land inside Bench's timed region, so their split is
   * the optimization map for the suite. Usage:
   *   runMain graft.tools.QueryProfile [queryName ...]   (default: all)
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS — same contract as Bench.
+  * Env: SPARK_GRAFT_SF_DIR; the session is Bench's ([[BenchUtil.session]]).
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchUtil.session()
     val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobEnd(je: SparkListenerJobEnd): Unit = { jobs.incrementAndGet(); () }

@@ -3,7 +3,6 @@ package graft.tools
 import java.lang.management.ManagementFactory
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, TextAnalysis}
@@ -48,19 +47,15 @@ object SpanBench {
 
     val root = "/tmp/graft_span_bench"
     println(IoProbe.row("pre", root))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.local.dir", "/tmp/graft_span_scratch")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "128m")
+    val spark = BenchUtil.session(
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.local.dir" -> "/tmp/graft_span_scratch",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "128m",
       // the perTask legs fetch ONE merged sketch to the driver (the
       // plane bytes; the memory-aware default divides by task
       // concurrency, so this stays comfortably under 4g — an explicit
       // @planeBytes leg is the operator's responsibility)
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.driver.maxResultSize" -> "4g")
     BenchUtil.enableOperatorInfoLogs()
     import spark.implicits._
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)

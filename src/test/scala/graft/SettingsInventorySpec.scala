@@ -20,10 +20,12 @@ class SettingsInventorySpec extends AnyFunSuite {
     * skips the `org.apache.spark.graft` package that holds CoreBridge. */
   private val key = """(?<![\w.])spark\.graft\.[A-Za-z]\w*\.[A-Za-z]\w*""".r
 
-  test("README Settings table lists exactly the spark.graft.* keys src/main reads") {
-    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+  private def mainSources: Seq[Path] =
+    Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    val inCode = sources.flatMap(p => key.findAllIn(read(p))).toSet
+
+  test("README Settings table lists exactly the spark.graft.* keys src/main reads") {
+    val inCode = mainSources.flatMap(p => key.findAllIn(read(p))).toSet
 
     val readme = read(Paths.get("README.md")).linesIterator.toSeq
     val section = readme.dropWhile(_ != "## Settings").drop(1).takeWhile(!_.startsWith("## "))
@@ -36,5 +38,23 @@ class SettingsInventorySpec extends AnyFunSuite {
       s"settings read in src/main but missing from README's table: ${(inCode -- inTable).toSeq.sorted}")
     assert((inTable -- inCode).isEmpty,
       s"README's table lists settings src/main no longer reads: ${(inTable -- inCode).toSeq.sorted}")
+  }
+
+  /** `p`'s code without comments or whitespace, so a call split across
+    * lines still reads as one token run and a comment naming it does not. */
+  private def code(p: Path): String =
+    read(p).replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
+      .replaceAll("""\s+""", "")
+
+  test("src/main builds sessions in one place and reads size estimates only in SizeGate") {
+    val sources = mainSources.map(p => p.getFileName.toString -> code(p))
+    val builders = sources.flatMap { case (f, c) =>
+      Seq.fill("SparkSession.builder".r.findAllIn(c).size)(f) }
+    assert(builders == Seq("BenchUtil.scala"),
+      s"SparkSession builders outside BenchUtil.session: $builders")
+    val estimates = sources.collect {
+      case (f, c) if c.contains("optimizedPlan.stats.sizeInBytes") => f }
+    assert(estimates == Seq("SizeGate.scala"),
+      s"plan size estimates read outside SizeGate.estimate: $estimates")
   }
 }

@@ -4,22 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession across all suites (sbt runs suites in one
-  * JVM; re-creating sessions dominates test wall-clock otherwise).
+  * JVM; re-creating sessions dominates test wall-clock otherwise), built
+  * by the mains' factory on 4 cores, so specs run the contract settings.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is parquet TIMESTAMP(NANOS): read as BIGINT ns
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    graft.tools.BenchUtil.session(4, "spark.app.name" -> "graft-test")
   val sfDir = "/root/testdata/sf0.001"
 }
 

@@ -436,11 +436,13 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val (n, k, bands, tau) = (3, 8, 4, 400)
     val oldSig = Dedup.minhashSignatures(oldDocs, col("doc_id"), col("text"), n, k)
-    val got = Dedup.incrementalNearDupPairs(
+    def incremental() = Dedup.incrementalNearDupPairs(
       newDocs, col("doc_id"), col("text"), oldSig,
       oldDocs, col("doc_id"), col("text"), n, k, bands, tau)
       .select("new_id", "dup_of_id", "jaccard_permille", "dup_in_increment")
-      .as[(Long, Long, Long, Boolean)].collect().toSet
+    def pairsOf(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Boolean)].collect().toSet
+    val got = pairsOf(incremental())
     // oracle: the batch operator over old ∪ new, restricted to pairs that
     // touch a new doc (a_id < b_id and new ids are higher, so b is new)
     val batch = Dedup.minhashNearDupPairs(
@@ -453,6 +455,33 @@ class DedupSpec extends SparkSpec {
     assert(got.exists(r => r._1 == 10L && r._2 == 1L && !r._4)) // vs old corpus
     assert(got.exists(r => r._1 == 11L && r._2 == 10L && r._4)) // within increment
     assert(!got.exists(r => r._1 == 12L)) // fresh doc matches nothing
+
+    // both sides of broadcastProbeMaxBytes, with auto-broadcast off so
+    // only the gate can broadcast: under it the touched keys broadcast
+    // into the semi-join that prunes the index; forced large (0) they
+    // shuffle. The pairs are the same.
+    val touchedKeysBroadcast =
+      """BroadcastHashJoin \[band#\d+, sig#\d+L?\], \[band#\d+, sig#\d+L?\], LeftSemi""".r
+    def leg(gate: Option[String]): (Set[(Long, Long, Long, Boolean)], String) = {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      gate.foreach(spark.conf.set(Dedup.IncrementBroadcastMaxBytesKey, _))
+      try {
+        val df = incremental()
+        val rows = pairsOf(df)
+        (rows, df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head)
+      } finally {
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.unset(Dedup.IncrementBroadcastMaxBytesKey)
+      }
+    }
+    val (small, smallPlan) = leg(None)
+    val (large, largePlan) = leg(Some("0"))
+    assert(small == got && large == got)
+    assert(touchedKeysBroadcast.findFirstIn(smallPlan).isDefined,
+      s"under the gate the touched keys must broadcast:\n$smallPlan")
+    assert(touchedKeysBroadcast.findFirstIn(largePlan).isEmpty,
+      s"over the gate the touched keys must not broadcast:\n$largePlan")
+    assert(!largePlan.contains("BroadcastExchange"), s"nothing else may broadcast:\n$largePlan")
   }
 
   test("incremental ≡ batch under an ACTIVE hot-bucket cap; boilerplate pruned, real pair kept") {

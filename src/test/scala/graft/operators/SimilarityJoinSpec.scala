@@ -52,6 +52,22 @@ class SimilarityJoinSpec extends SparkSpec {
   private def genStr(maxLen: Int): Gen[String] =
     Gen.choose(0, maxLen).flatMap(n => Gen.listOfN(n, Gen.oneOf(alphabet)).map(_.mkString))
 
+  test("deletionVariants ≡ deletionVariantsComposed, its built-ins reference (property)") {
+    def both(ss: Seq[Option[String]]): Seq[(Option[Seq[String]], Option[Seq[String]])] =
+      ss.toDF("s").select(
+        sort_array(SimilarityJoin.deletionVariants(col("s"))),
+        sort_array(SimilarityJoin.deletionVariantsComposed(col("s"))))
+        .as[(Option[Seq[String]], Option[Seq[String]])].collect().toSeq
+    // code points, not UTF-16 units: the alphabet's supplementary
+    // characters must be deleted whole by both forms
+    val prop = Prop.forAll(Gen.listOfN(40, genStr(6))) { ss =>
+      both(ss.map(Option(_))).forall { case (native, composed) => native == composed }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(res.passed, res.status.toString)
+    assert(both(Seq(None, Some(""))) == Seq((None, None), (Some(Seq("")), Some(Seq("")))))
+  }
+
   test("blocked lev<=1 join ≡ naive cross-join filter (property, small alphabet)") {
     // Small alphabet maximizes collisions and near-miss pairs (the "ab"/"ba"
     // false-candidate case the verify step must reject).
