@@ -51,11 +51,13 @@ object CanonicalOps {
   /** The candidate set: one row per (artist, recording, release group, work)
     * an exported artist is position-0-credited on, with
     * `release_year = MIN(release_country.date_year)` over official releases
-    * — the union of the reference's two per-artist queries
-    * (`src/main.py:97-144` and the soundtrack variant `:146-192`).
+    * and the artist's export `artist_score` — every row either of the
+    * reference's two per-artist queries returns (`src/main.py:97-144` and
+    * the soundtrack variant `:146-192`): one spine under one filter, since
+    * a row both queries return collapses in the `MIN` grouping anyway.
     */
   def candidates(src: MbSources, mbArtist: DataFrame): DataFrame = {
-    val artistIds = mbArtist.select(col("id").as("exp_artist"))
+    val artists = mbArtist.select(col("id").as("exp_artist"), col("score").as("artist_score"))
     val rec = src.recording.select(
       col("id").as("recording_id"), col("gid").as("recording_mb_id"),
       col("name").as("recording_name"), col("artist_credit").as("rec_credit"))
@@ -67,13 +69,24 @@ object CanonicalOps {
       col("id").as("release_group_id"), col("gid").as("release_group_mb_id"),
       col("name").as("release_group_name"), col("type").as("release_type"),
       col("artist_credit").as("rg_credit"))
+    // query 1's test (`src/main.py:130-142`): the release group's credit
+    // includes the same artist (cross-branch equality P11)
+    val rgCredit = src.artistCreditName.select(
+      col("artist_credit").as("acnrg_credit"), col("artist").as("acnrg_artist")).distinct()
+    // query 2's test (`src/main.py:146-192`): a soundtrack release group,
+    // with NO credit constraint — catches various-artists soundtracks
+    val soundtrackRg = src.releaseGroupSecondaryTypeJoin
+      .filter(col("secondary_type") === SecondarySoundtrack)
+      .select(col("release_group").as("st_rg")).distinct()
 
-    // shared spine: recording → track → medium → official release →
-    // release_country → release_group, restricted to exported artists
-    // (`src/main.py:130-139`)
+    // spine: recording → track → medium → official release →
+    // release_country → release_group, for exported artists only
+    // (`src/main.py:130-139`); ids in mb_artist are unique, so the inner
+    // join carries the score without adding rows. Both tests join sides
+    // distinct on their keys, so they add a match column, never a row.
     val spine = rec
       .join(acn0, col("rec_credit") === col("acn0_credit"))
-      .join(artistIds, col("artist_id") === col("exp_artist"), "left_semi")
+      .join(artists, col("artist_id") === col("exp_artist"))
       .join(src.track.select(col("medium").as("tr_medium"), col("recording").as("tr_rec")),
         col("recording_id") === col("tr_rec"))
       .join(src.medium.select(col("id").as("med_id"), col("release").as("med_rel")),
@@ -82,29 +95,14 @@ object CanonicalOps {
       .join(src.releaseCountry.select(col("release").as("rc_rel"), col("date_year")),
         col("rel_id") === col("rc_rel"))
       .join(rg, col("rel_rg") === col("release_group_id"))
-
-    // branch 1 (`src/main.py:130-142`): the release group's credit must
-    // include the same artist (cross-branch equality P11)
-    val rgCredited = spine.join(
-      src.artistCreditName.select(
-        col("artist_credit").as("acnrg_credit"), col("artist").as("acnrg_artist")).distinct(),
-      col("rg_credit") === col("acnrg_credit") && col("acnrg_artist") === col("artist_id"),
-      "left_semi")
-
-    // branch 2 (`src/main.py:146-192`): soundtrack release groups, with NO
-    // release-group-credit constraint — catches various-artists soundtracks
-    val soundtrack = spine.join(
-      src.releaseGroupSecondaryTypeJoin
-        .filter(col("secondary_type") === SecondarySoundtrack)
-        .select(col("release_group").as("st_rg")).distinct(),
-      col("release_group_id") === col("st_rg"), "left_semi")
-
-    // the reference appends both result sets into one candidate list; the
-    // argmin collapses duplicates, so UNION ALL then group is equivalent
-    val unioned = rgCredited.unionByName(soundtrack)
+      .join(rgCredit,
+        col("rg_credit") === col("acnrg_credit") && col("acnrg_artist") === col("artist_id"),
+        "left")
+      .join(soundtrackRg, col("release_group_id") === col("st_rg"), "left")
+      .filter(col("acnrg_credit").isNotNull || col("st_rg").isNotNull)
 
     // left join work via l_recording_work (link_order <= 1 — J5 non-equi term)
-    val withWork = unioned
+    val withWork = spine
       .join(src.lRecordingWork.select(
         col("entity0").as("lrw_rec"), col("entity1").as("lrw_work"), col("link_order")),
         col("recording_id") === col("lrw_rec") && col("link_order") <= 1, "left")
@@ -116,7 +114,7 @@ object CanonicalOps {
     // recording's credit, needed downstream for the second-artist lookup)
     // are functionally dependent on the group keys
     withWork.groupBy(
-      col("artist_id"), col("recording_id"), col("recording_mb_id"),
+      col("artist_id"), col("artist_score"), col("recording_id"), col("recording_mb_id"),
       col("recording_name"), col("rec_credit"), col("release_group_id"),
       col("release_group_mb_id"), col("release_group_name"), col("release_type"),
       col("work_id"), col("work_mb_id"))
@@ -236,7 +234,10 @@ object CanonicalOps {
     col("release_group_id").asc, col("work_id").asc_nulls_first)
 
   /** Argmin per (artist, recording): the canonical release group (A3,
-    * `src/main.py:242`).
+    * `src/main.py:242`), with the artist's `artist_score` — the input both
+    * [[exportTables]] read. Lazy: it is the whole candidates DAG, so a
+    * caller that builds both exports materializes it once first
+    * ([[GenerateDataset.apply]] does).
     */
   def bestMatches(src: MbSources, mbArtist: DataFrame): DataFrame =
     Relational.topOnePerGroup(
@@ -262,17 +263,7 @@ object CanonicalOps {
       .orderBy(col("artist_id") +: canonicalOrder: _*)
   }
 
-  /** [[bestMatches]] with each winner's `artist_score` attached — the
-    * input both export tables read. Lazy: it is the whole 9-table
-    * candidates DAG, so a caller that builds both exports materializes it
-    * once first ([[GenerateDataset.apply]] does).
-    */
-  def scoredBest(src: MbSources, mbArtist: DataFrame): DataFrame =
-    bestMatches(src, mbArtist)
-      .join(broadcast(mbArtist.select(col("id").as("ma_id"), col("score").as("artist_score"))),
-        col("artist_id") === col("ma_id"))
-
-  /** The two export tables (`src/main.py:249-325`) over [[scoredBest]].
+  /** The two export tables (`src/main.py:249-325`) over [[bestMatches]].
     * Cross-artist id collisions (an album credited to several exported
     * artists; in dirty data also a recording) are resolved
     * deterministically: the reference iterates artists by score DESC and

@@ -65,7 +65,7 @@ object GenerateDataset {
 
   /** The export fans out into FIVE sinks that share three intermediates:
     * the filtered artist set, `best` (the candidates DAG of
-    * [[CanonicalOps.scoredBest]], which both [[CanonicalOps.exportTables]]
+    * [[CanonicalOps.bestMatches]], which both [[CanonicalOps.exportTables]]
     * read) and the song table. Each is a [[Hinge]]:
     * materialized once, here, and handed downstream as a plan leaf. No sink
     * re-executes an upstream DAG (which measured 140 s against 30 s for 10k
@@ -75,7 +75,7 @@ object GenerateDataset {
     */
   def apply(src: MbSources): Export = {
     val artists = Hinge(ArtistOps.mbArtist(src))
-    val best = Hinge(CanonicalOps.scoredBest(src, artists))
+    val best = Hinge(CanonicalOps.bestMatches(src, artists))
     val (album, song0) = CanonicalOps.exportTables(best)
     val song = Hinge(song0)
     Export(
@@ -91,25 +91,17 @@ object GenerateDataset {
     * replacement for the reference's pg_dump/pg_restore shipping step
     * (`README.md:206-227`, SURVEY S9). Each table is written atomically
     * (overwrite), replacing the per-artist upsert transactions (S7).
-    *
-    * Alias tables are repartitioned AND sorted by their lookup key: at
-    * serving scale the matcher's first move is an equi-join on `alias`, so
-    * co-locating equal keys gives downstream readers a ready-made
-    * shuffle-free build side, and key-sorted row groups give parquet
-    * min/max pruning for point probes.
+    * Every table is written as its plan leaves it, with no layout step:
+    * the matcher reads each alias table whole (into its index, or joined
+    * on the song id and on deletion variants), never by an equi-join or
+    * a point probe on `alias`.
     */
-  def write(export: Export, dir: String, aliasPartitions: Int = 32): Unit = {
+  def write(export: Export, dir: String): Unit = {
     export.mbArtist.write.mode("overwrite").parquet(s"$dir/mb_artist")
     export.mbAlbum.write.mode("overwrite").parquet(s"$dir/mb_album")
     export.mbSong.write.mode("overwrite").parquet(s"$dir/mb_song")
-    export.mbArtistAlias
-      .repartition(aliasPartitions, org.apache.spark.sql.functions.col("alias"))
-      .sortWithinPartitions("alias")
-      .write.mode("overwrite").parquet(s"$dir/mb_artist_alias")
-    export.mbSongAlias
-      .repartition(aliasPartitions, org.apache.spark.sql.functions.col("alias"))
-      .sortWithinPartitions("alias")
-      .write.mode("overwrite").parquet(s"$dir/mb_song_alias")
+    export.mbArtistAlias.write.mode("overwrite").parquet(s"$dir/mb_artist_alias")
+    export.mbSongAlias.write.mode("overwrite").parquet(s"$dir/mb_song_alias")
   }
 
   /** Ship the export to a serving database over JDBC — the final leg of the

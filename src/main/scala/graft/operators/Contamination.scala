@@ -260,7 +260,7 @@ object Contamination {
     require(SizeGate.fits(spark, benchBytes, BenchBroadcastMaxBytesKey, BenchBroadcastMaxBytesDefault),
       s"semanticOverlapPairs force-broadcasts the benchmark side, and this bench's " +
         s"optimizer SIZE ESTIMATE ($benchBytes bytes) exceeds $BenchBroadcastMaxBytesKey " +
-        s"(${SizeGate.threshold(spark, BenchBroadcastMaxBytesKey, BenchBroadcastMaxBytesDefault)} " +
+        s"(${SizeGate.threshold(spark.sessionState.conf, BenchBroadcastMaxBytesKey, BenchBroadcastMaxBytesDefault)} " +
         "bytes). The estimate is a coarse " +
         "upper bound that inflates through upstream joins/filters — if the bench is " +
         "genuinely small, materialize it first (cache + count, or write/re-read) so the " +

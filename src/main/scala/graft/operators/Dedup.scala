@@ -1005,15 +1005,14 @@ object Dedup {
       .filter(col("c") >= 2)
       .select(col("h"))
     val spark = df.sparkSession
-    def conf(key: String, default: String): String =
-      spark.sessionState.conf.getConfString(key, default)
+    val sqlConf = spark.sessionState.conf
+    def conf(key: String, default: String): String = sqlConf.getConfString(key, default)
     val statsBytes = SizeGate.estimate(df)
     val small = SizeGate.fits(spark, statsBytes, BroadcastGateMinBytesKey, BroadcastGateMinBytesDefault)
-    val cellsPerByte = conf(SketchCellsPerByteKey, SketchCellsPerByteDefault.toString).toDouble
-    val maxPlaneBytes = {
-      val explicit = conf(SketchMaxBytesKey, "")
-      if (explicit.nonEmpty) explicit.toLong else autoSketchMaxBytes(spark)
-    }
+    val cellsPerByte = SizeGate.threshold(sqlConf, SketchCellsPerByteKey, SketchCellsPerByteDefault)
+    val maxPlaneBytes = SizeGate.threshold(sqlConf, SketchMaxBytesKey, autoSketchMaxBytes(spark))
+    val minSizingRatio =
+      SizeGate.threshold(sqlConf, SketchMinSizingRatioKey, SketchMinSizingRatioDefault)
     // clamp BEFORE the ×4: a pathological conf value > 2^61 would
     // overflow Long and turn the min negative
     val capCells = math.min(maxPlaneBytes, graft.functions.GramCountSketch.MaxCells / 4) * 4L
@@ -1048,7 +1047,7 @@ object Dedup {
       !df.queryExecution.optimizedPlan.collectLeaves()
         .exists(_.stats.sizeInBytes >= sentinel)
     val sketchDiscriminates = !statsKnown || mCells.toDouble >=
-      desiredCells * conf(SketchMinSizingRatioKey, SketchMinSizingRatioDefault.toString).toDouble
+      desiredCells * minSizingRatio
     val dupPos =
       if (small)
         // small input: stay lazy — the second postings exchange is cheap

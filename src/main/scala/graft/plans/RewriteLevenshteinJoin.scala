@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.functions.{DeletionVariants, MinCommonVariant}
+import graft.operators.SizeGate
 
 /** Optimizer rule: a cartesian join filtered by `levenshtein(a, b) ≤ 1`
   * (the shape a SQL user naturally writes — and exactly how the reference
@@ -89,8 +90,7 @@ object RewriteLevenshteinJoin extends Rule[LogicalPlan] with PredicateHelper {
     }.take(1).toList.headOption
 
   private def variantMaxLen: Int =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.levJoin.variantMaxLen", "255").toInt
+    SizeGate.threshold(conf, "spark.graft.levJoin.variantMaxLen", 255)
 
   /** The per-side blocking key list: deletion variants for strings ≤
     * `maxLen`, the `"L:len"`/`"L:len+1"` length keys for strings ≥ it

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, Logi
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
+import graft.operators.SizeGate
+
 /** Optimizer rule: an inner join whose only cross-side predicates are a
   * RANGE BAND — `lo ≤ p ≤ hi` (any `<`/`≤` spelling, `p` from one side,
   * both bounds from the other) — has no equi-key, so Spark plans a
@@ -125,8 +127,7 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
     // like hi = Long.MaxValue) would otherwise die deep inside Sequence
     // with an opaque array-size error — name the row, the width, and the
     // dial instead
-    val maxBuckets = conf
-      .getConfString("spark.graft.rangeJoin.maxBucketsPerRow", "4000000").toLong
+    val maxBuckets = SizeGate.threshold(conf, "spark.graft.rangeJoin.maxBucketsPerRow", 4000000L)
     val nBuckets = Add(Subtract(hiB, loB), Literal(1L))
     val msg = Concat(Seq(
       Literal("graft range join: interval ["), Cast(lo, StringType),

@@ -12,7 +12,7 @@ class ExportRoundtripSpec extends SparkSpec {
   test("export writes, re-reads, and still serves the matcher") {
     val dir = "/tmp/graft_export_roundtrip"
     val export = MbFixtureExport.cached(spark)
-    GenerateDataset.write(export, dir, aliasPartitions = 2)
+    GenerateDataset.write(export, dir)
     val reopened = GenerateDataset.read(spark, dir)
 
     assert(reopened.mbArtist.count() == export.mbArtist.count())

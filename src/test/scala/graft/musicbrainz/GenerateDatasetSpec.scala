@@ -1,5 +1,6 @@
 package graft.musicbrainz
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
@@ -108,18 +109,104 @@ class GenerateDatasetSpec extends SparkSpec {
     val before = held()
     val e = GenerateDataset(MbFixture.sources(spark))
     val dir = java.nio.file.Files.createTempDirectory("graft_generate").toString
-    GenerateDataset.write(e, dir, aliasPartitions = 2)
+    GenerateDataset.write(e, dir)
     assert(held()._1 != before._1, "the pass held no hinge: the check below proves nothing")
     e.unpersist()
     assert(held() == before)
     // the released pass wrote the same five tables the fixture export holds
     val back = GenerateDataset.read(spark, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rows(back.mbArtist) == rows(export.mbArtist))
     assert(rows(back.mbArtistAlias) == rows(export.mbArtistAlias))
     assert(rows(back.mbAlbum) == rows(export.mbAlbum))
     assert(rows(back.mbSong) == rows(export.mbSong))
     assert(rows(back.mbSongAlias) == rows(export.mbSongAlias))
+  }
+
+  /** The candidate set as the reference's two queries compose it: the
+    * spine built twice, once semi-joined to the release group's credit,
+    * once to the soundtrack secondary type, then UNION ALL and the
+    * `MIN(date_year)` grouping. */
+  private def twoBranchCandidates(src: MbSources, mbArtist: DataFrame): DataFrame = {
+    import MbConstants._
+    val spine = src.recording.select(
+        col("id").as("recording_id"), col("gid").as("recording_mb_id"),
+        col("name").as("recording_name"), col("artist_credit").as("rec_credit"))
+      .join(src.artistCreditName.filter(col("position") === 0)
+        .select(col("artist_credit").as("acn0_credit"), col("artist").as("artist_id")),
+        col("rec_credit") === col("acn0_credit"))
+      .join(mbArtist.select(col("id").as("exp_artist")),
+        col("artist_id") === col("exp_artist"), "left_semi")
+      .join(src.track.select(col("medium").as("tr_medium"), col("recording").as("tr_rec")),
+        col("recording_id") === col("tr_rec"))
+      .join(src.medium.select(col("id").as("med_id"), col("release").as("med_rel")),
+        col("tr_medium") === col("med_id"))
+      .join(src.release.filter(col("status") === ReleaseStatusOfficial)
+        .select(col("id").as("rel_id"), col("release_group").as("rel_rg")),
+        col("med_rel") === col("rel_id"))
+      .join(src.releaseCountry.select(col("release").as("rc_rel"), col("date_year")),
+        col("rel_id") === col("rc_rel"))
+      .join(src.releaseGroup.select(
+        col("id").as("release_group_id"), col("gid").as("release_group_mb_id"),
+        col("name").as("release_group_name"), col("type").as("release_type"),
+        col("artist_credit").as("rg_credit")),
+        col("rel_rg") === col("release_group_id"))
+    val credited = spine.join(
+      src.artistCreditName.select(
+        col("artist_credit").as("acnrg_credit"), col("artist").as("acnrg_artist")).distinct(),
+      col("rg_credit") === col("acnrg_credit") && col("acnrg_artist") === col("artist_id"),
+      "left_semi")
+    val soundtrack = spine.join(
+      src.releaseGroupSecondaryTypeJoin.filter(col("secondary_type") === SecondarySoundtrack)
+        .select(col("release_group").as("st_rg")).distinct(),
+      col("release_group_id") === col("st_rg"), "left_semi")
+    credited.unionByName(soundtrack)
+      .join(src.lRecordingWork.select(
+        col("entity0").as("lrw_rec"), col("entity1").as("lrw_work"), col("link_order")),
+        col("recording_id") === col("lrw_rec") && col("link_order") <= 1, "left")
+      .join(src.work.select(col("id").as("work_id"), col("gid").as("work_mb_id")),
+        col("lrw_work") === col("work_id"), "left")
+      .groupBy(
+        col("artist_id"), col("recording_id"), col("recording_mb_id"),
+        col("recording_name"), col("rec_credit"), col("release_group_id"),
+        col("release_group_mb_id"), col("release_group_name"), col("release_type"),
+        col("work_id"), col("work_mb_id"))
+      .agg(min(col("date_year")).as("release_year"))
+  }
+
+  test("candidates ≡ the reference's two-branch union, one row per reached candidate") {
+    val base = MbFixture.sources(spark)
+    def plus(df: DataFrame, rows: DataFrame) = df.union(rows.toDF(df.columns: _*))
+    // g-213: Nirvana's own soundtrack, which both queries reach, on two
+    // official releases (1996, 1993); g-214: a various-artists compilation
+    // without the soundtrack type, which neither reaches
+    val src = base.copy(
+      recording = plus(base.recording, Seq((109, "r-109", "Score Theme", 10)).toDF()),
+      releaseGroup = plus(base.releaseGroup,
+        Seq((213, "g-213", "Nirvana Score", 1, 10), (214, "g-214", "VA Hits", 1, 99)).toDF()),
+      releaseGroupSecondaryTypeJoin = plus(base.releaseGroupSecondaryTypeJoin,
+        Seq((213, MbConstants.SecondarySoundtrack), (214, MbConstants.SecondaryCompilation)).toDF()),
+      release = plus(base.release, Seq((314, 213, 1), (315, 213, 1), (316, 214, 1)).toDF()),
+      releaseCountry = plus(base.releaseCountry,
+        Seq((314, Option(1996)), (315, Option(1993)), (316, Option(1997))).toDF()),
+      medium = plus(base.medium, Seq((414, 314), (415, 315), (416, 316)).toDF()),
+      track = plus(base.track, Seq((414, 109), (415, 109), (416, 100)).toDF()))
+    val artists = ArtistOps.mbArtist(src)
+    val reference = twoBranchCandidates(src, artists)
+    val got = CanonicalOps.candidates(src, artists)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    assert(rows(got.select(reference.columns.map(col).toSeq: _*)) == rows(reference))
+
+    val byRg = got.select("release_group_mb_id", "recording_mb_id", "release_year")
+      .as[(String, String, Option[Int])].collect().groupBy(_._1)
+    assert(byRg("g-213").toSeq == Seq(("g-213", "r-109", Some(1993))))
+    assert(!byRg.contains("g-214"))
+    assert(byRg.contains("g-208")) // the fixture's VA soundtrack: query 2 only
+
+    val scores = got
+      .join(artists.select(col("id").as("a_id"), col("score")), col("artist_id") === col("a_id"))
+      .select(col("artist_score"), col("score")).as[(Int, Int)].collect()
+    assert(scores.length == got.count() && scores.forall { case (a, s) => a == s })
   }
 
   test("mb_song_alias (sql/5): name ∪ recording alias ∪ work name ∪ work alias") {

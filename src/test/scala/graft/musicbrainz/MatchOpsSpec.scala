@@ -195,7 +195,7 @@ class MatchOpsSpec extends SparkSpec {
   test("the export owns its matcher index: built once, released by unpersist, one per export") {
     val sc = spark.sparkContext
     val dir = java.nio.file.Files.createTempDirectory("graft_match_index").toString
-    GenerateDataset.write(export, dir, aliasPartitions = 2)
+    GenerateDataset.write(export, dir)
     val persistedBefore = sc.getPersistentRDDs.keySet
     val first = GenerateDataset.read(spark, dir)
     val second = GenerateDataset.read(spark, dir)

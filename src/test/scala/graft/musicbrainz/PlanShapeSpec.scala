@@ -1,7 +1,7 @@
 package graft.musicbrainz
 
 import org.apache.spark.sql.catalyst.plans.QueryPlan
-import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Union}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -28,10 +28,19 @@ class PlanShapeSpec extends SparkSpec {
     val artists = ArtistOps.mbArtist(src)
     assertNoQuadraticJoin(artists, "mb_artist")
     assertNoQuadraticJoin(ArtistOps.artistAliases(src, artists), "mb_artist_alias")
-    val (album, song) = CanonicalOps.exportTables(CanonicalOps.scoredBest(src, artists))
+    val (album, song) = CanonicalOps.exportTables(CanonicalOps.bestMatches(src, artists))
     assertNoQuadraticJoin(album, "mb_album")
     assertNoQuadraticJoin(song, "mb_song")
     assertNoQuadraticJoin(SongAliasOps.songAliases(src, song), "mb_song_alias")
+  }
+
+  test("candidates builds its spine once: one release_country read, no union") {
+    val src = MbFixture.sources(spark)
+    val plan = CanonicalOps.candidates(src, ArtistOps.mbArtist(src)).queryExecution.optimizedPlan
+    // date_year is a column of release_country alone
+    val reads = plan.collectLeaves().count(_.output.exists(_.name == "date_year"))
+    assert(reads == 1, s"candidates reads release_country $reads times:\n$plan")
+    assert(plan.collectFirst { case u: Union => u }.isEmpty, s"candidates plans a union:\n$plan")
   }
 
   /** `p` and every plan it reaches through its children and the plans it

@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.plans.{RewriteLevenshteinJoin, RewriteRangeJoin}
 
 class SizeGateSpec extends SparkSpec {
   import spark.implicits._
@@ -10,6 +12,14 @@ class SizeGateSpec extends SparkSpec {
   private def withConf[A](key: String, v: String)(body: => A): A = {
     spark.conf.set(key, v)
     try body finally spark.conf.unset(key)
+  }
+
+  /** `body` under `key = v` fails naming the key and the value, not as a
+    * bare `NumberFormatException`. */
+  private def assertFailsNaming(key: String, v: String)(body: => Any): Unit = {
+    val e = withConf(key, v)(intercept[IllegalArgumentException](body))
+    assert(!e.isInstanceOf[NumberFormatException], e.toString)
+    assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"), e.getMessage)
   }
 
   test("fits: a byte count at or under the threshold fits; the default holds while unset") {
@@ -22,12 +32,44 @@ class SizeGateSpec extends SparkSpec {
   test("a malformed gate setting fails naming its key, not as a bare NumberFormatException") {
     val docs = Seq((1L, "a b c a b"), (2L, "a b d")).toDF("doc_id", "text")
     val lm = TextAnalysis.bigramLm(docs, col("text"))
-    val key = TextAnalysis.LmBroadcastGateMinBytesKey
-    val e = withConf(key, "128m") {
-      intercept[IllegalArgumentException](
-        TextAnalysis.bigramLmScore(docs, col("doc_id"), col("text"), lm))
+    assertFailsNaming(TextAnalysis.LmBroadcastGateMinBytesKey, "128m") {
+      TextAnalysis.bigramLmScore(docs, col("doc_id"), col("text"), lm)
     }
-    assert(!e.isInstanceOf[NumberFormatException], e.toString)
-    assert(e.getMessage.contains(key) && e.getMessage.contains("'128m'"), e.getMessage)
+  }
+
+  // the optimizer rules read their settings from the active session's conf
+  test("a malformed spark.graft.rangeJoin.maxBucketsPerRow fails naming its key") {
+    val pts = Seq((900L, 3L)).toDF("p_id", "p")
+    val ivs = Seq((100L, 0L, 5L)).toDF("i_id", "lo", "hi")
+    val plan = pts.join(ivs, $"p" >= $"lo" && $"p" <= $"hi").queryExecution.optimizedPlan
+    SparkSession.setActiveSession(spark)
+    withConf(RewriteRangeJoin.WidthKey, "4") {
+      assertFailsNaming("spark.graft.rangeJoin.maxBucketsPerRow", "4m")(RewriteRangeJoin(plan))
+    }
+  }
+
+  test("a malformed spark.graft.levJoin.variantMaxLen fails naming its key") {
+    val l = Seq((1, "abc")).toDF("lid", "ls")
+    val r = Seq((10, "abd")).toDF("rid", "rs")
+    val plan = l.crossJoin(r).filter(levenshtein($"ls", $"rs") <= 1).queryExecution.optimizedPlan
+    SparkSession.setActiveSession(spark)
+    assertFailsNaming("spark.graft.levJoin.variantMaxLen", "2.5")(RewriteLevenshteinJoin(plan))
+  }
+
+  private def spans() = {
+    val docs = Seq((1L, "a b c d e"), (2L, "x a b c d")).toDF("doc_id", "text")
+    Dedup.duplicateSpans(docs, col("doc_id"), col("text"), 3)
+  }
+
+  test("a malformed spark.graft.spans.sketchMaxBytes fails naming its key") {
+    assertFailsNaming(Dedup.SketchMaxBytesKey, "1g")(spans())
+  }
+
+  test("a malformed spark.graft.spans.sketchCellsPerByte fails naming its key") {
+    assertFailsNaming(Dedup.SketchCellsPerByteKey, "two")(spans())
+  }
+
+  test("a malformed spark.graft.spans.sketchMinSizingRatio fails naming its key") {
+    assertFailsNaming(Dedup.SketchMinSizingRatioKey, "a quarter")(spans())
   }
 }
