@@ -80,10 +80,11 @@ object Bench {
     // io_probe rows are likewise small and bracket the queries they
     // qualify (pre before the map, post right after).
     val probePost = probe("post")
+    val sf = graft.tools.BenchUtil.jsonEscape(sfDir)
     val queriesLine =
-      s"""{"metric":"queries","runs":$timedRuns,"sf":"$sfDir","queries":$qs}"""
+      s"""{"metric":"queries","runs":$timedRuns,"sf":"$sf","queries":$qs}"""
     val totalLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$timedRuns,"nQueries":${results.size},"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$timedRuns,"nQueries":${results.size},"errors":$errs,"sf":"$sf"}"""
     probePre.foreach(println)
     println(queriesLine)
     probePost.foreach(println)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DeletionVariants, DotProduct, Int8Dot, LangId, Lev1Witness, LshBucket, MinCommonVariant, MinHashSig, QuantizedDot, RemoveTokenSpans, RollingHash, ShingleHashes, ShingleHashesAll, Shingles, SimHash, TokenHashes, Unaccent}
+import graft.functions.{DeletionVariants, DotProduct, Int8Dot, LangId, Lev1Witness, LshBucket, MinHashSig, QuantizedDot, RemoveTokenSpans, RollingHash, ShingleHashes, ShingleHashesAll, Shingles, SimHash, TokenHashes, Unaccent}
 
 /** `SparkSessionExtensions` hook exposing the engine's native expressions to
   * SQL (`spark.sql("SELECT unaccent(name) ...")`) — register with
@@ -89,10 +89,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register(ext, "deletion_variants",
       "deletion_variants(str) - the string plus each single-char deletion (lev<=1 blocking keys)", 1) {
       args => DeletionVariants(args.head)
-    }
-    register(ext, "min_common_variant",
-      "min_common_variant(a, b) - smallest shared deletion variant, null if neighborhoods disjoint", 2) {
-      args => MinCommonVariant(args.head, args(1))
     }
     register(ext, "lev1_witness",
       "lev1_witness(a, b) - canonical shared deletion variant of a lev<=1 pair, null if lev>=2 by length", 2) {

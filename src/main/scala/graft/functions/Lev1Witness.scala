@@ -20,12 +20,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *                          gives the same string; otherwise `lev ≥ 2` → null
   *   - otherwise          → null (`lev ≥ 2` by length — no witness)
   *
-  * Replaces [[MinCommonVariant]] in the hot verify filter of the blocked
-  * levenshtein join: both select exactly ONE row per matching pair (any
-  * deterministic member of the shared-variant set works — minimality was
-  * never required), but MinCommonVariant re-generates BOTH neighborhoods
-  * per candidate row (O(|a|²+|b|²) substring allocations + a hash set)
-  * while the witness is one string compare and at most one substring.
+  * The exactly-once selector of both blocked levenshtein joins
+  * ([[graft.operators.SimilarityJoin.levenshtein1Join]] and
+  * [[graft.plans.RewriteLevenshteinJoin]]): the witness is one member of
+  * the pair's shared-variant set, so it meets exactly ONE joined row per
+  * matching pair when each side's key list holds no string twice. One
+  * string compare and at most one substring per candidate row, with no
+  * neighborhood re-generation.
   */
 object Lev1Witness {
   /** First UTF-16 index where `x` and `y` differ, moved back to the start

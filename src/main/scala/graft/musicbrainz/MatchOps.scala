@@ -68,10 +68,9 @@ object MatchOps {
       // upstream duplicates anyway, so a pre-distinct here would only
       // add a full alias-table shuffle per lookup
       mbArtistAlias.select(col("artist_id"), col("alias")), "alias",
-      maxLen = 255,
       // reference parity (`benchmark.py:76-77`): only the STORED alias is
       // length-guarded — a 255-char probe still matches a 254-char alias
-      maxLenLeft = 256)
+      maxLenLeft = SimilarityJoin.MaxLen + 1)
       .select(col("qa_id").as("query_id"), col("qa_role").as("role"), col("artist_id"))
   }
 
@@ -193,7 +192,7 @@ object MatchOps {
       // 2 = bounded edit distance with the length guard (`:87-91`)
       .withColumn("phase",
         when(col("alias").startsWith(col("tkey")), 1)
-          .when(length(col("alias")) < 255 && levenshtein(col("alias"), col("tkey"), 1) >= 0, 2))
+          .when(length(col("alias")) < SimilarityJoin.MaxLen && levenshtein(col("alias"), col("tkey"), 1) >= 0, 2))
       .filter(col("phase").isNotNull)
       // DISTINCT of the serving query's projection (`benchmark.py:97`),
       // keyed on query_id alone: a subset of the distinct key satisfies the

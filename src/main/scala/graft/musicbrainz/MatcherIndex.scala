@@ -16,6 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.DeletionVariants
+import graft.operators.SimilarityJoin
 
 /** The matcher's static side, indexed once per export (SURVEY J13/J14 on a
   * small export): the export never changes between chart batches, so
@@ -60,11 +61,10 @@ private[musicbrainz] final class MatcherIndex private (
 
 private[musicbrainz] object MatcherIndex {
 
-  /** The join path's length guards (`SimilarityJoin.levenshtein1Join`
-    * with the matcher's `maxLen`/`maxLenLeft`): stored aliases shorter than
-    * 255 characters, probes shorter than 256. */
-  private val AliasMaxLen = 255
-  private[musicbrainz] val ProbeMaxLen = 256
+  /** The join path's probe guard (`SimilarityJoin.levenshtein1Join`
+    * with the matcher's `maxLenLeft`): probes one character longer than
+    * the stored aliases' `SimilarityJoin.MaxLen` still match. */
+  private[musicbrainz] val ProbeMaxLen = SimilarityJoin.MaxLen + 1
 
   /** Collect the five tables (one job each) and join them on the driver:
     * the same inner equi-joins as the join path, ids compared as longs,
@@ -74,7 +74,7 @@ private[musicbrainz] object MatcherIndex {
     val id = (c: String) => col(c).cast(LongType)
 
     val aliasRows = e.mbArtistAlias
-      .filter(col("artist_id").isNotNull && length(col("alias")) < AliasMaxLen)
+      .filter(col("artist_id").isNotNull && length(col("alias")) < SimilarityJoin.MaxLen)
       .select(id("artist_id"), col("alias")).collect()
     val aliases = aliasRows.map(r => UTF8String.fromString(r.getString(1)))
     val variants = new java.util.HashMap[UTF8String, Array[Int]]()

@@ -37,10 +37,9 @@ object Dedup {
 
   /** [[graft.functions.GramCountSketch]] sizing and build knobs for
     * [[duplicateSpans]]' above-gate path (see its scaladoc): cells per
-    * optimizer-estimated input byte, the bitplane-bytes cap, and the
-    * build strategy (auto | shared | perTask). */
-  val SketchCellsPerByteKey = "spark.graft.spans.sketchCellsPerByte"
-  val SketchCellsPerByteDefault: Double = 2.0
+    * optimizer-estimated input byte (a constant), the bitplane-bytes cap,
+    * and the build strategy (auto | shared | perTask). */
+  private val SketchCellsPerInputByte = 2.0
   val SketchMaxBytesKey = "spark.graft.spans.sketchMaxBytes"
   val SketchBuildKey = "spark.graft.spans.sketchBuild"
 
@@ -963,8 +962,7 @@ object Dedup {
     *    cache clearing); the sketch broadcast likewise lives as long as
     *    the returned frame references it and is reclaimed by Spark's
     *    ContextCleaner once the frame is unreachable. Sketch sizing:
-    *    `spark.graft.spans.sketchCellsPerByte` (default 2.0) cells per
-    *    optimizer-estimated input byte, capped by
+    *    2.0 cells per optimizer-estimated input byte, capped by
     *    `spark.graft.spans.sketchMaxBytes` (bitplane bytes; default is
     *    MEMORY-AWARE, see [[autoSketchMaxBytes]] — heap-proportional per
     *    concurrent sketch, so a bigger executor buys a sketch that keeps
@@ -1009,14 +1007,13 @@ object Dedup {
     def conf(key: String, default: String): String = sqlConf.getConfString(key, default)
     val statsBytes = SizeGate.estimate(df)
     val small = SizeGate.fits(spark, statsBytes, BroadcastGateMinBytesKey, BroadcastGateMinBytesDefault)
-    val cellsPerByte = SizeGate.threshold(sqlConf, SketchCellsPerByteKey, SketchCellsPerByteDefault)
     val maxPlaneBytes = SizeGate.threshold(sqlConf, SketchMaxBytesKey, autoSketchMaxBytes(spark))
     val minSizingRatio =
       SizeGate.threshold(sqlConf, SketchMinSizingRatioKey, SketchMinSizingRatioDefault)
     // clamp BEFORE the ×4: a pathological conf value > 2^61 would
     // overflow Long and turn the min negative
     val capCells = math.min(maxPlaneBytes, graft.functions.GramCountSketch.MaxCells / 4) * 4L
-    val desiredCells = statsBytes.toDouble * cellsPerByte
+    val desiredCells = statsBytes.toDouble * SketchCellsPerInputByte
     val mCells = Seq(
       math.max(desiredCells.toLong, 1L << 22),
       capCells,
@@ -1084,7 +1081,7 @@ object Dedup {
         log.info(f"duplicateSpans gram sketch: $mCells%d cells, load $load%.3f, " +
           f"build ${(System.nanoTime() - tBuild0) / 1e9}%.1f s" +
           (if (load > 0.5) " — UNDERSIZED (false-positive rate degrades fast above 0.5; " +
-            s"raise $SketchMaxBytesKey or $SketchCellsPerByteKey)" else ""))
+            s"raise $SketchMaxBytesKey)" else ""))
         // broadcast the query-only hi-plane view: the probe never reads
         // lo, so the wire + executor-resident mass is half the sketch
         val tBc0 = System.nanoTime()

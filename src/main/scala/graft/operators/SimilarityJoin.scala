@@ -25,6 +25,12 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityJoin {
 
+  /** The reference's lev ≤ 1 length guard, `LENGTH(alias) < 255`
+    * (`src/benchmark.py:76,89`): the one bound every lev ≤ 1 path applies
+    * (this join, the matcher's index and ranking, and
+    * [[graft.plans.RewriteLevenshteinJoin]]'s regime split). */
+  val MaxLen = 255
+
   /** `s` plus all single-character deletions of `s`, deduplicated —
     * the native [[graft.functions.DeletionVariants]] kernel.
     * [[deletionVariantsComposed]] is the built-ins reference it is
@@ -52,12 +58,13 @@ object SimilarityJoin {
     * Two strings can share several variants (equal strings share all of
     * them); instead of a full-row `distinct()` — which would need an extra
     * shuffle AND wrongly collapse genuinely-duplicate input rows — each
-    * pair is kept only on its **minimal common variant**: exactly one
-    * surviving row per (left row, right row), original multiplicities
-    * preserved, no dedup exchange.
+    * pair is kept only on its **witness** variant
+    * ([[graft.functions.Lev1Witness]]): exactly one surviving row per
+    * (left row, right row), original multiplicities preserved, no dedup
+    * exchange.
     *
-    * `maxLen` mirrors the reference's `LENGTH(alias) < 255` guard
-    * (`src/benchmark.py:76,89`) and bounds the explode factor.
+    * Strings of [[MaxLen]] characters or more are dropped before the
+    * explode, which bounds its factor.
     *
     * @param pairFilter optional predicate applied straight after the
     *        variant equi-join, before the verify step — e.g.
@@ -75,30 +82,24 @@ object SimilarityJoin {
       leftStr: String,
       right: DataFrame,
       rightStr: String,
-      maxLen: Int = 255,
       pairFilter: Option[Column] = None,
       shuffleHash: Boolean = false,
-      maxLenLeft: Int = -1): DataFrame = {
+      maxLenLeft: Int = MaxLen): DataFrame = {
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty, s"left/right column names must be disjoint, both have: $overlap")
-    // maxLenLeft lets a PROBE side admit strings one longer than a
-    // guarded store side: lev ≤ 1 means |Δlen| ≤ 1, so a probe of length
-    // maxLen can still match a stored string of maxLen − 1 — the
-    // reference guards only its stored aliases (`benchmark.py:76-77`)
-    val lCap = if (maxLenLeft > 0) maxLenLeft else maxLen
     val l = left
-      .filter(length(col(leftStr)) < lCap)
+      .filter(length(col(leftStr)) < maxLenLeft)
       .withColumn("__lv", explode(deletionVariants(col(leftStr))))
     val r = right
-      .filter(length(col(rightStr)) < maxLen)
+      .filter(length(col(rightStr)) < MaxLen)
       .withColumn("__rv", explode(deletionVariants(col(rightStr))))
     val joined =
       if (shuffleHash) l.join(r.hint("shuffle_hash"), col("__lv") === col("__rv"))
       else l.join(r, col("__lv") === col("__rv"))
     // exactly-once selector: the pair survives only on its analytic O(n)
-    // canonical witness ([[graft.functions.Lev1Witness]]) — any single
-    // deterministic member of the shared-variant set works, and the witness
-    // avoids MinCommonVariant's per-row neighborhood re-generation
+    // canonical witness ([[graft.functions.Lev1Witness]]), one member of
+    // the shared-variant set; each side's variants are distinct, so the
+    // witness meets exactly one joined row
     val witness = org.apache.spark.sql.graft.Bridge.column(
       graft.functions.Lev1Witness(
         org.apache.spark.sql.graft.Bridge.expression(col(leftStr)),

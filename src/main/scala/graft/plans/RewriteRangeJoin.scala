@@ -6,8 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, Logi
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
-import graft.operators.SizeGate
-
 /** Optimizer rule: an inner join whose only cross-side predicates are a
   * RANGE BAND — `lo ≤ p ≤ hi` (any `<`/`≤` spelling, `p` from one side,
   * both bounds from the other) — has no equi-key, so Spark plans a
@@ -38,6 +36,11 @@ import graft.operators.SizeGate
 object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
 
   val WidthKey = "spark.graft.rangeJoin.bucketWidth"
+
+  /** Buckets one interval row may generate before the query fails naming
+    * the row: an open-end sentinel (`hi = Long.MaxValue`) would otherwise
+    * die inside `Sequence` with an opaque array-size error. */
+  private val MaxBucketsPerRow = 4000000L
 
   private val PbName = "__graft_pb"
   private val RbName = "__graft_rb"
@@ -123,19 +126,15 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
     val loB = divW(lo, w)
     val hiB = divW(hi, w)
     val seq0 = Sequence(loB, hiB, None, Some(conf.sessionLocalTimeZone))
-    // actionable per-row guard: one dirty interval (an open-end sentinel
-    // like hi = Long.MaxValue) would otherwise die deep inside Sequence
-    // with an opaque array-size error — name the row, the width, and the
-    // dial instead
-    val maxBuckets = SizeGate.threshold(conf, "spark.graft.rangeJoin.maxBucketsPerRow", 4000000L)
+    // fail naming the row, the width and the bound (see MaxBucketsPerRow)
     val nBuckets = Add(Subtract(hiB, loB), Literal(1L))
     val msg = Concat(Seq(
       Literal("graft range join: interval ["), Cast(lo, StringType),
       Literal(", "), Cast(hi, StringType),
       Literal(s"] spans "), Cast(nBuckets, StringType),
-      Literal(s" buckets at width $w, above spark.graft.rangeJoin.maxBucketsPerRow=" +
-        s"$maxBuckets — raise spark.graft.rangeJoin.bucketWidth or clean the interval")))
-    val seq = If(GreaterThan(nBuckets, Literal(maxBuckets)),
+      Literal(s" buckets at width $w, above the bound of $MaxBucketsPerRow per row" +
+        s" — raise $WidthKey or clean the interval")))
+    val seq = If(GreaterThan(nBuckets, Literal(MaxBucketsPerRow)),
       Cast(RaiseError(msg), seq0.dataType), seq0)
     val (pointPlan, ivPlan) = if (pLeft) (l, r) else (r, l)
     val bucketed = Project(pointPlan.output :+ pb, pointPlan)
@@ -147,8 +146,9 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Mirrors ExtractEquiJoinKeys: both `=` and `<=>` give the planner a
-    * hash-join key, so either means the rewrite would only add cost. */
-  private def hasEquiConjunct(cond: Expression, l: LogicalPlan, r: LogicalPlan): Boolean = {
+    * hash-join key, so either means a rewrite (this rule's or
+    * [[RewriteLevenshteinJoin]]'s) would only add cost. */
+  private[plans] def hasEquiConjunct(cond: Expression, l: LogicalPlan, r: LogicalPlan): Boolean = {
     def crossSided(x: Expression, y: Expression): Boolean =
       (x.references.subsetOf(l.outputSet) && y.references.subsetOf(r.outputSet)) ||
         (y.references.subsetOf(l.outputSet) && x.references.subsetOf(r.outputSet))

@@ -45,10 +45,17 @@ object BenchUtil {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "graft", org.apache.logging.log4j.Level.INFO)
 
-  /** Minimal JSON string escape for the one-line-JSON bench contract:
-    * backslash first, then quote and the control characters that can
-    * realistically appear in paths/callsites. */
-  def jsonEscape(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\t", "\\t").replace("\r", "\\r")
+  /** JSON string escape (without the surrounding quotes) for the
+    * one-line-JSON outputs: backslash, quote, and every control character
+    * below 0x20 — one stray control character in a path, callsite or
+    * message would otherwise make the whole line unparseable. */
+  def jsonEscape(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
 }

@@ -49,7 +49,6 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  simhash(token_hashes('x y z')) AS sh,
         |  lsh_bucket(array(cast(1.0 as float), cast(-1.0 as float)), 4, 0) AS lb,
         |  size(deletion_variants('abc')) AS dv,
-        |  min_common_variant('abc', 'abd') AS mcv,
         |  lev1_witness('abc', 'abd') AS w,
         |  lev1_witness('abc', 'abcde') AS w2,
         |  quantized_dot(array(cast(1.0 as float)), array(cast(2.0 as float))) AS qd,
@@ -66,13 +65,12 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getLong(6) >= 0 && row.getLong(6) < (1L << 30))
     assert(row.getLong(7) >= 0 && row.getLong(7) < 16)
     assert(row.getInt(8) == 4) // abc + ab/ac/bc
-    assert(row.getString(9) == "ab") // delete the differing position
-    assert(row.getString(10) == "ab") // analytic witness: first mismatch at index 2
-    assert(row.isNullAt(11)) // length gap 2 -> lev >= 2, no witness
-    assert(row.getLong(12) == 1000L * 2000)
-    assert(row.getDouble(13) == 2.0)
-    assert(row.getLong(14) == -6L)
-    assert(row.getString(15) == "a d") // tokens [1,3) cut
+    assert(row.getString(9) == "ab") // analytic witness: first mismatch at index 2
+    assert(row.isNullAt(10)) // length gap 2 -> lev >= 2, no witness
+    assert(row.getLong(11) == 1000L * 2000)
+    assert(row.getDouble(12) == 2.0)
+    assert(row.getLong(13) == -6L)
+    assert(row.getString(14) == "a d") // tokens [1,3) cut
   }
 
   test("lang_id and minhash_sig are callable from SQL") {

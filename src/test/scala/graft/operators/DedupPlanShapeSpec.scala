@@ -176,9 +176,10 @@ class DedupPlanShapeSpec extends SparkSpec {
       .collect().sortBy(r => (r.getLong(0), r.getLong(1))).toSeq // default confs
     spark.conf.set(Dedup.BroadcastGateMinBytesKey, "0")
     spark.conf.set(Dedup.SketchMaxBytesKey, "16")
-    // desired cells ≫ the 64-cell cap regardless of the toy relation's
-    // stats estimate — the predicted-saturation shape
-    spark.conf.set(Dedup.SketchCellsPerByteKey, "1000000")
+    // the 64-cell cap falls short of any ratio × desired cells this
+    // large, whatever the toy relation's stats estimate — the
+    // predicted-saturation shape
+    spark.conf.set(Dedup.SketchMinSizingRatioKey, "1000000")
     try {
       val spans = Dedup.duplicateSpans(docs, col("doc_id"), col("text"), n = 3)
       val plan = spans.queryExecution.executedPlan.toString
@@ -191,7 +192,7 @@ class DedupPlanShapeSpec extends SparkSpec {
     } finally {
       spark.conf.unset(Dedup.BroadcastGateMinBytesKey)
       spark.conf.unset(Dedup.SketchMaxBytesKey)
-      spark.conf.unset(Dedup.SketchCellsPerByteKey)
+      spark.conf.unset(Dedup.SketchMinSizingRatioKey)
     }
   }
 

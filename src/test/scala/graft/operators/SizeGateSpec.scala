@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.plans.{RewriteLevenshteinJoin, RewriteRangeJoin}
 
 class SizeGateSpec extends SparkSpec {
   import spark.implicits._
@@ -37,25 +35,6 @@ class SizeGateSpec extends SparkSpec {
     }
   }
 
-  // the optimizer rules read their settings from the active session's conf
-  test("a malformed spark.graft.rangeJoin.maxBucketsPerRow fails naming its key") {
-    val pts = Seq((900L, 3L)).toDF("p_id", "p")
-    val ivs = Seq((100L, 0L, 5L)).toDF("i_id", "lo", "hi")
-    val plan = pts.join(ivs, $"p" >= $"lo" && $"p" <= $"hi").queryExecution.optimizedPlan
-    SparkSession.setActiveSession(spark)
-    withConf(RewriteRangeJoin.WidthKey, "4") {
-      assertFailsNaming("spark.graft.rangeJoin.maxBucketsPerRow", "4m")(RewriteRangeJoin(plan))
-    }
-  }
-
-  test("a malformed spark.graft.levJoin.variantMaxLen fails naming its key") {
-    val l = Seq((1, "abc")).toDF("lid", "ls")
-    val r = Seq((10, "abd")).toDF("rid", "rs")
-    val plan = l.crossJoin(r).filter(levenshtein($"ls", $"rs") <= 1).queryExecution.optimizedPlan
-    SparkSession.setActiveSession(spark)
-    assertFailsNaming("spark.graft.levJoin.variantMaxLen", "2.5")(RewriteLevenshteinJoin(plan))
-  }
-
   private def spans() = {
     val docs = Seq((1L, "a b c d e"), (2L, "x a b c d")).toDF("doc_id", "text")
     Dedup.duplicateSpans(docs, col("doc_id"), col("text"), 3)
@@ -63,10 +42,6 @@ class SizeGateSpec extends SparkSpec {
 
   test("a malformed spark.graft.spans.sketchMaxBytes fails naming its key") {
     assertFailsNaming(Dedup.SketchMaxBytesKey, "1g")(spans())
-  }
-
-  test("a malformed spark.graft.spans.sketchCellsPerByte fails naming its key") {
-    assertFailsNaming(Dedup.SketchCellsPerByteKey, "two")(spans())
   }
 
   test("a malformed spark.graft.spans.sketchMinSizingRatio fails naming its key") {

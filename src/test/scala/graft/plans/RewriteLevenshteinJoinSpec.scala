@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,6 +48,19 @@ class RewriteLevenshteinJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       .createOrReplaceTempView("rt")
   }
 
+  /** Edit distance over code points, the unit of Spark's `levenshtein`
+    * (2 for any pair whose lengths differ by more than one). */
+  private def lev(a0: String, b0: String): Int = {
+    val a = a0.codePoints().toArray
+    val b = b0.codePoints().toArray
+    if (math.abs(a.length - b.length) > 1) return 2
+    val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (i == 0) j else if (j == 0) i else 0)
+    for (i <- 1 to a.length; j <- 1 to b.length)
+      d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
+        d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+    d(a.length)(b.length)
+  }
+
   test("SQL cartesian lev<=1 join: rewritten plan, identical results") {
     setup()
     val sql = "SELECT lid, rid FROM lt, rt WHERE levenshtein(ls, rs) <= 1"
@@ -60,13 +74,6 @@ class RewriteLevenshteinJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     // naive expectation computed in Scala
     val lt = Seq((1, "abc"), (2, "abc"), (3, "xyz"), (4, "ab"), (5, ""))
     val rt = Seq((10, "abd"), (11, "abc"), (12, "zzzz"), (13, "a"), (14, "xyzw"))
-    def lev(a: String, b: String): Int = {
-      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (i == 0) j else if (j == 0) i else 0)
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-      d(a.length)(b.length)
-    }
     val expected = (for { (li, lsv) <- lt; (ri, rsv) <- rt if lev(lsv, rsv) <= 1 }
       yield (li, ri)).sorted
     assert(got == expected)
@@ -136,5 +143,48 @@ class RewriteLevenshteinJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (6,15)=1 ("short"->"shore" substitute)
     assert(got == Seq((1, 10), (1, 11), (2, 10), (2, 11), (3, 10),
       (4, 13), (4, 14), (5, 13), (6, 15)))
+  }
+
+  // the small alphabet of SimilarityJoinSpec: two supplementary
+  // characters (two UTF-16 units each) that share a high surrogate
+  private val alphabet = Seq("a", "b", "c", "\uD83D\uDE00", "\uD83D\uDE01")
+  private def genCodePoints(n: Gen[Int]): Gen[Vector[String]] =
+    n.flatMap(k => Gen.listOfN(k, Gen.oneOf(alphabet)).map(_.toVector))
+  /** `cps` with one random substitution, insertion or deletion. */
+  private def genEdit(cps: Vector[String]): Gen[Vector[String]] = for {
+    i <- Gen.choose(0, cps.length - 1)
+    c <- Gen.oneOf(alphabet)
+    op <- Gen.choose(0, 2)
+  } yield op match {
+    case 0 => cps.updated(i, c)
+    case 1 => cps.patch(i, Seq(c), 0)
+    case _ => cps.patch(i, Nil, 1)
+  }
+
+  test("SQL lev<=1 join ≡ naive filter, duplicate rows and the 255 boundary included (property)") {
+    import spark.implicits._
+    // each side: short strings (repeats likely, plus three exact
+    // duplicate rows) and strings within one edit of a shared base of
+    // 254–256 characters, so pairs fall in both regimes and across them
+    val genCase = for {
+      base <- genCodePoints(Gen.choose(254, 256))
+      side = for {
+        short <- Gen.listOfN(12, genCodePoints(Gen.choose(0, 4)))
+        long <- Gen.listOfN(4, Gen.oneOf(Gen.const(base), genEdit(base)))
+      } yield (short ++ short.take(3) ++ long).map(_.mkString)
+      ls <- side
+      rs <- side
+    } yield (ls, rs)
+    val prop = Prop.forAllNoShrink(genCase) { case (ls, rs) =>
+      ls.toDF("ls").createOrReplaceTempView("lp")
+      rs.toDF("rs").createOrReplaceTempView("rp")
+      val df = spark.sql("SELECT ls, rs FROM lp, rp WHERE levenshtein(ls, rs) <= 1")
+      val plan = df.queryExecution.executedPlan.toString
+      val got = df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+      val want = (for { a <- ls; b <- rs if lev(a, b) <= 1 } yield (a, b)).sorted
+      plan.contains("Generate") && !plan.contains("CartesianProduct") && got == want
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
   }
 }

@@ -127,7 +127,6 @@ class RewriteRangeJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     setup()
     spark.conf.set(RewriteRangeJoin.WidthKey, "4")
-    spark.conf.set("spark.graft.rangeJoin.maxBucketsPerRow", "10")
     try {
       // an open-end sentinel interval: would explode into billions of
       // buckets; the guard must name the row and the conf instead
@@ -138,8 +137,12 @@ class RewriteRangeJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       val e = intercept[Exception](df.collect())
       def chain(t: Throwable): List[Throwable] =
         if (t == null) Nil else t :: chain(t.getCause)
-      assert(chain(e).exists(t =>
-        String.valueOf(t.getMessage).contains("maxBucketsPerRow")), s"got $e")
-    } finally spark.conf.unset("spark.graft.rangeJoin.maxBucketsPerRow")
+      // [0, Long.MaxValue] at width 4 spans far more than the 4,000,000
+      // buckets one row may generate
+      assert(chain(e).exists { t =>
+        val m = String.valueOf(t.getMessage)
+        m.contains("above the bound of 4000000 per row") && m.contains(RewriteRangeJoin.WidthKey)
+      }, s"got $e")
+    } finally spark.conf.unset(RewriteRangeJoin.WidthKey)
   }
 }
