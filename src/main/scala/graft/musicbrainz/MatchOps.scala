@@ -1,7 +1,6 @@
 package graft.musicbrainz
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.normalize
@@ -17,18 +16,20 @@ import graft.operators.{Relational, SimilarityJoin}
   *     tail of the duo split (F14) for names with "&"; whole-name hits
   *     win, else the split's
   *   → the serving rows of each artist (song ⋈ song alias ⋈ album ⋈
-  *     artist, J13)
-  *   → two-phase song lookup (prefix LIKE, else lev ≤ 1) — both phases
-  *     computed set-based, phase 1 preferred per query (`benchmark.py:124-126`)
-  *   → multiplicative relevance + relative-threshold argmax (A4).
+  *     artist, J13), gathered into one array per query
+  *   → ONE fused ranking expression over that array ([[ranked]]): the
+  *     second-artist veto, the two-phase song lookup (prefix LIKE, else
+  *     lev ≤ 1; phase 1 preferred per query, `benchmark.py:124-126`), the
+  *     serving query's DISTINCT, multiplicative relevance and the
+  *     relative-threshold argmax (A4) — no window, no exchange.
   *
   * The first two steps run on one of two paths, gated by export size (see
-  * [[matchSongs]]); the rest is one shared ranking:
+  * [[matchSongs]]); both hand the ranking one row per query:
   *   - index path: the export's [[MatcherIndex]], built once and probed by
-  *     native expressions — a batch is one narrow map over the query frame;
+  *     native expressions — a batch is one narrow projection;
   *   - join path: ONE lev ≤ 1 similarity join (J14) for the whole batch
   *     with role-tagged probes and one aggregate per query, then the
-  *     4-join serving query.
+  *     4-join serving query, its rows collected per query.
   */
 object MatchOps {
 
@@ -109,147 +110,12 @@ object MatchOps {
         col("second_ids"))
   }
 
-  /** Every surviving candidate row per query with its phase and relevance —
-    * the frame [[matchSongs]] takes its argmax over. Public so single-case
-    * triage ([[explainQuery]]) can show the losers too.
+  /** Every min-phase candidate row per query with its phase and relevance:
+    * the rows [[matchSongs]] picks its winner from, losers included.
     * `queries` columns: query_id (a key), artist_name, artist2_name
-    * (nullable), title.
-    */
+    * (nullable), title. */
   def scoredCandidates(queries: DataFrame, export: GenerateDataset.Export): DataFrame =
-    export.matcherIndex match {
-      case Some(index) => ranked(indexedCandidates(displayNames(queries), index))
-      case None => scoredWith(queries, export, artistPairs)
-    }
-
-  /** (query_id, title, full_name): the display name "A & B" when a second
-    * artist exists (`benchmark.py:159-162`). */
-  private def displayNames(queries: DataFrame): DataFrame =
-    queries.select(
-      col("query_id"), col("title"),
-      when(col("artist2_name").isNotNull,
-        concat(col("artist_name"), lit(" & "), col("artist2_name")))
-        .otherwise(col("artist_name")).as("full_name"))
-
-  /** The index path's candidates: per query, [[MatcherIndex.artistLookup]]
-    * on the display name and its split, then one row per serving row of
-    * each artist found — no join, no exchange, no broadcast of its own. */
-  private def indexedCandidates(q: DataFrame, index: MatcherIndex): DataFrame = {
-    val name = col("full_name")
-    val hasSplit = name.contains("&")
-    q.select(col("query_id"), normalize.searchKey(col("title")).as("tkey"),
-        index.artistLookup(normalize.searchKey(name),
-          when(hasSplit, normalize.searchKey(duoHead(name))),
-          when(hasSplit, normalize.searchKey(duoTail(name)))).as("hits"))
-      .filter(col("tkey").isNotNull)
-      .select(col("query_id"), col("tkey"), col("hits.second_ids").as("second_ids"),
-        explode(col("hits.artist_ids")).as("artist_id"))
-      .select(col("query_id"), col("tkey"), (size(col("second_ids")) > 0).as("second_required"),
-        col("second_ids"), explode(index.servingRows(col("artist_id"))).as("s"))
-      .select(col("query_id"), col("tkey"), col("second_required"), col("second_ids"), col("s.*"))
-  }
-
-  /** The join path's candidates over any artist lookup `(q, mbArtistAlias)
-    * → (query_id, artist_id, second_required, second_ids)`, `q` being
-    * (query_id, title, full_name) — the seam the equivalence spec runs a
-    * reference lookup through — ranked as [[scoredCandidates]] ranks. */
-  private[musicbrainz] def scoredWith(
-      queries: DataFrame, export: GenerateDataset.Export,
-      lookup: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val q = displayNames(queries)
-
-    // the 4-join serving query (`benchmark.py:96-117`)
-    val songs = export.mbSong.select(
-      col("id").as("song_id"), col("mb_id").as("song_mb_id"), col("title").as("song_title"),
-      col("artist_id").as("s_artist_id"), col("second_artist_id"),
-      col("album_id"), col("is_single").as("single_relationship"), col("score").as("recording_score"))
-    val albums = export.mbAlbum.select(
-      col("id").as("a_id"), col("mb_id").as("album_mb_id"), col("title").as("album_title"),
-      col("release_year"), col("is_single"), col("is_soundtrack"), col("is_main_album"))
-    val artists = export.mbArtist.select(
-      col("id").as("ar_id"), col("name").as("artist_name_mb"),
-      col("mb_id").as("artist_mb_id"), col("country_id"))
-
-    val qk = q.select(col("query_id").as("qq_id"), normalize.searchKey(col("title")).as("tkey"))
-      .filter(col("tkey").isNotNull)
-
-    ranked(lookup(q, export.mbArtistAlias)
-      .join(qk, col("query_id") === col("qq_id"))
-      .join(songs, col("artist_id") === col("s_artist_id"))
-      .join(export.mbSongAlias.select(col("song_id").as("al_song"), col("alias")),
-        col("song_id") === col("al_song"))
-      .join(albums, col("album_id") === col("a_id"))
-      .join(artists, col("s_artist_id") === col("ar_id")))
-  }
-
-  /** The ranking both paths share. `cand` columns: query_id, tkey,
-    * second_required, second_ids and the serving row's fields
-    * ([[MatcherIndex.servingRows]]). */
-  private def ranked(cand: DataFrame): DataFrame = {
-    val distinct = cand
-      .filter(!col("second_required") ||
-        (col("second_artist_id").isNotNull && array_contains(col("second_ids"), col("second_artist_id"))))
-      // two phases in one pass: 1 = prefix match (`benchmark.py:85`),
-      // 2 = bounded edit distance with the length guard (`:87-91`)
-      .withColumn("phase",
-        when(col("alias").startsWith(col("tkey")), 1)
-          .when(length(col("alias")) < SimilarityJoin.MaxLen && levenshtein(col("alias"), col("tkey"), 1) >= 0, 2))
-      .filter(col("phase").isNotNull)
-      // DISTINCT of the serving query's projection (`benchmark.py:97`),
-      // keyed on query_id alone: a subset of the distinct key satisfies the
-      // aggregate's clustering, so dedup and ranking windows share one
-      // partitioning. When the join path's joins stream the query side,
-      // that is the lookup aggregate's query_id exchange and the planner
-      // drops this repartition as redundant; otherwise (always, on the
-      // index path) it is one query_id exchange, not one over all 17
-      // columns plus the windows' own
-      .select(
-        col("query_id"), col("tkey"), col("phase"),
-        col("song_mb_id"), col("alias").as("matched_alias"), col("song_title"),
-        col("single_relationship"), col("recording_score"),
-        col("album_title"), col("release_year"), col("is_single"), col("is_soundtrack"),
-        col("is_main_album"), col("album_mb_id"),
-        col("artist_name_mb"), col("artist_mb_id"), col("country_id"))
-      .repartition(col("query_id"))
-      .distinct()
-
-    // phase-1 rows win when any exist for the query (`benchmark.py:124-126`)
-    val wPhase = Window.partitionBy(col("query_id"))
-    val phased = distinct
-      .withColumn("min_phase", min(col("phase")).over(wPhase))
-      .filter(col("phase") === col("min_phase"))
-
-    // relevance (`benchmark.py:43-49`): score × 10^[single_from] ×
-    // 10^[main_album] × 10^[exact alias match]
-    val relevance = col("recording_score") *
-      when(col("single_relationship"), 10).otherwise(1) *
-      when(col("is_main_album"), 10).otherwise(1) *
-      when(normalize.searchKey(col("matched_alias")) === col("tkey"), 10).otherwise(1)
-
-    phased.withColumn("relevance", relevance)
-  }
-
-  /** A4 winner ordering: (earliest year, highest relevance); Python's `max`
-    * tie-break is list-order-nondeterministic — pinned by ids. The trailing
-    * artist_mb_id makes this a TOTAL order over distinct candidate rows
-    * (duo queries export the same recording once per matched artist id,
-    * identical in every other sort key) — without it both matchSongs and
-    * explainQuery's `chosen` would tie-break by partition arrival order.
-    */
-  private val winnerOrder: Seq[Column] =
-    Seq(col("release_year").asc_nulls_last, col("relevance").desc,
-      col("album_mb_id").asc, col("song_mb_id").asc, col("matched_alias").asc,
-      col("artist_mb_id").asc,
-      // Residual discriminators: candidate rows are DISTINCT over a wider
-      // projection than the six keys above (equal relevance can arise from
-      // different multiplier combinations, e.g. single×1×exact vs
-      // 1×main_album×exact on the same recording), so without these a tied
-      // pair would leave row_number — and explainQuery's `chosen` flag —
-      // partition-arrival-nondeterministic. Together with the six keys this
-      // covers every column of the distinct projection → a TOTAL order.
-      col("recording_score").desc, col("single_relationship").asc,
-      col("is_main_album").asc, col("song_title").asc, col("album_title").asc,
-      col("is_single").asc, col("is_soundtrack").asc,
-      col("artist_name_mb").asc, col("country_id").asc_nulls_last)
+    scored(perQuery(queries, export))
 
   /** Full matcher. Returns one row per query_id that matched:
     * (query_id, song_mb_id, matched_alias, title, album_title, album_mb_id,
@@ -265,43 +131,176 @@ object MatchOps {
     * same rows.
     */
   def matchSongs(queries: DataFrame, export: GenerateDataset.Export): DataFrame =
-    winners(scoredCandidates(queries, export))
-
-  /** A4: keep ≥ max/10, pick the first row under the winner ordering. */
-  private[musicbrainz] def winners(scored: DataFrame): DataFrame =
-    Relational.relativeThresholdTopOne(
-      scored,
-      Seq(col("query_id")),
-      col("relevance"), 10.0,
-      winnerOrder)
-      .drop("tkey", "phase", "min_phase")
+    winners(perQuery(queries, export))
 
   /** Single-case debugger (the reference's `--artist`/`--title` triage runs,
     * `src/benchmark.py:221-224`): the FULL scored candidate set for one
     * query — every (song, alias, album) row with its phase and relevance,
-    * `chosen` marking the row [[matchSongs]] returns. The one-row query
-    * filter keeps the whole DAG probe-sized.
-    */
+    * `chosen` marking the ranking's winner, the row [[matchSongs]] returns
+    * (candidates are distinct, so exactly one). The one-row query filter
+    * keeps the whole DAG probe-sized. */
   def explainQuery(
-      queries: DataFrame, export: GenerateDataset.Export, queryId: Long): DataFrame = {
-    val one = queries.filter(col("query_id") === queryId)
-    // `chosen` re-applies the SAME threshold + row_number logic as
-    // [[Relational.relativeThresholdTopOne]] rather than equi-joining the
-    // winner back: candidate rows are distinct over a projection wider than
-    // any natural key (duo queries export a recording once per matched
-    // artist id), so a key join could flag several rows. Non-passing rows
-    // sort after passing ones, making rank 1 exactly the matchSongs winner.
-    val wAll = Window.partitionBy(col("query_id"))
-    val passes = col("relevance") * 10.0 >= col("__maxscore")
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(when(passes, 0).otherwise(1).asc +: winnerOrder: _*)
-    scoredCandidates(one, export)
-      .withColumn("__maxscore", max(col("relevance")).over(wAll))
-      .withColumn("__rn", row_number().over(rank))
-      .withColumn("chosen", passes && col("__rn") === 1)
-      .drop("__maxscore", "__rn")
+      queries: DataFrame, export: GenerateDataset.Export, queryId: Long): DataFrame =
+    perQuery(queries.filter(col("query_id") === queryId), export)
+      .select(col("query_id"), col("tkey"), ranked.as("r"))
+      .select(col("query_id"), col("tkey"), col("r.winner").as("w"), explode(col("r.candidates")).as("c"))
+      .select(col("query_id"), col("tkey"), col("c.*"), (col("c") <=> col("w")).as("chosen"))
       .orderBy(col("phase").asc, col("relevance").desc, col("album_mb_id").asc)
+
+  /** (query_id, tkey, second_required, second_ids, rows), `rows` being the
+    * query's serving rows, from the path [[matchSongs]]'s gate picks. */
+  private def perQuery(queries: DataFrame, export: GenerateDataset.Export): DataFrame =
+    export.matcherIndex match {
+      case Some(index) => indexed(queries, index)
+      case None => collected(candidatesWith(queries, export, artistPairs))
+    }
+
+  /** (query_id, title, full_name): the display name "A & B" when a second
+    * artist exists (`benchmark.py:159-162`). */
+  private def displayNames(queries: DataFrame): DataFrame =
+    queries.select(
+      col("query_id"), col("title"),
+      when(col("artist2_name").isNotNull,
+        concat(col("artist_name"), lit(" & "), col("artist2_name")))
+        .otherwise(col("artist_name")).as("full_name"))
+
+  /** The index path: [[MatcherIndex.artistLookup]] on the display name and
+    * its split, then the serving rows of every artist found — a narrow
+    * projection of the query frame, so Catalyst folds a local frame into a
+    * local relation while it plans. */
+  private def indexed(queries: DataFrame, index: MatcherIndex): DataFrame = {
+    val name = col("full_name")
+    val hasSplit = name.contains("&")
+    displayNames(queries)
+      .select(col("query_id"), normalize.searchKey(col("title")).as("tkey"),
+        index.artistLookup(normalize.searchKey(name),
+          when(hasSplit, normalize.searchKey(duoHead(name))),
+          when(hasSplit, normalize.searchKey(duoTail(name)))).as("hits"))
+      .filter(col("tkey").isNotNull)
+      .select(col("query_id"), col("tkey"),
+        (size(col("hits.second_ids")) > 0).as("second_required"), col("hits.second_ids").as("second_ids"),
+        flatten(transform(col("hits.artist_ids"), index.servingRows(_))).as("rows"))
   }
+
+  /** A serving row's fields ([[MatcherIndex.servingRows]]), as the join
+    * path names them; all but the first are the serving query's projection
+    * (`benchmark.py:97`), named as [[Projection]] names them. */
+  private val ServingFields = Seq(
+    "second_artist_id", "song_mb_id", "alias", "song_title", "single_relationship",
+    "recording_score", "album_title", "release_year", "is_single", "is_soundtrack",
+    "is_main_album", "album_mb_id", "artist_name_mb", "artist_mb_id", "country_id")
+  private val Projection = ServingFields.tail.map(f => if (f == "alias") "matched_alias" else f)
+
+  /** The join path's candidates — (query_id, tkey, second_required,
+    * second_ids, [[ServingFields]]), one row per serving row — over any
+    * artist lookup `(q, mbArtistAlias) → (query_id, artist_id,
+    * second_required, second_ids)`, `q` being (query_id, title, full_name):
+    * the seam the equivalence spec runs a reference lookup through. */
+  private[musicbrainz] def candidatesWith(
+      queries: DataFrame, export: GenerateDataset.Export,
+      lookup: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val q = displayNames(queries)
+    // the 4-join serving query (`benchmark.py:96-117`)
+    val songs = export.mbSong.select(
+      col("id").as("song_id"), col("mb_id").as("song_mb_id"), col("title").as("song_title"),
+      col("artist_id").as("s_artist_id"), col("second_artist_id"),
+      col("album_id"), col("is_single").as("single_relationship"), col("score").as("recording_score"))
+    val albums = export.mbAlbum.select(
+      col("id").as("a_id"), col("mb_id").as("album_mb_id"), col("title").as("album_title"),
+      col("release_year"), col("is_single"), col("is_soundtrack"), col("is_main_album"))
+    val artists = export.mbArtist.select(
+      col("id").as("ar_id"), col("name").as("artist_name_mb"),
+      col("mb_id").as("artist_mb_id"), col("country_id"))
+    val qk = q.select(col("query_id").as("qq_id"), normalize.searchKey(col("title")).as("tkey"))
+      .filter(col("tkey").isNotNull)
+    lookup(q, export.mbArtistAlias)
+      .join(qk, col("query_id") === col("qq_id"))
+      .join(songs, col("artist_id") === col("s_artist_id"))
+      .join(export.mbSongAlias.select(col("song_id").as("al_song"), col("alias")),
+        col("song_id") === col("al_song"))
+      .join(albums, col("album_id") === col("a_id"))
+      .join(artists, col("s_artist_id") === col("ar_id"))
+      .select((Seq("query_id", "tkey", "second_required", "second_ids") ++ ServingFields).map(col): _*)
+  }
+
+  /** The join path's candidates collected per query (a lookup gives all
+    * artists of a query one second_required/second_ids), without the rows
+    * no phase keeps, which the ranking would drop after the exchange. */
+  private[musicbrainz] def collected(cand: DataFrame): DataFrame =
+    cand.filter(phase(col("alias"), col("tkey")).isNotNull)
+      .groupBy(col("query_id"), col("tkey"), col("second_required"), col("second_ids"))
+      .agg(collect_list(struct(ServingFields.map(col): _*)).as("rows"))
+
+  /** The song lookup's phases (`benchmark.py:85,87-91`): 1 = prefix match,
+    * 2 = edit distance ≤ 1 under the length guard, null = no match. */
+  private def phase(alias: Column, tkey: Column): Column =
+    when(alias.startsWith(tkey), 1)
+      .when(length(alias) < SimilarityJoin.MaxLen && levenshtein(alias, tkey, 1) >= 0, 2)
+
+  /** `f(x)`, `x` evaluated once: a lambda body evaluates what it contains
+    * once per element, so a one-element `transform` binds `x` instead. */
+  private def bind(x: Column)(f: Column => Column): Column = transform(array(x), f).getItem(0)
+
+  /** The whole ranking of a [[perQuery]] row as one expression →
+    * struct(candidates, winner): the second-artist veto (F14), the phases
+    * and the serving projection's DISTINCT (per query, so without query_id
+    * and tkey); phase-1 rows win when any exist (`benchmark.py:124-126`),
+    * and those `candidates` get their relevance (`benchmark.py:43-49`):
+    * score × 10^[single_from] × 10^[main_album] × 10^[exact alias match];
+    * A4: of the candidates with relevance ≥ max/10, the first under
+    * [[winnerOrder]] is the `winner`, null when there is none. */
+  private val ranked: Column = {
+    def kept(r: Column) = !col("second_required") || array_contains(col("second_ids"), r("second_artist_id"))
+    def projected(r: Column) = struct(phase(r("alias"), col("tkey")).as("phase") +:
+      ServingFields.tail.zip(Projection).map { case (f, p) => r(f).as(p) }: _*)
+    def relevance(c: Column) = c("recording_score") *
+      when(c("single_relationship"), 10).otherwise(1) *
+      when(c("is_main_album"), 10).otherwise(1) *
+      when(normalize.searchKey(c("matched_alias")) === col("tkey"), 10).otherwise(1)
+    // a new struct: Catalyst cannot fold a local query frame through `withField`
+    def withRelevance(c: Column) =
+      struct(("phase" +: Projection).map(f => c(f).as(f)) :+ relevance(c).as("relevance"): _*)
+    val matched = filter(transform(filter(col("rows"), kept(_)), projected(_)), _("phase").isNotNull)
+    bind(array_distinct(matched)) { m =>
+      val lowest = when(exists(m, _("phase") === 1), filter(m, _("phase") === 1)).otherwise(m)
+      bind(transform(lowest, withRelevance(_))) { cands =>
+        bind(array_max(transform(cands, _("relevance")))) { best =>
+          val passing = filter(cands, _("relevance") * 10.0 >= best)
+          struct(cands.as("candidates"),
+            get(array_sort(passing, Relational.comparator(winnerOrder)), lit(0)).as("winner"))
+        }
+      }
+    }
+  }
+
+  /** [[ranked]]'s winner per query; a query without one has no row. On a
+    * query frame that does not fold into a local relation, Catalyst pushes
+    * this filter below the projections, so the batch's expressions run
+    * twice per query. */
+  private[musicbrainz] def winners(perQuery: DataFrame): DataFrame =
+    perQuery.select(col("query_id"), ranked("winner").as("w"))
+      .filter(col("w").isNotNull)
+      .select(col("query_id"), col("w.*")).drop("phase")
+
+  /** [[ranked]]'s candidates, one row each. */
+  private[musicbrainz] def scored(perQuery: DataFrame): DataFrame =
+    perQuery.select(col("query_id"), col("tkey"), explode(ranked("candidates")).as("c"))
+      .select(col("query_id"), col("tkey"), col("c.*"))
+
+  /** A4 winner ordering over the fields `key` names: (earliest year,
+    * highest relevance); Python's `max` tie-break is list-order-
+    * nondeterministic — pinned by ids. The trailing keys cover every
+    * projected column, a TOTAL order over distinct candidates (duo queries
+    * export a recording once per matched artist id; single×1×exact and
+    * 1×main×exact tie on relevance), so neither the pick nor explainQuery's
+    * `chosen` depends on the candidates' order. */
+  private[musicbrainz] def winnerOrder(key: String => Column): Seq[Column] =
+    Seq(key("release_year").asc_nulls_last, key("relevance").desc,
+      key("album_mb_id").asc, key("song_mb_id").asc, key("matched_alias").asc,
+      key("artist_mb_id").asc, key("recording_score").desc, key("single_relationship").asc,
+      key("is_main_album").asc, key("song_title").asc, key("album_title").asc,
+      key("is_single").asc, key("is_soundtrack").asc,
+      key("artist_name_mb").asc, key("country_id").asc_nulls_last)
 
   /** Human-curation diff (A6 completion, `src/benchmark.py:252-267`): one
     * row per missing or wrong query — the expected (DB) album next to the

@@ -20,4 +20,9 @@ object CoreBridge {
   def broadcastsHeld(): Set[Long] =
     SparkEnv.get.blockManager.getMatchingBlockIds(_.isBroadcast)
       .collect { case BroadcastBlockId(id, _) => id }.toSet
+
+  /** Block until every event posted so far has reached every listener
+    * (the bus is `private[spark]`): what a listener counted for an action
+    * is then complete. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

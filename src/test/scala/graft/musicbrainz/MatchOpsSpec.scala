@@ -1,18 +1,23 @@
 package graft.musicbrainz
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
+import graft.functions.normalize
+import graft.operators.{Relational, SimilarityJoin}
 
 /** Batch matcher over the fixture export — §3.2 semantics: fuzzy artist
   * lookup, duo-split fallback, two-phase song lookup, relevance ranking,
   * and the A6 accuracy counters (replica of `benchmark.py:245-274`) — and
   * the equivalence of both sides of the matcher's index gate with the
-  * three-lookup composition the single-join lookup replaced.
+  * three-lookup composition the single-join lookup replaced, ranked by the
+  * window-based ranking the fused one replaced.
   */
 class MatchOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -98,6 +103,45 @@ class MatchOpsSpec extends SparkSpec {
     directPairs.unionByName(fallbackPairs)
   }
 
+  /** The ranking as separate relational steps over the join path's
+    * per-row candidates: the second-artist veto and the phases, the
+    * serving projection's DISTINCT behind a query_id repartition, a
+    * min-phase window, then [[Relational.relativeThresholdTopOne]]'s two
+    * windows. The reference the fused ranking must equal.
+    */
+  private def referenceScored(cand: DataFrame): DataFrame = {
+    val distinct = cand
+      .filter(!col("second_required") ||
+        (col("second_artist_id").isNotNull && array_contains(col("second_ids"), col("second_artist_id"))))
+      .withColumn("phase",
+        when(col("alias").startsWith(col("tkey")), 1)
+          .when(length(col("alias")) < SimilarityJoin.MaxLen && levenshtein(col("alias"), col("tkey"), 1) >= 0, 2))
+      .filter(col("phase").isNotNull)
+      .select(
+        col("query_id"), col("tkey"), col("phase"),
+        col("song_mb_id"), col("alias").as("matched_alias"), col("song_title"),
+        col("single_relationship"), col("recording_score"),
+        col("album_title"), col("release_year"), col("is_single"), col("is_soundtrack"),
+        col("is_main_album"), col("album_mb_id"),
+        col("artist_name_mb"), col("artist_mb_id"), col("country_id"))
+      .repartition(col("query_id"))
+      .distinct()
+    val relevance = col("recording_score") *
+      when(col("single_relationship"), 10).otherwise(1) *
+      when(col("is_main_album"), 10).otherwise(1) *
+      when(normalize.searchKey(col("matched_alias")) === col("tkey"), 10).otherwise(1)
+    distinct
+      .withColumn("min_phase", min(col("phase")).over(Window.partitionBy(col("query_id"))))
+      .filter(col("phase") === col("min_phase"))
+      .drop("min_phase")
+      .withColumn("relevance", relevance)
+  }
+
+  private def referenceWinners(cand: DataFrame): DataFrame =
+    Relational.relativeThresholdTopOne(referenceScored(cand), Seq(col("query_id")),
+      col("relevance"), 10.0, MatchOps.winnerOrder(col))
+      .drop("tkey", "phase")
+
   /** `base` plus `extra` rows, each column cast to `base`'s type; columns
     * `extra` lacks are null. */
   private def plus(base: DataFrame, extra: DataFrame): DataFrame =
@@ -158,7 +202,7 @@ class MatchOpsSpec extends SparkSpec {
     for ((what, qs, ex) <- bothCases) OnJoinPath(spark) {
       assert(ex().matcherIndex.isEmpty, s"$what: the join path is not forced")
       val got = MatchOps.matchSongs(qs(), ex())
-      val want = MatchOps.winners(MatchOps.scoredWith(qs(), ex(), threeLookupPairs))
+      val want = referenceWinners(MatchOps.candidatesWith(qs(), ex(), threeLookupPairs))
       assert(got.columns.toSeq == want.columns.toSeq, what)
       assert(rows(got) == rows(want), what)
     }
@@ -181,7 +225,7 @@ class MatchOpsSpec extends SparkSpec {
         val j = MatchOps.matchSongs(qs(), ex())
         (j.columns.toSeq, rows(j))
       }
-      val want = MatchOps.winners(MatchOps.scoredWith(qs(), ex(), threeLookupPairs))
+      val want = referenceWinners(MatchOps.candidatesWith(qs(), ex(), threeLookupPairs))
       assert(got.columns.toSeq == joined._1, what)
       assert(got.columns.toSeq == want.columns.toSeq, what)
       assert(rows(got) == joined._2, what)
@@ -190,6 +234,82 @@ class MatchOpsSpec extends SparkSpec {
     val got = MatchOps.matchSongs(lookupCases, richExport)
       .select("query_id", "album_mb_id").as[(Int, String)].collect().toMap
     assert(got == expectedLookupCases)
+  }
+
+  /** Random per-row candidate sets in the join path's shape, over small
+    * domains so that they hold relevance ties, null release_year /
+    * country_id / recording_score, verbatim duplicate rows, both phases
+    * and second-artist vetoes. */
+  private def randomCandidates(seed: Long, nQueries: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+    def flag = rnd.nextBoolean()
+    val rows = (1 to nQueries).flatMap { q =>
+      val tkey = pick("abc", "abcd", "xy")
+      val required = rnd.nextInt(4) == 0
+      val secondIds = if (required) pick(Seq(1L), Seq(1L, 2L)) else pick(Seq.empty[Long], null)
+      val fresh = Seq.fill(rnd.nextInt(9)) {
+        Seq[Any](q.toLong, tkey, required, secondIds, pick[Any](1L, 2L, 3L, null),
+          pick("r-1", "r-2", "r-3"), pick("t1", "t2"), flag, pick[Any](1, 2, 10, null),
+          pick("abc", "abcd", "abcde", "abd", "ab", "abx", "xy", "xyz", "zzz"),
+          pick("a1", "a2"), pick[Any](1990, 1991, null), flag, flag, flag,
+          pick("g-1", "g-2", "g-3"), pick("n1", "n2"), pick("a-1", "a-2"), pick[Any]("us", "gb", null))
+      }
+      fresh ++ fresh.filter(_ => rnd.nextInt(3) == 0)
+    }
+    val schema = StructType(Seq(
+      StructField("query_id", LongType), StructField("tkey", StringType),
+      StructField("second_required", BooleanType), StructField("second_ids", ArrayType(LongType)),
+      StructField("second_artist_id", LongType), StructField("song_mb_id", StringType),
+      StructField("song_title", StringType), StructField("single_relationship", BooleanType),
+      StructField("recording_score", IntegerType), StructField("alias", StringType),
+      StructField("album_title", StringType), StructField("release_year", IntegerType),
+      StructField("is_single", BooleanType), StructField("is_soundtrack", BooleanType),
+      StructField("is_main_album", BooleanType), StructField("album_mb_id", StringType),
+      StructField("artist_name_mb", StringType), StructField("artist_mb_id", StringType),
+      StructField("country_id", StringType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*), schema)
+  }
+
+  test("the fused ranking returns what the window-based ranking did on random candidate sets") {
+    for (seed <- 1L to 4L) {
+      val cand = randomCandidates(seed, 60).cache()
+      val perQuery = MatchOps.collected(cand)
+      val scored = MatchOps.scored(perQuery)
+      val wantScored = referenceScored(cand)
+      assert(scored.columns.toSeq == wantScored.columns.toSeq)
+      assert(rows(scored) == rows(wantScored), s"seed $seed: candidates")
+      val got = MatchOps.winners(perQuery)
+      val want = referenceWinners(cand)
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(rows(got) == rows(want), s"seed $seed: winners")
+      // the sets are not vacuous: duplicates, both phases, vetoes, ties
+      assert(cand.count() > cand.distinct().count(), s"seed $seed: no duplicate rows")
+      assert(wantScored.select("phase").distinct().count() == 2, s"seed $seed: one phase only")
+      val tied = wantScored.groupBy("query_id", "relevance").count().filter(col("count") > 1)
+      assert(tied.count() > 0, s"seed $seed: no relevance ties")
+      val vetoed = cand.filter(col("second_required") && col("second_artist_id") === 3L)
+      assert(vetoed.count() > 0, s"seed $seed: no vetoed row")
+      cand.unpersist()
+    }
+  }
+
+  test("explainQuery's chosen row is matchSongs' row, on both sides of the index gate") {
+    for ((what, qs, ex) <- bothCases; onJoin <- Seq(false, true)) {
+      def run[A](body: => A): A = if (onJoin) OnJoinPath(spark)(body) else body
+      run {
+        assert(ex().matcherIndex.isDefined != onJoin, s"$what: wrong path")
+        val matched = MatchOps.matchSongs(qs(), ex())
+        val ids = qs().select("query_id").as[Int].collect().toSeq
+        ids.foreach { id =>
+          val explained = MatchOps.explainQuery(qs(), ex(), id)
+          val chosen = explained.filter(col("chosen")).drop("tkey", "phase", "chosen")
+          val want = matched.filter(col("query_id") === id)
+          assert(chosen.columns.toSeq == want.columns.toSeq, s"$what $id")
+          assert(rows(chosen) == rows(want), s"$what, query $id, join path $onJoin")
+        }
+      }
+    }
   }
 
   test("the export owns its matcher index: built once, released by unpersist, one per export") {

@@ -1,10 +1,16 @@
 package graft.musicbrainz
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.CoreBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.QueryPlan
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, RepartitionOperation, Union, Window}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeLike}
 
 import graft.SparkSpec
 import graft.functions.DeletionVariants
@@ -131,5 +137,42 @@ class PlanShapeSpec extends SparkSpec {
     val physical = reachable(m.queryExecution.executedPlan)
     assert(!physical.exists(_.isInstanceOf[BroadcastExchangeExec]),
       s"the batch broadcasts:\n${m.queryExecution.executedPlan}")
+
+    // one narrow projection of the query frame: the ranking is one
+    // expression, so no operator regroups the batch's rows
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_queries").toString + "/q"
+    queries.write.parquet(dir)
+    val fileQueries = spark.read.parquet(dir)
+    for ((what, q) <- Seq("local" -> queries, "parquet" -> fileQueries)) {
+      val optimized = MatchOps.matchSongs(q, export).queryExecution.optimizedPlan
+      val wide = optimized.collect {
+        case p @ (_: Window | _: Aggregate | _: Generate | _: RepartitionOperation) => p.nodeName
+      }
+      assert(wide.isEmpty, s"the $what batch plans $wide:\n$optimized")
+    }
+    // a local query frame folds into a local relation while planning; a
+    // file-backed one is one scan-and-project job
+    val (localJobs, localPlan) = jobsOf(MatchOps.matchSongs(queries, export))
+    assert(localJobs == 0, s"the local batch ran $localJobs jobs:\n$localPlan")
+    val (fileJobs, filePlan) = jobsOf(MatchOps.matchSongs(fileQueries, export))
+    assert(fileJobs <= 1, s"the parquet batch ran $fileJobs jobs:\n$filePlan")
+    assert(!reachable(filePlan).exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"the parquet batch exchanges:\n$filePlan")
+  }
+
+  /** Jobs started by `df.collect()`, and its executed plan. */
+  private def jobsOf(df: DataFrame): (Int, SparkPlan) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    CoreBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      df.collect()
+      CoreBridge.drainListenerBus(sc)
+      (jobs.get(), df.queryExecution.executedPlan)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -72,6 +72,20 @@ class RelationalTopOneSpec extends SparkSpec {
     assertSame(df, Seq(col("k")), Seq(col("d").desc, col("n").asc))
   }
 
+  test("comparator: array_sort under a sort spec orders as orderBy does, nulls and NaN included") {
+    import spark.implicits._
+    val df = Seq[(java.lang.Long, java.lang.Double, String)](
+      (5L, 1.0, "a"), (null, Double.NaN, "b"), (2L, null, null), (5L, -0.5, "c"),
+      (null, 1.0, "d"), (2L, Double.NaN, "e"), (5L, 1.0, null), (2L, null, "f"))
+      .toDF("v", "d", "s")
+    def order(key: String => org.apache.spark.sql.Column) =
+      Seq(key("v").desc_nulls_first, key("d").asc_nulls_last, key("s").desc)
+    val rows = collect_list(struct(col("v"), col("d"), col("s")))
+    val sorted = df.select(array_sort(rows, Relational.comparator(order)).as("a"))
+      .select(explode(col("a")).as("r")).select(col("r.*"))
+    assert(sorted.collect().toSeq == df.orderBy(order(col): _*).collect().toSeq)
+  }
+
   test("desc string sort spec falls back to the window path (same result)") {
     import spark.implicits._
     val df = Seq((1, "b", 1), (1, "a", 2), (2, "z", 3)).toDF("k", "s", "id")
