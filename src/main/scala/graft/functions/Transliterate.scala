@@ -12,8 +12,8 @@ import java.text.Normalizer
   * on the unidecode-like semantics: NFD decomposition with combining marks
   * stripped, plus explicit mappings for the letters NFD cannot decompose
   * (ø, ß, đ, þ, Œ …) and common typographic punctuation. Characters with no
-  * mapping are kept verbatim (they are removed downstream by searchKey's
-  * `[^a-zA-Z0-9]+` strip, so match behavior is unaffected).
+  * mapping are kept verbatim (the search key keeps only ASCII letters and
+  * digits, so [[SearchKey]] drops them and match behavior is unaffected).
   */
 object Transliterate {
   private val extra: java.util.HashMap[Character, String] = {
@@ -32,8 +32,8 @@ object Transliterate {
       '‐' -> "-", '‑' -> "-", '–' -> "-", '—' -> "-", '―' -> "-",
       ' ' -> " ") ++
       // Cyrillic (unidecode-style romanization; SURVEY F5, ADVICE r01).
-      // Without these, Cyrillic names survive NFD verbatim and searchKey's
-      // alnum-strip reduces them to "" — distinct names colliding on one key.
+      // Without these, Cyrillic names survive NFD verbatim and the search
+      // key drops them to "" — distinct names colliding on one key.
       "абвгдежзийклмнопрстуфхцчшщъыьэюяё".zip(Seq(
         "a","b","v","g","d","e","zh","z","i","i","k","l","m","n","o","p",
         "r","s","t","u","f","kh","ts","ch","sh","shch","","y","","e","yu",

@@ -1,6 +1,6 @@
 package graft.musicbrainz
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.normalize
@@ -39,15 +39,21 @@ object ArtistOps {
     * `ON CONFLICT DO NOTHING` → distinct on (artist_id, alias). That one
     * distinct, after normalizing, also subsumes the UNION's own: equal
     * (id, name) rows have equal (id, key), so the branches are unioned
-    * ALL and deduplicated once (one exchange, not two).
+    * ALL and deduplicated once (one exchange, not two). The same distinct
+    * makes every lookup of an exported artist a semi join: each branch's
+    * rows come from one source table, filtered to exported ids, so its
+    * size estimate is that table's, not the product of the joined tables'
+    * (which kept even a tiny export above the matcher's index gate).
     */
   def artistAliases(src: MbSources, mbArtist: DataFrame): DataFrame = {
-    val ids = mbArtist.select(col("id"))
+    val ids = mbArtist.select(col("id").as("known_id"))
+    def exported(df: DataFrame, id: String) =
+      df.join(ids, col(id) === col("known_id"), "left_semi")
+    // ids keep mb_artist's type in every branch of the union
+    def asId(c: Column) = c.cast(mbArtist.schema("id").dataType).as("id")
     val own = mbArtist.select(col("id"), col("name"))
-    val alias = ids.join(src.artistAlias, col("id") === col("artist"))
-      .select(col("id"), src.artistAlias("name"))
-    val credit = ids.join(src.artistCreditName, col("id") === col("artist"))
-      .select(col("id"), src.artistCreditName("name"))
+    val alias = exported(src.artistAlias, "artist").select(asId(col("artist")), col("name"))
+    val credit = exported(src.artistCreditName, "artist").select(asId(col("artist")), col("name"))
     // l_artist_artist with link_type 103 + attribute 1094: entity0 is the
     // earlier/other name of entity1 (`sql/4:22-27`, `README.md:241`)
     val renameLinks = src.link
@@ -55,12 +61,11 @@ object ArtistOps {
       .join(src.linkAttribute.filter(col("attribute_type") === MbConstants.ArtistRenameAttributeType),
         src.link("id") === src.linkAttribute("link"))
       .select(src.link("id").as("rl_id"))
-    val renamed = ids
-      .join(src.lArtistArtist, col("id") === col("entity1"))
-      .join(broadcast(renameLinks), src.lArtistArtist("link") === col("rl_id"))
+    val renamed = exported(src.lArtistArtist, "entity1")
+      .join(broadcast(renameLinks), col("link") === col("rl_id"), "left_semi")
       .join(src.artist.select(col("id").as("a2_id"), col("name").as("a2_name")),
         col("entity0") === col("a2_id"))
-      .select(col("id"), col("a2_name").as("name"))
+      .select(asId(col("entity1")), col("a2_name").as("name"))
     Seq(own, alias, credit, renamed).reduce(_ union _)
       .select(col("id").as("artist_id"), normalize.searchKey(col("name")).as("alias"))
       .filter(col("alias").isNotNull)

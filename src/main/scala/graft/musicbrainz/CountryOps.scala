@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object CountryOps {
 
+  private val AsciiUpper = ('A' to 'Z').mkString
+
   /** → DataFrame(area_id int, country_id string-lowercase or null).
     * Reference: `/root/reference/sql/1:8-20` (`ON CONFLICT DO NOTHING` is a
     * no-op there — area_id is already unique in the SELECT; here uniqueness
@@ -41,8 +43,9 @@ object CountryOps {
         .drop(s"ch$i", s"ia$i")
       prev = col(s"pa$i")
     }
-    cur
-      .select(col("area_id"),
-        lower(coalesce((0 to hops).map(i => col(s"c$i")): _*)).as("country_id"))
+    val code = coalesce((0 to hops).map(i => col(s"c$i")): _*)
+    // ISO 3166-1 codes are ASCII: `translate` lowers them byte-wise, where
+    // `lower` would take Spark's ICU path (and its one-off initializer)
+    cur.select(col("area_id"), translate(code, AsciiUpper, AsciiUpper.toLowerCase).as("country_id"))
   }
 }

@@ -1,7 +1,9 @@
 package graft.musicbrainz
 
+import org.apache.spark.graft.CoreBridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.Bridge
 
 import graft.operators.SizeGate
 
@@ -173,22 +175,27 @@ object GenerateDataset {
 
 /** A materialized intermediate several sinks share. `Hinge(df)` runs `df`
   * once (`localCheckpoint`: rows kept in the block manager, memory then
-  * disk) and returns a frame whose plan is ONE leaf over those rows that
-  * still carries `df`'s size statistics for join planning. A cached frame
+  * disk) and returns a frame whose plan is ONE leaf over those rows. The
+  * leaf's size, for join planning and the matcher's index gate, is the
+  * bytes its stored blocks take, not `df`'s estimate: over a chain of
+  * joins that multiplies the inputs' sizes (10²³ bytes for a few hundred
+  * stored). A cached frame
   * (`persist`) would instead embed `df`'s whole plan in every consumer —
   * nested caches nest those plans, and every AQE re-plan of a consumer
   * renders them again (4.8 MB of plan text per re-plan for `mb_song_alias`
   * at 5k generated artists, against 41 KB over leaves).
   */
 private[musicbrainz] object Hinge {
-  def apply(df: DataFrame): DataFrame = df.localCheckpoint()
+  def apply(df: DataFrame): DataFrame = {
+    val stored = df.localCheckpoint()
+    Bridge.withLeafSize(stored, CoreBridge.storedBytes(leaf(stored).rdd))
+  }
+
+  private def leaf(df: DataFrame): LogicalRDD =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r }.get
 
   /** Drop the stored rows under a frame made by [[apply]]. `unpersist()` on
     * the frame cannot: it consults only the CacheManager, and the rows
     * belong to the RDD under the frame's `LogicalRDD` leaf. */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+  def release(df: DataFrame): Unit = leaf(df).rdd.unpersist(blocking = false)
 }

@@ -1,7 +1,12 @@
 package graft.musicbrainz
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.DataType
 
 import graft.functions.normalize
 import graft.operators.{Relational, SimilarityJoin}
@@ -273,12 +278,12 @@ object MatchOps {
     }
   }
 
-  /** [[ranked]]'s winner per query; a query without one has no row. On a
-    * query frame that does not fold into a local relation, Catalyst pushes
-    * this filter below the projections, so the batch's expressions run
-    * twice per query. */
+  /** [[ranked]]'s winner per query; a query without one has no row. The
+    * winner is [[EvaluatedOnce]]: Catalyst would otherwise push the filter
+    * below the projection, as a copy of the whole lookup and ranking, on
+    * any query frame that does not fold into a local relation. */
   private[musicbrainz] def winners(perQuery: DataFrame): DataFrame =
-    perQuery.select(col("query_id"), ranked("winner").as("w"))
+    perQuery.select(col("query_id"), EvaluatedOnce(ranked("winner")).as("w"))
       .filter(col("w").isNotNull)
       .select(col("query_id"), col("w.*")).drop("phase")
 
@@ -343,4 +348,23 @@ object MatchOps {
       sum(when(col("album_mb_id").isNotNull && (col("album_mb_id") <=> col("musicbrainz_id")), 1)
         .otherwise(0)).as("correct"))
   }
+}
+
+/** `child`, which no optimizer rule may copy: declared nondeterministic, so
+  * no filter is pushed through, and no projection collapsed into, the
+  * projection that computes it — the idiom Spark documents for a costly
+  * UDF (`asNondeterministic`). Its value is `child`'s, evaluated once per
+  * row. */
+private[musicbrainz] case class EvaluatedOnce(child: Expression) extends UnaryExpression {
+  override lazy val deterministic: Boolean = false
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+  override def eval(input: InternalRow): Any = child.eval(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = child.genCode(ctx)
+  override protected def withNewChildInternal(newChild: Expression): EvaluatedOnce =
+    copy(child = newChild)
+}
+
+private[musicbrainz] object EvaluatedOnce {
+  def apply(c: Column): Column = Bridge.column(EvaluatedOnce(Bridge.expression(c)))
 }

@@ -1,6 +1,6 @@
 package graft.musicbrainz
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.normalize
@@ -18,27 +18,32 @@ object SongAliasOps {
     * [[normalize.searchKey]] on both store and probe sides (SURVEY §7.4.3);
     * empty keys are null and dropped. `ON CONFLICT DO NOTHING` → distinct
     * on (song_id, alias), which also subsumes the UNION's own distinct, so
-    * the branches are unioned ALL and deduplicated once.
+    * the branches are unioned ALL and deduplicated once. The same distinct
+    * makes every lookup of an exported song, and of a work, a semi join:
+    * a branch's size estimate is then that of its source table (times the
+    * work alias table for the one branch that pairs two), not the product
+    * of every joined table's.
     */
   def songAliases(src: MbSources, mbSong: DataFrame): DataFrame = {
-    val songRec = mbSong.select(
-      col("id").as("song_id"), col("id").as("rec_id"), col("title").as("rec_name"))
+    val ids = mbSong.select(col("id").as("known_id"))
+    def exported(df: DataFrame, id: String) =
+      df.join(ids, col(id) === col("known_id"), "left_semi")
+    // ids keep mb_song's type in every branch of the union
+    def asSongId(c: Column) = c.cast(mbSong.schema("id").dataType).as("song_id")
 
-    val own = songRec.select(col("song_id"), col("rec_name").as("name"))
-    val recAlias = songRec
-      .join(src.recordingAlias.select(col("recording"), col("name")),
-        col("rec_id") === col("recording"))
-      .select(col("song_id"), col("name"))
-    val workLinked = songRec
-      .join(src.lRecordingWork.select(col("entity0"), col("entity1")),
-        col("rec_id") === col("entity0"))
+    val own = mbSong.select(col("id").as("song_id"), col("title").as("name"))
+    val recAlias = exported(src.recordingAlias, "recording")
+      .select(asSongId(col("recording")), col("name"))
+    val links = exported(src.lRecordingWork, "entity0").select(col("entity0"), col("entity1"))
+    val workName = links
       .join(src.work.select(col("id").as("w_id"), col("name").as("w_name")),
         col("entity1") === col("w_id"))
-    val workName = workLinked.select(col("song_id"), col("w_name").as("name"))
-    val workAlias = workLinked
+      .select(asSongId(col("entity0")), col("w_name").as("name"))
+    val workAlias = links
+      .join(src.work.select(col("id").as("w_id")), col("entity1") === col("w_id"), "left_semi")
       .join(src.workAlias.select(col("work").as("wa_work"), col("name").as("wa_name")),
-        col("w_id") === col("wa_work"))
-      .select(col("song_id"), col("wa_name").as("name"))
+        col("entity1") === col("wa_work"))
+      .select(asSongId(col("entity0")), col("wa_name").as("name"))
 
     Seq(own, recAlias, workName, workAlias).reduce(_ union _)
       .select(col("song_id"), normalize.searchKey(col("name")).as("alias"))

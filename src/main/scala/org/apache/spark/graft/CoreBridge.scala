@@ -1,7 +1,8 @@
 package org.apache.spark.graft
 
 import org.apache.spark.{SparkContext, SparkEnv}
-import org.apache.spark.storage.BroadcastBlockId
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.{BroadcastBlockId, RDDBlockId}
 
 /** Core-side twin of [[org.apache.spark.sql.graft.Bridge]]. The raw
   * checkpoint-dir accessors: `SparkContext.setCheckpointDir` APPENDS a
@@ -20,6 +21,18 @@ object CoreBridge {
   def broadcastsHeld(): Set[Long] =
     SparkEnv.get.blockManager.getMatchingBlockIds(_.isBroadcast)
       .collect { case BroadcastBlockId(id, _) => id }.toSet
+
+  /** Bytes the block managers hold for `rdd`'s stored blocks, in memory
+    * and on disk. Asked of the block manager master, which every
+    * block manager tells before its task ends: exact once the job that
+    * stored the blocks has finished (the status store, behind
+    * `SparkContext.getRDDStorageInfo`, hears of blocks later, from the
+    * listener bus). */
+  def storedBytes(rdd: RDD[_]): Long =
+    SparkEnv.get.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks)
+      .collect { case (RDDBlockId(id, _), s) if id == rdd.id => s.memSize + s.diskSize }
+      .sum
 
   /** Block until every event posted so far has reached every listener
     * (the bus is `private[spark]`): what a listener counted for an action

@@ -4,7 +4,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4 scopes `ExpressionUtils` as
@@ -39,6 +41,20 @@ object Bridge {
       spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** A checkpointed frame (`Dataset.localCheckpoint`: its plan is one
+    * `LogicalRDD` leaf) whose leaf reports `sizeInBytes` as its size, in
+    * place of the statistics of the plan that computed its rows, which
+    * `localCheckpoint` copies onto it (the leaf's constructor is the only
+    * way to set them; `Dataset.ofRows` is `private[sql]`). */
+  def withLeafSize(df: DataFrame, sizeInBytes: BigInt): DataFrame = {
+    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val leaf = df.queryExecution.logical match {
+      case r: LogicalRDD => r.copy()(session, Some(Statistics(sizeInBytes)), None)
+      case p => throw new IllegalArgumentException(s"not a checkpointed frame:\n$p")
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(session, leaf)
+  }
 
   /** Entries the session's CacheManager holds (`private[sql]` count): a
     * release check compares it before and after a pipeline pass. */

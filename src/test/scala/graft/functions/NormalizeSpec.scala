@@ -1,6 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkSpec
 
@@ -54,6 +57,58 @@ class NormalizeSpec extends SparkSpec {
     assert(keyOpt("(Live)").isEmpty)
     assert(keyOpt("永遠").isEmpty) // unmapped CJK strips to nothing → null
     assert(keyOpt("Pearl Jam").contains("pearljam"))
+  }
+
+  // what the key's passes act on: ASCII, "(live)" in any case, nested and
+  // cut short; Latin-1 accents, Cyrillic, Greek; CJK, combining marks,
+  // the two letters whose lowercase is ASCII (U+0130, U+212A) and NBSP;
+  // emoji (surrogate pairs)
+  private val tokens = Seq(
+    "a", "Z", "q", "0", "9", " ", "_", "-", "!", "(", ")", "/",
+    "(live)", "(LiVe)", "((live)live)", "(liv", "e)", "LIVE", "(LIVE)",
+    "é", "Ö", "ß", "ø", "Æ", "ı", "Щ", "ё", "Ж", "Μ", "ά", "ς",
+    "永", "遠", "\u0301", "\u0308", "\u0130", "\u212A", "\u00A0", "（",
+    "\uD83D\uDE00", "\uD83C\uDFB8")
+  private val genText: Gen[String] =
+    Gen.choose(0, 10).flatMap(n => Gen.listOfN(n, Gen.oneOf(tokens)).map(_.mkString))
+
+  /** (native, composed) keys of `df`'s column `s`. */
+  private def bothKeys(df: DataFrame): Seq[(Option[String], Option[String])] =
+    df.select(normalize.searchKey(col("s")), normalize.searchKeyComposed(col("s")))
+      .as[(Option[String], Option[String])].collect().toSeq
+
+  // an RDD-backed frame runs whole-stage codegen; a local one folds into
+  // a local relation while it plans, on interpreted expressions
+  private def codegen(ss: Seq[Option[String]]): DataFrame = {
+    val df = spark.sparkContext.parallelize(ss, 2).toDF("s")
+    val plan = df.select(normalize.searchKey(col("s"))).queryExecution.executedPlan
+    assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]), s"not codegen'd:\n$plan")
+    df
+  }
+  private def interpreted(ss: Seq[Option[String]]): DataFrame = ss.toDF("s")
+
+  test("searchKey ≡ searchKeyComposed, its built-ins reference, codegen and interpreted (property)") {
+    for ((path, frame) <- Seq("codegen" -> codegen _, "interpreted" -> interpreted _)) {
+      val prop = Prop.forAll(Gen.listOfN(60, genText)) { ss =>
+        bothKeys(frame(ss.map(Option(_)))).forall { case (native, composed) => native == composed }
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+      assert(res.passed, s"$path: ${res.status}")
+      assert(bothKeys(frame(Seq(None, Some("")))) == Seq((None, None), (None, None)), path)
+    }
+  }
+
+  test("searchKey drops each (live) once, left to right, as regexp_replace does") {
+    val goldens = Seq(
+      "((live)live)" -> Some("live"), // the removal joins a new "(live)", not re-scanned
+      "x(live" -> Some("xlive"),
+      "(LIVE)" -> None,
+      "Black (Live) (live)x" -> Some("blackx"),
+      "(lívé)" -> None) // transliterated before the drop
+    for (frame <- Seq(codegen _, interpreted _)) {
+      val got = bothKeys(frame(goldens.map(g => Option(g._1))))
+      assert(got == goldens.map(g => (g._2, g._2)))
+    }
   }
 
   test("store-vs-probe divergence is pinned (SURVEY §7.4.3)") {

@@ -23,6 +23,16 @@ class GenerateDatasetSpec extends SparkSpec {
     assert(c(5).isEmpty)        // orphan area
   }
 
+  test("country_id is the lowercase ISO code, for every letter") {
+    val codes = ('A' to 'Z').sliding(2).map(_.mkString).toSeq :+ "Gb"
+    val src = MbFixture.sources(spark).copy(
+      area = codes.indices.toDF("id"),
+      iso31661 = codes.zipWithIndex.map(_.swap).toDF("area", "code"),
+      lAreaArea = Seq.empty[(Int, Int, Int)].toDF("link", "entity0", "entity1"))
+    val c = CountryOps.areaCountry(src).as[(Int, String)].collect().toMap
+    assert(c == codes.indices.map(i => i -> codes(i).toLowerCase).toMap)
+  }
+
   test("mb_artist (sql/3): score = url count, filter country='be' OR score>8") {
     val rows = export.mbArtist
       .select("id", "mb_id", "name", "country_id", "score")

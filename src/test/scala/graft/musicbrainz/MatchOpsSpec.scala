@@ -10,7 +10,7 @@ import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 import graft.functions.normalize
-import graft.operators.{Relational, SimilarityJoin}
+import graft.operators.{Relational, SimilarityJoin, SizeGate}
 
 /** Batch matcher over the fixture export — §3.2 semantics: fuzzy artist
   * lookup, duo-split fallback, two-phase song lookup, relevance ranking,
@@ -310,6 +310,19 @@ class MatchOpsSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  test("an in-process export under the broadcast threshold serves on its matcher index, not read back") {
+    val e = GenerateDataset(MbFixture.sources(spark))
+    try {
+      // each hinge leaf is sized by its stored rows, not by the joins behind it
+      val hingeBytes = e.hinges.map(SizeGate.estimate)
+      assert(hingeBytes.forall(b => b > 0 && b < 1024 * 1024), s"hinge estimates $hingeBytes")
+      val tableBytes = Seq(e.mbArtist, e.mbArtistAlias, e.mbAlbum, e.mbSong, e.mbSongAlias)
+        .map(SizeGate.estimate)
+      assert(e.matcherIndex.isDefined, s"the in-process export misses the index gate: $tableBytes")
+      assert(rows(MatchOps.matchSongs(queries, e)) == rows(matches))
+    } finally e.unpersist()
   }
 
   test("the export owns its matcher index: built once, released by unpersist, one per export") {

@@ -5,8 +5,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.CoreBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArraySort, Expression, InitCap, Lower, RegExpReplace, Upper}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, RepartitionOperation, Union, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, LogicalPlan, RepartitionOperation, Union, Window}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -140,9 +141,7 @@ class PlanShapeSpec extends SparkSpec {
 
     // one narrow projection of the query frame: the ranking is one
     // expression, so no operator regroups the batch's rows
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_queries").toString + "/q"
-    queries.write.parquet(dir)
-    val fileQueries = spark.read.parquet(dir)
+    val fileQueries = written(queries)
     for ((what, q) <- Seq("local" -> queries, "parquet" -> fileQueries)) {
       val optimized = MatchOps.matchSongs(q, export).queryExecution.optimizedPlan
       val wide = optimized.collect {
@@ -158,6 +157,68 @@ class PlanShapeSpec extends SparkSpec {
     assert(fileJobs <= 1, s"the parquet batch ran $fileJobs jobs:\n$filePlan")
     assert(!reachable(filePlan).exists(_.isInstanceOf[ShuffleExchangeLike]),
       s"the parquet batch exchanges:\n$filePlan")
+  }
+
+  /** `df` written as parquet and read back: a query frame that does not
+    * fold into a local relation. */
+  private def written(df: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_queries").toString + "/q"
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Every expression `plan`'s operators hold, at any depth, that `pf` matches. */
+  private def exprs[A](plan: LogicalPlan)(pf: PartialFunction[Expression, A]): Seq[A] =
+    plan.flatMap(_.expressions.flatMap(_.collect(pf)))
+
+  /** Case mappings and per-row regex in `plan`'s expressions: `lower`,
+    * `upper` and `initcap` take Spark's ICU path, whose first call in a
+    * JVM initializes a table over every code point (1.3 s), and
+    * `regexp_replace` runs a regex per row. */
+  private def icuOrRegex(plan: LogicalPlan): Seq[String] = exprs(plan) {
+    case e @ (_: Lower | _: Upper | _: InitCap | _: RegExpReplace) => e.prettyName
+  }
+
+  test("the export's five tables and an index-path batch plan no case mapping and no regex") {
+    val src = MbFixture.sources(spark)
+    val artists = ArtistOps.mbArtist(src)
+    val (album, song) = CanonicalOps.exportTables(CanonicalOps.bestMatches(src, artists))
+    Seq("mb_artist" -> artists, "mb_artist_alias" -> ArtistOps.artistAliases(src, artists),
+      "mb_album" -> album, "mb_song" -> song, "mb_song_alias" -> SongAliasOps.songAliases(src, song))
+      .foreach { case (name, df) =>
+        val plan = df.queryExecution.optimizedPlan
+        assert(icuOrRegex(plan).isEmpty, s"$name plans ${icuOrRegex(plan)}:\n$plan")
+      }
+    val queries = Seq((1, "Alpha", Option("Beta"), "Duet Song (Live)"), (2, "Motörhead", None, "Ace"))
+      .toDF("query_id", "artist_name", "artist2_name", "title")
+    val export = MbFixtureExport.cached(spark)
+    assert(export.matcherIndex.isDefined, "the fixture export does not pass the index gate")
+    // a local batch folds its expressions into a local relation while it
+    // plans: its analyzed plan holds them; a file-backed one keeps them
+    for ((what, plan) <- Seq(
+        "local" -> MatchOps.matchSongs(queries, export).queryExecution.analyzed,
+        "parquet" -> MatchOps.matchSongs(written(queries), export).queryExecution.optimizedPlan))
+      assert(icuOrRegex(plan).isEmpty, s"the $what batch plans ${icuOrRegex(plan)}:\n$plan")
+  }
+
+  test("a file-backed batch ranks each query once, on both sides of the index gate") {
+    val queries = Seq((1, "Alpha", Option("Beta"), "Duet Song"), (2, "Nirvana", None, "Come as"))
+      .toDF("query_id", "artist_name", "artist2_name", "title")
+    val fileQueries = written(queries)
+    val export = MbFixtureExport.cached(spark)
+    // the ranking sorts its passing candidates once: one array_sort per copy
+    def rankings(plan: LogicalPlan) = exprs(plan) { case s: ArraySort => s }.size
+    val want = MatchOps.matchSongs(queries, export).collect().toSet
+    for (onJoin <- Seq(false, true)) {
+      def run[A](body: => A): A = if (onJoin) OnJoinPath(spark)(body) else body
+      run {
+        assert(export.matcherIndex.isDefined != onJoin)
+        val m = MatchOps.matchSongs(fileQueries, export)
+        val plan = m.queryExecution.optimizedPlan
+        assert(rankings(plan) == 1, s"join path $onJoin: ${rankings(plan)} rankings:\n$plan")
+        assert(m.collect().toSet == want, s"join path $onJoin")
+      }
+    }
   }
 
   /** Jobs started by `df.collect()`, and its executed plan. */
