@@ -9,7 +9,7 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.DataType
 
 import graft.functions.normalize
-import graft.operators.{Relational, SimilarityJoin}
+import graft.operators.SimilarityJoin
 
 /** The fuzzy search/eval engine (`/root/reference/src/benchmark.py`)
   * re-expressed as a **batch matcher**: a DataFrame of (artist, title)
@@ -22,11 +22,12 @@ import graft.operators.{Relational, SimilarityJoin}
   *     win, else the split's
   *   → the serving rows of each artist (song ⋈ song alias ⋈ album ⋈
   *     artist, J13), gathered into one array per query
-  *   → ONE fused ranking expression over that array ([[ranked]]): the
-  *     second-artist veto, the two-phase song lookup (prefix LIKE, else
-  *     lev ≤ 1; phase 1 preferred per query, `benchmark.py:124-126`), the
-  *     serving query's DISTINCT, multiplicative relevance and the
-  *     relative-threshold argmax (A4) — no window, no exchange.
+  *   → ONE native ranking expression over that array ([[ranked]],
+  *     [[RankingKernel]]'s one loop): the second-artist veto, the
+  *     two-phase song lookup (prefix LIKE, else lev ≤ 1; phase 1 preferred
+  *     per query, `benchmark.py:124-126`), the serving query's DISTINCT,
+  *     multiplicative relevance and the relative-threshold argmin under
+  *     [[winnerOrder]] (A4) — no window, no exchange, no lambda.
   *
   * The first two steps run on one of two paths, gated by export size (see
   * [[matchSongs]]); both hand the ranking one row per query:
@@ -184,17 +185,17 @@ object MatchOps {
       .filter(col("tkey").isNotNull)
       .select(col("query_id"), col("tkey"),
         (size(col("hits.second_ids")) > 0).as("second_required"), col("hits.second_ids").as("second_ids"),
-        flatten(transform(col("hits.artist_ids"), index.servingRows(_))).as("rows"))
+        index.servingRows(col("hits.artist_ids")).as("rows"))
   }
 
   /** A serving row's fields ([[MatcherIndex.servingRows]]), as the join
     * path names them; all but the first are the serving query's projection
     * (`benchmark.py:97`), named as [[Projection]] names them. */
-  private val ServingFields = Seq(
+  private[musicbrainz] val ServingFields = Seq(
     "second_artist_id", "song_mb_id", "alias", "song_title", "single_relationship",
     "recording_score", "album_title", "release_year", "is_single", "is_soundtrack",
     "is_main_album", "album_mb_id", "artist_name_mb", "artist_mb_id", "country_id")
-  private val Projection = ServingFields.tail.map(f => if (f == "alias") "matched_alias" else f)
+  private[musicbrainz] val Projection = ServingFields.tail.map(f => if (f == "alias") "matched_alias" else f)
 
   /** The join path's candidates — (query_id, tkey, second_required,
     * second_ids, [[ServingFields]]), one row per serving row — over any
@@ -242,41 +243,12 @@ object MatchOps {
     when(alias.startsWith(tkey), 1)
       .when(length(alias) < SimilarityJoin.MaxLen && levenshtein(alias, tkey, 1) >= 0, 2)
 
-  /** `f(x)`, `x` evaluated once: a lambda body evaluates what it contains
-    * once per element, so a one-element `transform` binds `x` instead. */
-  private def bind(x: Column)(f: Column => Column): Column = transform(array(x), f).getItem(0)
-
-  /** The whole ranking of a [[perQuery]] row as one expression →
-    * struct(candidates, winner): the second-artist veto (F14), the phases
-    * and the serving projection's DISTINCT (per query, so without query_id
-    * and tkey); phase-1 rows win when any exist (`benchmark.py:124-126`),
-    * and those `candidates` get their relevance (`benchmark.py:43-49`):
-    * score × 10^[single_from] × 10^[main_album] × 10^[exact alias match];
-    * A4: of the candidates with relevance ≥ max/10, the first under
-    * [[winnerOrder]] is the `winner`, null when there is none. */
-  private val ranked: Column = {
-    def kept(r: Column) = !col("second_required") || array_contains(col("second_ids"), r("second_artist_id"))
-    def projected(r: Column) = struct(phase(r("alias"), col("tkey")).as("phase") +:
-      ServingFields.tail.zip(Projection).map { case (f, p) => r(f).as(p) }: _*)
-    def relevance(c: Column) = c("recording_score") *
-      when(c("single_relationship"), 10).otherwise(1) *
-      when(c("is_main_album"), 10).otherwise(1) *
-      when(normalize.searchKey(c("matched_alias")) === col("tkey"), 10).otherwise(1)
-    // a new struct: Catalyst cannot fold a local query frame through `withField`
-    def withRelevance(c: Column) =
-      struct(("phase" +: Projection).map(f => c(f).as(f)) :+ relevance(c).as("relevance"): _*)
-    val matched = filter(transform(filter(col("rows"), kept(_)), projected(_)), _("phase").isNotNull)
-    bind(array_distinct(matched)) { m =>
-      val lowest = when(exists(m, _("phase") === 1), filter(m, _("phase") === 1)).otherwise(m)
-      bind(transform(lowest, withRelevance(_))) { cands =>
-        bind(array_max(transform(cands, _("relevance")))) { best =>
-          val passing = filter(cands, _("relevance") * 10.0 >= best)
-          struct(cands.as("candidates"),
-            get(array_sort(passing, Relational.comparator(winnerOrder)), lit(0)).as("winner"))
-        }
-      }
-    }
-  }
+  /** The whole ranking of a [[perQuery]] row as one native expression
+    * → struct(candidates, winner), `winner` null when there is none: the
+    * veto, phases, DISTINCT, relevance and A4 pick of [[RankingKernel]]. */
+  private def ranked: Column = Bridge.column(RankCandidates(
+    Bridge.expression(col("tkey")), Bridge.expression(col("second_required")),
+    Bridge.expression(col("second_ids")), Bridge.expression(col("rows"))))
 
   /** [[ranked]]'s winner per query; a query without one has no row. The
     * winner is [[EvaluatedOnce]]: Catalyst would otherwise push the filter
@@ -287,9 +259,11 @@ object MatchOps {
       .filter(col("w").isNotNull)
       .select(col("query_id"), col("w.*")).drop("phase")
 
-  /** [[ranked]]'s candidates, one row each. */
+  /** [[ranked]]'s candidates, one row each. The ranking is a projection
+    * below the explode, so a local frame folds it while it plans. */
   private[musicbrainz] def scored(perQuery: DataFrame): DataFrame =
-    perQuery.select(col("query_id"), col("tkey"), explode(ranked("candidates")).as("c"))
+    perQuery.select(col("query_id"), col("tkey"), ranked("candidates").as("cs"))
+      .select(col("query_id"), col("tkey"), explode(col("cs")).as("c"))
       .select(col("query_id"), col("tkey"), col("c.*"))
 
   /** A4 winner ordering over the fields `key` names: (earliest year,

@@ -44,14 +44,14 @@ private[musicbrainz] final class MatcherIndex private (
     Bridge.column(AliasVariantsLookup(artists,
       Bridge.expression(org.apache.spark.sql.functions.array(whole, head, tail))))
 
-  /** artist id → array of serving rows, empty for an artist without
-    * songs. A row's fields carry the names the join path's candidate frame
-    * gives them (second_artist_id, song_mb_id, song_title,
-    * single_relationship, recording_score, alias, album_title,
+  /** artist ids → their serving rows, concatenated in the ids' order
+    * (empty for artists without songs). A row's fields carry the names the
+    * join path's candidate frame gives them (second_artist_id, song_mb_id,
+    * song_title, single_relationship, recording_score, alias, album_title,
     * release_year, is_single, is_soundtrack, is_main_album, album_mb_id,
     * artist_name_mb, artist_mb_id, country_id). */
-  def servingRows(artistId: Column): Column =
-    Bridge.column(ServingRowsOf(serving, rowType, Bridge.expression(artistId)))
+  def servingRows(artistIds: Column): Column =
+    Bridge.column(ServingRowsOf(serving, rowType, Bridge.expression(artistIds)))
 
   def destroy(): Unit = {
     artists.destroy()
@@ -119,7 +119,7 @@ private[musicbrainz] object MatcherIndex {
 
     new MatcherIndex(
       sc.broadcast(new AliasVariants(variants, aliases, aliasRows.map(_.getLong(0)))),
-      sc.broadcast(new ServingRows(serving)),
+      sc.broadcast(new ServingRows(serving, rowType.length)),
       rowType)
   }
 }
@@ -157,13 +157,29 @@ final class AliasVariants(
   }
 }
 
-/** Artist id → its serving rows, one unsafe array per artist. */
-final class ServingRows(rows: java.util.HashMap[Long, ArrayData]) extends Serializable {
+/** Artist id → its serving rows, one unsafe array per artist, each row
+  * of `numFields` fields. */
+final class ServingRows(rows: java.util.HashMap[Long, ArrayData], numFields: Int) extends Serializable {
   private val none: ArrayData = new GenericArrayData(Array.empty[Any])
-  def of(artistId: Long): ArrayData = {
+  private def ofArtist(artistId: Long): ArrayData = {
     val r = rows.get(artistId)
     if (r == null) none else r
   }
+
+  /** The rows of every artist in `artistIds`, in order: one artist's array
+    * as it is stored, several copied into one. */
+  def of(artistIds: ArrayData): ArrayData =
+    if (artistIds.numElements() == 1) ofArtist(artistIds.getLong(0))
+    else {
+      val parts = Array.tabulate(artistIds.numElements())(i => ofArtist(artistIds.getLong(i)))
+      val out = new Array[Any](parts.map(_.numElements()).sum)
+      var n = 0
+      parts.foreach { p =>
+        var i = 0
+        while (i < p.numElements()) { out(n) = p.getStruct(i, numFields); n += 1; i += 1 }
+      }
+      new GenericArrayData(out)
+    }
 }
 
 /** [[AliasVariants.lookup]] over a broadcast index, on the
@@ -202,8 +218,8 @@ object AliasVariantsLookup {
     StructField("second_ids", ArrayType(LongType, containsNull = false), nullable = false)))
 }
 
-/** [[ServingRows.of]] over a broadcast index: an artist id → its serving
-  * rows, for `explode`. */
+/** [[ServingRows.of]] over a broadcast index: artist ids → their serving
+  * rows, one array per query. */
 case class ServingRowsOf(index: Broadcast[ServingRows], rowType: StructType, child: Expression)
     extends UnaryExpression {
 
@@ -211,14 +227,14 @@ case class ServingRowsOf(index: Broadcast[ServingRows], rowType: StructType, chi
   override def prettyName: String = "matcher_serving_rows"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"matcher_serving_rows takes a BIGINT artist id, got ${other.catalogString}")
+      s"matcher_serving_rows takes an array of non-null BIGINT artist ids, got ${other.catalogString}")
   }
 
   @transient private lazy val rows: ServingRows = index.value
 
-  override def nullSafeEval(input: Any): Any = rows.of(input.asInstanceOf[Long])
+  override def nullSafeEval(input: Any): Any = rows.of(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cls = classOf[ServingRows].getName

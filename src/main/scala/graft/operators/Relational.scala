@@ -165,22 +165,6 @@ object Relational {
     windowTopOne(kept, partitionBy, order)
   }
 
-  /** `order` as an `array_sort` comparator of two structs, `order` being
-    * sort specs over the fields of the struct it is handed: -1, 0 or 1 by
-    * the first key on which the two differ, nulls where that key puts
-    * them — the order [[topOnePerGroup]] ranks rows by, within an array. */
-  def comparator(order: (String => Column) => Seq[Column]): (Column, Column) => Column = (l, r) => {
-    import org.apache.spark.sql.graft.Bridge
-    def spec(c: Column) = Bridge.sortSpec(c).getOrElse((c, false, false))
-    coalesce(order(l.getField).map(spec).zip(order(r.getField).map(spec)).map {
-      case ((a, desc, nullsLast), (b, _, _)) =>
-        val aNull = if (nullsLast) 1 else -1
-        // null on a tie, so coalesce moves on to the next key
-        when(a.isNull, when(b.isNotNull, aNull)).when(b.isNull, -aNull)
-          .when(a < b, if (desc) 1 else -1).when(a > b, if (desc) -1 else 1)
-    } :+ lit(0): _*)
-  }
-
   /** SURVEY A5/S7: resolve key conflicts deterministically — the row ranked
     * first by `priority` wins. Replaces the reference's order-dependent
     * upsert (`src/main.py:295-325` + loop order `:352`).

@@ -31,6 +31,13 @@ object Bridge {
     case _ => None
   }
 
+  /** The name a bare column reference (`col("x")`) refers to; None for
+    * any other Column. */
+  def columnName(c: Column): Option[String] = c.node match {
+    case a: org.apache.spark.sql.internal.UnresolvedAttribute => Some(a.nameParts.mkString("."))
+    case _ => None
+  }
+
   /** Lift an `InternalRow` RDD back into a DataFrame (`private[sql]` on
     * the session). Lets an operator hold the RDD REFERENCE across a
     * truncation boundary — `Dataset.localCheckpoint` hides its RDD, so

@@ -236,22 +236,34 @@ class MatchOpsSpec extends SparkSpec {
     assert(got == expectedLookupCases)
   }
 
+  /** A title key of [[SimilarityJoin.MaxLen]] characters, and aliases of
+    * 254, 255 and 256 characters within edit distance 1 of it that do not
+    * start with it: only the shortest is under the phase-2 length guard. */
+  private val longKey = "k" * SimilarityJoin.MaxLen
+  private val longAliases = Seq("k" * 254, "j" + "k" * 254, "j" + "k" * 255)
+  /** Aliases whose search key is a title key they do not equal: accented
+    * (a phase-2 match of "abc" and "xy") and with "(Live)" (a phase-1 match
+    * of "abc"), so the relevance's exact-alias factor compares keys. */
+  private val keyedAliases = Seq("abç", "xÿ", "abc (Live)", "abc(live)")
+
   /** Random per-row candidate sets in the join path's shape, over small
     * domains so that they hold relevance ties, null release_year /
-    * country_id / recording_score, verbatim duplicate rows, both phases
-    * and second-artist vetoes. */
+    * country_id / recording_score, verbatim duplicate rows, both phases,
+    * second-artist vetoes, non-ASCII and "(Live)" aliases and aliases
+    * around the length guard. */
   private def randomCandidates(seed: Long, nQueries: Int): DataFrame = {
     val rnd = new scala.util.Random(seed)
     def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
     def flag = rnd.nextBoolean()
     val rows = (1 to nQueries).flatMap { q =>
-      val tkey = pick("abc", "abcd", "xy")
+      val tkey = pick("abc", "abcd", "xy", longKey)
       val required = rnd.nextInt(4) == 0
       val secondIds = if (required) pick(Seq(1L), Seq(1L, 2L)) else pick(Seq.empty[Long], null)
       val fresh = Seq.fill(rnd.nextInt(9)) {
         Seq[Any](q.toLong, tkey, required, secondIds, pick[Any](1L, 2L, 3L, null),
           pick("r-1", "r-2", "r-3"), pick("t1", "t2"), flag, pick[Any](1, 2, 10, null),
-          pick("abc", "abcd", "abcde", "abd", "ab", "abx", "xy", "xyz", "zzz"),
+          pick(Seq("abc", "abcd", "abcde", "abd", "ab", "abx", "xy", "xyz", "zzz") ++
+            keyedAliases ++ longAliases: _*),
           pick("a1", "a2"), pick[Any](1990, 1991, null), flag, flag, flag,
           pick("g-1", "g-2", "g-3"), pick("n1", "n2"), pick("a-1", "a-2"), pick[Any]("us", "gb", null))
       }
@@ -271,18 +283,40 @@ class MatchOpsSpec extends SparkSpec {
     spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*), schema)
   }
 
+  /** `df` as a local relation: a frame whose projections Catalyst's
+    * `ConvertToLocalRelation` evaluates, interpreted, while it plans. */
+  private def local(df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** [[MatchOps.collected]] without its phase pre-filter: every row
+    * reaches the ranking, as on the index path. */
+  private def unfiltered(cand: DataFrame): DataFrame =
+    cand.groupBy(col("query_id"), col("tkey"), col("second_required"), col("second_ids"))
+      .agg(collect_list(struct(MatchOps.ServingFields.map(col): _*)).as("rows"))
+
   test("the fused ranking returns what the window-based ranking did on random candidate sets") {
+    val longRows = scala.collection.mutable.Set.empty[String]
+    val exactMatches = scala.collection.mutable.Set.empty[String]
     for (seed <- 1L to 4L) {
       val cand = randomCandidates(seed, 60).cache()
-      val perQuery = MatchOps.collected(cand)
-      val scored = MatchOps.scored(perQuery)
       val wantScored = referenceScored(cand)
-      assert(scored.columns.toSeq == wantScored.columns.toSeq)
-      assert(rows(scored) == rows(wantScored), s"seed $seed: candidates")
-      val got = MatchOps.winners(perQuery)
       val want = referenceWinners(cand)
-      assert(got.columns.toSeq == want.columns.toSeq)
-      assert(rows(got) == rows(want), s"seed $seed: winners")
+      // an executed plan over the join path's rows and over every row, and
+      // a local frame, whose ranking Catalyst evaluates while it plans
+      for ((what, perQuery) <- Seq("collected" -> MatchOps.collected(cand),
+          "unfiltered" -> unfiltered(cand), "local" -> local(unfiltered(cand)))) {
+        val scored = MatchOps.scored(perQuery)
+        assert(scored.columns.toSeq == wantScored.columns.toSeq)
+        assert(rows(scored) == rows(wantScored), s"seed $seed, $what: candidates")
+        val got = MatchOps.winners(perQuery)
+        assert(got.columns.toSeq == want.columns.toSeq)
+        assert(rows(got) == rows(want), s"seed $seed, $what: winners")
+        if (what == "local") for (df <- Seq(scored, got)) {
+          val plan = df.queryExecution.optimizedPlan
+          assert(plan.flatMap(_.expressions.flatMap(_.collect { case r: RankCandidates => r })).isEmpty,
+            s"seed $seed: the local frame did not fold the ranking:\n$plan")
+        }
+      }
       // the sets are not vacuous: duplicates, both phases, vetoes, ties
       assert(cand.count() > cand.distinct().count(), s"seed $seed: no duplicate rows")
       assert(wantScored.select("phase").distinct().count() == 2, s"seed $seed: one phase only")
@@ -290,8 +324,15 @@ class MatchOpsSpec extends SparkSpec {
       assert(tied.count() > 0, s"seed $seed: no relevance ties")
       val vetoed = cand.filter(col("second_required") && col("second_artist_id") === 3L)
       assert(vetoed.count() > 0, s"seed $seed: no vetoed row")
+      longRows ++= cand.filter(col("tkey") === longKey).select("alias").as[String].collect()
+      exactMatches ++= wantScored.filter(col("tkey") === normalize.searchKey(col("matched_alias")))
+        .select("matched_alias").as[String].collect()
       cand.unpersist()
     }
+    // nor is the widened domain: each long alias is a row of the long key,
+    // and each keyed alias a candidate that scores as an exact match
+    for (a <- longAliases) assert(longRows(a), s"no ${a.length}-character alias")
+    for (a <- keyedAliases) assert(exactMatches(a), s"'$a' is no exact-match candidate")
   }
 
   test("explainQuery's chosen row is matchSongs' row, on both sides of the index gate") {

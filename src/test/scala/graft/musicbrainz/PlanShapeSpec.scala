@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.CoreBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{ArraySort, Expression, InitCap, Lower, RegExpReplace, Upper}
+import org.apache.spark.sql.catalyst.expressions.{Expression, InitCap, LambdaFunction, Lower, RegExpReplace, Upper}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, LogicalPlan, RepartitionOperation, Union, Window}
 import org.apache.spark.sql.execution.SparkPlan
@@ -206,8 +206,8 @@ class PlanShapeSpec extends SparkSpec {
       .toDF("query_id", "artist_name", "artist2_name", "title")
     val fileQueries = written(queries)
     val export = MbFixtureExport.cached(spark)
-    // the ranking sorts its passing candidates once: one array_sort per copy
-    def rankings(plan: LogicalPlan) = exprs(plan) { case s: ArraySort => s }.size
+    // one ranking node per copy of the ranking
+    def rankings(plan: LogicalPlan) = exprs(plan) { case r: RankCandidates => r }.size
     val want = MatchOps.matchSongs(queries, export).collect().toSet
     for (onJoin <- Seq(false, true)) {
       def run[A](body: => A): A = if (onJoin) OnJoinPath(spark)(body) else body
@@ -219,6 +219,20 @@ class PlanShapeSpec extends SparkSpec {
         assert(m.collect().toSet == want, s"join path $onJoin")
       }
     }
+  }
+
+  test("a local index-path batch analyzes at most 200 expression nodes and no lambda") {
+    val queries = Seq((1, "Alpha", Option("Beta"), "Duet Song"), (2, "Nirvana", None, "Come as"))
+      .toDF("query_id", "artist_name", "artist2_name", "title")
+    val export = MbFixtureExport.cached(spark)
+    assert(export.matcherIndex.isDefined, "the fixture export does not pass the index gate")
+    // what the analyzer resolves and ConvertToLocalRelation folds in every
+    // batch: the planning cost that does not depend on the batch's size
+    val plan = MatchOps.matchSongs(queries, export).queryExecution.analyzed
+    val nodes = exprs(plan) { case e => e }.size
+    assert(nodes <= 200, s"the batch analyzes $nodes expression nodes:\n$plan")
+    val lambdas = exprs(plan) { case l: LambdaFunction => l }
+    assert(lambdas.isEmpty, s"the batch plans ${lambdas.size} lambdas:\n$plan")
   }
 
   /** Jobs started by `df.collect()`, and its executed plan. */
