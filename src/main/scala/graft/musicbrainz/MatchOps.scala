@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 import graft.functions.normalize
 import graft.operators.SimilarityJoin
@@ -31,8 +32,9 @@ import graft.operators.SimilarityJoin
   *
   * The first two steps run on one of two paths, gated by export size (see
   * [[matchSongs]]); both hand the ranking one row per query:
-  *   - index path: the export's [[MatcherIndex]], built once and probed by
-  *     native expressions — a batch is one narrow projection;
+  *   - index path: the export's [[MatcherIndex]], built once from the
+  *     same serving query ([[serving]]) and probed by native expressions —
+  *     a batch is one narrow projection;
   *   - join path: ONE lev ≤ 1 similarity join (J14) for the whole batch
   *     with role-tagged probes and one aggregate per query, then the
   *     4-join serving query, its rows collected per query.
@@ -75,21 +77,26 @@ object MatchOps {
       // upstream duplicates anyway, so a pre-distinct here would only
       // add a full alias-table shuffle per lookup
       mbArtistAlias.select(col("artist_id"), col("alias")), "alias",
-      // reference parity (`benchmark.py:76-77`): only the STORED alias is
-      // length-guarded — a 255-char probe still matches a 254-char alias
-      maxLenLeft = SimilarityJoin.MaxLen + 1)
+      maxLenLeft = ProbeMaxLen)
       .select(col("qa_id").as("query_id"), col("qa_role").as("role"), col("artist_id"))
   }
 
-  /** Candidate (query_id, artist_id, second_required, second_ids) pairs of
-    * a batch — the reference's lookup-then-fallback
-    * (`benchmark.py:159-183`) as one join and one aggregate per query:
-    *   - whole-name hits, when there are any, are the query's artists;
-    *   - otherwise the split head's hits are, and the tail's hits become
-    *     the required second artists (F14). An empty tail lookup leaves
-    *     `second_required` false: the reference only adds the IN-constraint
-    *     when the second lookup found ids (`benchmark.py:92-95,183` — an
-    *     empty list is falsy), so a missing second artist does NOT veto.
+  /** The artist lookup's probe guard on both paths: probes shorter than
+    * this match. Reference parity (`benchmark.py:76-77`): only the STORED
+    * alias is length-guarded (under `SimilarityJoin.MaxLen`), so a
+    * 255-char probe still matches a 254-char alias. */
+  private[musicbrainz] val ProbeMaxLen = SimilarityJoin.MaxLen + 1
+
+  /** Candidate (query_id, artist_id, second_ids) pairs of a batch — the
+    * reference's lookup-then-fallback (`benchmark.py:159-183`) as one join
+    * and one aggregate per query:
+    *   - whole-name hits, when there are any, are the query's artists, and
+    *     `second_ids` is null;
+    *   - otherwise the split head's hits are, and the tail's hits are the
+    *     `second_ids`, which veto every other second artist (F14) unless
+    *     empty: the reference only adds the IN-constraint when the second
+    *     lookup found ids (`benchmark.py:92-95,183` — an empty list is
+    *     falsy), so a missing second artist does NOT veto.
     * Split probes exist only for names containing "&": without one the
     * head IS the whole name and the tail is empty, so the split could
     * never find anything the whole name missed.
@@ -112,8 +119,7 @@ object MatchOps {
         hitsOf(SplitTail).as("second_ids"))
       .select(col("query_id"),
         explode(when(hasDirect, col("direct")).otherwise(col("head"))).as("artist_id"),
-        (!hasDirect && size(col("second_ids")) > 0).as("second_required"),
-        col("second_ids"))
+        when(!hasDirect, col("second_ids")).as("second_ids"))
   }
 
   /** Every min-phase candidate row per query with its phase and relevance:
@@ -153,7 +159,7 @@ object MatchOps {
       .select(col("query_id"), col("tkey"), col("c.*"), (col("c") <=> col("w")).as("chosen"))
       .orderBy(col("phase").asc, col("relevance").desc, col("album_mb_id").asc)
 
-  /** (query_id, tkey, second_required, second_ids, rows), `rows` being the
+  /** (query_id, tkey, second_ids, rows), `rows` being the
     * query's serving rows, from the path [[matchSongs]]'s gate picks. */
   private def perQuery(queries: DataFrame, export: GenerateDataset.Export): DataFrame =
     export.matcherIndex match {
@@ -183,8 +189,7 @@ object MatchOps {
           when(hasSplit, normalize.searchKey(duoHead(name))),
           when(hasSplit, normalize.searchKey(duoTail(name)))).as("hits"))
       .filter(col("tkey").isNotNull)
-      .select(col("query_id"), col("tkey"),
-        (size(col("hits.second_ids")) > 0).as("second_required"), col("hits.second_ids").as("second_ids"),
+      .select(col("query_id"), col("tkey"), col("hits.second_ids").as("second_ids"),
         index.servingRows(col("hits.artist_ids")).as("rows"))
   }
 
@@ -197,16 +202,27 @@ object MatchOps {
     "is_main_album", "album_mb_id", "artist_name_mb", "artist_mb_id", "country_id")
   private[musicbrainz] val Projection = ServingFields.tail.map(f => if (f == "alias") "matched_alias" else f)
 
-  /** The join path's candidates — (query_id, tkey, second_required,
-    * second_ids, [[ServingFields]]), one row per serving row — over any
-    * artist lookup `(q, mbArtistAlias) → (query_id, artist_id,
-    * second_required, second_ids)`, `q` being (query_id, title, full_name):
-    * the seam the equivalence spec runs a reference lookup through. */
+  /** The join path's candidates — (query_id, tkey, second_ids,
+    * [[ServingFields]]), one row per serving row — over any artist lookup
+    * `(q, mbArtistAlias) → (query_id, artist_id, second_ids)`, `q` being
+    * (query_id, title, full_name): the seam the equivalence spec runs a
+    * reference lookup through. */
   private[musicbrainz] def candidatesWith(
       queries: DataFrame, export: GenerateDataset.Export,
       lookup: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val q = displayNames(queries)
-    // the 4-join serving query (`benchmark.py:96-117`)
+    val qk = q.select(col("query_id").as("qq_id"), normalize.searchKey(col("title")).as("tkey"))
+      .filter(col("tkey").isNotNull)
+    serving(lookup(q, export.mbArtistAlias).join(qk, col("query_id") === col("qq_id")), export)
+      .select((Seq("query_id", "tkey", "second_ids") ++ ServingFields).map(col): _*)
+  }
+
+  /** The 4-join serving query (`benchmark.py:96-117`, J13), which both
+    * paths read: each row of `byArtist` joined to the serving rows (song ⋈
+    * song alias ⋈ album ⋈ artist) of its `artist_id` → `byArtist`'s
+    * columns ++ [[ServingFields]]. The join path passes a batch's lookup,
+    * [[MatcherIndex]] every artist of the export. */
+  private[musicbrainz] def serving(byArtist: DataFrame, export: GenerateDataset.Export): DataFrame = {
     val songs = export.mbSong.select(
       col("id").as("song_id"), col("mb_id").as("song_mb_id"), col("title").as("song_title"),
       col("artist_id").as("s_artist_id"), col("second_artist_id"),
@@ -217,38 +233,29 @@ object MatchOps {
     val artists = export.mbArtist.select(
       col("id").as("ar_id"), col("name").as("artist_name_mb"),
       col("mb_id").as("artist_mb_id"), col("country_id"))
-    val qk = q.select(col("query_id").as("qq_id"), normalize.searchKey(col("title")).as("tkey"))
-      .filter(col("tkey").isNotNull)
-    lookup(q, export.mbArtistAlias)
-      .join(qk, col("query_id") === col("qq_id"))
+    byArtist
       .join(songs, col("artist_id") === col("s_artist_id"))
       .join(export.mbSongAlias.select(col("song_id").as("al_song"), col("alias")),
         col("song_id") === col("al_song"))
       .join(albums, col("album_id") === col("a_id"))
       .join(artists, col("s_artist_id") === col("ar_id"))
-      .select((Seq("query_id", "tkey", "second_required", "second_ids") ++ ServingFields).map(col): _*)
+      .select((byArtist.columns.toSeq ++ ServingFields).map(col): _*)
   }
 
   /** The join path's candidates collected per query (a lookup gives all
-    * artists of a query one second_required/second_ids), without the rows
-    * no phase keeps, which the ranking would drop after the exchange. */
+    * artists of a query one second_ids), without the rows no phase keeps,
+    * which the ranking would drop after the exchange. */
   private[musicbrainz] def collected(cand: DataFrame): DataFrame =
-    cand.filter(phase(col("alias"), col("tkey")).isNotNull)
-      .groupBy(col("query_id"), col("tkey"), col("second_required"), col("second_ids"))
+    cand.filter(Bridge.column(StaticInvoke(classOf[RankingKernel], IntegerType, "phase",
+        Seq(col("alias"), col("tkey")).map(Bridge.expression))) > 0)
+      .groupBy(col("query_id"), col("tkey"), col("second_ids"))
       .agg(collect_list(struct(ServingFields.map(col): _*)).as("rows"))
-
-  /** The song lookup's phases (`benchmark.py:85,87-91`): 1 = prefix match,
-    * 2 = edit distance ≤ 1 under the length guard, null = no match. */
-  private def phase(alias: Column, tkey: Column): Column =
-    when(alias.startsWith(tkey), 1)
-      .when(length(alias) < SimilarityJoin.MaxLen && levenshtein(alias, tkey, 1) >= 0, 2)
 
   /** The whole ranking of a [[perQuery]] row as one native expression
     * → struct(candidates, winner), `winner` null when there is none: the
     * veto, phases, DISTINCT, relevance and A4 pick of [[RankingKernel]]. */
   private def ranked: Column = Bridge.column(RankCandidates(
-    Bridge.expression(col("tkey")), Bridge.expression(col("second_required")),
-    Bridge.expression(col("second_ids")), Bridge.expression(col("rows"))))
+    Bridge.expression(col("tkey")), Bridge.expression(col("second_ids")), Bridge.expression(col("rows"))))
 
   /** [[ranked]]'s winner per query; a query without one has no row. The
     * winner is [[EvaluatedOnce]]: Catalyst would otherwise push the filter

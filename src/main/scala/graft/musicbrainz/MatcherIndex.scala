@@ -3,14 +3,14 @@ package graft.musicbrainz
 import scala.collection.mutable
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{col, length}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{col, length, struct}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,13 +21,13 @@ import graft.operators.SimilarityJoin
 /** The matcher's static side, indexed once per export (SURVEY J13/J14 on a
   * small export): the export never changes between chart batches, so
   * instead of re-exploding `mb_artist_alias` into deletion variants and
-  * re-broadcasting the four serving tables in every batch, the driver
-  * collects them once and ships two broadcasts that native expressions
-  * probe row by row:
+  * re-running the serving query in every batch, the driver collects the
+  * alias table and the serving query's rows once and ships two broadcasts
+  * that native expressions probe row by row:
   *   - [[artists]]: every alias's deletion variants → (alias, artist id),
   *     probed by [[MatcherIndex.artistLookup]];
-  *   - [[serving]]: per artist, its pre-joined serving rows (song ⋈ song
-  *     alias ⋈ album ⋈ artist), generated by [[MatcherIndex.servingRows]].
+  *   - [[serving]]: per artist, its rows of the join path's serving query
+  *     ([[MatchOps.serving]]), generated by [[MatcherIndex.servingRows]].
   * [[GenerateDataset.Export]] owns the index: it builds it on the first
   * batch and [[destroy]]s it in `unpersist()`.
   */
@@ -45,11 +45,8 @@ private[musicbrainz] final class MatcherIndex private (
       Bridge.expression(org.apache.spark.sql.functions.array(whole, head, tail))))
 
   /** artist ids → their serving rows, concatenated in the ids' order
-    * (empty for artists without songs). A row's fields carry the names the
-    * join path's candidate frame gives them (second_artist_id, song_mb_id,
-    * song_title, single_relationship, recording_score, alias, album_title,
-    * release_year, is_single, is_soundtrack, is_main_album, album_mb_id,
-    * artist_name_mb, artist_mb_id, country_id). */
+    * (empty for artists without songs): structs of the
+    * [[MatchOps.ServingFields]], typed as the join path types them. */
   def servingRows(artistIds: Column): Column =
     Bridge.column(ServingRowsOf(serving, rowType, Bridge.expression(artistIds)))
 
@@ -61,21 +58,15 @@ private[musicbrainz] final class MatcherIndex private (
 
 private[musicbrainz] object MatcherIndex {
 
-  /** The join path's probe guard (`SimilarityJoin.levenshtein1Join`
-    * with the matcher's `maxLenLeft`): probes one character longer than
-    * the stored aliases' `SimilarityJoin.MaxLen` still match. */
-  private[musicbrainz] val ProbeMaxLen = SimilarityJoin.MaxLen + 1
-
-  /** Collect the five tables (one job each) and join them on the driver:
-    * the same inner equi-joins as the join path, ids compared as longs,
-    * null keys joining nothing. */
+  /** Collect the alias table and, with one `executeCollect`, the rows
+    * [[MatchOps.serving]] gives the export's artists, and group those per
+    * artist on the driver. */
   def apply(e: GenerateDataset.Export): MatcherIndex = {
     val sc = e.mbArtist.sparkSession.sparkContext
-    val id = (c: String) => col(c).cast(LongType)
 
     val aliasRows = e.mbArtistAlias
       .filter(col("artist_id").isNotNull && length(col("alias")) < SimilarityJoin.MaxLen)
-      .select(id("artist_id"), col("alias")).collect()
+      .select(col("artist_id").cast(LongType), col("alias")).collect()
     val aliases = aliasRows.map(r => UTF8String.fromString(r.getString(1)))
     val variants = new java.util.HashMap[UTF8String, Array[Int]]()
     aliases.indices.foreach { i =>
@@ -84,32 +75,13 @@ private[musicbrainz] object MatcherIndex {
       }
     }
 
-    // a serving row is the song's fields, the song alias, the album's and
-    // the artist's, as catalyst values, without the tables' id columns
-    def values(r: Row, from: Int): Array[Any] =
-      Array.tabulate(r.length - from)(i => convertToCatalyst(r.get(from + i)))
-    def byId(df: DataFrame): (Map[Long, Array[Array[Any]]], Seq[StructField]) =
-      (df.collect().filter(!_.isNullAt(0)).groupMap(_.getLong(0))(values(_, 1)), df.schema.fields.toSeq.drop(1))
-    val (aliasesBySong, aliasFields) = byId(e.mbSongAlias.select(id("song_id"), col("alias")))
-    val (albumsById, albumFields) = byId(e.mbAlbum.select(id("id"),
-      col("title").as("album_title"), col("release_year"), col("is_single"),
-      col("is_soundtrack"), col("is_main_album"), col("mb_id").as("album_mb_id")))
-    val (artistsById, artistFields) = byId(e.mbArtist.select(id("id"),
-      col("name").as("artist_name_mb"), col("mb_id").as("artist_mb_id"), col("country_id")))
-    val songs = e.mbSong.select(id("id"), id("artist_id"), id("album_id"),
-      id("second_artist_id"), col("mb_id").as("song_mb_id"), col("title").as("song_title"),
-      col("is_single").as("single_relationship"), col("score").as("recording_score"))
-    val rowType = StructType(songs.schema.fields.toSeq.drop(3) ++ aliasFields ++ albumFields ++ artistFields)
-
-    val rowsByArtist = mutable.HashMap.empty[Long, mutable.ArrayBuffer[InternalRow]]
-    for (s <- songs.collect() if !s.isNullAt(0) && !s.isNullAt(1) && !s.isNullAt(2)) {
-      val song = values(s, 3)
-      for {
-        al <- aliasesBySong.getOrElse(s.getLong(0), Array.empty)
-        ab <- albumsById.getOrElse(s.getLong(2), Array.empty)
-        ar <- artistsById.getOrElse(s.getLong(1), Array.empty)
-      } rowsByArtist.getOrElseUpdate(s.getLong(1), mutable.ArrayBuffer.empty) +=
-        new GenericInternalRow(Array.concat(song, al, ab, ar))
+    val byArtist = MatchOps.serving(e.mbArtist.select(col("id").cast(LongType).as("artist_id")), e)
+      .select(col("artist_id"), struct(MatchOps.ServingFields.map(col): _*).as("row"))
+    val rowType = byArtist.schema("row").dataType.asInstanceOf[StructType]
+    val qe = byArtist.queryExecution
+    val rowsByArtist = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Any]]
+    SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect()).foreach { r =>
+      rowsByArtist.getOrElseUpdate(r.getLong(0), mutable.ArrayBuffer.empty) += r.getStruct(1, rowType.length)
     }
     val toUnsafe = UnsafeProjection.create(Array[DataType](ArrayType(rowType, containsNull = false)))
     val serving = new java.util.HashMap[Long, ArrayData]()
@@ -136,7 +108,7 @@ final class AliasVariants(
     * `key` (Spark's bounded `levenshtein`, as the join path verifies),
     * ascending. */
   def hits(key: UTF8String): Array[Long] = {
-    if (key == null || key.numChars() >= MatcherIndex.ProbeMaxLen) return Array.emptyLongArray
+    if (key == null || key.numChars() >= MatchOps.ProbeMaxLen) return Array.emptyLongArray
     val ids = mutable.SortedSet.empty[Long]
     DeletionVariants.compute(key).array.foreach { v =>
       val slots = variants.get(v.asInstanceOf[UTF8String])

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression, SpecializedGetters}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, SpecializedGetters, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.functions.col
@@ -19,12 +19,10 @@ import graft.operators.SimilarityJoin
   * 85-126`) in one loop over them, for rows of type `rowType` (the
   * [[MatchOps.ServingFields]], by name) and second-artist ids of type
   * `idType`:
-  *   - the second-artist veto (F14): when the veto is on, a row is kept
-  *     only if its second artist is one of the ids;
-  *   - the phase: 1 when the alias starts with the title key, else 2 when
-  *     the alias is shorter than [[SimilarityJoin.MaxLen]] and within edit
-  *     distance 1 of it, else the row is dropped; rows of phase 2 are
-  *     dropped once a row of phase 1 exists;
+  *   - the second-artist veto (F14): when the second-artist ids are not
+  *     empty, a row is kept only if its second artist is one of them;
+  *   - the phase ([[RankingKernel.phase]]), a row without one dropped;
+  *     rows of phase 2 are dropped once a row of phase 1 exists;
   *   - the serving projection's DISTINCT (null equal to null), first
   *     occurrences kept in order — these are the `candidates`;
   *   - relevance: score × 10^[single_from] × 10^[main_album] × 10^[exact
@@ -65,21 +63,22 @@ private[musicbrainz] final class RankingKernel(rowType: StructType, idType: Data
   private val orderings: Array[Ordering[Any]] =
     keys.map { case (f, _, _) => TypeUtils.getInterpretedOrdering(types(f)) }
 
-  /** → (candidates, winner); `vetoOff` when `second_required` is false
-    * (a null one vetoes like true). A null `tkey` matches nothing, and
-    * null `rows` hold none. */
-  def rank(tkey: UTF8String, vetoOff: Boolean, secondIds: ArrayData, rows: ArrayData): InternalRow = {
+  /** → (candidates, winner). Null `secondIds` veto nothing, a null
+    * `tkey` matches nothing, and null `rows` hold none. */
+  def rank(tkey: UTF8String, secondIds: ArrayData, rows: ArrayData): InternalRow = {
+    val veto = secondIds != null && secondIds.numElements() > 0
     val phase1 = mutable.LinkedHashSet.empty[GenericInternalRow]
     val phase2 = mutable.LinkedHashSet.empty[GenericInternalRow]
     var i = 0
     while (tkey != null && rows != null && i < rows.numElements()) {
       if (!rows.isNullAt(i)) {
         val r = rows.getStruct(i, rowType.length)
-        val a = if (r.isNullAt(alias)) null else r.getUTF8String(alias)
-        if (a != null && (vetoOff || secondOk(r, secondIds))) {
-          if (a.startsWith(tkey)) phase1 += candidate(r, 1)
-          else if (phase1.isEmpty && a.numChars < SimilarityJoin.MaxLen &&
-              a.levenshteinDistance(tkey, 1) >= 0) phase2 += candidate(r, 2)
+        if (!r.isNullAt(alias) && (!veto || secondOk(r, secondIds))) {
+          RankingKernel.phase(r.getUTF8String(alias), tkey) match {
+            case 1 => phase1 += candidate(r, 1)
+            case 2 if phase1.isEmpty => phase2 += candidate(r, 2)
+            case _ =>
+          }
         }
       }
       i += 1
@@ -100,7 +99,7 @@ private[musicbrainz] final class RankingKernel(rowType: StructType, idType: Data
   }
 
   private def secondOk(r: InternalRow, ids: ArrayData): Boolean = {
-    if (ids == null || r.isNullAt(secondArtist)) return false
+    if (r.isNullAt(secondArtist)) return false
     val second = id(r, secondArtist, secondArtistType)
     var i = 0
     while (i < ids.numElements()) {
@@ -156,21 +155,32 @@ private[musicbrainz] final class RankingKernel(rowType: StructType, idType: Data
   }
 }
 
+private[musicbrainz] object RankingKernel {
+
+  /** The song lookup's phase of an alias for a title key
+    * (`benchmark.py:85,87-91`): 1 when the alias starts with the key, else
+    * 2 when the alias is shorter than [[SimilarityJoin.MaxLen]] and within
+    * edit distance 1 of it, else 0 (no match). The join path's pre-filter
+    * calls it too ([[MatchOps.collected]]). */
+  def phase(alias: UTF8String, tkey: UTF8String): Int =
+    if (alias.startsWith(tkey)) 1
+    else if (alias.numChars < SimilarityJoin.MaxLen && alias.levenshteinDistance(tkey, 1) >= 0) 2
+    else 0
+}
+
 /** Catalyst surface of [[RankingKernel]] over a per-query row (tkey,
-  * second_required, second_ids, rows) → struct(candidates, winner), never
-  * null itself. Generated code calls [[eval]] (`CodegenFallback`): on the
+  * second_ids, rows) → struct(candidates, winner), never null itself.
+  * Generated code calls [[eval]] (`CodegenFallback`): on the
   * join path, a codegen'd call into the kernel was not faster
   * (DomainBench, 200,000 queries, 4 cores: match 26.0 s against 25.2 s,
   * medians of 4 and 3 runs), and an index-path batch over a local frame
   * folds into a local relation, which evaluates it interpreted anyway. */
-private[musicbrainz] case class RankCandidates(
-    tkey: Expression, secondRequired: Expression, secondIds: Expression, rows: Expression)
-    extends QuaternaryExpression with CodegenFallback {
+private[musicbrainz] case class RankCandidates(tkey: Expression, secondIds: Expression, rows: Expression)
+    extends TernaryExpression with CodegenFallback {
 
   override def first: Expression = tkey
-  override def second: Expression = secondRequired
-  override def third: Expression = secondIds
-  override def fourth: Expression = rows
+  override def second: Expression = secondIds
+  override def third: Expression = rows
   override def prettyName: String = "matcher_rank"
 
   private def rowType = rows.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
@@ -185,8 +195,8 @@ private[musicbrainz] case class RankCandidates(
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def isId(t: DataType) = t == LongType || t == IntegerType
-    val ok = (tkey.dataType, secondRequired.dataType, secondIds.dataType, rows.dataType) match {
-      case (_: StringType, BooleanType, ArrayType(id, _), ArrayType(s: StructType, _)) =>
+    val ok = (tkey.dataType, secondIds.dataType, rows.dataType) match {
+      case (_: StringType, ArrayType(id, _), ArrayType(s: StructType, _)) =>
         isId(id) && MatchOps.ServingFields.forall(s.fieldNames.contains) &&
           isId(s("second_artist_id").dataType) && s("alias").dataType.isInstanceOf[StringType] &&
           s("recording_score").dataType == IntegerType &&
@@ -195,17 +205,15 @@ private[musicbrainz] case class RankCandidates(
     }
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      "matcher_rank takes (string, boolean, array of int or bigint ids, array of serving rows), got " +
+      "matcher_rank takes (string, array of int or bigint ids, array of serving rows), got " +
         children.map(_.dataType.catalogString).mkString("(", ", ", ")"))
   }
 
-  override def eval(input: InternalRow): Any = {
-    val req = secondRequired.eval(input)
-    kernel.rank(tkey.eval(input).asInstanceOf[UTF8String], req == false,
+  override def eval(input: InternalRow): Any =
+    kernel.rank(tkey.eval(input).asInstanceOf[UTF8String],
       secondIds.eval(input).asInstanceOf[ArrayData], rows.eval(input).asInstanceOf[ArrayData])
-  }
 
   override protected def withNewChildrenInternal(
-      t: Expression, r: Expression, i: Expression, rs: Expression): RankCandidates =
-    copy(tkey = t, secondRequired = r, secondIds = i, rows = rs)
+      t: Expression, i: Expression, rs: Expression): RankCandidates =
+    copy(tkey = t, secondIds = i, rows = rs)
 }

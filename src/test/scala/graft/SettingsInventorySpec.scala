@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every `spark.graft.*` setting the library reads is documented: the
   * README's Settings table and the keys named in `src/main` are the same
   * set, so a new setting cannot land undocumented and a deleted one
-  * cannot linger in the table. */
+  * cannot linger in the table. The other cases keep a decision written
+  * once in `src/main` from being written a second time. */
 class SettingsInventorySpec extends AnyFunSuite {
 
   private def read(p: Path): String =
@@ -56,5 +57,28 @@ class SettingsInventorySpec extends AnyFunSuite {
       case (f, c) if c.contains("optimizedPlan.stats.sizeInBytes") => f }
     assert(estimates == Seq("SizeGate.scala"),
       s"plan size estimates read outside SizeGate.estimate: $estimates")
+  }
+
+  /** `c` without the body of its one `def <name>(...)...{...}`. */
+  private def withoutDef(c: String, name: String): String = {
+    val start = c.indexOf(s"def$name(")
+    assert(start >= 0 && c.indexOf(s"def$name(", start + 1) < 0, s"no single def $name")
+    var i = c.indexOf('{', start)
+    var depth = 0
+    do {
+      if (c(i) == '{') depth += 1 else if (c(i) == '}') depth -= 1
+      i += 1
+    } while (depth > 0)
+    c.substring(0, start) + c.substring(i)
+  }
+
+  test("the matcher reads the song, song alias and album tables only in MatchOps.serving") {
+    val dir = Paths.get("src/main/scala/graft/musicbrainz")
+    val matchOps = code(dir.resolve("MatchOps.scala"))
+    assert(matchOps.contains("mbSongAlias"), "MatchOps.serving no longer reads mb_song_alias")
+    for ((f, c) <- Seq("MatchOps.scala" -> withoutDef(matchOps, "serving"),
+        "MatcherIndex.scala" -> code(dir.resolve("MatcherIndex.scala")));
+        table <- Seq("mbSong", "mbSongAlias", "mbAlbum"))
+      assert(!c.contains(table), s"$f reads $table outside MatchOps.serving: a second serving query")
   }
 }

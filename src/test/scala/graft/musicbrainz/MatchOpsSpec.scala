@@ -91,15 +91,13 @@ class MatchOpsSpec extends SparkSpec {
     val secondHits = MatchOps.searchArtists(
       parts.select(col("query_id"), array_join(slice(col("parts"), 2, 1000), "&").as("qname")), alias)
       .select(col("query_id").as("s_id"), col("artist_id").as("second_artist_ok"))
-    val directPairs = direct.withColumn("second_required", lit(false))
-      .withColumn("second_ids", lit(null).cast("array<int>"))
+    val directPairs = direct.withColumn("second_ids", lit(null).cast("array<int>"))
     // a second artist missing from the export does not veto
     // (`benchmark.py:92-95,183`)
     val fallbackPairs = mainHits
       .join(secondHits.groupBy(col("s_id")).agg(collect_set(col("second_artist_ok")).as("second_ids")),
         col("query_id") === col("s_id"), "left")
       .drop("s_id")
-      .withColumn("second_required", col("second_ids").isNotNull && size(col("second_ids")) > 0)
     directPairs.unionByName(fallbackPairs)
   }
 
@@ -111,7 +109,7 @@ class MatchOpsSpec extends SparkSpec {
     */
   private def referenceScored(cand: DataFrame): DataFrame = {
     val distinct = cand
-      .filter(!col("second_required") ||
+      .filter(col("second_ids").isNull || size(col("second_ids")) === 0 ||
         (col("second_artist_id").isNotNull && array_contains(col("second_ids"), col("second_artist_id"))))
       .withColumn("phase",
         when(col("alias").startsWith(col("tkey")), 1)
@@ -218,6 +216,7 @@ class MatchOpsSpec extends SparkSpec {
     105 -> "g-210", 106 -> "g-210", 107 -> "g-210")
 
   test("index path returns what the join path and the three-lookup composition did") {
+    var losers = 0
     for ((what, qs, ex) <- bothCases) {
       assert(ex().matcherIndex.isDefined, s"$what: the export does not pass the index gate")
       val got = MatchOps.matchSongs(qs(), ex())
@@ -230,7 +229,17 @@ class MatchOpsSpec extends SparkSpec {
       assert(got.columns.toSeq == want.columns.toSeq, what)
       assert(rows(got) == joined._2, what)
       assert(rows(got) == rows(want), what)
+      // every candidate, losers included: the serving fields no winner shows
+      val scored = MatchOps.scoredCandidates(qs(), ex())
+      val scoredJoined = OnJoinPath(spark) {
+        val s = MatchOps.scoredCandidates(qs(), ex())
+        (s.dtypes.toSeq, rows(s))
+      }
+      assert(scored.dtypes.toSeq == scoredJoined._1, what)
+      assert(rows(scored) == scoredJoined._2, what)
+      losers += scoredJoined._2.size - joined._2.size
     }
+    assert(losers > 0, "no losing candidate")
     val got = MatchOps.matchSongs(lookupCases, richExport)
       .select("query_id", "album_mb_id").as[(Int, String)].collect().toMap
     assert(got == expectedLookupCases)
@@ -257,10 +266,9 @@ class MatchOpsSpec extends SparkSpec {
     def flag = rnd.nextBoolean()
     val rows = (1 to nQueries).flatMap { q =>
       val tkey = pick("abc", "abcd", "xy", longKey)
-      val required = rnd.nextInt(4) == 0
-      val secondIds = if (required) pick(Seq(1L), Seq(1L, 2L)) else pick(Seq.empty[Long], null)
+      val secondIds = if (rnd.nextInt(4) == 0) pick(Seq(1L), Seq(1L, 2L)) else pick(Seq.empty[Long], null)
       val fresh = Seq.fill(rnd.nextInt(9)) {
-        Seq[Any](q.toLong, tkey, required, secondIds, pick[Any](1L, 2L, 3L, null),
+        Seq[Any](q.toLong, tkey, secondIds, pick[Any](1L, 2L, 3L, null),
           pick("r-1", "r-2", "r-3"), pick("t1", "t2"), flag, pick[Any](1, 2, 10, null),
           pick(Seq("abc", "abcd", "abcde", "abd", "ab", "abx", "xy", "xyz", "zzz") ++
             keyedAliases ++ longAliases: _*),
@@ -271,7 +279,7 @@ class MatchOpsSpec extends SparkSpec {
     }
     val schema = StructType(Seq(
       StructField("query_id", LongType), StructField("tkey", StringType),
-      StructField("second_required", BooleanType), StructField("second_ids", ArrayType(LongType)),
+      StructField("second_ids", ArrayType(LongType)),
       StructField("second_artist_id", LongType), StructField("song_mb_id", StringType),
       StructField("song_title", StringType), StructField("single_relationship", BooleanType),
       StructField("recording_score", IntegerType), StructField("alias", StringType),
@@ -291,7 +299,7 @@ class MatchOpsSpec extends SparkSpec {
   /** [[MatchOps.collected]] without its phase pre-filter: every row
     * reaches the ranking, as on the index path. */
   private def unfiltered(cand: DataFrame): DataFrame =
-    cand.groupBy(col("query_id"), col("tkey"), col("second_required"), col("second_ids"))
+    cand.groupBy(col("query_id"), col("tkey"), col("second_ids"))
       .agg(collect_list(struct(MatchOps.ServingFields.map(col): _*)).as("rows"))
 
   test("the fused ranking returns what the window-based ranking did on random candidate sets") {
@@ -322,7 +330,7 @@ class MatchOpsSpec extends SparkSpec {
       assert(wantScored.select("phase").distinct().count() == 2, s"seed $seed: one phase only")
       val tied = wantScored.groupBy("query_id", "relevance").count().filter(col("count") > 1)
       assert(tied.count() > 0, s"seed $seed: no relevance ties")
-      val vetoed = cand.filter(col("second_required") && col("second_artist_id") === 3L)
+      val vetoed = cand.filter(size(col("second_ids")) > 0 && col("second_artist_id") === 3L)
       assert(vetoed.count() > 0, s"seed $seed: no vetoed row")
       longRows ++= cand.filter(col("tkey") === longKey).select("alias").as[String].collect()
       exactMatches ++= wantScored.filter(col("tkey") === normalize.searchKey(col("matched_alias")))
