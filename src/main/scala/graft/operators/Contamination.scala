@@ -273,13 +273,4 @@ object Contamination {
       .filter(col("score") >= minScoreQ)
       .select(col("bench_id"), col("train_id"), col("score"))
   }
-
-  /** Per-benchmark-doc contamination summary: how many train docs overlap
-    * it and the worst coverage. Benchmark docs with no qualifying overlap
-    * are ABSENT (join the benchmark table back for a full report). */
-  def contaminationReport(pairs: DataFrame): DataFrame =
-    pairs.groupBy(col("bench_id"))
-      .agg(count(lit(1)).as("n_contaminating_docs"),
-        max(col("n_shared")).as("max_shared"),
-        max(col("contaminated_permille")).as("max_contaminated_permille"))
 }

@@ -1228,67 +1228,4 @@ object Dedup {
       .select(id.as("doc_id"), component.as("component_id"),
         col("__keep").as("keep_id"), (id === col("__keep")).as("is_kept"))
   }
-
-  /** The whole near-dup dedup DECISION in one call — MinHash-LSH pairs →
-    * connected components → [[keepBest]] — returning the corpus MINUS the
-    * losing cluster members. The composition is tuned the way the
-    * 10M-doc curation bench settled on:
-    *
-    *  - components run over the PAIR ENDPOINTS only — the untouched
-    *    corpus majority is trivially kept and never enters the
-    *    cluster-keyed window;
-    *  - the verdict applies as a LEFT ANTI join on the DROP-list
-    *    (cluster members that lost), which is output-bounded (≈ removed
-    *    docs) where the keep-list is corpus-sized — at runtime AQE
-    *    broadcasts it and the corpus text never shuffles;
-    *  - `pairs` feeds two consumers (endpoint ids and edges); pass a
-    *    MATERIALIZED frame (parquet you just wrote, or `.persist()`ed)
-    *    unless recomputing the LSH mining twice is acceptable — a
-    *    checkpointing pipeline gets this for free by writing each stage.
-    *
-    * `order` ranks WITHIN a cluster, best first (ties broken by id — the
-    * id is appended as the final key); the usual policy is quality
-    * descending. `orderCols` must be columns of `df`.
-    * → `df`'s rows minus dropped near-duplicates, schema unchanged. */
-  def nearDupDedup(
-      df: DataFrame, id: Column, text: Column,
-      n: Int, k: Int, bands: Int, minJaccardPermille: Int,
-      order: Seq[Column],
-      maxBucketSize: Int = 10000,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val pairs = minhashNearDupPairs(df, id, text, n, k, bands, minJaccardPermille, maxBucketSize)
-    nearDupDedupFromPairs(df, id, pairs, order, checkpointDir)
-  }
-
-  /** [[nearDupDedup]] with the pair mining already done (the normal shape
-    * in a checkpointed pipeline: pairs were written to storage by the
-    * previous stage and re-read, so nothing is mined twice). `pairs`
-    * must have columns a_id / b_id. */
-  def nearDupDedupFromPairs(
-      df: DataFrame, id: Column, pairs: DataFrame,
-      order: Seq[Column],
-      checkpointDir: Option[String] = None): DataFrame = {
-    // one reference to pairs, not a union of two selects — same
-    // plan-copy rationale as minhashNearDupPairs' candIds: when `pairs`
-    // is a lazy mining DAG, every reference re-instantiates its
-    // pair-generation stages above the ReusedExchange-deduped band
-    // exchange
-    val touched = pairs
-      .select(explode(array(col("a_id"), col("b_id"))).as("id")).distinct()
-    val comp = Components.connectedComponents(
-      touched, pairs.select(col("a_id").as("src"), col("b_id").as("dst")),
-      checkpointDir = checkpointDir)
-      .select(col("id"), col("component_id"))
-    // join the cluster table against df itself so the (possibly
-    // direction-carrying) order columns resolve against their own frame;
-    // Catalyst prunes every df column the window does not use, so the
-    // join ships (id, order columns) despite the full-frame join
-    val ranked = comp
-      .select(col("id").as("__ndd_id"), col("component_id"))
-      .join(df, col("__ndd_id") === id)
-    val dropped = keepBest(ranked, col("__ndd_id"), col("component_id"),
-      order :+ col("__ndd_id").asc)
-      .filter(!col("is_kept")).select(col("doc_id").as("__ndd_drop"))
-    df.join(dropped, id === col("__ndd_drop"), "left_anti")
-  }
 }

@@ -9,27 +9,11 @@ import org.apache.spark.sql.functions._
   * (the Scala analog of `mapInPandas` batches — one decoder instantiation
   * per partition, streamed row iterator, no per-row setup cost).
   *
-  * The IMAGE codec is REAL: [[ImageIoDecoder]] / [[ImageIoResizer]] ride
-  * the JDK's own `javax.imageio` (PNG/JPEG/GIF/BMP), plus a hand-walked
-  * EXIF orientation ([[JpegExif]] → [[extractImageMetaEx]]'s display
-  * dimensions), zero added dependencies. The AUDIO header codec is REAL
-  * too ([[WavDecoder]] rides `javax.sound.sampled` — WAV/AIFF/AU — and
-  * [[OggVorbisDecoder]] hand-walks Ogg pages the JDK cannot read), and so
-  * is the VIDEO header ([[Mp4Decoder]] walks the ISO-BMFF box structure by
-  * hand — MP4/MOV track dimensions without any codec library). Compressed
-  * SAMPLE decode is real for FLAC ([[FlacPcmDecoder]] rides the zero-dep
-  * [[FlacPcm]] bit-walk — Rice residuals, fixed/LPC predictors, stereo
-  * decorrelation — and [[WavPcmDecoder]]/[[AutoPcmDecoder]] cover
-  * uncompressed PCM and routing); MP3 and H.264 PIXEL decode remain
-  * stubbed ([[StubDecoder]] derives deterministic fake dimensions from
-  * payload bytes — their entropy decoders don't ship with the JDK); the
-  * stub also stays the oracle-replayable path
-  * for the q29/q45 correctness gate, since DuckDB can recompute its
-  * arithmetic but not a pixel decode. Either way the surrounding
-  * plumbing —
-  * schema, encoders, partition batching, null-safety, the query surface —
-  * is identical, and a production A/V decoder drops in behind
-  * [[MediaDecoder]] without touching the plan shape.
+  * The decoder and featurizer here are stubs ([[StubDecoder]],
+  * [[StubFeaturizer]]): they derive deterministic values from the payload
+  * bytes, so the DuckDB oracle can replay q29/q30/q45 with arithmetic. A
+  * real codec drops in behind [[MediaDecoder]] / [[MediaFeaturizer]]
+  * without touching the plan shape.
   */
 object Multimodal {
 
@@ -39,9 +23,6 @@ object Multimodal {
   /** Typed metadata extracted per row. */
   final case class MediaMeta(
       id: Long, byte_len: Long, width: Int, height: Int, format: String)
-
-  /** One sampled frame reference (video/audio frame sampling). */
-  final case class FrameRef(id: Long, frame_index: Int, byte_offset: Long)
 
   /** The pluggable codec boundary. Implementations must be Serializable —
     * they ship to executors once per partition. */
@@ -57,557 +38,6 @@ object Multimodal {
     def dimensions(content: Array[Byte]): (Int, Int) = {
       val n = if (content == null) 0 else content.length
       (1 + n % 64, 1 + n % 37)
-    }
-  }
-
-  /** REAL image decoder — `javax.imageio`, which ships with the JDK (zero
-    * added dependencies): reads only the container HEADER via an
-    * `ImageReader` (PNG/JPEG/GIF/BMP out of the box), never the pixel data,
-    * so metadata extraction over a 100 TB image column costs header bytes
-    * per row, not a full decode. Corrupt or unrecognized payloads yield
-    * `(0, 0)` — at pipeline scale a bad row must surface as a filterable
-    * zero-dim record, not kill the job. */
-  object ImageIoDecoder extends MediaDecoder {
-    def dimensions(content: Array[Byte]): (Int, Int) = {
-      if (content == null || content.isEmpty) return (0, 0)
-      try {
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(content))
-        try {
-          val readers = javax.imageio.ImageIO.getImageReaders(iis)
-          if (!readers.hasNext) (0, 0)
-          else {
-            val r = readers.next()
-            try { r.setInput(iis); (r.getWidth(0), r.getHeight(0)) }
-            finally r.dispose()
-          }
-        } finally iis.close()
-        // NonFatal, not just IOException: the JDK's GIF/BMP/PNG readers
-        // throw unchecked exceptions (IndexOutOfBounds, IllegalArgument…)
-        // on crafted or truncated headers, and the contract is that a bad
-        // row can never kill the job
-      } catch { case scala.util.control.NonFatal(_) => (0, 0) }
-    }
-  }
-
-  /** REAL video header decoder — MP4/MOV (ISO base media file format) is
-    * a plain big-endian box structure, so track dimensions parse with no
-    * codec library at all: walk sibling boxes, recurse into moov → trak,
-    * read `tkhd`'s 16.16 fixed-point width/height (skipping zero-dim
-    * audio/metadata tracks). Header bytes only — the mdat sample payload
-    * is never touched, so metadata over a 100 TB video column costs the
-    * moov box per row. Corrupt/truncated/non-BMFF payloads yield (0, 0).
-    */
-  object Mp4Decoder extends MediaDecoder {
-    def dimensions(content: Array[Byte]): (Int, Int) = {
-      if (content == null || content.length < 8) return (0, 0)
-      try scan(content, 0, content.length, depth = 0).getOrElse((0, 0))
-      catch { case scala.util.control.NonFatal(_) => (0, 0) }
-    }
-
-    private def be32(b: Array[Byte], o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    private def be64(b: Array[Byte], o: Int): Long =
-      (be32(b, o) << 32) | be32(b, o + 4)
-
-    private def scan(b: Array[Byte], from: Int, until: Int, depth: Int): Option[(Int, Int)] = {
-      var off = from
-      while (off + 8 <= until) {
-        var size = be32(b, off)
-        var hdr = 8
-        if (size == 1 && off + 16 <= until) { size = be64(b, off + 8); hdr = 16 }
-        else if (size == 0) size = (until - off).toLong // box runs to EOF
-        if (size < hdr) return None // malformed — stop, caller yields (0,0)
-        val end = math.min(off + size, until.toLong).toInt
-        new String(b, off + 4, 4, "ISO-8859-1") match {
-          case "moov" | "trak" if depth < 4 =>
-            val r = scan(b, off + hdr, end, depth + 1)
-            if (r.isDefined) return r
-          case "tkhd" if off + hdr < end => // header-only tkhd: no payload to read
-            val ver = b(off + hdr) & 0xff
-            // v0 payload: ver/flags 4 + times/ids/reserved 72 = width at 76;
-            // v1 widens the three time fields by 4 bytes each
-            val wOff = off + hdr + (if (ver == 1) 88 else 76)
-            if (wOff + 8 <= end) {
-              val w = (be32(b, wOff) >> 16).toInt
-              val h = (be32(b, wOff + 4) >> 16).toInt
-              if (w > 0 && h > 0) return Some((w, h)) // else: audio track
-            }
-          case _ =>
-        }
-        off = end
-      }
-      None
-    }
-  }
-
-  /** Audio metadata of one payload. */
-  final case class AudioMeta(
-      id: Long, byte_len: Long, sample_rate: Int, channels: Int, n_frames: Long)
-
-  /** The pluggable audio-codec boundary (same contract as
-    * [[MediaDecoder]]: Serializable, ships once per partition). */
-  trait AudioDecoder extends Serializable {
-    /** → (sampleRate Hz, channels, frame count). */
-    def audioMeta(content: Array[Byte]): (Int, Int, Long)
-  }
-
-  /** REAL audio decoder — `javax.sound.sampled`, which ships with the JDK
-    * (zero added dependencies): parses the WAV/AIFF/AU container HEADER
-    * for format and frame count, never the samples, so metadata over a
-    * 100 TB audio column costs header bytes per row. Corrupt or
-    * unrecognized payloads yield (0, 0, 0) — a bad row must surface as a
-    * filterable zero record, not kill the job (compressed formats like
-    * MP3/FLAC need codecs outside the JDK and land here as (0, 0, 0)
-    * until a richer decoder is plugged in). */
-  object WavDecoder extends AudioDecoder {
-    def audioMeta(content: Array[Byte]): (Int, Int, Long) = {
-      if (content == null || content.isEmpty) return (0, 0, 0L)
-      try {
-        // ByteArrayInputStream supports mark/reset, which the codec
-        // probe requires
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(content))
-        try {
-          val f = in.getFormat
-          // streaming-style containers (e.g. AU with dataSize 0xFFFFFFFF)
-          // parse fine but report AudioSystem.NOT_SPECIFIED (-1) — clamp
-          // to 0 so the "filterable zero record" contract holds and no
-          // negative frame count leaks into duration arithmetic
-          (math.max(0, f.getSampleRate.toInt), math.max(0, f.getChannels),
-            math.max(0L, in.getFrameLength))
-        } finally in.close()
-      } catch { case scala.util.control.NonFatal(_) => (0, 0, 0L) }
-    }
-  }
-
-  /** REAL Ogg/Vorbis header decoder — an Ogg page is a plain byte
-    * structure ("OggS" capture, LE fields, lacing table) and the Vorbis
-    * identification header is the first packet of the first (BOS) page, so
-    * sample rate and channel count parse with no codec library (the JDK's
-    * `AudioSystem` cannot read Ogg). The PCM frame count is the granule
-    * position of the LAST page — found by scanning backward for the final
-    * "OggS" capture — because Vorbis granules ARE cumulative PCM sample
-    * counts. Header + trailing-page bytes only; no sample decode.
-    * Corrupt/non-Ogg/non-Vorbis payloads yield (0, 0, 0), same
-    * filterable-zero contract as [[WavDecoder]]. */
-  object OggVorbisDecoder extends AudioDecoder {
-    private def le32(b: Array[Byte], o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    private def le64(b: Array[Byte], o: Int): Long =
-      le32(b, o) | (le32(b, o + 4) << 32)
-    private def isCapture(b: Array[Byte], o: Int): Boolean =
-      b(o) == 'O' && b(o + 1) == 'g' && b(o + 2) == 'g' && b(o + 3) == 'S'
-
-    def audioMeta(content: Array[Byte]): (Int, Int, Long) = {
-      val b = content
-      if (b == null || b.length < 58 || !isCapture(b, 0) || b(4) != 0)
-        return (0, 0, 0L)
-      try {
-        val nSegs = b(26) & 0xff
-        val packetStart = 27 + nSegs
-        // Vorbis identification header: 0x01 "vorbis", version 0, then
-        // channels (u8) and sample rate (LE u32)
-        if (packetStart + 30 > b.length || b(packetStart) != 0x01 ||
-          new String(b, packetStart + 1, 6, "ISO-8859-1") != "vorbis" ||
-          le32(b, packetStart + 7) != 0L)
-          return (0, 0, 0L)
-        val channels = b(packetStart + 11) & 0xff
-        val rate = le32(b, packetStart + 12).toInt
-        // last page's granule position = total PCM frames
-        var i = b.length - 27
-        var granule = 0L
-        var found = false
-        while (!found && i >= 0) {
-          if (isCapture(b, i) && b(i + 4) == 0) {
-            granule = le64(b, i + 6); found = true
-          } else i -= 1
-        }
-        // granule -1 (no packet finishes on the page) clamps to 0
-        (rate, channels, math.max(0L, granule))
-      } catch { case scala.util.control.NonFatal(_) => (0, 0, 0L) }
-    }
-  }
-
-  /** REAL FLAC STREAMINFO decoder — a FLAC stream is the "fLaC" marker
-    * followed by metadata blocks, and the FIRST block is required by the
-    * format to be STREAMINFO (34 bytes, big-endian packed fields:
-    * sample rate 20 bits, channels-1 3 bits, bits-per-sample-1 5 bits,
-    * total samples 36 bits), so sample rate / channels / PCM frame count
-    * parse from a fixed 42-byte prefix with no codec library. Total
-    * samples 0 means "unknown" in the format and stays 0 here.
-    * Header bytes only; audio frames are never touched. Corrupt/non-FLAC
-    * payloads yield (0, 0, 0), the filterable-zero contract. */
-  object FlacDecoder extends AudioDecoder {
-    def audioMeta(content: Array[Byte]): (Int, Int, Long) = {
-      val b = content
-      // "fLaC" + block header (4) + the 34-byte STREAMINFO
-      if (b == null || b.length < 42 ||
-        b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C') return (0, 0, 0L)
-      try {
-        // first block header: last-flag bit 7, type bits 0-6 (must be 0 =
-        // STREAMINFO), 24-bit BE length
-        if ((b(4) & 0x7f) != 0) return (0, 0, 0L)
-        val blockLen = ((b(5) & 0xff) << 16) | ((b(6) & 0xff) << 8) | (b(7) & 0xff)
-        if (blockLen < 34) return (0, 0, 0L)
-        // STREAMINFO at offset 8; the packed 64-bit field starts at its
-        // byte 10 (after min/max block size u16 ×2 and frame size u24 ×2)
-        val p = 8 + 10
-        val rate = ((b(p) & 0xff) << 12) | ((b(p + 1) & 0xff) << 4) | ((b(p + 2) & 0xff) >>> 4)
-        val channels = ((b(p + 2) >>> 1) & 0x7) + 1
-        val totalSamples = ((b(p + 3) & 0x0fL) << 32) |
-          ((b(p + 4) & 0xffL) << 24) | ((b(p + 5) & 0xffL) << 16) |
-          ((b(p + 6) & 0xffL) << 8) | (b(p + 7) & 0xffL)
-        if (rate == 0) (0, 0, 0L) else (rate, channels, totalSamples)
-      } catch { case scala.util.control.NonFatal(_) => (0, 0, 0L) }
-    }
-  }
-
-  /** REAL MP3 frame-header decoder — an MPEG audio stream is a sequence
-    * of self-describing 4-byte frame headers (11-bit sync, version,
-    * layer, bitrate index, sample-rate index, padding), each of which
-    * determines the frame's byte length, so the whole stream walks by
-    * header arithmetic with no codec library and no sample decode:
-    *
-    *  - an ID3v2 tag (syncsafe 28-bit length) is skipped, then the first
-    *    sync gives sample rate and channel mode;
-    *  - the PCM frame count prefers the Xing/Info VBR header (frame
-    *    count × samples-per-frame) — CBR arithmetic is wrong on VBR
-    *    files — and otherwise hops frame to frame summing headers
-    *    (O(n_frames) header reads, ~0.4 KB touched per KB of audio, no
-    *    decode);
-    *  - free-format bitrate (index 0) makes the frame length
-    *    indeterminable without decoding: rate/channels are reported with
-    *    frame count 0.
-    *
-    * Corrupt/non-MPEG payloads yield (0, 0, 0), the filterable-zero
-    * contract. */
-  object Mp3Decoder extends AudioDecoder {
-    // [version 0=MPEG2.5, 2=MPEG2, 3=MPEG1][sample-rate index]
-    private val Rates = Array(
-      Array(11025, 12000, 8000), Array(0, 0, 0),
-      Array(22050, 24000, 16000), Array(44100, 48000, 32000))
-    // bitrate kbps tables: [layer index 1=III, 2=II, 3=I], MPEG1 vs MPEG2/2.5
-    private val BitrateV1 = Array(
-      null,
-      Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320),
-      Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384),
-      Array(0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448))
-    private val BitrateV2 = Array(
-      null,
-      Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-      Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-      Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256))
-
-    def audioMeta(content: Array[Byte]): (Int, Int, Long) = {
-      val b = content
-      if (b == null || b.length < 4) return (0, 0, 0L)
-      try {
-        var off = 0
-        if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-          off = 10 + (((b(6) & 0x7f) << 21) | ((b(7) & 0x7f) << 14) |
-            ((b(8) & 0x7f) << 7) | (b(9) & 0x7f))
-          // ID3v2.4 footer flag: the syncsafe size excludes the 10-byte
-          // footer — without this a footered tag lands the sync probe on
-          // "3DI" and a valid file reads as corrupt
-          if ((b(5) & 0x10) != 0) off += 10
-        }
-        if (off + 4 > b.length || (b(off) & 0xff) != 0xff || (b(off + 1) & 0xe0) != 0xe0)
-          return (0, 0, 0L)
-        val ver = (b(off + 1) >>> 3) & 0x3       // 0=2.5, 2=2, 3=1
-        val layer = (b(off + 1) >>> 1) & 0x3     // 1=III, 2=II, 3=I
-        val rateIdx = (b(off + 2) >>> 2) & 0x3
-        if (ver == 1 || layer == 0 || rateIdx == 3) return (0, 0, 0L)
-        val rate = Rates(ver)(rateIdx)
-        val mono = ((b(off + 3) >>> 6) & 0x3) == 3
-        val channels = if (mono) 1 else 2
-        val mpeg1 = ver == 3
-        val samplesPerFrame =
-          if (layer == 3) 384 // Layer I
-          else if (layer == 2) 1152 // Layer II
-          else if (mpeg1) 1152 else 576 // Layer III
-        def frameLen(o: Int): Int = {
-          val brIdx = (b(o + 2) >>> 4) & 0xf
-          if (brIdx == 0 || brIdx == 15) return -1 // free/bad: indeterminable
-          val kbps = (if (mpeg1) BitrateV1 else BitrateV2)(layer)(brIdx)
-          val pad = (b(o + 2) >>> 1) & 0x1
-          if (layer == 3) (12 * kbps * 1000 / rate + pad) * 4 // Layer I pads in slots of 4
-          else samplesPerFrame / 8 * kbps * 1000 / rate + pad
-        }
-        // Xing/Info VBR header: after the side info of the FIRST frame.
-        // protection bit 0 = a 16-bit CRC sits between header and side
-        // info (LAME writes these when asked) — without the skip the tag
-        // probe lands 2 bytes early and a VBR file miscounts silently
-        val crcSkip = if ((b(off + 1) & 0x1) == 0) 2 else 0
-        val sideInfo =
-          if (layer == 1) (if (mpeg1) { if (mono) 17 else 32 } else { if (mono) 9 else 17 })
-          else 0 // Xing only appears in Layer III streams in practice
-        val x = off + 4 + crcSkip + sideInfo
-        val hasTag = layer == 1 && x + 4 <= b.length &&
-          ((b(x) == 'X' && b(x + 1) == 'i' && b(x + 2) == 'n' && b(x + 3) == 'g') ||
-            (b(x) == 'I' && b(x + 1) == 'n' && b(x + 2) == 'f' && b(x + 3) == 'o'))
-        if (hasTag && x + 12 <= b.length && ((b(x + 7) & 0x1) == 1)) {
-          val frames = ((b(x + 8) & 0xffL) << 24) | ((b(x + 9) & 0xffL) << 16) |
-            ((b(x + 10) & 0xffL) << 8) | (b(x + 11) & 0xffL)
-          return (rate, channels, frames * samplesPerFrame)
-        }
-        // CBR/headerless: hop frame headers. A Xing/Info frame with no
-        // usable frame count is metadata, not audio — skip it in the hop
-        var frames = 0L
-        var o = off
-        if (hasTag) {
-          val len = frameLen(off)
-          if (len <= 0) return (rate, channels, 0L)
-          o = off + len
-        }
-        while (o + 4 <= b.length && (b(o) & 0xff) == 0xff && (b(o + 1) & 0xe0) == 0xe0) {
-          val len = frameLen(o)
-          if (len <= 0) return (rate, channels, 0L)
-          frames += 1
-          o += len
-        }
-        (rate, channels, frames * samplesPerFrame)
-      } catch { case scala.util.control.NonFatal(_) => (0, 0, 0L) }
-    }
-  }
-
-  /** Magic-byte audio router: one decoder per partition batch that
-    * dispatches on the container signature — RIFF/AIFF(FORM)/AU(.snd) to
-    * the JDK-backed [[WavDecoder]], "OggS" to [[OggVorbisDecoder]],
-    * "fLaC" to [[FlacDecoder]], ID3/MPEG-sync to [[Mp3Decoder]] — so a
-    * mixed-crawl audio column decodes in ONE [[extractAudioMeta]] pass
-    * instead of one pass per format. Unrecognized payloads are
-    * (0, 0, 0), same contract as every decoder. */
-  object AutoAudioDecoder extends AudioDecoder {
-    def audioMeta(content: Array[Byte]): (Int, Int, Long) = {
-      val b = content
-      if (b == null || b.length < 4) return (0, 0, 0L)
-      val sig = ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) |
-        ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
-      if (sig == 0x4f676753L) OggVorbisDecoder.audioMeta(b)         // OggS
-      else if (sig == 0x664c6143L) FlacDecoder.audioMeta(b)         // fLaC
-      else if (sig == 0x52494646L || sig == 0x464f524dL ||          // RIFF / FORM
-        sig == 0x2e736e64L) WavDecoder.audioMeta(b)                 // .snd
-      else if ((sig >>> 8) == 0x494433L ||                          // ID3
-        ((b(0) & 0xff) == 0xff && (b(1) & 0xe0) == 0xe0)) Mp3Decoder.audioMeta(b)
-      else (0, 0, 0L)
-    }
-  }
-
-  /** [[extractMeta]]'s audio twin: partition-batched header decode. */
-  def extractAudioMeta(rows: Dataset[MediaRow], decoder: AudioDecoder): Dataset[AudioMeta] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      val d = decoder
-      it.map { r =>
-        val len = if (r.content == null) 0L else r.content.length.toLong
-        val (sr, ch, nf) = d.audioMeta(r.content)
-        AudioMeta(r.id, len, sr, ch, nf)
-      }
-    }
-  }
-
-  /** The SAMPLE-decode boundary — unlike [[AudioDecoder]] this decodes the
-    * actual PCM, so it belongs after the pipeline's filter stages (same
-    * placement rule as [[ImageIoResizer]] vs [[ImageIoDecoder]]). */
-  trait PcmDecoder extends Serializable {
-    /** → (sampleRate, channels, interleaved samples); (0, 0, empty) for
-      * undecodable payloads — the filterable-zero contract. */
-    def decodePcm(content: Array[Byte]): (Int, Int, Array[Int])
-  }
-
-  /** REAL FLAC sample decode — the zero-dep [[FlacPcm]] walk (Rice
-    * residuals, fixed + LPC predictors, stereo decorrelation). */
-  object FlacPcmDecoder extends PcmDecoder {
-    def decodePcm(content: Array[Byte]): (Int, Int, Array[Int]) =
-      FlacPcm.decode(content)
-  }
-
-  /** REAL uncompressed-PCM decode via `javax.sound.sampled` (WAV/AIFF/AU):
-    * reads the sample bytes and re-assembles signed interleaved ints for
-    * 8/16/24/32-bit PCM, either endianness (8-bit unsigned is recentered,
-    * the WAV convention). */
-  object WavPcmDecoder extends PcmDecoder {
-    def decodePcm(content: Array[Byte]): (Int, Int, Array[Int]) = {
-      if (content == null || content.isEmpty) return (0, 0, Array.empty[Int])
-      try {
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(content))
-        try {
-          val f = in.getFormat
-          val enc = f.getEncoding
-          val signed = enc == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-          val unsigned = enc == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED
-          // non-byte-multiple sample sizes (12-bit WAV stores 2 bytes per
-          // sample) would make the byte stride wrong and fabricate
-          // samples — filterable zero instead
-          if (f.getSampleSizeInBits % 8 != 0) return (0, 0, Array.empty[Int])
-          val bytesPer = f.getSampleSizeInBits / 8
-          if ((!signed && !unsigned) || bytesPer < 1 || bytesPer > 4)
-            return (0, 0, Array.empty[Int])
-          val raw = in.readAllBytes()
-          val n = raw.length / bytesPer
-          val out = new Array[Int](n)
-          val big = f.isBigEndian
-          var i = 0
-          while (i < n) {
-            var v = 0
-            var k = 0
-            while (k < bytesPer) {
-              val byteVal = raw(i * bytesPer + (if (big) k else bytesPer - 1 - k)) & 0xff
-              v = (v << 8) | byteVal
-              k += 1
-            }
-            // sign-extend to the sample width; recenter unsigned PCM
-            val bits = bytesPer * 8
-            val sv = (v << (32 - bits)) >> (32 - bits)
-            out(i) = if (unsigned) (v - (1 << (bits - 1))) else sv
-            i += 1
-          }
-          (math.max(0, f.getSampleRate.toInt), math.max(0, f.getChannels), out)
-        } finally in.close()
-      } catch { case scala.util.control.NonFatal(_) => (0, 0, Array.empty[Int]) }
-    }
-  }
-
-  /** Magic-byte PCM router, [[AutoAudioDecoder]]'s sample-decode twin:
-    * "fLaC" → [[FlacPcmDecoder]], RIFF/FORM/.snd → [[WavPcmDecoder]];
-    * formats without a zero-dep sample decode (Ogg, MP3) return the
-    * filterable zero — their HEADERS still decode via
-    * [[AutoAudioDecoder]]. */
-  object AutoPcmDecoder extends PcmDecoder {
-    def decodePcm(content: Array[Byte]): (Int, Int, Array[Int]) = {
-      val b = content
-      if (b == null || b.length < 4) return (0, 0, Array.empty[Int])
-      val sig = ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) |
-        ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
-      if (sig == 0x664c6143L) FlacPcmDecoder.decodePcm(b)            // fLaC
-      else if (sig == 0x52494646L || sig == 0x464f524dL ||           // RIFF / FORM
-        sig == 0x2e736e64L) WavPcmDecoder.decodePcm(b)               // .snd
-      else (0, 0, Array.empty[Int])
-    }
-  }
-
-  /** Decoded-sample statistics of one payload — the per-row evidence an
-    * audio curation gate filters on (silence ⇒ peak 0, clipping ⇒ peak at
-    * full scale, loudness via mean |sample|). Exact integers. */
-  final case class PcmStats(
-      id: Long, sample_rate: Int, channels: Int, n_samples: Long,
-      peak_abs: Long, mean_abs: Long)
-
-  /** Sample-decode statistics, partition-batched like every codec pass:
-    * decode PCM, reduce to (peak, mean |amplitude|) per row — the samples
-    * never leave the executor, only the bounded stats do (the shape that
-    * holds at 100 TB of audio). */
-  def extractPcmStats(rows: Dataset[MediaRow], decoder: PcmDecoder): Dataset[PcmStats] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      val d = decoder
-      it.map { r =>
-        val (sr, ch, samples) = d.decodePcm(r.content)
-        var peak = 0L
-        var sumAbs = 0L
-        var i = 0
-        while (i < samples.length) {
-          val a = math.abs(samples(i).toLong)
-          if (a > peak) peak = a
-          sumAbs += a
-          i += 1
-        }
-        PcmStats(r.id, sr, ch, samples.length.toLong, peak,
-          if (samples.isEmpty) 0L else sumAbs / samples.length)
-      }
-    }
-  }
-
-  /** REAL JPEG EXIF orientation walk — JPEG markers and the EXIF TIFF IFD
-    * are plain byte structures, so the orientation tag (0x0112) parses
-    * with no metadata library: walk FF-marker segments to APP1
-    * ("Exif\0\0"), read the TIFF header (II/MM endianness, magic 42),
-    * scan IFD0's 12-byte entries for tag 0x0112 type SHORT. Stops at SOS
-    * (entropy-coded data follows — EXIF can't appear after it). Returns
-    * 1-8, or 0 when absent/undecodable — 0 is "treat as upright", the
-    * filterable-not-fatal contract. Orientations 5-8 mean the raster is
-    * rotated ±90°: DISPLAY dimensions are the decoded ones swapped. */
-  object JpegExif {
-    def orientation(b: Array[Byte]): Int = {
-      if (b == null || b.length < 4 ||
-        (b(0) & 0xff) != 0xFF || (b(1) & 0xff) != 0xD8) return 0
-      try {
-        var off = 2
-        while (off + 4 <= b.length) {
-          if ((b(off) & 0xff) != 0xFF) return 0
-          val marker = b(off + 1) & 0xff
-          if (marker == 0x01 || (marker >= 0xD0 && marker <= 0xD9)) off += 2
-          else {
-            val len = ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-            if (len < 2 || off + 2 + len > b.length) return 0
-            if (marker == 0xE1 && len >= 10 &&
-              b(off + 4) == 'E' && b(off + 5) == 'x' && b(off + 6) == 'i' &&
-              b(off + 7) == 'f' && b(off + 8) == 0 && b(off + 9) == 0)
-              return tiffOrientation(b, off + 10, off + 2 + len)
-            if (marker == 0xDA) return 0
-            off += 2 + len
-          }
-        }
-        0
-      } catch { case scala.util.control.NonFatal(_) => 0 }
-    }
-
-    private def tiffOrientation(b: Array[Byte], tiff: Int, end: Int): Int = {
-      if (tiff + 8 > end) return 0
-      val little =
-        if (b(tiff) == 'I' && b(tiff + 1) == 'I') true
-        else if (b(tiff) == 'M' && b(tiff + 1) == 'M') false
-        else return 0
-      def u16(o: Int): Int =
-        if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-      def u32(o: Int): Long =
-        if (little) (u16(o) & 0xffffL) | ((u16(o + 2) & 0xffffL) << 16)
-        else ((u16(o) & 0xffffL) << 16) | (u16(o + 2) & 0xffffL)
-      if (u16(tiff + 2) != 42) return 0
-      val ifd = tiff + u32(tiff + 4).toInt
-      if (ifd + 2 > end) return 0
-      val n = u16(ifd)
-      var i = 0
-      while (i < n) {
-        val e = ifd + 2 + i * 12
-        if (e + 12 > end) return 0
-        if (u16(e) == 0x0112 && u16(e + 2) == 3 && u32(e + 4) >= 1) {
-          val v = u16(e + 8) // SHORT value packed at the offset field's start
-          return if (v >= 1 && v <= 8) v else 0
-        }
-        i += 1
-      }
-      0
-    }
-  }
-
-  /** Image metadata with EXIF display semantics. */
-  final case class ImageMetaEx(
-      id: Long, byte_len: Long, width: Int, height: Int, orientation: Int,
-      display_width: Int, display_height: Int)
-
-  /** [[extractMeta]] plus the EXIF orientation walk: raster dimensions
-    * from the header-only [[ImageIoDecoder]], orientation from
-    * [[JpegExif]], display dimensions swapped for the four transposed
-    * orientations (5-8) — what a training pipeline must use for
-    * aspect-ratio filters, or portrait phone photos all count as
-    * landscape. Partition-batched like every codec pass here. */
-  def extractImageMetaEx(rows: Dataset[MediaRow]): Dataset[ImageMetaEx] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      it.map { r =>
-        val len = if (r.content == null) 0L else r.content.length.toLong
-        val (w, h) = ImageIoDecoder.dimensions(r.content)
-        val o = JpegExif.orientation(r.content)
-        val swap = o >= 5 && o <= 8
-        ImageMetaEx(r.id, len, w, h, o,
-          if (swap) h else w, if (swap) w else h)
-      }
     }
   }
 
@@ -628,127 +58,6 @@ object Multimodal {
 
   /** One feature vector extracted per row. */
   final case class MediaFeatures(id: Long, embedding: Array[Float])
-
-  /** Decoded-pixel statistics of one image — [[extractPcmStats]]'s image
-    * twin: per-row evidence an image curation gate filters on (black /
-    * blank frames ⇒ extreme mean luma, washed-out scans ⇒ tiny luma
-    * spread). Exact integers. */
-  final case class PixelStats(
-      id: Long, width: Int, height: Int,
-      mean_luma_permille: Long, min_luma: Int, max_luma: Int)
-
-  /** REAL pixel decode statistics — full `javax.imageio` decode (the
-    * pixel tier above the header-only [[ImageIoDecoder]]), reduced
-    * per-row to mean/min/max luminance (integer (r+g+b)/3 per pixel,
-    * mean as permille of 255): the pixels never leave the executor, only
-    * the bounded stats do. Belongs after the pipeline's filter stages,
-    * same placement rule as [[ImageIoResizer]]. Corrupt payloads are
-    * filterable zeros. */
-  def extractPixelStats(rows: Dataset[MediaRow]): Dataset[PixelStats] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      it.map { r =>
-        try {
-          val img =
-            if (r.content == null || r.content.isEmpty) null
-            else javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.content))
-          if (img == null) PixelStats(r.id, 0, 0, 0L, 0, 0)
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            var sum = 0L
-            var minL = 255
-            var maxL = 0
-            // bulk row fetch: per-pixel getRGB(x, y) pays a ColorModel
-            // conversion + bounds check PER CALL — an order of magnitude
-            // of accessor overhead on top of the actual luma math
-            val rowBuf = new Array[Int](w)
-            var y = 0
-            while (y < h) {
-              img.getRGB(0, y, w, 1, rowBuf, 0, w)
-              var x = 0
-              while (x < w) {
-                val rgb = rowBuf(x)
-                val luma = (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
-                sum += luma
-                if (luma < minL) minL = luma
-                if (luma > maxL) maxL = luma
-                x += 1
-              }
-              y += 1
-            }
-            val n = w.toLong * h
-            PixelStats(r.id, w, h, if (n == 0) 0L else sum * 1000L / (n * 255L),
-              if (n == 0) 0 else minL, maxL)
-          }
-        } catch {
-          case scala.util.control.NonFatal(_) => PixelStats(r.id, 0, 0, 0L, 0, 0)
-        }
-      }
-    }
-  }
-
-  /** REAL video header decoder for AVI containers — see [[AviMjpeg]].
-    * Header bytes only, same contract as [[Mp4Decoder]]. */
-  object AviDecoder extends MediaDecoder {
-    def dimensions(content: Array[Byte]): (Int, Int) = {
-      val (w, h, _) = AviMjpeg.videoMeta(content)
-      (w, h)
-    }
-  }
-
-  final case class FrameStats(
-      id: Long, frame_index: Int, width: Int, height: Int, mean_luma_permille: Long)
-
-  /** REAL video frame decode — the pixel tier for MJPEG AVI payloads:
-    * the [[AviMjpeg]] container walk yields frame-chunk offsets (each a
-    * complete JPEG), `k` frames are sampled uniformly over the ACTUAL
-    * frame list (not byte guesses — compare [[sampleFrames]]), and each
-    * decodes through `javax.imageio` to per-frame luminance stats. Pixels
-    * never leave the executor; partitioning stays by row. Non-AVI or
-    * corrupt payloads contribute zero rows (filterable absence, the
-    * explode-shaped analogue of the decoders' zero results). */
-  def sampleFrameStats(rows: Dataset[MediaRow], k: Int): Dataset[FrameStats] = {
-    import rows.sparkSession.implicits._
-    require(k >= 1, s"k must be >= 1, got $k")
-    rows.mapPartitions { it =>
-      it.flatMap { r =>
-        val frames = AviMjpeg.frameChunks(r.content)
-        if (frames.isEmpty) Iterator.empty
-        else {
-          val n = math.min(k, frames.length)
-          (0 until n).iterator.flatMap { i =>
-            val fi = (i.toLong * frames.length / n).toInt
-            val (off, len) = frames(fi)
-            try {
-              val img = javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(r.content, off, len))
-              if (img == null) None
-              else {
-                val w = img.getWidth
-                val h = img.getHeight
-                var sum = 0L
-                val rowBuf = new Array[Int](w)
-                var y = 0
-                while (y < h) {
-                  img.getRGB(0, y, w, 1, rowBuf, 0, w)
-                  var x = 0
-                  while (x < w) {
-                    val rgb = rowBuf(x)
-                    sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
-                    x += 1
-                  }
-                  y += 1
-                }
-                val np = w.toLong * h
-                Some(FrameStats(r.id, fi, w, h, if (np == 0) 0L else sum * 1000L / (np * 255L)))
-              }
-            } catch { case scala.util.control.NonFatal(_) => None }
-          }
-        }
-      }
-    }
-  }
 
   /** The pluggable feature-extraction boundary (CLIP/wav2vec in
     * production; the stub here). Serializable — ships once per
@@ -785,64 +94,6 @@ object Multimodal {
     rows.mapPartitions { it =>
       val f = featurizer
       it.map(r => MediaFeatures(r.id, f.features(r.content)))
-    }
-  }
-
-  /** The pluggable resize boundary. */
-  trait MediaResizer extends Serializable {
-    def resize(content: Array[Byte], width: Int, height: Int): Array[Byte]
-  }
-
-  /** Deterministic fake resizer: evenly strided byte subsample (or
-    * zero-pad) to exactly width×height bytes — a stand-in for a pixel
-    * resampler with the same contract: output size is a function of the
-    * target alone. */
-  object StubResizer extends MediaResizer {
-    def resize(content: Array[Byte], width: Int, height: Int): Array[Byte] = {
-      val target = width * height
-      val src = if (content == null) Array.emptyByteArray else content
-      Array.tabulate(target) { i =>
-        if (src.isEmpty) 0.toByte else src((i.toLong * src.length / target).toInt)
-      }
-    }
-  }
-
-  /** REAL pixel resampler — full `javax.imageio` decode, bilinear
-    * `java.awt.Graphics2D` scale (headless-safe: only ever draws into an
-    * off-screen `BufferedImage`), re-encoded as `outputFormat` (png
-    * default; any `ImageIO.write` format name works). Corrupt payloads
-    * yield an empty array — same filterable-not-fatal contract as
-    * [[ImageIoDecoder]]. Unlike metadata extraction this DOES decode
-    * pixels; it belongs after the pipeline's filter stages, not before. */
-  final case class ImageIoResizer(outputFormat: String = "png") extends MediaResizer {
-    def resize(content: Array[Byte], width: Int, height: Int): Array[Byte] = {
-      if (content == null || content.isEmpty) return Array.emptyByteArray
-      try {
-        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
-        if (img == null) return Array.emptyByteArray
-        val out = new java.awt.image.BufferedImage(
-          width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = out.createGraphics()
-        try {
-          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(img, 0, 0, width, height, null)
-        } finally g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(out, outputFormat, bos)
-        bos.toByteArray
-        // NonFatal for the same reason as [[ImageIoDecoder]]: malformed
-        // payloads throw unchecked exceptions inside the JDK codecs
-      } catch { case scala.util.control.NonFatal(_) => Array.emptyByteArray }
-    }
-  }
-
-  /** Resize partition-batched; id/format ride through unchanged. */
-  def resize(rows: Dataset[MediaRow], resizer: MediaResizer, width: Int, height: Int): Dataset[MediaRow] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      val r = resizer
-      it.map(m => MediaRow(m.id, r.resize(m.content, width, height), m.format))
     }
   }
 

@@ -96,13 +96,12 @@ object Sampling {
     * [[Components.connectedComponents]] over verified MinHash-LSH pairs;
     * rows absent from it split by their own id (singleton cluster).
     *
-    * Scale shape: one id-keyed equi-join against the cluster map (zero
-    * exchanges under the bucketed corpus layout), then the same pure
-    * map-side bucket assignment as [[hashSplit]]. The cluster map is the
-    * dedup tier's byproduct — a pipeline that already near-dup-deduped
-    * pays only the join. Note the split RATIOS now hold over clusters,
-    * not rows: a giant cluster drags its whole mass into one split, which
-    * is precisely the point. */
+    * Scale shape: one id-keyed equi-join against the cluster map, then
+    * the same pure map-side bucket assignment as [[hashSplit]]. The
+    * cluster map is the dedup tier's byproduct — a pipeline that already
+    * near-dup-deduped pays only the join. Note the split RATIOS now hold
+    * over clusters, not rows: a giant cluster drags its whole mass into
+    * one split, which is precisely the point. */
   def leakFreeSplit(
       df: DataFrame,
       id: Column,

@@ -103,21 +103,6 @@ object Similarity {
       .toDF("cell_id", "centroid")
   }
 
-  /** Persist a cell table ([[fitCells]] output) as parquet — the
-    * index-build half of the train-once/probe-many IVF serving shape:
-    * at 100 TB the k-means fit is a one-time job whose centroids are
-    * tiny (nlist rows), and every later query batch [[loadCells]] +
-    * [[ivfTopKWithCentroids]] without re-training (or re-seeding
-    * drift — the persisted table IS the quantizer, bit-for-bit). */
-  def saveCells(centroids: DataFrame, path: String): Unit =
-    centroids.select(col("cell_id"), col("centroid"))
-      .write.mode("overwrite").parquet(path)
-
-  /** Read a [[saveCells]] table back for [[ivfTopKWithCentroids]] /
-    * [[semDedupWithCentroids]]. */
-  def loadCells(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("cell_id"), col("centroid"))
-
   /** Top-`n` nearest cells per row, MAP-SIDE: the centroid table is tiny
     * and already driver-derived (one k-means fit), so it is collected
     * once (eager, at call time) and embedded as a single array literal;

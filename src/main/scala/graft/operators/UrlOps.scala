@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** URL / domain operators for web-corpus curation — the provenance-side
   * filters every crawl pipeline runs before touching document text:
-  * extract the host, reduce it to the registrable domain, gate on a
-  * domain blocklist. Everything is a pure Column expression in the
-  * Java-regex ∩ RE2 intersection, so the whole tier is map-side (fused
+  * extract the host and reduce it to the registrable domain, which a
+  * domain blocklist gates on. Everything is a pure Column expression in
+  * the Java-regex ∩ RE2 intersection, so the whole tier is map-side (fused
   * into the scan, zero shuffle at any corpus size) and the DuckDB oracle
   * replays it verbatim.
   */
@@ -17,8 +17,8 @@ object UrlOps {
     * `scheme://` and the first `/`, `?` or `#`, with any `user@` info,
     * any `:port`, and any trailing root-dot stripped (`example.com.` is
     * the same fully-qualified name as `example.com` — leaving the dot
-    * would let a blocklisted domain evade [[domainBlocklistFilter]] by
-    * appending one). A bracketed IPv6 literal is matched as a unit
+    * would let a blocklisted domain evade a blocklist by appending
+    * one). A bracketed IPv6 literal is matched as a unit
     * (brackets kept — the WHATWG serialization — so its colons are not
     * mistaken for a port separator). Null (never "") when the value has
     * no scheme://host shape — a relative link or junk is filterable, not
@@ -56,24 +56,4 @@ object UrlOps {
       .when(n >= 3 && length(tld) === 2 && array_contains(ccSuffix, second), lastK(3))
       .otherwise(lastK(2))
   }
-
-  /** Drop rows whose URL's registrable domain is in `blocked` — the
-    * blocklist gate, literal-list form: the set folds into the predicate
-    * and the filter is map-side in the scan. For a big dynamic blocklist
-    * use [[domainBlocklistFilterDf]] (or route it through
-    * [[BloomJoin.bloomAntiJoin]] when the list outgrows a broadcast). */
-  def domainBlocklistFilter(df: DataFrame, url: Column, blocked: Seq[String]): DataFrame = {
-    val dom = registrableDomain(host(url))
-    // null domain (unparseable URL) is NOT blocked here — provenance junk
-    // is a different filter's decision; isin(null) would silently drop it
-    df.filter(dom.isNull || !dom.isin(blocked: _*))
-  }
-
-  /** [[domainBlocklistFilter]] with the blocklist as a DataFrame (one
-    * `domain` column): a left-anti equi-join on the registrable domain —
-    * blocklists are dimension-sized, so the join broadcasts. */
-  def domainBlocklistFilterDf(df: DataFrame, url: Column, blocked: DataFrame): DataFrame =
-    df.withColumn("__dom", registrableDomain(host(url)))
-      .join(blocked.select(col("domain").as("__dom")), Seq("__dom"), "left_anti")
-      .drop("__dom")
 }

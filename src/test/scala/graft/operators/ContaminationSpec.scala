@@ -153,19 +153,6 @@ class ContaminationSpec extends SparkSpec {
     assert(got.count() == 0)
   }
 
-  test("contamination report aggregates per benchmark doc") {
-    val bench = Seq((1L, "a b c d e"), (2L, "p q r s t")).toDF("doc_id", "text")
-    val train = Seq((10L, "a b c d e"), (11L, "b c d e x")).toDF("doc_id", "text")
-    val report = Contamination.contaminationReport(
-      Contamination.ngramOverlapPairs(
-        bench, col("doc_id"), col("text"), train, col("doc_id"), col("text"),
-        n = 3, minShared = 1))
-      .select("bench_id", "n_contaminating_docs", "max_shared", "max_contaminated_permille")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    // doc 1: train 10 shares all 3, train 11 shares "b c d","c d e" -> 2
-    assert(report == Set((1L, 2L, 3L, 1000L)))
-  }
-
   test("semanticOverlapPairs: threshold on the exact quantized dot, zero shuffles") {
     // unit-ish 2d vectors: (1,0)·(1,0)=1e6, (1,0)·(0.6,0.8)=600000,
     // (1,0)·(0,1)=0 — quantized exactly since 3 decimals suffice

@@ -52,20 +52,24 @@ class CurationPipelineSpec extends SparkSpec {
         .filter($"keep").select("doc_id"), "doc_id").count(),
       "predicate form ≡ audit-form join")
 
-    // 2. near-dup dedup, the one-call decision: LSH pairs -> components
-    // over the pair endpoints -> keep the BEST doc of each duplicate
-    // group (longest, ties to smallest id), applied as a drop-list anti
-    // join. Pairs are persisted because the decision reads them twice
-    // (a checkpointing pipeline gets that from its stage writes).
+    // 2. near-dup dedup decision: LSH pairs -> components over the pair
+    // endpoints -> keep the BEST doc of each duplicate group (longest,
+    // ties to smallest id), applied as a drop-list anti join. Pairs are
+    // persisted because the decision reads them twice (a checkpointing
+    // pipeline gets that from its stage writes).
     val pairs = Dedup.minhashNearDupPairs(kept, $"doc_id", $"text", 3, 8, 4, 800).persist()
-    val uniq = Dedup.nearDupDedupFromPairs(kept, $"doc_id", pairs, Seq($"n_chars".desc))
-    val nUniq = uniq.count()
     val touched = pairs.select($"a_id".as("id"))
       .unionByName(pairs.select($"b_id".as("id"))).distinct()
-    val nTouched = touched.count()
-    val nClusters = Components.connectedComponents(
+    val comp = Components.connectedComponents(
       touched, pairs.select($"a_id".as("src"), $"b_id".as("dst")))
-      .select("component_id").distinct().count()
+      .select($"id".as("doc_id"), $"component_id")
+    val verdicts = Dedup.keepBest(comp.join(kept.select($"doc_id", $"n_chars"), "doc_id"),
+      $"doc_id", $"component_id", Seq($"n_chars".desc, $"doc_id".asc))
+    val uniq = kept.join(verdicts.filter(!$"is_kept").select("doc_id"),
+      Seq("doc_id"), "left_anti")
+    val nUniq = uniq.count()
+    val nTouched = touched.count()
+    val nClusters = comp.select("component_id").distinct().count()
     pairs.unpersist()
     assert(nUniq == nKept - nTouched + nClusters,
       "exactly one survivor per duplicate group, untouched docs all pass")

@@ -798,26 +798,6 @@ class DedupSpec extends SparkSpec {
       (20L, 20L, 20L, true)))
   }
 
-  test("nearDupDedup: one-call decision — best copy survives, untouched docs pass through") {
-    val text1 = "alpha beta gamma delta epsilon zeta eta theta"
-    val docs = Seq(
-      (1L, text1, 10L),                                  // near-identical pair:
-      (2L, text1, 20L),                                  //  2 wins on quality
-      (3L, "uno dos tres cuatro cinco seis siete ocho", 5L)) // untouched singleton
-      .toDF("doc_id", "text", "quality")
-    val out = Dedup.nearDupDedup(docs, col("doc_id"), col("text"),
-      n = 3, k = 8, bands = 4, minJaccardPermille = 800,
-      order = Seq(col("quality").desc))
-    // schema unchanged, loser dropped, everything else intact
-    assert(out.columns.toSeq == Seq("doc_id", "text", "quality"))
-    assert(out.select("doc_id").as[Long].collect().toSet == Set(2L, 3L))
-    // the FromPairs form with explicit edges agrees
-    val pairs = Seq((1L, 2L)).toDF("a_id", "b_id")
-    val out2 = Dedup.nearDupDedupFromPairs(docs, col("doc_id"), pairs,
-      order = Seq(col("quality").desc))
-    assert(out2.select("doc_id").as[Long].collect().toSet == Set(2L, 3L))
-  }
-
   test("lineDedup: corpus-hot lines cut everywhere, order kept, empties survive") {
     val docs = Seq(
       (1L, "unique one\nCOMMON FOOTER\nunique two", "a"),

@@ -47,419 +47,11 @@ class MultimodalSpec extends SparkSpec {
     assert(got(2L) == Seq(1f, 2f, 3f)) // empty payload: seed alone
   }
 
-  /** An actual in-memory PNG, encoded by the same JDK ImageIO the decoder
-    * reads with — a distinct per-pixel gradient so bilinear resampling has
-    * real structure to chew on. */
-  private def pngBytes(w: Int, h: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until w; y <- 0 until h)
-      img.setRGB(x, y, (x * 40 + y) << 8 | (x + y * 10))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  test("ImageIoDecoder: true PNG dimensions through extractMeta; corrupt -> (0,0)") {
-    val media = Seq(
-      Multimodal.MediaRow(1L, pngBytes(7, 5), "png"),
-      Multimodal.MediaRow(2L, pngBytes(3, 11), "png"),
-      Multimodal.MediaRow(3L, "not an image".getBytes, "png"),
-      Multimodal.MediaRow(4L, null, "png")).toDS()
-    val got = Multimodal.extractMeta(media, Multimodal.ImageIoDecoder)
-      .collect().map(m => (m.id, m.width, m.height)).toSet
-    assert(got == Set((1L, 7, 5), (2L, 3, 11), (3L, 0, 0), (4L, 0, 0)))
-  }
-
-  /** An actual in-memory WAV, written by the same javax.sound the decoder
-    * reads with. */
-  private def wavBytes(sampleRate: Int, channels: Int, nFrames: Int): Array[Byte] = {
-    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    val fmt = new AudioFormat(sampleRate.toFloat, 16, channels, true, false)
-    val pcm = new Array[Byte](nFrames * 2 * channels)
-    val ais = new AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, nFrames.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
-  test("WavDecoder: true WAV header through extractAudioMeta; corrupt -> zeros") {
-    val media = Seq(
-      Multimodal.MediaRow(1L, wavBytes(8000, 1, 800), "wav"),
-      Multimodal.MediaRow(2L, wavBytes(44100, 2, 441), "wav"),
-      Multimodal.MediaRow(3L, "not audio at all".getBytes, "wav"),
-      Multimodal.MediaRow(4L, null, "wav")).toDS()
-    val got = Multimodal.extractAudioMeta(media, Multimodal.WavDecoder)
-      .collect().map(m => (m.id, m.sample_rate, m.channels, m.n_frames)).toSet
-    assert(got == Set(
-      (1L, 8000, 1, 800L), (2L, 44100, 2, 441L),
-      (3L, 0, 0, 0L), (4L, 0, 0, 0L)))
-  }
-
-  test("WavDecoder: streaming AU header (unknown data size) never emits -1 frames") {
-    // AU with dataSize 0xFFFFFFFF is legal (pipes/recorders) and parses
-    // with getFrameLength == NOT_SPECIFIED (-1); the decoder must clamp,
-    // keeping the valid rate/channels and a zero frame count
-    val au = java.nio.ByteBuffer.allocate(28)
-      .put(".snd".getBytes("ISO-8859-1"))
-      .putInt(24).putInt(-1) // header size; data size UNKNOWN
-      .putInt(3).putInt(8000).putInt(1) // 16-bit linear PCM, 8 kHz mono
-      .putInt(0) // one frame of payload
-      .array()
-    val got = Multimodal.extractAudioMeta(
-      Seq(Multimodal.MediaRow(1L, au, "au")).toDS(), Multimodal.WavDecoder)
-      .collect().map(m => (m.sample_rate, m.channels, m.n_frames)).toSet
-    assert(got == Set((8000, 1, 0L)))
-  }
-
-  /** Minimal ISO-BMFF builder: [size][type][payload] boxes. */
-  private def mp4Box(typ: String, payload: Array[Byte]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-    bb.putInt(8 + payload.length).put(typ.getBytes("ISO-8859-1")).put(payload)
-    bb.array()
-  }
-  private def tkhd(version: Int, w: Int, h: Int): Array[Byte] = {
-    val payload = new Array[Byte](if (version == 1) 96 else 84)
-    payload(0) = version.toByte
-    val bb = java.nio.ByteBuffer.wrap(payload)
-    bb.position(if (version == 1) 88 else 76)
-    bb.putInt(w << 16).putInt(h << 16) // 16.16 fixed point
-    payload
-  }
-
-  test("Mp4Decoder: tkhd dims through a real box walk, audio tracks skipped") {
-    val ftyp = mp4Box("ftyp", "isom0000".getBytes("ISO-8859-1"))
-    // audio trak (zero dims) FIRST — the walker must keep scanning
-    val v0 = ftyp ++ mp4Box("moov",
-      mp4Box("trak", mp4Box("tkhd", tkhd(0, 0, 0))) ++
-        mp4Box("trak", mp4Box("tkhd", tkhd(0, 640, 360))))
-    val v1 = ftyp ++ mp4Box("moov", mp4Box("trak", mp4Box("tkhd", tkhd(1, 1920, 1080))))
-    val media = Seq(
-      Multimodal.MediaRow(1L, v0, "mp4"),
-      Multimodal.MediaRow(2L, v1, "mp4"),
-      Multimodal.MediaRow(3L, "mdat only, no moov".getBytes, "mp4"),
-      Multimodal.MediaRow(4L, null, "mp4")).toDS()
-    val got = Multimodal.extractMeta(media, Multimodal.Mp4Decoder)
-      .collect().map(m => (m.id, m.width, m.height)).toSet
-    assert(got == Set((1L, 640, 360), (2L, 1920, 1080), (3L, 0, 0), (4L, 0, 0)))
-  }
-
-  test("ImageIoResizer: real pixel resample round-trips through the decoder") {
-    val media = Seq(
-      Multimodal.MediaRow(1L, pngBytes(8, 6), "png"),
-      Multimodal.MediaRow(2L, "garbage".getBytes, "png")).toDS()
-    val resized = Multimodal.resize(media, Multimodal.ImageIoResizer(), width = 4, height = 3)
-    val dims = Multimodal.extractMeta(resized, Multimodal.ImageIoDecoder)
-      .collect().map(m => (m.id, m.width, m.height)).toSet
-    // resized payload is a real PNG whose header reads back the target dims;
-    // the corrupt row degrades to an empty payload -> (0,0), never a throw
-    assert(dims == Set((1L, 4, 3), (2L, 0, 0)))
-  }
-
-  /** Ogg CRC-32 (poly 0x04C11DB7, init 0, unreflected, no final xor) — the
-    * pages below carry REAL checksums, making the payload fully
-    * spec-conformant, not just shaped like Ogg. */
-  private def oggCrc(b: Array[Byte]): Int = {
-    var crc = 0
-    b.foreach { byte =>
-      crc ^= (byte & 0xff) << 24
-      var k = 0
-      while (k < 8) {
-        crc = if ((crc & 0x80000000) != 0) (crc << 1) ^ 0x04C11DB7 else crc << 1
-        k += 1
-      }
-    }
-    crc
-  }
-
-  private def oggPage(
-      headerType: Int, granule: Long, seq: Int, packets: Array[Byte]*): Array[Byte] = {
-    val lacing = packets.flatMap { p =>
-      Array.fill(p.length / 255)(255.toByte) :+ (p.length % 255).toByte
-    }.toArray
-    val body = packets.toArray.flatten
-    val bb = java.nio.ByteBuffer.allocate(27 + lacing.length + body.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("OggS".getBytes("ISO-8859-1")).put(0.toByte).put(headerType.toByte)
-      .putLong(granule).putInt(0xf00d).putInt(seq).putInt(0) // CRC below
-      .put(lacing.length.toByte).put(lacing).put(body)
-    val arr = bb.array()
-    val crc = oggCrc(arr)
-    arr(22) = (crc & 0xff).toByte
-    arr(23) = ((crc >>> 8) & 0xff).toByte
-    arr(24) = ((crc >>> 16) & 0xff).toByte
-    arr(25) = ((crc >>> 24) & 0xff).toByte
-    arr
-  }
-
-  private def vorbisIdPacket(channels: Int, rate: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(30).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put(1.toByte).put("vorbis".getBytes("ISO-8859-1"))
-      .putInt(0) // stream structure version
-      .put(channels.toByte).putInt(rate)
-      .putInt(0).putInt(0).putInt(0) // max/nominal/min bitrate: unset
-      .put(0xB8.toByte) // blocksizes 2^8 / 2^11
-      .put(1.toByte) // framing flag
-    bb.array()
-  }
-
-  test("OggVorbisDecoder: rate/channels from the id header, frames from the last granule") {
-    val ogg = oggPage(0x02, 0L, 0, vorbisIdPacket(2, 44100)) ++
-      oggPage(0x04, 44100L, 1, Array[Byte](0x05, 0x06, 0x07))
-    val media = Seq(
-      Multimodal.MediaRow(1L, ogg, "ogg"),
-      Multimodal.MediaRow(2L, oggPage(0x02, 0L, 0, vorbisIdPacket(1, 8000)), "ogg"),
-      Multimodal.MediaRow(3L, "OggS but not really ....................................".getBytes, "ogg"),
-      Multimodal.MediaRow(4L, wavBytes(8000, 1, 10), "wav"), // wrong container
-      Multimodal.MediaRow(5L, null, "ogg")).toDS()
-    val got = Multimodal.extractAudioMeta(media, Multimodal.OggVorbisDecoder)
-      .collect().map(m => (m.id, m.sample_rate, m.channels, m.n_frames)).toSet
-    // row 2: single BOS page IS the last page, granule 0 -> zero frames
-    assert(got == Set(
-      (1L, 44100, 2, 44100L), (2L, 8000, 1, 0L),
-      (3L, 0, 0, 0L), (4L, 0, 0, 0L), (5L, 0, 0, 0L)))
-    // the JDK's own AudioSystem cannot read Ogg — the hand walk is the
-    // only zero-dep path (if this ever starts passing, drop the walker)
-    assert(Multimodal.WavDecoder.audioMeta(ogg) == ((0, 0, 0L)))
-  }
-
-  /** Genuine FLAC prefix: "fLaC" + STREAMINFO block (the format requires
-    * it first) with the packed BE bit fields a real encoder writes. */
-  private def flacBytes(rate: Int, channels: Int, bps: Int, totalSamples: Long): Array[Byte] = {
-    val b = new Array[Byte](42)
-    "fLaC".getBytes("ISO-8859-1").copyToArray(b)
-    b(4) = 0x00; b(5) = 0; b(6) = 0; b(7) = 34 // STREAMINFO, length 34
-    b(8) = 0x10; b(9) = 0x00; b(10) = 0x10; b(11) = 0x00 // min/max block 4096
-    // frame sizes (unknown): bytes 12-17 zero
-    val p = 8 + 10
-    b(p) = (rate >>> 12).toByte
-    b(p + 1) = ((rate >>> 4) & 0xff).toByte
-    b(p + 2) = (((rate & 0xf) << 4) | ((channels - 1) << 1) | ((bps - 1) >>> 4)).toByte
-    b(p + 3) = ((((bps - 1) & 0xf) << 4) | ((totalSamples >>> 32) & 0xf)).toInt.toByte
-    b(p + 4) = ((totalSamples >>> 24) & 0xff).toByte
-    b(p + 5) = ((totalSamples >>> 16) & 0xff).toByte
-    b(p + 6) = ((totalSamples >>> 8) & 0xff).toByte
-    b(p + 7) = (totalSamples & 0xff).toByte
-    b
-  }
-
-  /** Genuine MPEG1 Layer III 44.1 kHz stereo CBR 128 kbps frames
-    * (frame length 144·128000/44100 = 417 bytes, no padding). */
-  private def mp3Cbr(nFrames: Int): Array[Byte] = {
-    val frameLen = 417
-    val b = new Array[Byte](frameLen * nFrames)
-    for (i <- 0 until nFrames) {
-      val o = i * frameLen
-      b(o) = 0xff.toByte; b(o + 1) = 0xfb.toByte // sync, MPEG1 L3 no-CRC
-      b(o + 2) = 0x90.toByte // bitrate idx 9 (128k), rate idx 0 (44100)
-      b(o + 3) = 0x00 // stereo
-    }
-    b
-  }
-
-  test("FlacDecoder: STREAMINFO fields; corrupt -> zeros") {
-    val media = Seq(
-      Multimodal.MediaRow(1L, flacBytes(44100, 2, 16, 1234567L), "flac"),
-      Multimodal.MediaRow(2L, flacBytes(96000, 6, 24, 0L), "flac"), // unknown length
-      Multimodal.MediaRow(3L, "fLaC then garbage not a streaminfo block".getBytes, "flac"),
-      Multimodal.MediaRow(4L, null, "flac")).toDS()
-    val got = Multimodal.extractAudioMeta(media, Multimodal.FlacDecoder)
-      .collect().map(m => (m.id, m.sample_rate, m.channels, m.n_frames)).toSet
-    assert(got == Set(
-      (1L, 44100, 2, 1234567L), (2L, 96000, 6, 0L),
-      (3L, 0, 0, 0L), (4L, 0, 0, 0L)))
-    // the JDK cannot read FLAC — the hand walk is the only zero-dep path
-    assert(Multimodal.WavDecoder.audioMeta(flacBytes(44100, 2, 16, 10L)) == ((0, 0, 0L)))
-  }
-
-  test("Mp3Decoder: CBR frame hop, ID3 skip, Xing frame count") {
-    val cbr = mp3Cbr(3)
-    // ID3v2 tag (10-byte header + 10 payload bytes, syncsafe length)
-    val id3 = Array[Byte]('I', 'D', '3', 4, 0, 0, 0, 0, 0, 10) ++
-      new Array[Byte](10) ++ cbr
-    // Xing VBR header in the first frame: side info 32 (MPEG1 stereo),
-    // flags FRAMES, 100 frames
-    val xing = mp3Cbr(1)
-    "Xing".getBytes("ISO-8859-1").copyToArray(xing, 4 + 32)
-    xing(4 + 32 + 7) = 0x01
-    xing(4 + 32 + 11) = 100.toByte
-    val media = Seq(
-      Multimodal.MediaRow(1L, cbr, "mp3"),
-      Multimodal.MediaRow(2L, id3, "mp3"),
-      Multimodal.MediaRow(3L, xing, "mp3"),
-      Multimodal.MediaRow(4L, "definitely not mpeg audio data".getBytes, "mp3"),
-      Multimodal.MediaRow(5L, null, "mp3")).toDS()
-    val got = Multimodal.extractAudioMeta(media, Multimodal.Mp3Decoder)
-      .collect().map(m => (m.id, m.sample_rate, m.channels, m.n_frames)).toSet
-    assert(got == Set(
-      (1L, 44100, 2, 3 * 1152L), (2L, 44100, 2, 3 * 1152L),
-      (3L, 44100, 2, 100 * 1152L), (4L, 0, 0, 0L), (5L, 0, 0, 0L)))
-  }
-
-  test("Mp3Decoder: CRC-protected Xing offset; tag frame without a count is not audio") {
-    // CRC-protected (protection bit 0): 2 CRC bytes sit before the side
-    // info, so the Xing tag lands 2 bytes later
-    val crcXing = mp3Cbr(1)
-    crcXing(1) = 0xfa.toByte // MPEG1 L3, protection bit 0
-    "Xing".getBytes("ISO-8859-1").copyToArray(crcXing, 4 + 2 + 32)
-    crcXing(4 + 2 + 32 + 7) = 0x01
-    crcXing(4 + 2 + 32 + 11) = 100.toByte
-    assert(Multimodal.Mp3Decoder.audioMeta(crcXing) == ((44100, 2, 100 * 1152L)))
-    // an Info tag with NO frames-field flag: the hop must not count the
-    // metadata frame as audio (2 audio frames follow it)
-    val infoNoCount = mp3Cbr(3)
-    "Info".getBytes("ISO-8859-1").copyToArray(infoNoCount, 4 + 32)
-    assert(Multimodal.Mp3Decoder.audioMeta(infoNoCount) == ((44100, 2, 2 * 1152L)))
-  }
-
-  test("Mp3Decoder: ID3v2.4 footer flag shifts the sync probe past the footer") {
-    val body = new Array[Byte](20)
-    val header = Array[Byte]('I', 'D', '3', 4, 0, 0x10.toByte, 0, 0, 0, 20)
-    val footer = Array[Byte]('3', 'D', 'I', 4, 0, 0x10.toByte, 0, 0, 0, 20)
-    val withFooter = header ++ body ++ footer ++ mp3Cbr(3)
-    val got = Multimodal.Mp3Decoder.audioMeta(withFooter)
-    assert(got == ((44100, 2, 3L * 1152)))
-  }
-
-  test("AutoAudioDecoder routes a mixed-format column in one pass") {
-    val ogg = oggPage(0x02, 0L, 0, vorbisIdPacket(2, 44100)) ++
-      oggPage(0x04, 22050L, 1, Array[Byte](0x05))
-    val media = Seq(
-      Multimodal.MediaRow(1L, wavBytes(8000, 1, 800), "wav"),
-      Multimodal.MediaRow(2L, ogg, "ogg"),
-      Multimodal.MediaRow(3L, flacBytes(48000, 2, 16, 4800L), "flac"),
-      Multimodal.MediaRow(4L, mp3Cbr(2), "mp3"),
-      Multimodal.MediaRow(5L, "who knows what this is".getBytes, "bin"),
-      Multimodal.MediaRow(6L, null, "bin")).toDS()
-    val got = Multimodal.extractAudioMeta(media, Multimodal.AutoAudioDecoder)
-      .collect().map(m => (m.id, m.sample_rate, m.channels, m.n_frames)).toSet
-    assert(got == Set(
-      (1L, 8000, 1, 800L), (2L, 44100, 2, 22050L), (3L, 48000, 2, 4800L),
-      (4L, 44100, 2, 2 * 1152L), (5L, 0, 0, 0L), (6L, 0, 0, 0L)))
-  }
-
-  /** A REAL JPEG (ImageIO-encoded) with an EXIF APP1 segment spliced in
-    * right after SOI — decoders skip unknown APP segments, so the payload
-    * stays a valid image AND carries a genuine TIFF IFD. */
-  private def exifApp1(orientation: Int, little: Boolean): Array[Byte] = {
-    val order = if (little) java.nio.ByteOrder.LITTLE_ENDIAN
-      else java.nio.ByteOrder.BIG_ENDIAN
-    val tiff = java.nio.ByteBuffer.allocate(26).order(order)
-    if (little) tiff.put('I'.toByte).put('I'.toByte)
-    else tiff.put('M'.toByte).put('M'.toByte)
-    tiff.putShort(42).putInt(8)
-    tiff.putShort(1) // one IFD0 entry
-    tiff.putShort(0x0112).putShort(3).putInt(1) // orientation, SHORT, count 1
-    tiff.putShort(orientation.toShort).putShort(0) // left-justified value field
-    tiff.putInt(0) // no next IFD
-    val payload = "Exif".getBytes("ISO-8859-1") ++ Array[Byte](0, 0) ++ tiff.array()
-    val len = payload.length + 2
-    Array(0xFF.toByte, 0xE1.toByte,
-      ((len >> 8) & 0xff).toByte, (len & 0xff).toByte) ++ payload
-  }
-
-  private def jpegWithExif(w: Int, h: Int, orientation: Int, little: Boolean): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", bos)
-    val j = bos.toByteArray
-    j.take(2) ++ exifApp1(orientation, little) ++ j.drop(2)
-  }
-
-  test("JpegExif + extractImageMetaEx: orientation from a real IFD, display dims swap") {
-    val media = Seq(
-      Multimodal.MediaRow(1L, jpegWithExif(10, 6, orientation = 6, little = true), "jpg"),
-      Multimodal.MediaRow(2L, jpegWithExif(10, 6, orientation = 1, little = false), "jpg"),
-      Multimodal.MediaRow(3L, pngBytes(7, 5), "png"), // no EXIF: upright
-      Multimodal.MediaRow(4L, "not an image".getBytes, "jpg")).toDS()
-    val got = Multimodal.extractImageMetaEx(media)
-      .collect()
-      .map(m => (m.id, m.width, m.height, m.orientation, m.display_width, m.display_height))
-      .toSet
-    assert(got == Set(
-      (1L, 10, 6, 6, 6, 10), // transposed orientation: display swaps
-      (2L, 10, 6, 1, 10, 6),
-      (3L, 7, 5, 0, 7, 5),
-      (4L, 0, 0, 0, 0, 0)))
-    // both endiannesses decode; out-of-range orientation values clamp to 0
-    assert(Multimodal.JpegExif.orientation(jpegWithExif(4, 4, 8, little = false)) == 8)
-    assert(Multimodal.JpegExif.orientation(jpegWithExif(4, 4, 9, little = true)) == 0)
-  }
-
-  test("resize: strided subsample hits the exact target size, pluggable") {
-    val media = Multimodal.fromText(spark,
-      Seq((1L, "0123456789"), (2L, "")).toDF("doc_id", "text"), "doc_id", "text", "utf8")
-    val got = Multimodal.resize(media, Multimodal.StubResizer, width = 2, height = 3)
-      .collect().map(m => m.id -> m.content.toSeq).toMap
-    assert(got(1L).length == 6 && got(2L) == Seq.fill(6)(0.toByte))
-    // strided: i*10/6 for i in 0..5 -> bytes at 0,1,3,5,6,8
-    assert(got(1L) == Seq('0', '1', '3', '5', '6', '8').map(_.toByte))
-    val constant = new Multimodal.MediaResizer {
-      def resize(c: Array[Byte], w: Int, h: Int): Array[Byte] = Array.fill(w * h)(9.toByte)
-    }
-    assert(Multimodal.resize(media, constant, 1, 2).head().content.toSeq == Seq(9.toByte, 9.toByte))
-  }
-
-  /** A genuine MJPEG AVI: real ImageIO-encoded JPEG frames inside a
-    * hand-assembled RIFF/AVI container. */
-  private def mjpegAvi(w: Int, h: Int, grays: Seq[Int]): Array[Byte] = {
-    def u32le(v: Long): Array[Byte] = Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def chunk(cc: String, payload: Array[Byte]): Array[Byte] =
-      cc.getBytes("ISO-8859-1") ++ u32le(payload.length) ++ payload ++
-        (if (payload.length % 2 == 1) Array(0.toByte) else Array.empty[Byte])
-    def list(tpe: String, inner: Array[Byte]): Array[Byte] =
-      chunk("LIST", tpe.getBytes("ISO-8859-1") ++ inner)
-    def jpeg(gray: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val rgb = (gray << 16) | (gray << 8) | gray
-      (0 until h).foreach(y => (0 until w).foreach(x => img.setRGB(x, y, rgb)))
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", bos)
-      bos.toByteArray
-    }
-    val avih = new Array[Byte](56)
-    u32le(grays.length).copyToArray(avih, 16) // dwTotalFrames
-    u32le(w).copyToArray(avih, 32) // dwWidth
-    u32le(h).copyToArray(avih, 36) // dwHeight
-    val hdrl = list("hdrl", chunk("avih", avih))
-    val movi = list("movi", grays.map(g => chunk("00dc", jpeg(g))).reduce(_ ++ _))
-    val body = "AVI ".getBytes("ISO-8859-1") ++ hdrl ++ movi
-    "RIFF".getBytes("ISO-8859-1") ++ u32le(body.length) ++ body
-  }
-
-  test("AVI/MJPEG: real container walk + real JPEG frame pixel decode") {
-    val avi = mjpegAvi(16, 8, Seq(30, 128, 220, 60, 200)) // 5 frames
-    assert(Multimodal.AviDecoder.dimensions(avi) == ((16, 8)))
-    assert(AviMjpeg.videoMeta(avi) == ((16, 8, 5L)))
-    assert(AviMjpeg.frameChunks(avi).length == 5)
-    val media = Seq(
-      Multimodal.MediaRow(1L, avi, "avi"),
-      Multimodal.MediaRow(2L, "not a riff container at all".getBytes, "avi"),
-      Multimodal.MediaRow(3L, null, "avi")).toDS()
-    // k=3 over 5 actual frames: indices 0, 1, 3 (uniform over the list)
-    val got = Multimodal.sampleFrameStats(media, k = 3).collect()
-      .map(f => (f.id, f.frame_index, f.width, f.height, f.mean_luma_permille)).sortBy(_._2)
-    assert(got.map(t => (t._1, t._2, t._3, t._4)).toSeq ==
-      Seq((1L, 0, 16, 8), (1L, 1, 16, 8), (1L, 3, 16, 8))) // corrupt/null: zero rows
-    // JPEG is lossy: each sampled frame's mean luma lands near its
-    // planted uniform gray (permille of 255)
-    val want = Seq(30, 128, 60).map(g => g * 1000L / 255)
-    got.map(_._5).zip(want).foreach { case (m, e) =>
-      assert(math.abs(m - e) <= 25, s"mean luma $m vs expected ~$e")
-    }
-    // all frames when k exceeds the frame count
-    assert(Multimodal.sampleFrameStats(media, k = 99).count() == 5)
-  }
-
   test("decoder fuzz (property): arbitrary bytes never throw from ANY decode entry point") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // crawl media is routinely corrupt: every decoder must absorb garbage
-    // as a zero result, not a task-killing exception. Magic-prefixed
-    // payloads get past the cheap guards into the deep parse paths.
+    // crawl media is routinely corrupt: every entry point must absorb
+    // garbage as a well-formed result, not a task-killing exception.
+    // Magic-prefixed payloads stand in for real containers' headers.
     val magics: Seq[Array[Byte]] = Seq(
       "fLaC", "RIFF", "OggS", "ID3", "GIF89a", "BM", "FORM", ".snd",
       "RIFF\u0010\u0000\u0000\u0000AVI LIST", "RIFFÿÿÿÿAVI "
@@ -473,19 +65,18 @@ class MultimodalSpec extends SparkSpec {
       junk,
       for { m <- Gen.oneOf(magics); j <- junk } yield m ++ j,
       Gen.const(Array.empty[Byte]))
-    val prop = Prop.forAll(payload) { (b: Array[Byte]) =>
-      val dims = Seq(Multimodal.ImageIoDecoder, Multimodal.Mp4Decoder, Multimodal.StubDecoder,
-        Multimodal.AviDecoder).map(_.dimensions(b))
-      val fc = AviMjpeg.frameChunks(b)
-      val metas = Seq(Multimodal.WavDecoder, Multimodal.OggVorbisDecoder, Multimodal.FlacDecoder,
-        Multimodal.Mp3Decoder, Multimodal.AutoAudioDecoder).map(_.audioMeta(b))
-      val pcms = Seq(Multimodal.FlacPcmDecoder, Multimodal.WavPcmDecoder, Multimodal.AutoPcmDecoder)
-        .map(_.decodePcm(b))
-      val ori = Multimodal.JpegExif.orientation(b)
-      dims.forall(d => d._1 >= 0 && d._2 >= 0) && fc != null &&
-        metas.forall(m => m._1 >= 0 && m._2 >= 0 && m._3 >= 0L) &&
-        pcms.forall(p => p._1 >= 0 && p._2 >= 0 && p._3 != null) &&
-        ori >= 0 && ori <= 8
+    val prop = Prop.forAll(payload, Gen.choose(1, 8)) { (b: Array[Byte], k: Int) =>
+      val (w, h) = Multimodal.StubDecoder.dimensions(b)
+      val feats = Multimodal.StubFeaturizer(8).features(b)
+      val media = Seq(Multimodal.MediaRow(1L, b, "bin")).toDS()
+      val metas = Multimodal.extractMeta(media, Multimodal.StubDecoder).collect()
+      val rows = Multimodal.extractFeatures(media, Multimodal.StubFeaturizer(8)).collect()
+      val frames = Multimodal.sampleFrames(
+        Seq((1L, b)).toDF("id", "content"), "id", "content", k).as[(Long, Int, Long)].collect()
+      w >= 0 && h >= 0 &&
+        feats.length == 8 && feats.forall(f => f >= 0f && f < 1000f) && // NaN and ±Inf fail too
+        metas.length == 1 && rows.length == 1 &&
+        frames.length == k && frames.forall { case (_, _, off) => off >= 0L && off <= b.length }
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
     assert(res.passed, res.status.toString)

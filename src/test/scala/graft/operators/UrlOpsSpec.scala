@@ -12,6 +12,15 @@ class UrlOpsSpec extends SparkSpec {
       .orderBy("id").select(UrlOps.host(col("url")))
       .as[Option[String]].collect().toSeq
 
+  /** The URL query's domain: `registrableDomain(host(url))`. */
+  private def domain(url: org.apache.spark.sql.Column) =
+    UrlOps.registrableDomain(UrlOps.host(url))
+
+  private def domains(urls: String*): Seq[Option[String]] =
+    urls.zipWithIndex.map(_.swap).toDF("id", "url")
+      .orderBy("id").select(domain(col("url")))
+      .as[Option[String]].collect().toSeq
+
   test("host: scheme stripped, userinfo stripped, port stripped, lowercased, junk null") {
     assert(hosts(
       "https://www.Example.COM/path?q=1",
@@ -61,8 +70,16 @@ class UrlOpsSpec extends SparkSpec {
   test("trailing root-dot FQDNs normalize: a blocklisted domain cannot dot-evade") {
     assert(hosts("http://spam.example.co.uk./x", "https://example.com.../y") ==
       Seq(Some("spam.example.co.uk"), Some("example.com")))
-    val docs = Seq((1L, "http://spam.example.co.uk./x")).toDF("doc_id", "url")
-    assert(UrlOps.domainBlocklistFilter(docs, col("url"), Seq("example.co.uk")).count() == 0)
+    // registrable domain under the co.uk suffix is example.co.uk — the
+    // spam. label is a subdomain of it, caught by the same block entry
+    assert(domains(
+      "http://spam.example.co.uk./x",
+      "https://www.spam.example.co.uk/x",
+      "https://spam.example.co.uk:99/z",
+      "https://ok.example.com/y",
+      "not a url") == Seq(
+      Some("example.co.uk"), Some("example.co.uk"), Some("example.co.uk"),
+      Some("example.com"), None))
   }
 
   test("registrableDomain of a null host is null") {
@@ -71,26 +88,11 @@ class UrlOpsSpec extends SparkSpec {
     assert(got.isEmpty)
   }
 
-  test("blocklist filters: literal and DataFrame forms agree; null URLs pass") {
-    val docs = Seq(
-      (1L, "https://www.spam.example.co.uk/x"),
-      (2L, "https://ok.example.com/y"),
-      (3L, "https://spam.example.co.uk:99/z"), // same registrable domain as 1
-      (4L, "not a url")).toDF("doc_id", "url")
-    // registrable domain under the co.uk suffix is example.co.uk — the
-    // spam. label is a subdomain of it, caught by the same block entry
-    val blockedSeq = Seq("example.co.uk")
-    val viaSeq = UrlOps.domainBlocklistFilter(docs, col("url"), blockedSeq)
-      .select("doc_id").as[Long].collect().toSet
-    val viaDf = UrlOps.domainBlocklistFilterDf(docs, col("url"),
-      blockedSeq.toDF("domain")).select("doc_id").as[Long].collect().toSet
-    assert(viaSeq == Set(2L, 4L))
-    assert(viaDf == viaSeq)
-  }
-
   test("the URL tier is map-side: no exchange in the literal-blocklist plan") {
     val docs = Seq((1L, "https://a.example.com/x")).toDF("doc_id", "url")
-    val plan = UrlOps.domainBlocklistFilter(docs, col("url"), Seq("bad.com"))
+    val dom = domain(col("url"))
+    val plan = docs.select(col("doc_id"), dom.as("reg_domain"),
+      coalesce(dom.isin("bad.com"), lit(false)).as("blocked"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
   }
